@@ -251,6 +251,7 @@ def pack_sequences(
     budget: int,
     n_groups: int = 256,
     pack_col: str = "pack_id",
+    by: str | None = None,
 ) -> DataFrame:
     """Assign documents to training shards ("packs") of ≤ ``budget`` tokens.
 
@@ -267,6 +268,16 @@ def pack_sequences(
     longer than the budget get a singleton pack (callers truncate/split
     downstream). Deterministic: group = xxhash64(id), ties broken by id
     (equal-capacity bins by lowest bin index).
+
+    ``by`` packs each value of that column on its own in the same pass:
+    groups are ``(by, hash group)`` and pack ids carry a ``"{by}/"``
+    prefix, so one grouped call over train/val/test assigns exactly the
+    ids a per-split loop would (BFD already runs per group) without a
+    union of per-split plans.
+
+    Returns every input row, its columns unchanged, plus ``pack_col``:
+    callers keep their payload columns without joining pack ids back by
+    ``id_col``, a join that would fan out on a repeated id.
     """
     import bisect
 
@@ -274,20 +285,16 @@ def pack_sequences(
 
     from pyspark.sql import types as T
 
-    id_field = df.schema[id_col]
+    cols = df.columns
     out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField(token_col, T.LongType()),
-            T.StructField(pack_col, T.StringType()),
-        ]
+        df.schema.fields + [T.StructField(pack_col, T.StringType(), nullable=False)]
     )
 
     def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
         grp = int(pdf["__grp"].iloc[0])
+        prefix = "" if by is None else f"{pdf[by].iloc[0]}/"
         pdf = pdf.sort_values([token_col, id_col], ascending=[False, True])
         toks = pdf[token_col].astype("int64").to_numpy()
-        ids = pdf[id_col].to_numpy()
         open_bins: list[tuple[int, int]] = []  # sorted (remaining, bin_idx)
         n_bins = 0
         assign: list[str] = []
@@ -307,15 +314,12 @@ def pack_sequences(
                 rem = budget - t
                 if rem > 0:  # oversized docs -> closed singleton pack
                     bisect.insort(open_bins, (rem, idx))
-            assign.append(f"{grp}-{idx}")
-        return pd.DataFrame({id_col: ids, token_col: toks, pack_col: assign})
+            assign.append(f"{prefix}{grp}-{idx}")
+        return pdf[cols].assign(**{pack_col: assign})
 
-    prepared = df.select(
-        F.col(id_col),
-        F.col(token_col).cast("long").alias(token_col),
-        (F.shiftrightunsigned(F.xxhash64(F.col(id_col)), 1) % n_groups).alias("__grp"),
-    )
-    return prepared.groupBy("__grp").applyInPandas(pack_group, schema=out_schema)
+    grp = (F.shiftrightunsigned(F.xxhash64(F.col(id_col)), 1) % n_groups).alias("__grp")
+    keys = ["__grp"] if by is None else [by, "__grp"]
+    return df.select("*", grp).groupBy(*keys).applyInPandas(pack_group, schema=out_schema)
 
 
 def upsample(

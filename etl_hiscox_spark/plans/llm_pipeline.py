@@ -7,12 +7,12 @@ Composes the §2.11 operators into the canonical corpus-prep flow:
              → [opt] C4 boilerplate-line removal (corpus-frequency lines
                dropped BEFORE dedup, so shared chrome can't mask real
                near-duplicate bodies or create false ones)
-             → exact dedup → MinHash near-dedup
+             → exact dedup (persisted) → MinHash near-dedup
              → [opt] span-level dedup (RefinedWeb repeated-block removal)
              → [opt] LM-NLL gate (CCNet-style bigram perplexity filter)
              → chunk (overlapping token windows)
-             → train/val/test split (leakage-safe, by SOURCE doc)
-             → token-budget shard packing (per split)
+             → train/val/test label per chunk (leakage-safe, by SOURCE doc)
+             → token-budget shard packing (all splits, one grouped pass)
 
 Every stage is one of the individually-tested operators; this module owns
 only the composition and the stage-count report. Ordering rationale (the
@@ -24,9 +24,27 @@ order IS the optimization at 100 TB):
   expensive stage) — byte-identical copies never reach signature work.
 - Chunking runs AFTER dedup: duplicated docs would otherwise fan out into
   duplicated chunks, multiplying downstream cost.
-- The split is assigned per-DOCUMENT before packing, so all chunks of one
-  document land in one split (no train/test leakage through overlap), and
-  packing runs inside each split.
+
+Each stage's frame enters the plan once, so Catalyst never analyses a
+second copy of the gate → dedup chain:
+
+- The exact-deduped corpus is read three times by near-dedup (the eager
+  LSH-candidate checkpoint, the candidate-doc semi-join, the final
+  anti-join). It is lazily persisted: the candidate checkpoint fills the
+  cache and the later branches read the cached relation.
+- The split label is computed on the chunks, not joined back from the
+  documents: ``hash_split`` is a pure function of the id, so every chunk
+  of one document lands in that document's split (no train/test leakage
+  through overlap) without a self-join.
+- One ``pack_sequences(..., by="split")`` call packs every split: BFD
+  runs per (split, hash group), and pack ids carry the split prefix
+  (``train/17-0``), the same ids a per-split loop assigns. Chunk rows
+  pass through the pack, so no join maps them back to their pack ids.
+
+Cache ownership: the returned ``chunks`` frame owns the exact-deduped
+persist and near-dedup's per-doc shingle-set persist. The caller
+materializes it, then frees both with ``caching.release_caches(chunks)``;
+a query built on it adopts them onto its own result.
 """
 
 from __future__ import annotations
@@ -36,6 +54,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
 from etl_hiscox_spark.operators.chunking import chunk_documents
 from etl_hiscox_spark.operators.dedup import exact_dedup, near_dedup_minhash
 from etl_hiscox_spark.operators.quality_filters import gopher_flags, repetition_stats
@@ -151,11 +170,11 @@ def prepare_corpus(
             ),
         )
 
-    # 3-4. dedup: exact first (cheap, uniform hash), then MinHash near-dup
-    exact = note("exact_deduped", exact_dedup(unrepetitive, text_col, id_col))
-    deduped = note(
-        "near_deduped", near_dedup_minhash(exact, text_col, id_col, threshold=near_dup_threshold)
-    )
+    # 3-4. dedup: exact first (cheap, uniform hash), then MinHash near-dup;
+    #      near-dedup reads the exact stem three times, so it is persisted
+    exact = note("exact_deduped", exact_dedup(unrepetitive, text_col, id_col).persist())
+    near = near_dedup_minhash(exact, text_col, id_col, threshold=near_dup_threshold)
+    deduped = note("near_deduped", near)
 
     # 4b. optional span-level dedup: replace text with the span-deduped
     #     reassembly, dropping fully-emptied docs (their content already
@@ -184,30 +203,23 @@ def prepare_corpus(
         )
         deduped = note("lm_gated", deduped.join(too_high, id_col, "left_anti"))
 
-    # 5. leakage-safe split BY DOCUMENT (before chunking, so overlapping
-    #    chunks of one doc can never straddle train/test)
-    split_docs = hash_split(deduped, id_col, weights)
-
-    # 6. chunk, carrying the split label
-    chunks = chunk_documents(split_docs, text_col, id_col, chunk_size, overlap).join(
-        split_docs.select(id_col, "split"), id_col
+    # 5-6. chunk, then label each chunk with its DOCUMENT's split: the
+    #      label is a pure function of the id, so all chunks of one doc land
+    #      in one split (no train/test leakage through overlap)
+    chunks = note(
+        "chunks",
+        hash_split(chunk_documents(deduped, text_col, id_col, chunk_size, overlap), id_col, weights),
     )
-    note("chunks", chunks)
 
-    # 7. pack per split: prefix the pack hash-group with the split so pack
-    #    ids never collide across splits
-    packed = None
-    for name in weights:
-        part = chunks.filter(F.col("split") == name)
-        p = pack_sequences(
-            part.select(F.concat_ws("#", id_col, F.col("chunk_idx")).alias("chunk_key"), "n_tokens"),
-            "chunk_key",
-            "n_tokens",
-            budget=pack_budget,
-        ).withColumn("pack_id", F.concat_ws("/", F.lit(name), F.col("pack_id")))
-        packed = p if packed is None else packed.unionByName(p)
-    out = chunks.withColumn(
-        "chunk_key", F.concat_ws("#", id_col, F.col("chunk_idx"))
-    ).join(packed.select("chunk_key", "pack_id"), "chunk_key").drop("chunk_key")
+    # 7. pack every split in one grouped pass; pack ids are split-prefixed
+    #    ("train/17-0") so they never collide across splits
+    out = pack_sequences(
+        chunks.withColumn("chunk_key", F.concat_ws("#", id_col, F.col("chunk_idx"))),
+        "chunk_key",
+        "n_tokens",
+        budget=pack_budget,
+        by="split",
+    ).drop("chunk_key")
     note("packed_chunks", out)
+    out = adopt_caches(attach_owned_caches(out, [exact]), near)
     return CorpusPrepResult(chunks=out, stage_counts=counts)

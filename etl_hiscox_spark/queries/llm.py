@@ -2807,11 +2807,12 @@ def t13_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is hash-gated end to end. The one genuinely non-SQL stage (BFD shard
     # packing) still RUNS but its pack ids are no longer in the declared
     # output; pack semantics stay pinned by t8 and the packing unit tests.
+    from etl_hiscox_spark.operators.caching import adopt_caches
     from etl_hiscox_spark.plans.llm_pipeline import prepare_corpus
 
     docs = load_table(spark, "documents", sf_dir)
     res = prepare_corpus(docs, chunk_size=64, overlap=8, pack_budget=1024, count_stages=False)
-    return (
+    out = (
         res.chunks.groupBy("split")
         .agg(
             F.countDistinct("doc_id").alias("n_docs"),
@@ -2820,6 +2821,8 @@ def t13_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split")
     )
+    # the corpus stems prepare_corpus persisted ride the returned frame
+    return adopt_caches(out, res.chunks)
 
 
 @register(
@@ -2965,6 +2968,7 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splits — 0 by construction, and BOTH engines recompute it from
     # their own independent pair graph + assignment, so a leak in either
     # pipeline surfaces as a nonzero (and a hash fail).
+    from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
     from etl_hiscox_spark.operators.dedup import (
         confirmed_minhash_pairs,
         connected_components,
@@ -2976,11 +2980,8 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cross-split proof count — so a lazy persist computes the
     # LSH+Jaccard pipeline once: CC's eager edge materialization populates
     # it, the final action's cross branch reads the cache (r18, guide §5)
-    confirmed = (
-        confirmed_minhash_pairs(docs, "text", "doc_id", threshold=0.8)
-        .select("id_a", "id_b")
-        .persist()
-    )
+    pairs = confirmed_minhash_pairs(docs, "text", "doc_id", threshold=0.8)
+    confirmed = pairs.select("id_a", "id_b").persist()
     comp = connected_components(confirmed)
     with_grp = docs.join(comp, docs["doc_id"] == comp["node"], "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("group_key")
@@ -2996,7 +2997,7 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__sa") != F.col("__sb"))
         .agg(F.count(F.lit(1)).alias("cross_split_pairs"))
     )
-    return (
+    out = (
         assigned.groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -3005,6 +3006,8 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(cross))
         .orderBy("split")
     )
+    # release handle for the pair-graph persist and the set stem under it
+    return attach_owned_caches(adopt_caches(out, pairs), [confirmed])
 
 
 @register(

@@ -22,6 +22,27 @@ def sf_dir() -> str:
 
 
 @pytest.fixture()
+def persisted_rdd_ids(spark):
+    """Function returning the ids of the RDDs a persist holds:
+    ``caching.cached_rdd_ids`` minus the blocks of eager
+    ``localCheckpoint`` cuts. A local checkpoint truncates lineage rather
+    than caching it: unpersisting it would make any later read of the
+    frame fail, so no release handle owns it, and the ContextCleaner
+    reaps it once the plans that reference it are garbage-collected."""
+
+    def ids() -> set:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        kept = set()
+        for i in rdds.keySet().toArray():
+            rdd = rdds.get(i)  # None when the cleaner reaped it meanwhile
+            if rdd is not None and not rdd.rdd().isLocallyCheckpointed():
+                kept.add(int(i))
+        return kept
+
+    return ids
+
+
+@pytest.fixture()
 def tmp_warehouse(tmp_path) -> str:
     return str(tmp_path / "warehouse")
 

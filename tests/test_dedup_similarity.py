@@ -615,6 +615,22 @@ def test_near_dedup_consumers_propagate_cache_ownership(spark):
         assert release_caches(out) == 0  # idempotent
 
 
+def test_leakage_safe_split_releases_pair_graph(spark, sf_dir, persisted_rdd_ids):
+    """t33 persists the confirmed pair graph for its two consumers; its
+    result owns that persist and the jaccard set stem under it, so one
+    release leaves no persist behind (eager ``localCheckpoint`` cuts have
+    no release handle — see the ``persisted_rdd_ids`` fixture)."""
+    from etl_hiscox_spark.operators.caching import release_caches
+    from etl_hiscox_spark.queries import all_queries
+
+    before = persisted_rdd_ids()
+    out = all_queries()["t33_leakage_safe_split"].fn(spark, sf_dir)
+    assert out.collect()
+    assert release_caches(out) == 2
+    assert persisted_rdd_ids() - before == set()
+    assert release_caches(out) == 0
+
+
 def test_incremental_probe_banding_recall_margin_pinned(spark):
     """Pin the coupling ADVICE r8 flagged: l2_incremental_probe's oracle
     brute-forces exact Jaccard >= 0.8 while the Spark side only returns

@@ -3,8 +3,11 @@ safety, packing validity — on the real documents table."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
+from etl_hiscox_spark.operators.caching import release_caches
 from etl_hiscox_spark.plans.llm_pipeline import prepare_corpus
 from etl_hiscox_spark.registry import load_table
 
@@ -109,3 +112,82 @@ def test_pipeline_rejects_corpus_wiping_boilerplate_threshold(spark):
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="must be >= 2"):
         prepare_corpus(docs, boilerplate_min_docs=1)
+
+
+def _plan_nodes(df):
+    """Nodes of ``df``'s optimized logical plan; a cached relation is a
+    leaf, so its cached subtree is not walked."""
+    nodes, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        children = node.children().iterator()
+        while children.hasNext():
+            stack.append(children.next())
+    return nodes
+
+
+def test_prepare_corpus_plan_is_linear(spark, sf_dir):
+    """Every split is packed in ONE grouped pandas pass, and the exact-
+    deduped corpus enters the final plan once, as a cached relation —
+    no self-join re-plans the gate -> dedup chain."""
+    docs = load_table(spark, "documents", sf_dir).limit(200)
+    res = prepare_corpus(docs, count_stages=False, chunk_size=32, overlap=4, pack_budget=512)
+    nodes = _plan_nodes(res.chunks)
+    names = [n.nodeName() for n in nodes]
+    assert names.count("FlatMapGroupsInPandas") == 1
+    assert "Union" not in names
+    exact_stems = [
+        n
+        for n in nodes
+        if n.nodeName() == "InMemoryRelation" and list(n.schema().fieldNames()) == docs.columns
+    ]
+    assert len(exact_stems) == 1
+    release_caches(res.chunks)
+
+
+def test_prepare_corpus_repeated_ids_never_duplicate_chunks(spark, sf_dir):
+    """Two different documents under one id: each of their chunks comes
+    out exactly once. (Labelling the split by a self-join on the id, or
+    joining packs back by chunk id, emitted each chunk once per copy.)"""
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text").limit(200)
+    kept = prepare_corpus(docs, count_stages=False, chunk_size=32, overlap=4, pack_budget=512)
+    a, b = sorted({r.doc_id for r in kept.chunks.select("doc_id").distinct().collect()})[:2]
+    release_caches(kept.chunks)
+    text_b = docs.filter(F.col("doc_id") == b).first().text
+    # b's words in reverse order: same gate statistics, different shingles
+    twin = spark.createDataFrame([(a, " ".join(reversed(text_b.split())))], docs.schema)
+
+    res = prepare_corpus(
+        docs.unionByName(twin), count_stages=False, chunk_size=32, overlap=4, pack_budget=512
+    )
+    rows = res.chunks.collect()
+    release_caches(res.chunks)
+    per_chunk = Counter((r.doc_id, r.chunk_idx, r.chunk_text) for r in rows)
+    assert max(per_chunk.values()) == 1
+    assert sum(1 for r in rows if r.doc_id == a and r.chunk_idx == 0) == 2  # both docs chunked
+
+
+def test_prepare_corpus_releases_every_persist(spark, sf_dir, persisted_rdd_ids):
+    """``release_caches(res.chunks)`` frees the exact-deduped stem and the
+    near-dedup set stem; a second call frees nothing. The LSH-candidate
+    ``localCheckpoint`` is a lineage cut, not a persist, so the leak
+    check leaves it out (see the ``persisted_rdd_ids`` fixture)."""
+    docs = load_table(spark, "documents", sf_dir).limit(200)
+    before = persisted_rdd_ids()
+    res = prepare_corpus(docs, count_stages=False, chunk_size=32, overlap=4, pack_budget=512)
+    assert res.chunks.count() > 0
+    assert release_caches(res.chunks) == 2
+    assert persisted_rdd_ids() - before == set()
+    assert release_caches(res.chunks) == 0
+
+
+def test_t13_query_releases_corpus_caches(spark, sf_dir, persisted_rdd_ids):
+    from etl_hiscox_spark.queries import all_queries
+
+    before = persisted_rdd_ids()
+    out = all_queries()["t13_corpus_prep_pipeline"].fn(spark, sf_dir)
+    assert out.collect()
+    assert release_caches(out) == 2
+    assert persisted_rdd_ids() - before == set()
+    assert release_caches(out) == 0

@@ -96,6 +96,36 @@ def test_pack_sequences_deterministic(spark):
     assert a == b
 
 
+def test_pack_sequences_by_matches_per_split_packing(spark):
+    """One grouped pass over every split assigns exactly the pack ids a
+    per-split loop assigns once each is prefixed with its split name:
+    BFD runs per (split, hash group) either way. Equal token counts make
+    the id tie-break decide, and one row exceeds the budget."""
+    rows = [(f"c{i}", ("train", "val", "test")[i % 3], (i * 37) % 400 + 1) for i in range(300)]
+    rows += [(f"t{i}", ("train", "val", "test")[i % 3], 256) for i in range(12)]  # ties
+    rows.append(("huge", "val", 5000))  # oversized -> singleton pack
+    df = spark.createDataFrame(rows, "key string, split string, n_tokens int")
+
+    grouped = pack_sequences(df, "key", "n_tokens", budget=1024, n_groups=4, by="split")
+    assert grouped.columns == ["key", "split", "n_tokens", "pack_id"]  # rows pass through
+    got = {(r.key, r.pack_id) for r in grouped.collect()}
+
+    want = set()
+    for name in ("train", "val", "test"):
+        part = pack_sequences(
+            df.filter(F.col("split") == name).select("key", "n_tokens"),
+            "key",
+            "n_tokens",
+            budget=1024,
+            n_groups=4,
+        )
+        want |= {(r.key, f"{name}/{r.pack_id}") for r in part.collect()}
+    assert len(got) == len(rows)
+    assert got == want
+    huge = dict(got)["huge"]
+    assert [k for k, p in got if p == huge] == ["huge"]
+
+
 def test_weighted_sample_rates_and_determinism(spark):
     from etl_hiscox_spark.operators.sampling import weighted_sample
 
