@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException as _SparkAnalysisError
 
 from etl_hiscox_spark.functions.text import content_hash, normalize_text, shingles
+from etl_hiscox_spark.operators import segindex
 from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
 
 # ---------------------------------------------------------------------------
@@ -1066,20 +1067,11 @@ def write_minhash_index(
     upgrades it in place. A root that is already generational stays
     generational regardless of the flag.
 
-    OCC APPENDS (r13; closes the ADVICE r12 lost-append race): on a
-    generational root ``mode="append"`` stages the batch's buckets as a
-    self-contained DELTA segment (``gen-*`` with its own buckets + meta)
-    and commits it with a pointer flip whose ``segments`` list = the
-    head's segments plus the delta (:func:`genlog.append_segment`) — so
-    a compact/erase/rebuild staged from the pre-append snapshot now
-    COLLIDES on the version instead of silently dropping the appended
-    rows, committed generations stay immutable (a concurrent maintenance
-    read can never observe a half-written bucket file), and a lost
-    pointer race is retried cheaply (the delta holds only new rows, so
-    it stays valid whoever won — unless the winner re-banded the index,
-    which fails the parameter check loudly). Probes read the union of
-    segments; the next compact merges them back to one — the LSM shape.
-    Flat roots keep the plain in-place parquet append.
+    On a generational root ``mode="append"`` stages the batch's buckets
+    as a self-contained DELTA segment (its own buckets + meta) and commits
+    it through :func:`segindex.append`. A lost pointer race re-commits the
+    same delta; a winner that re-banded the index fails the parameter
+    check loudly. Flat roots keep the plain in-place parquet append.
 
     ``txn=(app_id, batch_id)`` makes a generational append EXACTLY-ONCE
     under streaming redelivery (:func:`genlog.append_segment`'s
@@ -1116,68 +1108,30 @@ def write_minhash_index(
             "watermark ledger lives in the pointer records; migrate the flat "
             "index with migrate_flat_index_to_generational first"
         )
-    if mode == "append" and gen_layout:
-        root = genlog.resolve_root(spark, path)
+    if gen_layout or (generational and mode != "append"):
         requested = (num_hashes, num_bands, shingle_k)
 
-        def _validate_banding(rec: dict) -> None:
-            seg0 = genlog._join(root, genlog.pointer_segments(rec)[0])
-            meta = _read_index_meta(spark, seg0, resolved=True)
+        def _stage(_head, target: str) -> None:
+            write_minhash_index(
+                df, text_col, id_col, target, num_hashes=num_hashes,
+                num_bands=num_bands, shingle_k=shingle_k, generational=False,
+            )
+
+        def _validate_banding(_staged, current) -> None:
+            # checked against the head before the staging write, then again
+            # inside each commit attempt (a rebuild landing mid-append
+            # changes the banding out from under the staged delta)
+            meta = _read_index_meta(spark, current.paths[0], resolved=True)
             if meta != requested:
                 raise ValueError(
                     "minhash index parameter mismatch: index has "
                     f"{meta}, append asked for {requested}"
                 )
 
-        # validate against the CURRENT head before paying the staging
-        # write, then again inside each commit attempt (a rebuild landing
-        # mid-append changes the banding out from under the staged delta);
-        # current_generation is loud on an empty log (interrupted build)
-        head_version, _ = genlog.current_generation(spark, root)
-        head_rec = genlog.read_pointer(root, head_version)
-        if genlog.is_replay(head_rec, txn):
-            return  # replayed micro-batch: skip BEFORE staging anything
-        _validate_banding(head_rec)
-        delta = genlog.new_generation_name()
-        write_minhash_index(
-            df, text_col, id_col, genlog._join(root, delta),
-            num_hashes=num_hashes, num_bands=num_bands, shingle_k=shingle_k,
-            generational=False,
-        )
-        genlog.append_segment(
-            spark, root, delta, validate=_validate_banding, txn=txn
-        )
-        return
-    if mode != "append" and (generational or gen_layout):
-        root = genlog.resolve_root(spark, path)
-        _reject_flat_index_debris(spark, root)
-        # capture the base pointer BEFORE staging: the commit lands at
-        # base+1 create-if-absent, so a build racing another commit on
-        # this root collides loudly instead of silently superseding it
-        base = genlog.latest_pointer_version(spark, root)
-        gen = genlog.new_generation_name()
-        # stage the complete flat index as a fresh generation (buckets
-        # first, meta last — the staged tree is valid only once finished),
-        # then the pointer commit makes it live atomically; a crash before
-        # the commit leaves the previous generation (or nothing, for a
-        # first build) live and the stage vacuum-reclaimable
-        write_minhash_index(
-            df, text_col, id_col, genlog._join(root, gen),
-            num_hashes=num_hashes, num_bands=num_bands, shingle_k=shingle_k, generational=False,
-        )
-        genlog.commit_generation(
-            spark, root, gen, "build", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            # an overwrite-build onto an EXISTING head carries its
-            # exactly-once ledger like every other commit (review: a
-            # build that reset it would let a crash-replayed micro-batch
-            # land twice right after an index refresh)
-            txn_watermarks=(
-                genlog.read_pointer(root, base).get("txn_watermarks")
-                if base is not None
-                else None
-            ),
-        )
+        if mode == "append":
+            segindex.append(spark, path, _stage, _validate_banding, txn)
+        else:
+            segindex.build(spark, path, _stage)
         return
     if mode == "append":
         meta = _read_index_meta(spark, path)
@@ -1202,49 +1156,6 @@ def write_minhash_index(
         os.path.join(path, "buckets")
     )
     _write_index_meta(spark, path, num_hashes, num_bands, shingle_k)
-
-
-_FLAT_INDEX_MARKERS = ("buckets", "meta", "_centroids")
-
-
-def _reject_flat_index_debris(spark, root: str) -> None:
-    """A generational build over a root that already holds a FLAT index
-    would leave the stale flat tree (buckets/meta or __cluster=/_centroids)
-    as unreclaimable debris forever — every read resolves the live
-    generation, and vacuum_generations only touches ``gen-*`` dirs, so a
-    GDPR erase would leave subject rows on disk in the dead copy (r12
-    review). BOTH layouts' markers are checked from either build path —
-    an IVF build over flat minhash debris strands fingerprints just the
-    same (second review). Reject loudly; folding the flat tree in
-    requires a rename, so the explicit local-only migration is
-    :func:`migrate_flat_index_to_generational`."""
-    from pyarrow import fs as pafs
-
-    from etl_hiscox_spark.sources.listing import _resolve_fs
-
-    try:
-        filesystem, p = _resolve_fs(root)
-    except (ValueError, KeyError):
-        # a scheme pyarrow cannot RESOLVE — is_generational answered the
-        # same way; the staging write decides reachability loudly itself
-        return
-    # IO errors (throttling, timeouts) propagate: skipping the guard on a
-    # transient listing failure would strand the debris it exists to catch
-    infos = filesystem.get_file_info(
-        pafs.FileSelector(p, recursive=False, allow_not_found=True)
-    )
-    debris = sorted(
-        i.base_name
-        for i in infos
-        if i.base_name in _FLAT_INDEX_MARKERS or i.base_name.startswith("__cluster=")
-    )
-    if debris:
-        raise ValueError(
-            f"generational build over {root!r} would strand a flat index "
-            f"already there ({', '.join(debris)}) as unreclaimable debris — "
-            "build at a fresh root, or migrate the flat index explicitly "
-            "with migrate_flat_index_to_generational(spark, root)."
-        )
 
 
 def migrate_flat_index_to_generational(spark, path: str) -> str:
@@ -1297,10 +1208,7 @@ def migrate_flat_index_to_generational(spark, path: str) -> str:
     # validate the COMPLETED generation (not the now-empty root) before
     # the pointer makes it live
     _validate_live_index(spark, path.rstrip("/") + "/" + gen)
-    genlog.commit_generation(
-        spark, root, gen, "migrate", base_version=None,
-        geometry_id=genlog.new_geometry_id(),
-    )
+    segindex.adopt(spark, root, gen)
     from etl_hiscox_spark.sources.writers import refresh_swapped_path
 
     refresh_swapped_path(spark, path)
@@ -1511,7 +1419,9 @@ def compact_minhash_index(spark, path: str, target_file_mb: int = 256) -> int:
     the only copy; ADVICE r10) and renamed back only after the bucket
     rewrite lands — an interrupted compaction leaves a meta-less index
     every probe rejects loudly, never a half-rewritten bucket table read
-    silently. Returns the post-compaction bucket file count.
+    silently. Returns the post-compaction bucket file count. A
+    generational root instead merges its segments into one under
+    :mod:`operators.segindex`'s protocol.
     """
     from etl_hiscox_spark.sources import genlog
     from etl_hiscox_spark.sources.writers import (
@@ -1520,36 +1430,13 @@ def compact_minhash_index(spark, path: str, target_file_mb: int = 256) -> int:
     )
 
     if genlog.is_generational(spark, path):
-        # object-store form (r12): the compacted bucket table is staged
-        # as a COMPLETE new generation (buckets first, meta last) and a
-        # pointer flip commits it — no rename touches any data dir, so
-        # this runs on any filesystem; the pre-compaction generation
-        # stays live through every crash window and readable until
-        # genlog.vacuum_generations
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
-        params = _read_index_meta(spark, segs[0], resolved=True)
-        gen = genlog.new_generation_name()
-        target = genlog._join(path, gen)
-        # multi-segment heads (OCC append deltas, r13) merge back to ONE
-        # segment here — compaction doubles as the LSM segment merge
-        n = compact_parquet_to_dir(
-            spark,
-            [os.path.join(s, "buckets") for s in segs],
-            genlog._join(target, "buckets"),
-            target_file_mb,
-            sort_by=("band", "bucket"),
+        return segindex.compact(
+            spark, path, _LSH,
+            lambda h, target: compact_parquet_to_dir(
+                spark, [_LSH.data(p) for p in h.paths], target, target_file_mb,
+                sort_by=("band", "bucket"),
+            ),
         )
-        _write_index_meta(spark, target, *params)
-        # base captured at resolve time: a concurrent commit since then
-        # (e.g. an erase) collides loudly instead of being undone
-        genlog.commit_generation(
-            spark, path, gen, "compact", base_version=base,
-            geometry_id=rec.get("geometry_id"),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return n
     _require_local_index_path(spark, path, "compact_minhash_index")
     _read_index_meta(spark, path)  # loud on an uncommitted index
     _rename_meta_aside(spark, path, "meta__compact")
@@ -1568,8 +1455,10 @@ def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> 
     The index retains a banded fingerprint of every ingested document —
     GDPR reaches it exactly like the primary table
     (``sources/writers.erase_keys``), and an erased doc must stop
-    surfacing as ``dup_of`` in every future probe. The rewrite runs
-    under the index's commit protocol (meta renamed aside to
+    surfacing as ``dup_of`` in every future probe. A generational root
+    erases under :mod:`operators.segindex`'s segment protocol. On a flat
+    root the rewrite runs under the index's commit protocol (meta renamed
+    aside to
     ``meta__erase`` first — recoverable, the parameters are unchanged by
     erasure; ADVICE r10 — and renamed back after the bucket swap) so an
     interrupted erasure leaves a loudly-rejected index with its
@@ -1582,125 +1471,7 @@ def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> 
     from etl_hiscox_spark.sources import genlog
 
     if genlog.is_generational(spark, path):
-        # object-store form (r12): kept rows are staged as a complete new
-        # generation (buckets, then the unchanged meta as the commit
-        # record) and a pointer flip makes them live — no data-dir rename
-        base, _live_gen = genlog.current_generation(spark, path)
-        root = genlog.resolve_root(spark, path)
-        rec = genlog.read_pointer(root, base)
-        seg_names = genlog.pointer_segments(rec)
-        params = _read_index_meta(
-            spark, genlog._join(root, seg_names[0]), resolved=True
-        )
-        # SELECTIVE segment rewrite (r13, the LSM payoff): an erased doc
-        # must vanish from the build segment AND every delta, but a
-        # segment with NO hits is kept in the new pointer BY REFERENCE —
-        # erase IO is proportional to the segments actually touched, not
-        # the index (an erase of recent subjects rewrites only the recent
-        # deltas). All rewrites stage first; ONE pointer commit publishes.
-        k = F.broadcast(keys.select(F.col(id_col).alias("doc")).distinct())
-        # ONE stats action across every segment instead of a sequential
-        # semi-join count per segment (r17, guide §2.6/§5: per-action
-        # latency dominated multi-segment heads; committed generations
-        # are immutable, so stats and rewrites read consistent bytes)
-        from etl_hiscox_spark.operators.similarity import _segment_hit_stats
-
-        # resolve the bucket schema ONCE — a pyarrow footer read when the
-        # store is local, else one Spark inference on the first segment —
-        # and reuse it for every segment (r18, guide §6): every segment is
-        # written by _banded_buckets with identical layout (appends
-        # validate banding against the geometry segment), and per-call
-        # footer inference profiled ~80-230 ms per spark.read.parquet; a
-        # mismatched segment still fails loudly at scan time, never
-        # silently casts
-        from etl_hiscox_spark.fastschema import fast_parquet_schema
-
-        seg_dfs: list[DataFrame] = []
-        seg_schema = fast_parquet_schema(
-            os.path.join(genlog._join(root, seg_names[0]), "buckets")
-        )
-        for name in seg_names:
-            reader = (
-                spark.read.schema(seg_schema) if seg_schema is not None else spark.read
-            )
-            seg = reader.parquet(os.path.join(genlog._join(root, name), "buckets"))
-            seg_schema = seg_schema or seg.schema
-            seg_dfs.append(seg)
-        if len(seg_dfs) == 1:
-            # FUSED stats+rewrite for the single-segment head (the common
-            # shape after a compact — r18, guide §5): the anti-join
-            # rewrite job itself reports total/kept via observe(), so the
-            # erase pays ONE action instead of stats-then-rewrite (the
-            # repair lifecycle profiled 3 erases × ~0.4 s stats + ~0.3 s
-            # rewrite back to back). A no-hit erase abandons the staged
-            # bucket dir (meta never written — exactly the
-            # crash-before-meta state every probe already rejects and
-            # vacuum reclaims) and returns 0 with no commit, matching the
-            # stats-first path's contract.
-            from pyspark.sql import Observation
-
-            o_tot, o_kept = Observation(), Observation()
-            gen = genlog.new_generation_name()
-            target = genlog._join(root, gen)
-            kept = (
-                seg_dfs[0]
-                .observe(o_tot, F.count(F.lit(1)).alias("n"))
-                .join(k, "doc", "left_anti")
-                .observe(o_kept, F.count(F.lit(1)).alias("n"))
-            )
-            kept.write.mode("error").parquet(genlog._join(target, "buckets"))
-            n_erased = (o_tot.get["n"] or 0) - (o_kept.get["n"] or 0)
-            if n_erased == 0:
-                try:  # tidy the no-hit stage now; vacuum reclaims on failure
-                    fs_, p_ = genlog._fs(target)
-                    fs_.delete_dir(p_)
-                except (FileNotFoundError, OSError):
-                    pass
-                return 0
-            _write_index_meta(spark, target, *params)
-            genlog.commit_generation(
-                spark, path, gen, "erase", base_version=base,
-                segments=[gen],
-                geometry_id=rec.get("geometry_id"),
-                txn_watermarks=rec.get("txn_watermarks"),
-            )
-            return n_erased
-        stats = _segment_hit_stats(seg_dfs, k, "doc")
-        n_erased = sum(h for _t, h in stats)
-        if n_erased == 0:
-            return 0
-        new_segments: list[str] = []
-        first_rewritten: str | None = None
-        rewrites: list[tuple[str, DataFrame]] = []
-        for name, buckets, (_total, hits) in zip(seg_names, seg_dfs, stats):
-            if hits == 0:
-                new_segments.append(name)
-                continue
-            # a fully-erased rewrite stays READABLE (Spark writes the
-            # schema file for an empty non-partitioned frame), so the
-            # segment keeps its slot — dropping it could demote a delta
-            # into the geometry position
-            gen = genlog.new_generation_name()
-            rewrites.append((gen, buckets.join(k, "doc", "left_anti")))
-            new_segments.append(gen)
-            first_rewritten = first_rewritten or gen
-        # hit segments rewrite to DISJOINT staged trees — independent
-        # writes, overlapped (guide §2.6); ONE pointer commit publishes
-        from etl_hiscox_spark.concurrency import run_overlapped
-
-        def _rewrite(gen: str, kept: DataFrame) -> None:
-            target = genlog._join(root, gen)
-            kept.write.mode("error").parquet(genlog._join(target, "buckets"))
-            _write_index_meta(spark, target, *params)
-
-        run_overlapped([lambda g=g, kd=kd: _rewrite(g, kd) for g, kd in rewrites])
-        genlog.commit_generation(
-            spark, path, first_rewritten, "erase", base_version=base,
-            segments=new_segments,
-            geometry_id=rec.get("geometry_id"),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return n_erased
+        return segindex.erase(spark, path, _LSH, keys, id_col)
     _require_local_index_path(spark, path, "erase_from_minhash_index")
     _read_index_meta(spark, path)  # loud on an uncommitted index
     buckets_path = os.path.join(path, "buckets")
@@ -1802,33 +1573,21 @@ def rebuild_minhash_index(
     from etl_hiscox_spark.sources import genlog
 
     if genlog.is_generational(spark, path):
-        # object-store form (r12): the re-banded index stages as a fresh
-        # generation and the pointer flip IS the two-rename swap — one
-        # atomic commit instead of two renames, same crash guarantees
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        cur_hashes, cur_bands, cur_k = _read_index_meta(
-            spark,
-            genlog._join(path, genlog.pointer_segments(rec)[0]),
-            resolved=True,
-        )
-        new = (
-            int(num_hashes) if num_hashes is not None else cur_hashes,
-            int(num_bands) if num_bands is not None else cur_bands,
-            int(shingle_k) if shingle_k is not None else cur_k,
-        )
-        root = genlog.resolve_root(spark, path)
-        gen = genlog.new_generation_name()
-        write_minhash_index(
-            df, text_col, id_col, genlog._join(root, gen),
-            num_hashes=new[0], num_bands=new[1], shingle_k=new[2], generational=False,
-        )
-        genlog.commit_generation(
-            spark, root, gen, "rebuild", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return new
+        # generational form: the pointer flip IS the two-rename swap
+        def _reband(h, target: str) -> tuple[int, int, int]:
+            cur_hashes, cur_bands, cur_k = _read_index_meta(spark, h.paths[0], resolved=True)
+            new = (
+                int(num_hashes) if num_hashes is not None else cur_hashes,
+                int(num_bands) if num_bands is not None else cur_bands,
+                int(shingle_k) if shingle_k is not None else cur_k,
+            )
+            write_minhash_index(
+                df, text_col, id_col, target,
+                num_hashes=new[0], num_bands=new[1], shingle_k=new[2], generational=False,
+            )
+            return new
+
+        return segindex.rebuild(spark, path, _reband)
     tmp = begin_staged_rebuild(spark, path, "rebuild_minhash_index")
     cur_hashes, cur_bands, cur_k = _read_index_meta(spark, path)  # loud on uncommitted
     new = (
@@ -1958,6 +1717,18 @@ def _read_index_meta(spark, path: str, resolved: bool = False) -> tuple[int, int
             "Rebuild the index with write_minhash_index(mode='overwrite')."
         ) from exc
     return int(row["num_hashes"]), int(row["num_bands"]), int(row["shingle_k"])
+
+
+# The LSH answers to the segment protocol (operators/segindex): the
+# (doc, band, bucket) table sits under ``buckets/`` and is written as plain
+# parquet; the banding meta is the commit record.
+_LSH = segindex.SegmentKind(
+    data_dir="buckets",
+    key_col="doc",
+    write_data=lambda rows, path: rows.write.mode("error").parquet(path),
+    read_record=lambda spark, seg: _read_index_meta(spark, seg, resolved=True),
+    write_record=lambda spark, seg, params: _write_index_meta(spark, seg, *params),
+)
 
 
 def probe_minhash_index(

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_hiscox_spark.concurrency import run_overlapped
+from etl_hiscox_spark.operators import segindex
 from etl_hiscox_spark.smalldf import local_rows_df
 
 
@@ -510,35 +510,19 @@ def write_ivf_index(
     A root that is already generational stays generational regardless
     of the flag.
     """
-    from etl_hiscox_spark.operators.dedup import _reject_flat_index_debris
     from etl_hiscox_spark.sources import genlog
 
     spark = df.sparkSession
     if generational or genlog.is_generational(spark, path):
-        root = genlog.resolve_root(spark, path)
-        _reject_flat_index_debris(spark, root)
-        # base captured BEFORE staging: the commit lands at base+1
-        # create-if-absent, so racing commits collide loudly (r12 review)
-        base = genlog.latest_pointer_version(spark, root)
-        gen = genlog.new_generation_name()
-        C = write_ivf_index(
-            df, genlog._join(root, gen), embedding_col, id_col,
-            n_clusters=n_clusters, seed=seed, train_fraction=train_fraction,
-            max_iter=max_iter, centroids=centroids, quantize=quantize,
-            generational=False, _staged=True,
-        )
-        genlog.commit_generation(
-            spark, root, gen, "build", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            # an overwrite-build onto an EXISTING head carries its
-            # exactly-once ledger like every other commit (review)
-            txn_watermarks=(
-                genlog.read_pointer(root, base).get("txn_watermarks")
-                if base is not None
-                else None
+        return segindex.build(
+            spark, path,
+            lambda _head, target: write_ivf_index(
+                df, target, embedding_col, id_col,
+                n_clusters=n_clusters, seed=seed, train_fraction=train_fraction,
+                max_iter=max_iter, centroids=centroids, quantize=quantize,
+                generational=False, _staged=True,
             ),
         )
-        return C
 
     def _with_codes(assigned: DataFrame) -> DataFrame:
         if not quantize:
@@ -735,36 +719,6 @@ def _read_ivf_segments(spark, paths: list[str]) -> DataFrame:
     return out
 
 
-def _segment_hit_stats(
-    seg_dfs: list[DataFrame], keys_bc: DataFrame, id_col: str
-) -> list[tuple[int, int]]:
-    """``(total_rows, erase_hits)`` for every live segment, in ONE action.
-
-    Replaces the sequential per-segment semi-join count (+ kept-empty
-    probe) the index erase paths paid — per-action latency dominates
-    multi-segment heads (r17, guide §2.6/§5). ``keys_bc`` is the
-    broadcast-hinted DISTINCT erase set, so the left join marks without
-    duplicating; committed generations are immutable, so these stats and
-    the rewrites that follow read consistent bytes by construction.
-    """
-    hit = keys_bc.withColumn("__hit", F.lit(1))
-    marked = None
-    for i, seg in enumerate(seg_dfs):
-        m = seg.select(F.col(id_col), F.lit(i).alias("__seg"))
-        marked = m if marked is None else marked.unionByName(m)
-    rows = (
-        marked.join(hit, id_col, "left")
-        .groupBy("__seg")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("hits"),
-        )
-        .collect()
-    )
-    by_seg = {r["__seg"]: (r["total"], r["hits"]) for r in rows}
-    return [by_seg.get(i, (0, 0)) for i in range(len(seg_dfs))]
-
-
 def _assign_to_centroids(
     df: DataFrame, C: np.ndarray, quantized: bool, embedding_col: str
 ) -> DataFrame:
@@ -832,26 +786,6 @@ def _reject_malformed_assignments(assigned: DataFrame, C: np.ndarray) -> None:
         )
 
 
-def _stage_ivf_delta(
-    df: DataFrame, target: str, geom_seg: str, embedding_col: str
-) -> None:
-    """Stage an append batch as a SELF-CONTAINED delta segment: the
-    batch's ``__cluster=`` partitions plus a copy of the geometry
-    segment's ``_centroids`` commit record (k rows — the copy keeps every
-    segment independently validatable and means a crash mid-stage leaves
-    a centroid-less tree no reader ever trusts). Same malformed-row
-    rejection as the in-place append path."""
-    spark = df.sparkSession
-    C = load_ivf_centroids(spark, geom_seg, resolved=True)
-    quantized = ivf_index_is_quantized(spark, geom_seg, resolved=True)
-    assigned = _assign_to_centroids(df, C, quantized, embedding_col)
-    # delta targets are always staged trees: the malformed gate rides the
-    # write (observe, one action) — a bad batch leaves a centroid-less
-    # stage no reader trusts, same as a crash mid-stage (r17)
-    _write_observed_gate(assigned, target, "append_to_ivf_index", C)
-    _write_ivf_centroids(spark, target, C, quantized=quantized)
-
-
 def append_to_ivf_index(
     df: DataFrame,
     path: str,
@@ -874,21 +808,13 @@ def append_to_ivf_index(
     re-clustering (centroid drift repair) is an explicit rebuild, not a
     side effect.
 
-    OCC APPENDS (r13; closes the ADVICE r12 lost-append race): on a
-    generational root the batch stages as a self-contained DELTA segment
-    (its ``__cluster=`` partitions plus a validated copy of the geometry
-    record) and commits with a pointer flip whose ``segments`` list = the
-    head's segments plus the delta (:func:`genlog.append_segment`) — a
-    compact/erase/rebuild staged from the pre-append snapshot now
-    collides on the version instead of silently dropping the appended
-    rows, and committed generations stay immutable. A lost pointer race
-    re-commits the same delta (it holds only new rows — still valid after
-    a compact or erase won); a REBUILD winning mid-append changes the
-    geometry epoch, so the delta's cluster assignments are stale — that
-    raises :class:`genlog.GeometryChanged` and the append re-stages
-    against the new centroids (bounded attempts). Probes read the union
-    of segments; the next compact merges them — the LSM shape. Flat
-    roots keep the plain in-place partition append.
+    On a generational root the batch stages as a self-contained DELTA
+    segment (its ``__cluster=`` partitions plus a copy of the geometry
+    record) and commits through :func:`segindex.append`. A lost pointer
+    race re-commits the same delta; a REBUILD winning mid-append makes the
+    delta's assignments stale (:class:`genlog.GeometryChanged`), so it
+    re-stages against the new centroids. Flat roots keep the plain
+    in-place partition append.
 
     ``txn=(app_id, batch_id)`` makes a generational append EXACTLY-ONCE
     under streaming redelivery (:func:`genlog.append_segment`'s watermark
@@ -911,37 +837,24 @@ def append_to_ivf_index(
                 "migrate_flat_index_to_generational first"
             )
     else:
-        root = genlog.resolve_root(spark, path)
-        for _ in range(3):
-            version, _gen = genlog.current_generation(spark, root)
-            rec = genlog.read_pointer(root, version)
-            if genlog.is_replay(rec, txn):
-                return  # replayed micro-batch: skip BEFORE staging
-            geom_seg = genlog._join(root, genlog.pointer_segments(rec)[0])
-            geometry_id = rec.get("geometry_id")
-
-            def _same_geometry(head_rec: dict, pinned=geometry_id) -> None:
-                if head_rec.get("geometry_id") != pinned:
-                    raise genlog.GeometryChanged(
-                        "IVF geometry changed mid-append (a rebuild "
-                        "committed) — the staged delta's cluster "
-                        "assignments are stale; re-staging"
-                    )
-
-            delta = genlog.new_generation_name()
-            _stage_ivf_delta(df, genlog._join(root, delta), geom_seg,
-                             embedding_col)
-            try:
-                genlog.append_segment(
-                    spark, root, delta, validate=_same_geometry, txn=txn
+        def _same_geometry(staged, current) -> None:
+            if current.record.get("geometry_id") != staged.record.get("geometry_id"):
+                raise genlog.GeometryChanged(
+                    "IVF geometry changed mid-append (a rebuild "
+                    "committed) — the staged delta's cluster "
+                    "assignments are stale; re-staging"
                 )
-                return
-            except genlog.GeometryChanged:
-                continue  # stale delta is vacuum-reclaimable debris
-        raise RuntimeError(
-            "append_to_ivf_index: geometry changed on every attempt (3) — "
-            "pathological rebuild contention; pause rebuilds and re-append"
-        )
+
+        def _stage_delta(h, target: str) -> None:
+            # the malformed gate rides the write (observe, one action): a
+            # bad batch leaves a record-less stage no reader trusts
+            C, quantized = record = _IVF.read_record(spark, h.paths[0])
+            assigned = _assign_to_centroids(df, C, quantized, embedding_col)
+            _write_observed_gate(assigned, target, "append_to_ivf_index", C)
+            _IVF.write_record(spark, target, record)
+
+        segindex.append(spark, path, _stage_delta, _same_geometry, txn)
+        return
     # flat layout: in-place partition append (driver-local maintenance).
     # quantized layouts propagate — the flag comes from the _centroids
     # commit record in O(1), a full index schema inference per daily
@@ -958,6 +871,67 @@ def append_to_ivf_index(
         _write_ivf_partitions(assigned, path, mode="append")
     finally:
         assigned.unpersist(blocking=False)
+
+
+# The IVF answers to the segment protocol (operators/segindex): the
+# ``__cluster=`` partitions sit at the segment root, the erase key is the
+# caller's id column, and ``_centroids`` is the commit record.
+_IVF = segindex.SegmentKind(
+    data_dir=None,
+    key_col=None,
+    write_data=_write_ivf_partitions,
+    read_record=lambda spark, seg: (
+        load_ivf_centroids(spark, seg, resolved=True),
+        ivf_index_is_quantized(spark, seg, resolved=True),
+    ),
+    write_record=lambda spark, seg, rec: _write_ivf_centroids(
+        spark, seg, rec[0], quantized=rec[1]
+    ),
+)
+
+
+def _merge_ivf_segments(spark, segs: list[str], target: str, target_file_mb: int) -> int | None:
+    """Rewrite the union of ``segs`` into ``target`` as ~target-sized files
+    per cluster; returns the file count, or None for a head with no
+    ``__cluster=`` partitions (the fully-erased placeholder — scheduled
+    compaction landing on it must be a no-op, not an error). Sizing facts
+    sum each cluster's bytes across every segment and come from
+    distributed_dir_stats, so the driver's share stays bounded by
+    n_clusters."""
+    from pyarrow import fs as pafs
+
+    from etl_hiscox_spark.sources.genlog import _join
+    from etl_hiscox_spark.sources.listing import (
+        _dir_file_stats,
+        _resolve_fs,
+        distributed_dir_stats,
+    )
+
+    dirs = []
+    for seg in segs:
+        filesystem, seg_path = _resolve_fs(seg)
+        for info in filesystem.get_file_info(pafs.FileSelector(seg_path, recursive=False)):
+            if info.type == pafs.FileType.Directory and info.base_name.startswith("__cluster="):
+                dirs.append((int(info.base_name.split("=", 1)[1]), _join(seg, info.base_name)))
+    if not dirs:
+        return None
+    sizes: dict[int, int] = {}
+    for r in distributed_dir_stats(spark, dirs).collect():
+        sizes[int(r["key"])] = sizes.get(int(r["key"]), 0) + int(r["total_bytes"])
+    step = target_file_mb * 1024 * 1024
+    n_files = {c: max(1, -(-b // step)) for c, b in sizes.items()}
+    df = _read_ivf_segments(spark, segs)
+    data_cols = [c for c in df.columns if c != "__cluster"]
+    n_map = F.create_map(*[F.lit(x) for item in n_files.items() for x in item])
+    salt = F.pmod(F.hash(*[F.col(c) for c in data_cols]), n_map[F.col("__cluster")])
+    (
+        df.repartition(sum(n_files.values()), F.col("__cluster"), salt)
+        .write.partitionBy("__cluster")
+        .mode("error")
+        .option("partitionOverwriteMode", "static")
+        .parquet(target)
+    )
+    return _dir_file_stats(target)[0]
 
 
 def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
@@ -980,7 +954,9 @@ def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
     ``compact_small_files`` (the plan lazily reads ``path``; an in-place
     overwrite would delete its own input mid-job). Local-filesystem swap
     here; on a cluster the identical rewrite is table-format ``OPTIMIZE``.
-    Returns the post-compaction data file count.
+    Returns the post-compaction data file count. A generational root
+    instead merges its segments into one under :mod:`operators.segindex`'s
+    protocol.
     """
     import shutil
 
@@ -988,73 +964,10 @@ def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
     from etl_hiscox_spark.sources import genlog
 
     if genlog.is_generational(spark, path):
-        # object-store form (r12): the compacted partitions stage as a
-        # COMPLETE new generation (partitions first, centroids last) and
-        # a pointer flip commits — no rename touches any data dir. Sizing
-        # facts come from distributed_dir_stats (the fragmentation-stats
-        # machinery), so the driver's share stays bounded by n_clusters.
-        from pyarrow import fs as pafs
-
-        from etl_hiscox_spark.sources.listing import (
-            _dir_file_stats,
-            _resolve_fs,
-            distributed_dir_stats,
+        return segindex.compact(
+            spark, path, _IVF,
+            lambda h, target: _merge_ivf_segments(spark, h.paths, target, target_file_mb),
         )
-
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
-        C = load_ivf_centroids(spark, segs[0], resolved=True)
-        quantized = ivf_index_is_quantized(spark, segs[0], resolved=True)
-        # sizing facts across EVERY live segment (OCC append deltas, r13):
-        # the same cluster may hold files in several segments — sum them;
-        # the merged output is one segment, the LSM compaction shape
-        dirs = []
-        for seg in segs:
-            filesystem, seg_path = _resolve_fs(seg)
-            for info in filesystem.get_file_info(
-                pafs.FileSelector(seg_path, recursive=False)
-            ):
-                if info.type == pafs.FileType.Directory and info.base_name.startswith(
-                    "__cluster="
-                ):
-                    dirs.append((int(info.base_name.split("=", 1)[1]), genlog._join(seg, info.base_name)))
-        if not dirs:
-            # FULLY-ERASED head (the readable-empty contract, fc6a9d5):
-            # the zero-row placeholder generation has a geometry record —
-            # proven by load_ivf_centroids above — but no __cluster=
-            # partitions, and scheduled compaction landing on it must be
-            # a no-op, not an error (ADVICE r13: erase-everything then
-            # compact errored until an append or rebuild arrived)
-            return 0
-        sizes: dict[int, int] = {}
-        for r in distributed_dir_stats(spark, dirs).collect():
-            sizes[int(r["key"])] = sizes.get(int(r["key"]), 0) + int(r["total_bytes"])
-        step = target_file_mb * 1024 * 1024
-        n_files = {c: max(1, -(-b // step)) for c, b in sizes.items()}
-        df = _read_ivf_segments(spark, segs)
-        data_cols = [c for c in df.columns if c != "__cluster"]
-        n_map = F.create_map(*[F.lit(x) for item in n_files.items() for x in item])
-        salt = F.pmod(F.hash(*[F.col(c) for c in data_cols]), n_map[F.col("__cluster")])
-        gen = genlog.new_generation_name()
-        target = genlog._join(path, gen)
-        (
-            df.repartition(sum(n_files.values()), F.col("__cluster"), salt)
-            .write.partitionBy("__cluster")
-            .mode("error")
-            .option("partitionOverwriteMode", "static")
-            .parquet(target)
-        )
-        n_out = _dir_file_stats(target)[0]  # before centroids land
-        _write_ivf_centroids(spark, target, C, quantized=quantized)
-        # base captured at resolve time: a concurrent commit since then
-        # (e.g. an erase) collides loudly instead of being undone
-        genlog.commit_generation(
-            spark, path, gen, "compact", base_version=base,
-            geometry_id=rec.get("geometry_id"),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return n_out
     # driver-local paths only (ADVICE r10): the swap below is os.rename —
     # fail loudly BEFORE the Spark tmp write, never leak a __compact dir
     local = _require_local_index_path(spark, path, "compact_ivf_index")
@@ -1114,12 +1027,14 @@ def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
 
     Table-level erasure (``sources/writers.erase_keys``) leaves index
     layouts retaining the erased payload — an index IS a copy of the
-    data, so GDPR reaches it too. Erasure here touches ONLY the affected
-    cluster partitions: the erase set semi-joins the index to find its
-    clusters (a collect bounded by n_clusters ints), the kept rows of
-    those partitions are staged to a tmp dir (the lazy plan reads
-    ``path``, so an in-place overwrite would delete its own input), and
-    each affected partition directory is swapped. Centroid geometry and
+    data, so GDPR reaches it too. A generational root erases under
+    :mod:`operators.segindex`'s segment protocol. On a flat root erasure
+    touches ONLY the affected cluster partitions: the erase set
+    semi-joins the index to find its clusters (a collect bounded by
+    n_clusters ints), the kept rows of those partitions are staged to a
+    tmp dir (the lazy plan reads ``path``, so an in-place overwrite would
+    delete its own input), and each affected partition directory is
+    swapped. Centroid geometry and
     every unaffected partition are untouched byte-for-byte — erasure is
     maintenance, it must never drift the index contract. A cluster whose
     rows are ALL erased simply loses its directory (an empty partition,
@@ -1143,170 +1058,7 @@ def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
     from etl_hiscox_spark.sources import genlog
 
     if genlog.is_generational(spark, path):
-        # object-store form (r12): the kept rows stage as a complete new
-        # generation (partitions first, unchanged centroids last) and a
-        # pointer flip commits. This rewrites the WHOLE index — the
-        # pointer names one directory, so partial-generation reuse needs
-        # file-level manifests (the Iceberg/Delta upgrade); batch erasure
-        # requests so each flip amortizes like an OPTIMIZE. The flat
-        # local layout below keeps the affected-partitions-only rewrite.
-        base, _live_gen = genlog.current_generation(spark, path)
-        root = genlog.resolve_root(spark, path)
-        rec = genlog.read_pointer(root, base)
-        seg_names = genlog.pointer_segments(rec)
-        geom_seg = genlog._join(root, seg_names[0])
-        C = load_ivf_centroids(spark, geom_seg, resolved=True)
-        quantized = ivf_index_is_quantized(spark, geom_seg, resolved=True)
-        # SELECTIVE segment rewrite (r13, the LSM payoff): an erased id
-        # must vanish from the build segment AND every delta, but a
-        # segment with NO hits is kept in the new pointer BY REFERENCE —
-        # erase IO is proportional to the segments actually touched. A
-        # rewrite whose kept set is EMPTY is dropped from the list (an
-        # empty partitionBy write produces no readable files); if that
-        # empties the whole list, one schema-preserving merged generation
-        # is written so the geometry record survives (pre-r13 behavior
-        # for a fully-erased index).
-        k = F.broadcast(keys.select(F.col(id_col)).distinct())
-        # ONE stats action for every segment instead of a sequential
-        # hits-count (+ kept-empty check) per segment (r17, guide §2.6 /
-        # §5: the per-action latency dominated multi-segment erases —
-        # committed generations are immutable, so the stats and the
-        # rewrites below read consistent bytes by construction)
-        # first segment infers the schema, the rest reuse it (r18, guide
-        # §6: per-call footer inference profiled ~80-230 ms; all live
-        # segments share the layout by protocol — deltas carry a validated
-        # copy of the geometry record — and a mismatch fails loudly at
-        # scan time, never silently casts)
-        seg_dfs = [spark.read.parquet(genlog._join(root, seg_names[0]))]
-        schema = seg_dfs[0].schema
-        seg_dfs += [
-            spark.read.schema(schema).parquet(genlog._join(root, name))
-            for name in seg_names[1:]
-        ]
-        if len(seg_dfs) == 1:
-            # FUSED stats+rewrite for the single-segment head (r18, guide
-            # §5 — mirrors the minhash erase): the anti-join rewrite job
-            # reports total/kept via observe(), so the common erase pays
-            # one action instead of stats-then-rewrite. A no-hit erase
-            # abandons the staged tree (no centroid record written — the
-            # crash-mid-stage state the protocol already rejects and
-            # vacuum reclaims) and returns 0 with no commit; a fully-
-            # erased segment falls through to the readable-empty branch
-            # below exactly as the stats-first path does.
-            from pyspark.sql import Observation
-
-            o_tot, o_kept = Observation(), Observation()
-            gen = genlog.new_generation_name()
-            target = genlog._join(root, gen)
-            kept_df = (
-                seg_dfs[0]
-                .observe(o_tot, F.count(F.lit(1)).alias("n"))
-                .join(k, id_col, "left_anti")
-                .observe(o_kept, F.count(F.lit(1)).alias("n"))
-            )
-            _write_ivf_partitions(kept_df, target)
-            try:
-                total = o_tot.get["n"] or 0
-                n_kept = o_kept.get["n"] or 0
-            except Exception:
-                # a partitionBy write of ZERO rows plans zero tasks, so
-                # the CollectMetrics row never materializes and the
-                # metric fetch throws (pinned by the fully-erased tests)
-                # — every segment row was erased (or the segment was
-                # empty); one bounded count resolves which
-                total = seg_dfs[0].count()
-                n_kept = 0
-            n_erased = total - n_kept
-            if n_erased == 0 or n_kept == 0:
-                # no hits (stage useless) OR fully erased (a partitionBy
-                # write of an empty frame leaves no readable files) —
-                # drop the stage either way
-                try:
-                    fs_, p_ = genlog._fs(target)
-                    fs_.delete_dir(p_)
-                except (FileNotFoundError, OSError):
-                    pass
-                if n_erased == 0:
-                    return 0
-                # fully-erased index: write the READABLE zero-row
-                # dataset + geometry record (same as the stats-first
-                # path's empty-list branch)
-                gen = genlog.new_generation_name()
-                target = genlog._join(root, gen)
-                local_rows_df(spark, [], seg_dfs[0].schema).write.mode(
-                    "error"
-                ).parquet(target)
-                _write_ivf_centroids(spark, target, C, quantized=quantized)
-                genlog.commit_generation(
-                    spark, path, gen, "erase", base_version=base,
-                    segments=[gen],
-                    geometry_id=rec.get("geometry_id"),
-                    txn_watermarks=rec.get("txn_watermarks"),
-                )
-                return n_erased
-            _write_ivf_centroids(spark, target, C, quantized=quantized)
-            genlog.commit_generation(
-                spark, path, gen, "erase", base_version=base,
-                segments=[gen],
-                geometry_id=rec.get("geometry_id"),
-                txn_watermarks=rec.get("txn_watermarks"),
-            )
-            return n_erased
-        stats = _segment_hit_stats(seg_dfs, k, id_col)
-        n_erased = sum(h for _t, h in stats)
-        if n_erased == 0:
-            return 0
-        new_segments = []
-        first_rewritten: str | None = None
-        rewrites: list[tuple[str, "DataFrame"]] = []
-        for name, seg, (total, hits) in zip(seg_names, seg_dfs, stats):
-            if hits == 0:
-                new_segments.append(name)
-                continue
-            if total == hits:
-                continue  # fully-erased segment: drops out of the list
-            gen = genlog.new_generation_name()
-            rewrites.append((gen, seg.join(k, id_col, "left_anti")))
-            new_segments.append(gen)
-            first_rewritten = first_rewritten or gen
-        # hit segments rewrite to DISJOINT staged trees — independent
-        # writes, overlapped from a small pool (guide §2.6); the single
-        # pointer commit below is what publishes them, in order
-        run_overlapped(
-            [
-                (
-                    lambda g=gen, kd=kept_df: (
-                        _write_ivf_partitions(kd, genlog._join(root, g)),
-                        _write_ivf_centroids(
-                            spark, genlog._join(root, g), C, quantized=quantized
-                        ),
-                    )
-                )
-                for gen, kept_df in rewrites
-            ]
-        )
-        if not new_segments:
-            # fully-erased index: a centroids-only tree is UNREADABLE
-            # (review — probes/erases crash on schema inference and the
-            # index is unrecoverable without a rebuild). Write a READABLE
-            # zero-row dataset carrying the full schema (__cluster rides
-            # as a plain column; Spark writes the schema file for an
-            # empty NON-partitioned frame) plus the geometry record —
-            # probes answer empty, appends stage deltas beside it, the
-            # next compact drops it.
-            gen = genlog.new_generation_name()
-            target = genlog._join(root, gen)
-            local_rows_df(spark, [], schema).write.mode("error").parquet(target)
-            _write_ivf_centroids(spark, target, C, quantized=quantized)
-            new_segments, first_rewritten = [gen], gen
-        genlog.commit_generation(
-            spark, path, first_rewritten or new_segments[0], "erase",
-            base_version=base,
-            segments=new_segments,
-            geometry_id=rec.get("geometry_id"),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return n_erased
+        return segindex.erase(spark, path, _IVF, keys, id_col)
     # driver-local paths only (ADVICE r10): the partition swaps below are
     # os.rename — fail loudly BEFORE any Spark work, never leak __erase
     local = _require_local_index_path(spark, path, "erase_from_ivf_index")
@@ -1393,30 +1145,19 @@ def rebuild_ivf_index(
     from etl_hiscox_spark.sources import genlog
 
     if genlog.is_generational(spark, path):
-        # object-store form (r12): the retrained index stages as a fresh
-        # generation; the pointer flip replaces the two-rename swap with
-        # one atomic commit, same crash guarantees, any filesystem
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
-        old_C = load_ivf_centroids(spark, segs[0], resolved=True)
-        k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
-        live_df = _read_ivf_segments(spark, segs).drop("__cluster")
-        assigned, C = ivf_index(
-            live_df, embedding_col, id_col, k, seed, train_fraction, max_iter
-        )
-        gen = genlog.new_generation_name()
-        target = genlog._join(path, gen)
-        _write_ivf_partitions(assigned, target)
-        _write_ivf_centroids(spark, target, C, quantized="__codes" in live_df.columns)
-        # a rebuild is a new geometry EPOCH: any append staged against the
-        # old centroids must re-stage, which this fresh id makes loud
-        genlog.commit_generation(
-            spark, path, gen, "rebuild", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return C
+        # generational form: the pointer flip replaces the two-rename swap
+        def _retrain(h, target: str) -> np.ndarray:
+            old_C = load_ivf_centroids(spark, h.paths[0], resolved=True)
+            k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
+            live_df = _read_ivf_segments(spark, h.paths).drop("__cluster")
+            assigned, C = ivf_index(
+                live_df, embedding_col, id_col, k, seed, train_fraction, max_iter
+            )
+            _write_ivf_partitions(assigned, target)
+            _write_ivf_centroids(spark, target, C, quantized="__codes" in live_df.columns)
+            return C
+
+        return segindex.rebuild(spark, path, _retrain)
 
     # leftover check FIRST (r11 review): after a crash in the two-rename
     # swap window the live path is absent and load_ivf_centroids' "rebuild

@@ -2255,7 +2255,7 @@ def test_segment_hit_stats_one_action(spark):
     were folded into one action)."""
     from pyspark.sql import functions as F
 
-    from etl_hiscox_spark.operators.similarity import _segment_hit_stats
+    from etl_hiscox_spark.operators.segindex import _segment_hit_stats
 
     seg_a = spark.createDataFrame([(1,), (2,), (3,)], "doc long")
     seg_b = spark.createDataFrame([(4,), (5,)], "doc long")   # zero hits

@@ -912,6 +912,132 @@ def test_ivf_fully_erased_delta_drops_out_of_the_segment_list(spark, tmp_path):
     assert [r["vec_id"] for r in got.collect()] == [r["vec_id"] for r in want.collect()]
 
 
+def test_minhash_fully_erased_delta_drops_out_of_the_segment_list(spark, tmp_path):
+    """The LSH side of the one fully-erased rule: a delta segment whose
+    docs are ALL erased drops out of the list (no empty slot is kept), the
+    build segment stays by reference, and probes answer from it."""
+    from etl_hiscox_spark.operators.dedup import (
+        erase_from_minhash_index,
+        write_minhash_index,
+    )
+    from etl_hiscox_spark.sources import genlog
+
+    root = "file://" + str(tmp_path / "mh")
+    docs = _docs(spark)
+    write_minhash_index(docs.filter("doc_id < 20"), "text", "doc_id", root)
+    write_minhash_index(
+        docs.filter("doc_id >= 20"), "text", "doc_id", root, mode="append"
+    )
+    before = genlog.live_index_paths(spark, root)
+    assert len(before) == 2
+    n = erase_from_minhash_index(
+        spark, root, docs.filter("doc_id >= 20").select("doc_id"), "doc_id"
+    )
+    assert n == 20 * 6  # num_bands rows per erased doc
+    assert genlog.live_index_paths(spark, root) == [before[0]]
+    assert 3 in _probe_pairs(spark, root, docs)  # the build segment answers
+
+
+def _index_kind_ops(spark, kind):
+    """The same lifecycle calls over either index kind: 40 rows keyed
+    0..39 (``doc_id`` for LSH, ``vec_id`` for IVF)."""
+    if kind == "lsh":
+        from etl_hiscox_spark.operators import dedup
+
+        docs = _docs(spark)
+        key = "doc_id"
+        return dict(
+            key=key,
+            rows=docs,
+            build=lambda root, df: dedup.write_minhash_index(df, "text", key, root),
+            append=lambda root, df, txn: dedup.write_minhash_index(
+                df, "text", key, root, mode="append", txn=txn
+            ),
+            erase=lambda root, keys: dedup.erase_from_minhash_index(spark, root, keys, key),
+            compact=lambda root: dedup.compact_minhash_index(spark, root),
+            rebuild=lambda root, live: dedup.rebuild_minhash_index(
+                spark, live, "text", key, root
+            ),
+        )
+    from etl_hiscox_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(31)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
+    key = "vec_id"
+    return dict(
+        key=key,
+        rows=spark.createDataFrame(rows, "vec_id long, embedding array<float>"),
+        build=lambda root, df: sim.write_ivf_index(
+            df, root, "embedding", key,
+            centroids=sim.random_hyperplanes(dim=8, n_planes=4, seed=3),
+        ),
+        append=lambda root, df, txn: sim.append_to_ivf_index(
+            df, root, "embedding", key, txn=txn
+        ),
+        erase=lambda root, keys: sim.erase_from_ivf_index(spark, root, keys, key),
+        compact=lambda root: sim.compact_ivf_index(spark, root),
+        rebuild=lambda root, live: sim.rebuild_ivf_index(
+            spark, root, "embedding", key, max_iter=2
+        ),
+    )
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_segment_lifecycle_commit_contract(spark, tmp_path, kind):
+    """Every maintenance commit of either index kind carries the head's
+    exactly-once ledger; erase and compact keep the geometry epoch while
+    rebuild mints a new one; a replayed batch after any op is a no-op; and
+    a no-hit erase on a single-segment head commits nothing and leaves no
+    stage behind."""
+    from etl_hiscox_spark.sources import genlog
+
+    ops = _index_kind_ops(spark, kind)
+    key, rows = ops["key"], ops["rows"]
+    local = str(tmp_path / kind)
+    root = "file://" + local
+
+    def head():
+        v = genlog.current_generation(spark, root)[0]
+        return v, genlog.read_pointer(genlog.resolve_root(spark, root), v)
+
+    def n_gen_dirs():
+        return len([d for d in os.listdir(local) if d.startswith("gen-")])
+
+    def keys(*ids):
+        return spark.createDataFrame([(i,) for i in ids], f"{key} long")
+
+    batch = rows.filter(f"{key} >= 20")
+    ops["build"](root, rows.filter(f"{key} < 20"))
+    geometry = head()[1]["geometry_id"]
+    ops["append"](root, batch, ("app", 3))
+    assert len(head()[1]["segments"]) == 2
+
+    steps = [
+        ("erase", lambda: ops["erase"](root, keys(23)), 2),  # multi-segment head
+        ("compact", lambda: ops["compact"](root), 1),
+        ("erase", lambda: ops["erase"](root, keys(5)), 1),  # single-segment head
+        ("rebuild", lambda: ops["rebuild"](root, rows.filter(f"{key} not in (5, 23)")), 1),
+    ]
+    for operation, run, n_segments in steps:
+        run()
+        version, rec = head()
+        assert rec["operation"] == operation
+        assert len(rec["segments"]) == n_segments
+        assert rec["txn_watermarks"] == {"app": 3}
+        if operation == "rebuild":
+            assert rec["geometry_id"] != geometry
+        else:
+            assert rec["geometry_id"] == geometry
+        stages = n_gen_dirs()
+        ops["append"](root, batch, ("app", 3))  # replayed batch: no-op
+        assert head()[0] == version and n_gen_dirs() == stages
+
+    version, stages = head()[0], n_gen_dirs()
+    assert ops["erase"](root, keys(424242)) == 0
+    assert head()[0] == version
+    assert n_gen_dirs() == stages
+
+
 def test_rebuilt_root_never_serves_the_old_roots_cached_pointer(spark, tmp_path):
     """The bench/test scratch pattern: DELETE the whole index root and
     rebuild at the same path — versions restart at v0, so the pointer
