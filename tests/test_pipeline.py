@@ -4,6 +4,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import threading
+import time
 from datetime import date, datetime
 
 from pyspark.sql import functions as F
@@ -707,3 +709,151 @@ def test_partition_high_watermark_ignores_hidden_files(spark, tmp_path):
     (ghost / "_started_marker").write_bytes(b"")
     dtype = df.schema["month"].dataType
     assert partition_high_watermark(p, "month", dtype) == (True, "2024-01")
+
+
+# -- concurrent model DAG ----------------------------------------------------
+
+
+def test_independent_models_run_concurrently(spark):
+    # Each model waits for the other inside its own step: a runner that
+    # starts one model at a time breaks the barrier.
+    from etl_hiscox_spark.plans.pipeline import Model, Pipeline
+
+    barrier = threading.Barrier(2, timeout=30)
+
+    def meet(s, _):
+        barrier.wait()
+        return s.range(1)
+
+    p = Pipeline(spark)
+    p.add(Model(name="bronze.a", fn=meet))
+    p.add(Model(name="bronze.b", fn=meet))
+    report = p.run()
+    assert report.success, report.summary()
+    assert [s.status for s in report.steps] == ["success", "success"]
+
+
+def test_dependents_start_after_their_deps_end(spark):
+    from etl_hiscox_spark.plans.pipeline import Model, Pipeline
+
+    spans: dict[str, list[float]] = {}
+
+    def timed(name, delay=0.0):
+        def fn(s, _):
+            spans[name] = [time.monotonic()]
+            time.sleep(delay)
+            spans[name].append(time.monotonic())
+            return s.range(1)
+
+        return fn
+
+    deps = {
+        "bronze.slow": (),
+        "bronze.fast": (),
+        "silver.join": ("bronze.slow", "bronze.fast"),
+        "silver.fast_only": ("bronze.fast",),
+        "gold.report": ("silver.join", "silver.fast_only"),
+    }
+    p = Pipeline(spark)
+    for name, d in deps.items():
+        p.add(Model(name=name, fn=timed(name, 0.5 if name == "bronze.slow" else 0.0), deps=d))
+    report = p.run()
+    assert report.success, report.summary()
+    for name, d in deps.items():
+        for dep in d:
+            assert spans[name][0] >= spans[dep][1], (name, dep)
+    # bronze.fast and silver.fast_only end before bronze.slow; the report
+    # still lists the steps in topo order.
+    assert spans["silver.fast_only"][1] < spans["bronze.slow"][1]
+    assert [s.name for s in report.steps] == p._topo_order()
+
+
+def test_failed_step_starts_nothing_new_and_lets_running_steps_finish(spark):
+    from etl_hiscox_spark.plans.pipeline import Model, Pipeline
+
+    # bronze.slow is already running when bronze.boom fails.
+    started = threading.Barrier(2, timeout=30)
+
+    def slow(s, _):
+        started.wait()
+        time.sleep(0.5)
+        return s.range(1)
+
+    def boom(s, _):
+        started.wait()
+        raise RuntimeError("boom")
+
+    p = Pipeline(spark)
+    p.add(Model(name="bronze.slow", fn=slow))
+    p.add(Model(name="bronze.boom", fn=boom))
+    p.add(Model(name="silver.after_boom", fn=lambda s, o: s.range(1), deps=("bronze.boom",)))
+    p.add(Model(name="silver.after_slow", fn=lambda s, o: s.range(1), deps=("bronze.slow",)))
+    report = p.run()
+    assert not report.success
+    by = {s.name: s.status for s in report.steps}
+    assert by == {"bronze.slow": "success", "bronze.boom": "failed"}
+
+
+def test_concurrent_sql_models_read_their_own_bare_view(spark, tmp_path):
+    # Both gold models read the bare view `claims`, each from a different
+    # layer; the two bronze/silver steps end together so the SQL models
+    # start together. Each must see its own dep every time.
+    from etl_hiscox_spark.plans.pipeline import Model, Pipeline, sql_model
+
+    together = threading.Barrier(2, timeout=30)
+
+    def layer(v):
+        def fn(s, _):
+            together.wait()
+            return s.createDataFrame([(v,)], "layer string")
+
+        return fn
+
+    for i in range(10):
+        out = tmp_path / f"run{i}"
+        p = Pipeline(spark)
+        p.add(Model(name="bronze.claims", fn=layer("bronze")))
+        p.add(Model(name="silver.claims", fn=layer("silver")))
+        for src in ("bronze", "silver"):
+            p.add(
+                sql_model(
+                    f"gold.from_{src}",
+                    "SELECT layer FROM claims",
+                    deps=(f"{src}.claims",),
+                    materialize_path=str(out / src),
+                )
+            )
+        report = p.run()
+        assert report.success, report.summary()
+        for src in ("bronze", "silver"):
+            assert [r["layer"] for r in spark.read.parquet(str(out / src)).collect()] == [src], (i, src)
+
+
+def test_pool_threads_inherit_the_job_group(spark):
+    from etl_hiscox_spark.concurrency import run_overlapped
+    from etl_hiscox_spark.plans.pipeline import Model, Pipeline
+
+    sc = spark.sparkContext
+
+    def group():
+        return sc.getLocalProperty("spark.jobGroup.id")
+
+    seen = {}
+
+    def model(s, _):
+        seen["model"] = group()
+        # run_overlapped nested in a step: its pool threads inherit too
+        seen["nested"] = run_overlapped([group, group])
+        return s.range(1)
+
+    sc.setJobGroup("g", "pipeline context test")
+    try:
+        assert run_overlapped([group, group]) == ["g", "g"]
+        p = Pipeline(spark)
+        p.add(Model(name="bronze.ctx", fn=model))
+        assert p.run().success
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert seen == {"model": "g", "nested": ["g", "g"]}
+    assert group() is None
