@@ -295,7 +295,9 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
             kind.write_record(spark, h.path(gen), record)
         else:
             try:  # tidy the useless stage now; vacuum reclaims it on failure
-                filesystem, p = genlog._fs(h.path(gen))
+                from etl_hiscox_spark.sources.listing import _resolve_fs
+
+                filesystem, p = _resolve_fs(h.path(gen))
                 filesystem.delete_dir(p)
             except (FileNotFoundError, OSError):
                 pass

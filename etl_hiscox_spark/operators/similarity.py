@@ -608,7 +608,7 @@ def _write_ivf_centroids(
     # survives every maintenance op by construction (compact copies it
     # byte-for-byte, erase renames it aside and back, rebuild rewrites
     # it), so the flag can never drift from the layout.
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+    from etl_hiscox_spark.sources.listing import _meta_is_local
 
     cdir = os.path.join(path, "_centroids")
     if _meta_is_local(spark, path):
@@ -647,7 +647,7 @@ def _write_ivf_centroids(
 
 def _read_ivf_centroid_rows(spark, path: str, resolved: bool = False) -> list[dict]:
     """Raw rows of the ``_centroids`` commit record, loud when missing."""
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+    from etl_hiscox_spark.sources.listing import _meta_is_local
 
     if not resolved:  # callers that already resolved skip the re-stat (r12)
         from etl_hiscox_spark.sources.genlog import live_index_paths

@@ -658,8 +658,8 @@ def x16_txn_checkpoint_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = TxnTable(spark, os.path.join(root, "table"), checkpoint_interval=3)
     for i in range(8):
         t.write(ev.filter(F.col("event_id") % 8 == i))
-    if t._read_checkpoint() != 6:
-        raise ValueError(f"checkpoint records {t._read_checkpoint()}, expected 6")
+    if t.log.read_hint() != 6:
+        raise ValueError(f"checkpoint records {t.log.read_hint()}, expected 6")
     head = t.latest_version()
     if head != 7 or t.last_head_resolution != {"mode": "checkpoint", "entries": 2}:
         raise ValueError(
@@ -668,9 +668,9 @@ def x16_txn_checkpoint_head(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if t.expire_versions(keep_last=2) != 6:
         raise ValueError("expected v0..v5 to expire")
-    if t._read_checkpoint() != 7:
+    if t.log.read_hint() != 7:
         raise ValueError(
-            f"expiry left the checkpoint at {t._read_checkpoint()} — the "
+            f"expiry left the checkpoint at {t.log.read_hint()} — the "
             "forward probe would hit the deleted range"
         )
     if t.latest_version() != 7 or t.last_head_resolution != {
@@ -701,26 +701,23 @@ def x16_txn_checkpoint_head(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x17_txn_object_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The txn protocols on a URI root (r13, VERDICT r12 item 2): the
-    # table lives at file://<root>, which routes EVERY manifest list /
-    # read / size / delete through the same pyarrow.fs code an
-    # s3://hdfs:// deployment runs (the os.* fast path is scheme-less
-    # only; trap-pinned in tests/test_txnlog_fs.py) — append,
-    # exactly-once write_txn replay, OPTIMIZE compaction, GDPR
-    # erase-across-versions, and time travel, end to end. Loud
-    # invariants before the oracle sees the result: (1) the table
-    # really took the pyarrow branch; (2) the duplicate
-    # (app_id, txn_version) replay is a no-op; (3) OPTIMIZE strictly
-    # defragments the head file count; (4) the erased keys are gone from
-    # EVERY version, including pre-OPTIMIZE history. The final table is
-    # events minus the erased keys, hence the SQL twin.
+    # table lives at file://<root>, and every manifest list / read /
+    # size / delete runs through the same pyarrow.fs code an
+    # s3://hdfs:// deployment runs (tests/test_txnlog_fs.py traps any
+    # os.* manifest IO on such a root) — append, exactly-once write_txn
+    # replay, OPTIMIZE compaction, GDPR erase-across-versions, and time
+    # travel, end to end. Loud invariants before the oracle sees the
+    # result: (1) the duplicate (app_id, txn_version) replay is a no-op;
+    # (2) OPTIMIZE strictly defragments the head file count; (3) the
+    # erased keys are gone from EVERY version, including pre-OPTIMIZE
+    # history. The final table is events minus the erased keys, hence
+    # the SQL twin.
     from etl_hiscox_spark.queries.writes import _scratch
     from etl_hiscox_spark.sources.txnlog import TxnTable
 
     root = "file://" + _scratch("x17_txn_fs", sf_dir) + "/table"
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
     t = TxnTable(spark, root, checkpoint_interval=5)
-    if t._use_os:
-        raise ValueError("file:// root must take the pyarrow.fs branch")
     t.write(ev.filter(F.col("event_id") % 2 == 0).repartition(4))
     if not t.write_txn(ev.filter(F.col("event_id") % 2 == 1), "x17", 1):
         raise ValueError("first (app, txn) write must land")

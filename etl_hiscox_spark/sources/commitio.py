@@ -42,6 +42,8 @@ import os
 import uuid
 from typing import Callable
 
+from etl_hiscox_spark.sources import listing
+
 # fs-type-name -> fn(filesystem, final_path: str, data: bytes) -> None.
 # The fn MUST be create-if-absent: raise FileExistsError when final_path
 # already exists, atomically (a conditional PUT, not exists-check+put).
@@ -146,12 +148,6 @@ def s3_conditional_put_hook():
     return put_if_absent
 
 
-def _is_local(spark, path: str) -> bool:
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
-
-    return _meta_is_local(spark, path)
-
-
 def commit_if_absent(spark, uri: str, data: bytes) -> None:
     """Atomically commit ``data`` at ``uri``, create-if-absent: raises
     ``FileExistsError`` if ``uri`` is already committed (the loser of a
@@ -159,7 +155,7 @@ def commit_if_absent(spark, uri: str, data: bytes) -> None:
     reader can never observe a partially-written record. The parent
     directory is created if missing. See the module docstring for the
     per-store primitive and the refusal contract."""
-    if _is_local(spark, uri):
+    if listing._meta_is_local(spark, uri):
         from etl_hiscox_spark.sources.writers import _local_fs_path
 
         final = _local_fs_path(uri)
@@ -174,9 +170,7 @@ def commit_if_absent(spark, uri: str, data: bytes) -> None:
         return
     from pyarrow import fs as pafs
 
-    from etl_hiscox_spark.sources.listing import _resolve_fs
-
-    filesystem, final = _resolve_fs(uri)
+    filesystem, final = listing._resolve_fs(uri)
     fs_type = type(filesystem).__name__
     hook = _PUT_IF_ABSENT.get(fs_type)
     if hook is not None:
@@ -273,10 +267,12 @@ def replace_put(filesystem, path: str, data: bytes) -> None:
     full-object PUT: no multipart, no staged tmp, no copy+delete move,
     no absence window. Otherwise: staged tmp + move; HDFS rename refuses
     an existing destination, so on that refusal the old file is deleted
-    and the move retried. The parent directory must already exist — both
-    hint writers (txn checkpoint, gen-log checkpoint) target the log
-    directory their commit just wrote into, so an extra create_dir RPC
-    per hint would be pure tax."""
+    and the move retried. On a store whose rename replaces atomically
+    (:func:`replace_is_atomic`) a failed move is a real error, never a
+    refusal: the destination is left as it was. A failed move always
+    removes the staged tmp. The parent directory must already exist — every
+    caller writes into a log directory a commit already created, so an
+    extra create_dir RPC per hint would be pure tax."""
     hook = _REPLACE_PUT.get(type(filesystem).__name__)
     if hook is not None:
         hook(filesystem, path, data)
@@ -291,7 +287,10 @@ def replace_put(filesystem, path: str, data: bytes) -> None:
         filesystem.move(tmp, path)
         return
     except OSError:
-        if filesystem.get_file_info(path).type == pafs.FileType.NotFound:
+        if (
+            replace_is_atomic(filesystem)
+            or filesystem.get_file_info(path).type == pafs.FileType.NotFound
+        ):
             try:
                 filesystem.delete_file(tmp)
             except OSError:

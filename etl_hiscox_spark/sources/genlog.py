@@ -1,55 +1,33 @@
-"""Generation-pointer commit log for derived index layouts (r12,
-VERDICT r11 item 1 — the single biggest gap between the code and its own
-100 TB story).
-
-The index maintenance ops (compact / erase / rebuild, both layouts)
-previously committed by ``os.rename``-swapping data directories — correct
-and crash-safe, but DRIVER-LOCAL ONLY: at the 100 TB design point the
-index lives on an object store, where directory rename does not exist.
-This module is the portable protocol, the same manifest-pointer design as
-:mod:`txnlog` (staged files + a tiny atomic commit record; the Delta
-Lake VLDB'20 log pattern applied to an index directory):
+"""Generation-pointer commit log for derived index layouts: the same
+manifest-pointer design as :mod:`txnlog` (staged files plus a tiny atomic
+commit record), applied to an index directory so its maintenance ops
+commit on object stores, where directory rename does not exist.
 
 - a GENERATION is a complete, self-contained index tree under
   ``<root>/gen-<uuid>/`` (buckets+meta for minhash, ``__cluster=``
-  partitions + ``_centroids`` for IVF) — data files are immutable once a
-  generation is committed, and NOTHING mutates one in place (since r13
-  that includes appends, which stage delta generations);
-- ``<root>/_gen_log/v{N}.json`` is the pointer log: version N carries
-  the SEGMENT LIST that became live at commit N (one segment after a
-  build/compact/erase/rebuild; build + one delta per OCC append until
-  the next compact merges them — the LSM shape; pre-r13 single-
-  ``generation`` records read unchanged forever). Readers resolve the
-  HIGHEST committed version; a half-written generation is invisible
-  until its pointer commits, so the crash window between "stage
-  written" and "pointer committed" leaves the OLD head live (pinned by
-  test);
-- pointer commits are create-if-absent through the ONE shared primitive
-  :func:`commitio.commit_if_absent` (r13 — also the txn log's commit):
-  ``os.link`` on the driver-local fast path, staged-write + rename on
-  HDFS (rename refuses an existing destination), a registered
-  conditional PUT on S3-class stores, and a LOUD refusal where no
-  atomic create-if-absent exists — never a silent last-writer-wins.
-  Two racing maintenance ops collide LOUDLY on the version; the loser
-  must re-run against the new live generation, never blind-retry (its
-  input was the pre-commit generation) —
-  :func:`rerun_on_generation_conflict` is the bounded wrapper;
-- APPENDS are OCC commits too (r13): :func:`append_segment` extends the
-  head's segment list with a staged delta, carries the ``geometry_id``
-  epoch (a rebuild mid-append is detected, :class:`GeometryChanged`) and
-  the ``txn_watermarks`` exactly-once ledger for streaming ingest;
-- head reads resolve from the ``_gen_log/_last_checkpoint`` hint with
-  forward probes (O(commits-since-checkpoint), no LIST — appends commit
-  at stream cadence, so the pointer log grows like the txn log's), and
-  immutable pointer records are served from a bounded cache;
+  partitions + ``_centroids`` for IVF). Data files are immutable once a
+  generation is committed; appends stage delta generations;
+- ``<root>/_gen_log`` is a :class:`versionlog.VersionLog` — the one
+  statement of the commit, head-hint, floor-marker and tombstone
+  protocol is that module's docstring. Version N's POINTER record
+  carries the SEGMENT LIST that became live at commit N (one segment
+  after a build/compact/erase/rebuild; build + one delta per OCC append
+  until the next compact merges them — the LSM shape; pre-r13
+  single-``generation`` records read unchanged forever). A half-written
+  generation is invisible until its pointer commits. Two racing
+  maintenance ops collide LOUDLY on the version; the loser re-runs
+  against the new live generation (:func:`rerun_on_generation_conflict`),
+  never blind-retries;
+- APPENDS are OCC commits too: :func:`append_segment` extends the head's
+  segment list with a staged delta, carries the ``geometry_id`` epoch (a
+  rebuild mid-append is detected, :class:`GeometryChanged`) and the
+  ``txn_watermarks`` exactly-once ledger for streaming ingest;
+- immutable pointer records are served from a bounded, fingerprinted
+  process cache (genlog-only: TxnTable's erase replaces records in
+  place);
 - superseded generations stay on disk, readable, until
-  :func:`vacuum_generations` drops the pointer history and deletes the
-  directories nothing references — OPTIMIZE/VACUUM split, again.
-
-Everything except the commit primitive runs through ``pyarrow.fs``
-(:func:`listing._resolve_fs` — the same public-surface registry the
-fragmentation walks use), so a ``file://`` test exercises the exact code
-path an ``s3://`` deployment runs.
+  :func:`vacuum_generations` retires the pointer history and deletes the
+  directories nothing references — the OPTIMIZE/VACUUM split.
 """
 
 from __future__ import annotations
@@ -63,16 +41,15 @@ import re
 import time
 import uuid
 
+from etl_hiscox_spark.sources.versionlog import VersionLog, check_root
+
 _LOG = logging.getLogger("etl_hiscox_spark.genlog")
 
 _GEN_LOG = "_gen_log"
-_POINTER_RE = re.compile(r"^v(\d+)\.json$")
-_CKPT_NAME = "_last_checkpoint"
-# every N commits the head version is recorded as a resolution hint —
-# r13: OCC appends commit one pointer per micro-batch, so a streamed
-# index's pointer log grows at stream cadence and a LIST-based head
-# read would pay O(#versions-ever), the exact tax txnlog's
-# _last_checkpoint (VERDICT r12 item 4) removed from the txn log
+_FLOOR = "_floor"
+# every N commits the head version is recorded as a resolution hint:
+# OCC appends commit one pointer per micro-batch, so the pointer log
+# grows at stream cadence
 CHECKPOINT_INTERVAL = 10
 
 # instrumentation for tests and plan audits: how the LAST head
@@ -89,28 +66,15 @@ def new_generation_name() -> str:
     return f"gen-{uuid.uuid4().hex[:12]}"
 
 
-def _fs(path: str):
-    from etl_hiscox_spark.sources.listing import _resolve_fs
+def pointer_log(root: str, spark=None) -> VersionLog:
+    """The pointer log of ``root`` (``spark`` is needed by commits on
+    scheme-less roots only)."""
+    return VersionLog(root, _GEN_LOG, _FLOOR, spark)
 
-    return _resolve_fs(path)
 
-
-def resolve_root(spark, root: str) -> str:
-    """Guard against split-brain resolution: ``pyarrow.fs`` treats a
-    scheme-less path as driver-local, Spark resolves it against
-    ``fs.defaultFS`` — on a cluster with a non-file defaultFS the pointer
-    log would land on the driver's disk while the data goes to the
-    cluster FS. Scheme-less paths are only accepted when defaultFS is
-    ``file:``; otherwise the caller must pass a fully-qualified URI."""
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
-
-    if "://" in root or root.startswith("file:") or _meta_is_local(spark, root):
-        return root
-    raise ValueError(
-        f"generational index root {root!r} is scheme-less but fs.defaultFS "
-        "is not file: — pass a fully-qualified URI so the pointer log and "
-        "the data resolve to the SAME filesystem"
-    )
+# the split-brain guard shared with TxnTable: a scheme-less root is
+# accepted only when fs.defaultFS is file:, else pass a qualified URI
+resolve_root = check_root
 
 
 def is_generational(spark, root: str) -> bool:
@@ -123,306 +87,15 @@ def is_generational(spark, root: str) -> bool:
     probes that only ever hand the path to Spark must keep working."""
     from pyarrow import fs as pafs
 
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
-
-    if "://" not in root and not root.startswith("file:") and not _meta_is_local(spark, root):
-        return False
     try:
-        filesystem, p = _fs(_join(root, _GEN_LOG))
-        return filesystem.get_file_info(p).type == pafs.FileType.Directory
+        log = pointer_log(resolve_root(spark, root))
+        return log.fs.get_file_info(log.dir).type == pafs.FileType.Directory
     except (OSError, ValueError, KeyError):
         # a scheme pyarrow cannot resolve (or a store it cannot reach)
         # cannot be ANSWERED generational — treat as flat and let the
         # downstream op produce its own loud, actionable rejection
         # (maintenance: the driver-local guard; probes: Spark's reader)
         return False
-
-
-def _log_infos(root: str) -> list:
-    """One LIST of the pointer-log directory (shared by the version
-    listing and the vacuum-floor read)."""
-    from pyarrow import fs as pafs
-
-    filesystem, p = _fs(_join(root, _GEN_LOG))
-    return filesystem.get_file_info(
-        pafs.FileSelector(p, recursive=False, allow_not_found=True)
-    )
-
-
-def _pointer_versions(root: str) -> list[int]:
-    """LIVE pointer versions, sorted — one LIST. Versions retired by
-    vacuum are EXCLUDED via their ``v{N}.retired`` sidecar (r16: vacuum
-    tombstones retired names instead of deleting them, so the name keeps
-    refusing create-if-absent; the sidecar keeps a single name-based
-    LIST sufficient to separate live from retired without a GET per
-    file). A tombstoned name whose sidecar write was lost shows up here
-    as live; its read then raises the loud retired error — hidden-live
-    and listed-retired converge on the same reader behavior."""
-    from pyarrow import fs as pafs
-
-    out, retired = [], set()
-    infos = _log_infos(root)
-    for info in infos:
-        m = _RETIRED_RE.match(info.base_name)
-        if m and info.type == pafs.FileType.File:
-            retired.add(int(m.group(1)))
-    for info in infos:
-        m = _POINTER_RE.match(info.base_name)
-        if m and info.type == pafs.FileType.File and int(m.group(1)) not in retired:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-# -- vacuum floor (r15) -------------------------------------------------------
-#
-# Version-number REUSE guard. commit_generation's create-if-absent can
-# only collide with a pointer file that still EXISTS — but vacuum
-# deletes the pointer PREFIX, so a commit staged from a stale head
-# resolve (its resolve→commit window spanning >= keep_last newer commits
-# AND a vacuum) could land at an already-trimmed version number: a
-# "successful" commit below the surviving prefix, which the next vacuum
-# silently trims — a lost write (r15: the multi-actor stress caught
-# exactly this as head != #successful-commits - 1). The guard:
-#
-# - BEFORE deleting pointers up to F, vacuum commits the marker file
-#   ``_floor_v{F}`` plus the ``_floor`` sentinel — both create-if-absent,
-#   NEVER replaced, so the observable floor (max marker) is monotonic by
-#   construction: no replace-file lost-update race can regress it.
-# - AFTER a successful create-if-absent at version V, the committer
-#   checks V against the floor: V <= floor means the name it "won" was a
-#   trimmed one — it UNWINDS (deletes its own pointer) and raises the
-#   standard conflict, and the OCC wrapper re-resolves the true head.
-#   Soundness: the vacuum that deleted old-v{V} committed a marker with
-#   F >= V before deleting, so the marker is visible by the time any
-#   reused-name link can succeed.
-# - Cost: one exists-probe of the sentinel per commit; only when a trim
-#   has ever happened does the committer pay the (prefix-trimmed, so
-#   small) directory LIST for the marker max.
-
-_FLOOR_SENTINEL = "_floor"
-_FLOOR_RE = re.compile(r"^_floor_v(\d+)$")
-
-# -- retired-name tombstones (r16, ADVICE r15 low) ----------------------------
-#
-# The r15 floor guard was POST-link only: a commit that won
-# create-if-absent re-read the floor and unwound itself when
-# version <= floor. That classifier has a false positive — a FRESH
-# commit whose version a concurrent retention pass swept between the
-# link and the floor read was unwound and surfaced as an OCC conflict,
-# and the caller's retry re-appended the same delta (duplicate rows for
-# non-txn appends). r16 makes trims observable PER NAME instead:
-#
-# - vacuum REPLACES each retired ``v{N}.json`` with a tombstone record
-#   (atomic single-shot replace) rather than deleting it, and marks the
-#   retirement in the LISTING with an empty ``v{N}.retired`` sidecar —
-#   so a stale writer's create-if-absent at a retired name fails
-#   NATURALLY (the name still exists), and the listing stays name-based
-#   (no GET per file to separate live from retired).
-# - the committer refuses version <= floor BEFORE linking (nothing has
-#   landed, so the refusal can never unwind a live commit), and the
-#   narrowed POST-link check classifies by CONTENT: my-bytes means a
-#   stale reuse that slipped both guards (possible only on a
-#   rename-refusing store's replace window) and unwinds; a tombstone or
-#   a missing file means THIS fresh commit was legitimately retired
-#   after landing (newer commits already carried it forward) and the
-#   commit reports success — the ADVICE r15 false positive, resolved
-#   correctly instead of double-appending.
-# - tombstone pairs are COALESCED one retention cycle later (deleted
-#   once their version is at or below the floor the PREVIOUS vacuum
-#   recorded), bounding the log-directory file count; names freed by
-#   coalescing stay refused by the pre-link floor guard, which their
-#   immutable floor marker has covered since before they were freed.
-#
-# Residual window — ZERO on atomic-replace stores since r17 (VERDICT
-# r16 item 4): where replace_put is one atomic swap (local POSIX
-# rename, hooked S3-class single PUT) vacuum tombstones victims BEFORE
-# committing the floor marker, so a post-link check can never observe
-# my-bytes at version <= floor for a fresh commit — by the time the
-# floor covers its version, its content is already a tombstone
-# (retired-after-landing SUCCESS). The marker-first discipline costs
-# nothing to drop there: names are never absent mid-replace, so
-# create-if-absent refuses stragglers naturally without the pre-link
-# floor guard. On RENAME-REFUSING stores (HDFS-class, no replace hook)
-# the r16 marker-first order stands and the one-replace-wide
-# false-unwind window remains, documented: replace_put there is
-# delete+move with an absence window a straggler's create-if-absent
-# can contest, and committing the marker first is what keeps every
-# committer that reads the floor afterwards from reaching that window
-# — reordering would trade a detected false conflict (duplicate-append
-# risk, bounded) for a silently clobbered straggler commit (lost
-# write). Irreducible without a conditional-replace primitive
-# (replace-only-if-content-matches), which pyarrow.fs does not expose.
-
-_RETIRED_RE = re.compile(r"^v(\d+)\.retired$")
-
-
-def _tombstone_bytes() -> bytes:
-    return json.dumps({"tombstone": True, "retired_at": time.time()}).encode("utf-8")
-
-
-def _retire_pointer(root: str, version: int) -> bool:
-    """Tombstone one retired pointer name: sidecar first (listing), then
-    the atomic content replace. Store errors are absorbed — a skipped
-    victim is retried by the next vacuum, and a sidecar-less tombstone
-    (or tombstone-less sidecar) degrades to behavior readers already
-    handle. Returns False when nothing could be written."""
-    from etl_hiscox_spark.sources.commitio import replace_put
-
-    filesystem, log_path = _fs(_join(root, _GEN_LOG))
-    try:
-        replace_put(filesystem, f"{log_path}/v{version}.retired", b"")
-    except OSError:
-        return False
-    try:
-        replace_put(filesystem, f"{log_path}/v{version}.json", _tombstone_bytes())
-    except OSError:
-        pass  # hidden-live: listed retired, content still readable
-    return True
-
-
-def _retire_is_atomic(root: str) -> bool:
-    """Store class for the retire-vs-marker ordering (r17): True when the
-    tombstone content replace on this root's log filesystem is one atomic
-    swap — see :func:`commitio.replace_is_atomic`. Module-level so tests
-    can drive the rename-refusing branch on a local root."""
-    from etl_hiscox_spark.sources.commitio import replace_is_atomic
-
-    filesystem, _ = _fs(_join(root, _GEN_LOG))
-    return replace_is_atomic(filesystem)
-
-
-def _retry_half_retired(root: str, min_age_seconds: float) -> None:
-    """Finish retirements an earlier vacuum left half done (ADVICE r16
-    low): a ``v{N}.retired`` sidecar whose content file still holds a
-    LIVE record is a :func:`_retire_pointer` that wrote the sidecar and
-    then lost the content replace — the name is excluded from
-    :func:`_pointer_versions` (so no vacuum re-victims it), a direct
-    ``read_pointer`` keeps serving the retired record as live, and
-    :func:`_coalesce_tombstones` skips the pair forever (content is not
-    a tombstone): unbounded residue without this retry. Crashed
-    stale-commit leftovers are NOT confused with these — they land at
-    coalesce-FREED names, which have no sidecar (and re-enter the
-    normal victim path). The ``min_age_seconds`` gate on the record's
-    own ``committed_at`` is the same no-maintenance-op-is-mid-flight
-    contract orphan reclamation uses: it keeps the retry from
-    tombstoning a record whose writer's post-link classification may
-    still be in flight (converting a true stale reuse's my-bytes unwind
-    into a false retired-after-landing SUCCESS would be a lost write).
-    Store errors absorbed — the next vacuum retries again."""
-    from etl_hiscox_spark.sources.commitio import replace_put
-
-    filesystem, log_path = _fs(_join(root, _GEN_LOG))
-    cutoff = time.time() - min_age_seconds
-    for info in _log_infos(root):
-        m = _RETIRED_RE.match(info.base_name)
-        if not m:
-            continue
-        v = int(m.group(1))
-        try:
-            with filesystem.open_input_file(f"{log_path}/v{v}.json") as f:
-                rec = json.loads(f.read().decode("utf-8"))
-        except (FileNotFoundError, OSError, ValueError):
-            continue  # coalesced / transient / torn: not this pass's job
-        if rec.get("tombstone") or rec.get("committed_at", 0.0) > cutoff:
-            continue
-        try:
-            replace_put(filesystem, f"{log_path}/v{v}.json", _tombstone_bytes())
-        except OSError:
-            pass
-
-
-def _coalesce_tombstones(root: str, floor_before: int) -> None:
-    """Delete tombstone pairs whose version the floor ALREADY covered
-    before this run — they have survived a full retention cycle, and the
-    pre-link floor guard keeps refusing their (now freed) names. Only
-    names whose content IS a tombstone are deleted: a live record at a
-    retired version is a crashed stale commit's leftover — the next
-    vacuum victims it — never coalesce-bait (deleting it while its
-    writer's post-link check runs would misreport the loss as success).
-    Racing deletes absorbed; a TRANSIENT store error while deciding
-    skips the pair entirely — the next vacuum decides (ADVICE r16: the
-    old fall-through deleted the sidecar on any read error, so a
-    possibly-live record below the floor resurfaced as live until the
-    next vacuum re-victimized it; txnlog's twin always skipped)."""
-    if floor_before < 0:
-        return
-    filesystem, log_path = _fs(_join(root, _GEN_LOG))
-    for info in _log_infos(root):
-        m = _RETIRED_RE.match(info.base_name)
-        if not m or int(m.group(1)) > floor_before:
-            continue
-        v = int(m.group(1))
-        rec = None
-        try:
-            with filesystem.open_input_file(f"{log_path}/v{v}.json") as f:
-                rec = json.loads(f.read().decode("utf-8"))
-        except FileNotFoundError:
-            pass  # content already coalesced: sidecar cleanup below
-        except (OSError, ValueError):
-            continue  # unreadable: let the next vacuum decide
-        if rec is not None:
-            if not rec.get("tombstone"):
-                continue
-            try:
-                filesystem.delete_file(f"{log_path}/v{v}.json")
-            except FileNotFoundError:
-                pass  # racing coalesce got there first
-            except OSError:
-                continue  # keep the pair intact for the next run
-        try:
-            filesystem.delete_file(info.path)
-        except (FileNotFoundError, OSError):
-            pass
-
-
-def _vacuum_floor_trimmed_ever(root: str) -> bool:
-    from pyarrow import fs as pafs
-
-    filesystem, p = _fs(_join(root, _GEN_LOG, _FLOOR_SENTINEL))
-    return filesystem.get_file_info(p).type == pafs.FileType.File
-
-
-def _read_vacuum_floor(root: str) -> int:
-    """Highest pointer version any vacuum has ever deleted at this root,
-    or -1 (never trimmed) — the max over the immutable floor markers."""
-    from pyarrow import fs as pafs
-
-    best = -1
-    for info in _log_infos(root):
-        m = _FLOOR_RE.match(info.base_name)
-        if m and info.type == pafs.FileType.File:
-            best = max(best, int(m.group(1)))
-    return best
-
-
-def _mark_vacuum_floor(spark, root: str, floor: int) -> None:
-    """Commit the floor marker (+ sentinel) for a trim up to ``floor`` —
-    create-if-absent; an already-present marker/sentinel is a racing
-    vacuum having done the same work. Raises on store failure: the
-    caller must NOT trim without the marker down."""
-    from etl_hiscox_spark.sources.commitio import commit_if_absent
-
-    for name in (_FLOOR_SENTINEL, f"_floor_v{floor}"):
-        try:
-            commit_if_absent(spark, _join(root, _GEN_LOG, name), b"")
-        except FileExistsError:
-            pass
-
-
-def _cleanup_floor_markers(root: str, floor: int) -> None:
-    """Drop floor markers strictly below ``floor`` (the max marker, and
-    therefore the floor itself, never decreases). Racing deletes are
-    absorbed."""
-    from pyarrow import fs as pafs
-
-    filesystem, _ = _fs(_join(root, _GEN_LOG))
-    for info in _log_infos(root):
-        m = _FLOOR_RE.match(info.base_name)
-        if m and info.type == pafs.FileType.File and int(m.group(1)) < floor:
-            try:
-                filesystem.delete_file(info.path)
-            except (FileNotFoundError, OSError):
-                pass
 
 
 # Pointer records are IMMUTABLE once committed (create-if-absent is the
@@ -474,7 +147,7 @@ def _cache_key(root: str) -> str:
     return r
 
 
-def _pointer_fingerprint(root: str, version: int) -> tuple | None:
+def _pointer_fingerprint(log: VersionLog, version: int) -> tuple | None:
     """Identity of the pointer file a cached record is verified against
     on every hit, or None when the file cannot be statted as a file
     (missing, or a store error: the caller then skips caching / drops
@@ -498,9 +171,9 @@ def _pointer_fingerprint(root: str, version: int) -> tuple | None:
     so the discriminator can be store-agnostic."""
     from pyarrow import fs as pafs
 
+    p = log.path(f"v{version}.json")
     try:
-        filesystem, p = _fs(_join(root, _GEN_LOG, f"v{version}.json"))
-        info = filesystem.get_file_info(p)
+        info = log.fs.get_file_info(p)
     except OSError:
         return None
     if info.type != pafs.FileType.File:
@@ -508,7 +181,7 @@ def _pointer_fingerprint(root: str, version: int) -> tuple | None:
     if info.mtime_ns is not None and info.mtime_ns % 1_000_000_000 != 0:
         return ("ns", info.size, info.mtime_ns)
     try:
-        with filesystem.open_input_file(p) as f:
+        with log.fs.open_input_file(p) as f:
             return ("sha", hashlib.sha256(f.read()).digest())
     except OSError:
         return None
@@ -530,75 +203,28 @@ def _cache_pointer(root: str, version: int, rec: dict, fingerprint: tuple | None
     _POINTER_CACHE[(_cache_key(root), int(version))] = (copy.deepcopy(rec), fingerprint)
 
 
-def _pointer_exists(root: str, version: int) -> bool:
-    from pyarrow import fs as pafs
-
-    filesystem, p = _fs(_join(root, _GEN_LOG, f"v{version}.json"))
-    return filesystem.get_file_info(p).type == pafs.FileType.File
-
-
-def _read_head_hint(root: str) -> int | None:
-    """The ``_last_checkpoint`` resolution hint, or None when missing or
-    torn — either way the caller falls back to the full LIST, never a
-    wrong head."""
-    try:
-        filesystem, p = _fs(_join(root, _GEN_LOG, _CKPT_NAME))
-        with filesystem.open_input_file(p) as f:
-            return int(json.loads(f.read().decode("utf-8"))["version"])
-    except (OSError, ValueError, KeyError, TypeError):
-        return None
-
-
-def _write_head_hint(root: str, version: int) -> None:
-    """Record ``version`` as a known-committed head hint. Last-writer-wins
-    replace is CORRECT (every writer records a version it itself
-    committed; readers probe FORWARD from whatever they find), and
-    failures are swallowed — the commit this hint describes has already
-    landed, and failing the writer over a lost hint would be backwards.
-    Same contract as ``TxnTable._write_checkpoint``."""
-    from etl_hiscox_spark.sources.commitio import replace_put
-
-    try:
-        filesystem, p = _fs(_join(root, _GEN_LOG, _CKPT_NAME))
-        replace_put(
-            filesystem, p, json.dumps({"version": int(version)}).encode("utf-8")
-        )
-    except OSError:
-        pass
-
-
 def _head_version(root: str) -> int | None:
-    """Head resolution: probe FORWARD from the checkpoint hint until the
-    first missing pointer — versions are dense (create-if-absent at
-    base+1) and vacuum deletes a PREFIX only, so the first gap above any
-    surviving version IS the head; O(commits-since-checkpoint)
-    exists-checks, no LIST on the hot path. Missing/torn/vacuumed hint:
-    full LIST fallback. A stale hint can only under-estimate; the probe
-    corrects it."""
+    """The pointer log's head (:meth:`VersionLog.head`), mirrored into
+    :data:`last_head_resolution`."""
     global last_head_resolution
-    hint = _read_head_hint(root)
-    if hint is None or not _pointer_exists(root, hint):
-        versions = _pointer_versions(root)
-        last_head_resolution = {"mode": "list", "entries": len(versions)}
-        return versions[-1] if versions else None
-    v, probes = hint, 0
-    while True:
-        probes += 1
-        if not _pointer_exists(root, v + 1):
-            break
-        v += 1
-    last_head_resolution = {"mode": "checkpoint", "entries": probes}
-    return v
+    log = pointer_log(root)
+    head = log.head()
+    last_head_resolution = log.last_head_resolution
+    return head
 
 
 def read_pointer(root: str, version: int) -> dict:
+    """Pointer record ``version`` of ``root``, from the verified cache or
+    the log; a retired version raises :class:`versionlog.ManifestRetired`
+    (a ``FileNotFoundError``), never cached."""
     import copy
 
+    log = pointer_log(root)
     key = (_cache_key(root), int(version))
     hit = _POINTER_CACHE.get(key)
     if hit is not None:
         rec, fingerprint = hit
-        if _pointer_fingerprint(root, version) == fingerprint:
+        if _pointer_fingerprint(log, version) == fingerprint:
             return copy.deepcopy(rec)
         # the file at (root, version) is not the file we cached — an
         # externally wiped-and-rebuilt root (versions restart at 0), so
@@ -609,20 +235,8 @@ def read_pointer(root: str, version: int) -> dict:
     # stat→read window we cache new bytes under the old fingerprint, the
     # next hit's verify mismatches, and the entry self-heals — the
     # opposite order could pin new-fingerprint/old-bytes as verified
-    fingerprint = _pointer_fingerprint(root, version)
-    filesystem, p = _fs(_join(root, _GEN_LOG, f"v{version}.json"))
-    with filesystem.open_input_file(p) as f:
-        raw = f.read()
-    rec = json.loads(raw.decode("utf-8"))
-    if rec.get("tombstone"):
-        # retired by vacuum (r16: trims tombstone the name instead of
-        # deleting it) — same loud signal a deleted name always gave, so
-        # every concurrent-retention handler upstream works unchanged;
-        # never cached (the name's content is terminal, the error cheap)
-        raise FileNotFoundError(
-            f"pointer v{version} at {root!r} was retired by vacuum "
-            "(generation expired by retention) — re-resolve the live head"
-        )
+    fingerprint = _pointer_fingerprint(log, version)
+    rec, raw = log.load(version)
     if fingerprint is not None and fingerprint[0] == "sha":
         # content-bound form: re-derive from the exact bytes being
         # cached — then the fingerprint is consistent with the cached
@@ -759,12 +373,8 @@ def commit_generation(
     is the bounded re-resolve-and-re-run wrapper; its stage is
     vacuum-reclaimable.
 
-    The create-if-absent itself is :func:`commitio.commit_if_absent` —
-    os.link locally, rename on HDFS, a registered conditional PUT on
-    S3-class stores, REFUSED where no atomic primitive exists (r13,
-    ADVICE r12 medium: the pre-r13 exists-check+move silently degraded
-    to last-writer-wins on S3, where a losing compact could resurrect
-    GDPR-erased rows).
+    The commit itself, with the version-reuse guard, is
+    :meth:`versionlog.VersionLog.commit`.
 
     ``segments`` (r13, the OCC-append layout) is the FULL list of
     generation directories this pointer makes live — defaults to
@@ -779,8 +389,6 @@ def commit_generation(
     appends — EVERY commit must carry the head's watermarks forward
     (maintenance included: a compact that dropped them would let a
     crash-replayed micro-batch land twice)."""
-    from etl_hiscox_spark.sources.commitio import commit_if_absent
-
     root = resolve_root(spark, root)
     version = 0 if base_version is None else int(base_version) + 1
     rec = {
@@ -792,85 +400,17 @@ def commit_generation(
         "operation": operation,
         "committed_at": time.time(),
     }
-    # version-number reuse guard, PRE-link half (r16, ADVICE r15 low):
-    # refuse a version the vacuum floor already covers BEFORE anything
-    # lands — nothing to unwind, so this refusal can never misclassify a
-    # live commit. Catches names freed by tombstone coalescing (and any
-    # r15-era deleted name); names retired but not yet coalesced refuse
-    # themselves at the create-if-absent below (tombstoned names still
-    # EXIST — the r16 protocol). An unreadable floor means "unknown" and
-    # the commit proceeds — the post-link classifier is the backstop.
-    try:
-        retired_name = (
-            _vacuum_floor_trimmed_ever(root) and version <= _read_vacuum_floor(root)
-        )
-    except OSError:
-        retired_name = False
-    if retired_name:
-        raise FileExistsError(
-            f"pointer v{version} at {root!r} was already retired by vacuum "
-            "(stale head resolve spanning a retention run) — re-run "
-            "against the new live generation"
-        )
-    raw = json.dumps(rec).encode("utf-8")
-    try:
-        commit_if_absent(spark, _join(root, _GEN_LOG, f"v{version}.json"), raw)
-    except FileExistsError as exc:
-        raise FileExistsError(
-            f"pointer v{version} at {root!r} already committed — concurrent "
-            "maintenance race; re-run against the new live generation "
-            "(rerun_on_generation_conflict is the bounded wrapper)"
-        ) from exc
-    # POST-link half: the floor may have advanced mid-commit. r15
-    # compared version <= floor alone, which has a false positive — a
-    # FRESH commit swept by a concurrent retention run in this window
-    # was unwound and surfaced as an OCC conflict, and the caller's
-    # retry re-appended the same delta (ADVICE r15). Classify by
-    # CONTENT instead: the name holding MY bytes means the link won a
-    # freed retired name (a true stale reuse that slipped the pre-link
-    # guard — the rename-refusing-store replace window) and unwinds; a
-    # tombstone or a missing file means THIS commit landed live and was
-    # already legitimately retired (newer commits carried it forward) —
-    # success, NOT a conflict. Store hiccups must not fail a commit
-    # that has already landed (the retry would double-commit): any
-    # unreadable state proceeds as success.
-    try:
-        floor_advanced = (
-            _vacuum_floor_trimmed_ever(root) and version <= _read_vacuum_floor(root)
-        )
-    except OSError:
-        floor_advanced = False
-    if floor_advanced:
-        mine = False
-        try:
-            filesystem, p = _fs(_join(root, _GEN_LOG, f"v{version}.json"))
-            with filesystem.open_input_file(p) as f:
-                mine = f.read() == raw
-        except OSError:
-            mine = False  # tombstoned+coalesced or unreadable: landed live
-        if mine:
-            try:
-                filesystem.delete_file(p)
-            except OSError:
-                pass  # a racing vacuum tombstoned the bogus pointer already
-            raise FileExistsError(
-                f"pointer v{version} at {root!r} was already retired by vacuum "
-                "(stale head resolve spanning a retention run) — re-run "
-                "against the new live generation"
-            )
+    log = pointer_log(root, spark)
     # the committer KNOWS this record is the truth at (root, version) —
     # caching it here (not just on read) keeps a deleted-and-rebuilt root
     # (scratch wipes restart versions at 0) from serving the old root's
     # cached record to its own process; the fingerprint stat pins the
-    # entry to the file just committed (r14 staleness guard). SKIPPED on
-    # the retired-after-landing success path (r16): the name now holds a
-    # tombstone, and caching the live record against the TOMBSTONE's
-    # fingerprint would make a later hit verify clean and serve the
-    # retired record as live.
-    if not floor_advanced:
-        _cache_pointer(root, version, rec, _pointer_fingerprint(root, version))
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        _write_head_hint(root, version)  # opportunistic; failure tolerated
+    # entry to the file just committed (r14 staleness guard). SKIPPED when
+    # retention tombstoned the record right after it landed: caching the
+    # live record against the TOMBSTONE's fingerprint would make a later
+    # hit verify clean and serve the retired record as live.
+    if log.commit(version, json.dumps(rec).encode("utf-8"), CHECKPOINT_INTERVAL):
+        _cache_pointer(root, version, rec, _pointer_fingerprint(log, version))
     return version
 
 
@@ -1017,7 +557,7 @@ def list_generations(spark, root: str) -> list[dict]:
     give."""
     root = resolve_root(spark, root)
     out = []
-    for v in _pointer_versions(root):
+    for v in pointer_log(root).versions():
         try:
             out.append(read_pointer(root, v))
         except FileNotFoundError:
@@ -1029,10 +569,12 @@ def vacuum_generations(
     spark, root: str, keep_last: int = 1, min_age_seconds: float = 600.0
 ) -> int:
     """Retention for superseded generations: keep the newest ``keep_last``
-    pointer versions, delete the older pointer records, then delete every
-    ``gen-*`` directory no surviving pointer references. Deletions are
-    plain recursive DELETEs through ``pyarrow.fs``, object-store-safe.
-    Returns the number of generation directories removed.
+    pointer versions, retire the older pointer records
+    (:meth:`VersionLog.retire`; a floor marker that cannot land is logged
+    and the rest deferred to a later run), then delete every ``gen-*``
+    directory no surviving pointer references. Deletions are plain
+    recursive DELETEs through ``pyarrow.fs``, object-store-safe. Returns
+    the number of generation directories removed.
 
     Two kinds of unreferenced generation, treated differently (the same
     split as :meth:`txnlog.TxnTable.vacuum`'s retention window):
@@ -1059,14 +601,15 @@ def vacuum_generations(
     root = resolve_root(spark, root)
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    versions = _pointer_versions(root)
+    log = pointer_log(root, spark)
+    versions = log.versions()
     if not versions:
         raise ValueError(f"{root!r} has no committed pointer — nothing to vacuum")
     keep = versions[-keep_last:]
-    # refresh the head hint first: vacuum deletes a PREFIX of pointer
-    # files, and a hint pointing into that prefix would force every head
+    # refresh the head hint first: vacuum retires a PREFIX of pointer
+    # names, and a hint pointing into that prefix would force every head
     # read onto the LIST fallback until the next checkpoint boundary
-    _write_head_hint(root, versions[-1])
+    log.write_hint(versions[-1])
 
     def _segments_or_none(v: int) -> list[str] | None:
         try:
@@ -1105,83 +648,16 @@ def vacuum_generations(
         ever_committed.update(segs)
         if v in keep:
             live.update(segs)
-    victims = versions[:-keep_last] if len(versions) > keep_last else []
-    _retry_half_retired(root, min_age_seconds)  # ADVICE r16: finish crashed retires
-    marked = False
-    if victims:
-        try:
-            floor_before = (
-                _read_vacuum_floor(root) if _vacuum_floor_trimmed_ever(root) else -1
-            )
-        except OSError:
-            floor_before = -1  # unknown: coalesce nothing this run
-        if _retire_is_atomic(root):
-            # r17 ZERO-WIDTH ordering (atomic-replace stores — local
-            # POSIX rename, hooked S3-class single PUT): tombstone the
-            # victims BEFORE committing the floor marker. The name is
-            # never absent mid-replace on these stores, so a straggler's
-            # create-if-absent refuses naturally whatever the marker
-            # timing — the marker-first discipline protects nothing here
-            # — while replacing first makes the false-unwind state
-            # unobservable: by the time a post-link check can see
-            # version <= floor, the victim's content is already a
-            # tombstone, so a fresh commit swept mid-window classifies
-            # as retired-after-landing SUCCESS, never my-bytes. NEWEST
-            # victim first still: a marker-failure crash then leaves the
-            # fewest above-floor tombstone pairs (safe residue — the
-            # sidecar excludes them from liveness, and coalescing waits
-            # until a future floor covers them).
-            for v in reversed(victims):
-                _retire_pointer(root, v)
-            try:
-                _mark_vacuum_floor(spark, root, victims[-1])
-                marked = True
-            except OSError:
-                _LOG.warning(
-                    "vacuum_generations at %r: victims tombstoned but the "
-                    "vacuum-floor marker did not land — names keep refusing "
-                    "commits naturally; coalescing defers until a later "
-                    "vacuum's floor covers them",
-                    root,
-                )
-        else:
-            # rename-refusing stores (HDFS-class without a replace
-            # hook): the floor marker goes DOWN first (r15/r16 order) —
-            # replace_put's delete+move here has an absence window a
-            # straggler's create-if-absent could win, and the pre-link
-            # floor refusal is what keeps any committer that read the
-            # floor after this marker from ever contesting it. Cost:
-            # the documented one-replace-wide false-unwind window for
-            # the newest victim (see the module note). If the marker
-            # cannot land, skip the trim this run — directory
-            # reclamation below is independent and still safe.
-            try:
-                _mark_vacuum_floor(spark, root, victims[-1])
-                marked = True
-            except OSError:
-                _LOG.warning(
-                    "vacuum_generations at %r: could not commit the "
-                    "vacuum-floor marker — skipping the pointer-prefix trim "
-                    "this run",
-                    root,
-                )
-                victims = []
-            # NEWEST victim first — the only version a fresh commit can
-            # hold is the highest victim, so retiring it first shrinks
-            # the residual floor-marked-but-not-yet-tombstoned gap to
-            # one replace op.
-            for v in reversed(victims):
-                _retire_pointer(root, v)
-    if victims:
-        _coalesce_tombstones(root, floor_before)
-        if marked:
-            # marker-gated: dropping old markers without this run's down
-            # could REGRESS the observable floor (max marker)
-            _cleanup_floor_markers(root, victims[-1])
-    rootfs, root_path = _fs(root)
+    # retire the pointer prefix; a marker that cannot land defers the
+    # rest to a later run, and directory reclamation below is independent
+    victims = versions[:-keep_last]
+    if not log.retire(victims, min_age_seconds):
+        _LOG.warning(
+            "vacuum_generations at %r: %s", root, log.unmarked(victims[-1])
+        )
     cutoff = time.time() - min_age_seconds
     removed = 0
-    for info in rootfs.get_file_info(pafs.FileSelector(root_path, recursive=False)):
+    for info in log.fs.get_file_info(pafs.FileSelector(log.base, recursive=False)):
         if (
             info.type != pafs.FileType.Directory
             or not info.base_name.startswith("gen-")
@@ -1194,7 +670,7 @@ def vacuum_generations(
             if mtime > cutoff:
                 continue
         try:
-            rootfs.delete_dir(info.path)
+            log.fs.delete_dir(info.path)
         except (FileNotFoundError, OSError):
             continue  # already reclaimed by the racing vacuum
         removed += 1

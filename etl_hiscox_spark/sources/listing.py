@@ -29,6 +29,30 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _meta_is_local(spark, path: str) -> bool:
+    """True only when the path resolves to the DRIVER's local filesystem.
+
+    An explicit remote scheme (hdfs://, s3a://, ...) is never local; a
+    scheme-less path is local only if Spark's fs.defaultFS is file: —
+    on a cluster with defaultFS=hdfs://, '/warehouse/idx' goes to HDFS
+    via Spark while a naive driver-side shortcut would write to the
+    driver's local disk, splitting the store (an index meta, a commit
+    log) from the data Spark writes.
+
+    Any ``file:`` prefix counts as local (ADVICE r11): Hadoop's
+    ``Path.toString()`` renders local URIs as single-slash ``file:/x``,
+    which has no ``://`` — without this the fragmentation walk would
+    mis-qualify the dir with a non-file defaultFS."""
+    if path.startswith("file:"):
+        return True
+    if "://" in path:
+        return False
+    default_fs = (
+        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    )
+    return default_fs.startswith("file:")
+
+
 def _resolve_fs(dir_uri: str):
     """``(filesystem, root_path)`` for a URI or plain path (see
     :func:`_dir_file_stats` for the ``file:`` normalization rationale)."""
@@ -142,8 +166,6 @@ def distributed_dir_stats(
     (n_files, bytes) pair per directory.
     """
     import pandas as pd
-
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
 
     schema = "key int, n_files long, total_bytes long"
     local_rows: list[tuple[int, int, int]] = []

@@ -7,28 +7,15 @@ actually provides — an atomic commit point and readable history. This
 module restores both with the same public design Delta/Iceberg use
 (an ordered log of versioned manifests; see the Delta Lake VLDB'20 paper):
 
-- ``_txn_log/v{N}.json`` lists the ACTIVE data files + schema for
-  version N. Readers resolve the latest version and read exactly those
-  files — a half-written data file is invisible until its manifest commits.
-- Commits are atomic create-if-absent through the ONE shared primitive
-  :func:`commitio.commit_if_absent` (r13 — also the index generation
-  log's commit): ``os.link`` locally, staged-write + rename on HDFS, a
-  registered conditional PUT on S3-class stores, loud refusal elsewhere.
-- ALL manifest IO is dual-path (r13, VERDICT r12 item 1): a scheme-less
-  driver-local root keeps the ``os.*`` fast path; ANY URI root
-  (``file://``, ``hdfs://``, ``s3://``) runs through ``pyarrow.fs`` —
-  so a ``file://`` test exercises the exact listing/read/delete code an
-  object-store deployment runs, and the exactly-once sink, OPTIMIZE,
-  OCC, and GDPR-history protocols are no longer driver-local-only.
-- ``_txn_log/_last_checkpoint`` caps head-resolution cost (r13, VERDICT
-  r12 item 4 — Delta's ``_last_checkpoint`` analog): every
-  ``checkpoint_interval`` commits the head version is recorded, and
-  ``latest_version`` probes FORWARD from it instead of LISTing the whole
-  manifest dir — O(tail) exists-probes per head read at streaming
-  cadence, not O(#versions-ever). The checkpoint is a resolution HINT:
-  versions are dense (create-if-absent commits), so probing from any
-  known-committed version finds the true head; a missing/torn checkpoint
-  falls back to the full LIST, never to a wrong answer.
+- ``_txn_log`` is a :class:`versionlog.VersionLog`: version N's MANIFEST
+  lists the ACTIVE data files + schema, readers resolve the latest
+  version and read exactly those files (a half-written data file is
+  invisible until its manifest commits), and head resolution runs off the
+  ``_last_checkpoint`` hint every ``checkpoint_interval`` commits. The
+  commit, hint, ``_expired`` watermark and tombstone protocol is stated
+  once, in that module's docstring; every manifest and data-file IO here
+  runs through ``pyarrow.fs``, so a local root runs the exact code an
+  ``s3://`` or ``hdfs://`` deployment runs.
 - ``mode="append"`` adds files (schema widened by merge, missing columns
   read as NULL); ``mode="overwrite"`` starts a fresh file set. Old files
   are never mutated, so every prior version stays readable: time travel.
@@ -38,9 +25,9 @@ module restores both with the same public design Delta/Iceberg use
   ``FileExistsError`` a version collision raises — Delta's OCC protocol.
   ``write_txn`` re-validates its idempotency watermark inside the loop,
   so two racing producers replaying the same batch land it exactly once.
+- GDPR ``erase_keys`` is the one writer that REPLACES manifests in place.
 
-This is deliberately a few hundred lines, not a table format competitor:
-it documents exactly which Delta semantics the pipeline relies on, and it
+It documents exactly which Delta semantics the pipeline relies on, and it
 swaps out for real Delta/Iceberg by replacing TxnTable with
 ``spark.read.format("delta")`` at deployment.
 """
@@ -49,13 +36,14 @@ from __future__ import annotations
 
 import json
 import logging
-import os
-import re
 import time
 import uuid
 
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from etl_hiscox_spark.sources.versionlog import ManifestRetired, VersionLog, check_root
 
 _LOG = logging.getLogger("etl_hiscox_spark.txnlog")
 
@@ -70,26 +58,8 @@ def _is_missing_path_error(exc: BaseException) -> bool:
     return "PATH_NOT_FOUND" in s or "Path does not exist" in s
 
 
-class ManifestRetired(FileNotFoundError):
-    """A manifest name whose content is a retention TOMBSTONE (r16: expiry
-    tombstones retired names instead of deleting them). Subclasses
-    ``FileNotFoundError`` so every concurrent-retention handler that
-    treated a deleted manifest as gone keeps working unchanged, while
-    carrying the r17 distinction the tolerant reader needs: tombstone
-    content PROVES the version was expired — only retention writes it —
-    independent of whether this expire run's watermark marker has landed
-    yet (the zero-width ordering on atomic-replace stores tombstones
-    first, marks second)."""
-
 _LOG_DIR = "_txn_log"
-_CKPT_NAME = "_last_checkpoint"
-# expire watermark (r15): "_expired" sentinel + immutable "_expired_v{F}"
-# marker files — create-if-absent, never replaced, so the observable
-# watermark (max marker) is monotonic by construction even under racing
-# expires (a replace-written file would have a lost-update window that
-# could regress it, and the version-reuse guard in _commit rides on it)
-_EXPIRED_SENTINEL = "_expired"
-_EXPIRED_RE = re.compile(r"^_expired_v(\d+)$")
+_EXPIRED = "_expired"
 
 
 # integral family (tens digit 0) and fractional family (tens digit 1):
@@ -148,513 +118,48 @@ class TxnTable:
     """
 
     def __init__(self, spark: SparkSession, path: str, checkpoint_interval: int = 10):
-        from etl_hiscox_spark.operators.dedup import _meta_is_local
-
         self.spark = spark
         self.path = path
-        self.log_dir = os.path.join(path, _LOG_DIR)
         if checkpoint_interval < 1:
             raise ValueError(
                 f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
             )
         self.checkpoint_interval = checkpoint_interval
-        # observability for the O(tail) head-read contract (tests + the
-        # x16 probe assert on it): how the LAST latest_version() resolved
-        self.last_head_resolution: dict | None = None
-        # Branch split (r13): a scheme-less driver-local root keeps the
-        # os.* fast path; ANY URI (file://, hdfs://, s3://) runs the
-        # pyarrow.fs path, so file:// tests cover the deployment code.
-        # A scheme-less root on a non-file defaultFS would SPLIT the
-        # table (Spark resolves data files against defaultFS, os.* reads
-        # the driver's disk) — reject loudly, same rule as
-        # genlog.resolve_root.
-        self._use_os = "://" not in path and not path.startswith("file:")
-        if self._use_os and not _meta_is_local(spark, path):
-            raise ValueError(
-                f"txn table root {path!r} is scheme-less but fs.defaultFS "
-                "is not file: — pass a fully-qualified URI so the manifest "
-                "log and the data files resolve to the SAME filesystem"
-            )
-        self.__fs = None
+        self.log = VersionLog(check_root(spark, path), _LOG_DIR, _EXPIRED, spark)
+        # the table's filesystem and base path: data files live beside the log
+        self.fs, self.base = self.log.fs, self.log.base
 
-    # -- filesystem plumbing (r13: os fast path | pyarrow.fs) ----------------
-
-    def _fs(self):
-        """Cached ``(filesystem, base_path)`` for the pyarrow branch."""
-        if self.__fs is None:
-            from etl_hiscox_spark.sources.listing import _resolve_fs
-
-            self.__fs = _resolve_fs(self.path)
-        return self.__fs
-
-    def _fs_log_path(self) -> str:
-        return f"{self._fs()[1].rstrip('/')}/{_LOG_DIR}"
-
-    # -- log plumbing --------------------------------------------------------
-
-    def _log_names(self) -> list[str]:
-        """One LIST of the log directory (shared by the version listing
-        and the expire-watermark read)."""
-        if self._use_os:
-            if not os.path.isdir(self.log_dir):
-                return []
-            return os.listdir(self.log_dir)
-        from pyarrow import fs as pafs
-
-        filesystem, _ = self._fs()
-        infos = filesystem.get_file_info(
-            pafs.FileSelector(
-                self._fs_log_path(), recursive=False, allow_not_found=True
-            )
-        )
-        return [i.base_name for i in infos]
+    @property
+    def last_head_resolution(self) -> dict | None:
+        """How the LAST :meth:`latest_version` resolved (tests and the x16
+        probe pin the O(tail) head-read contract on it)."""
+        return self.log.last_head_resolution
 
     def _versions(self) -> list[int]:
-        """LIVE manifest listing — maintenance/history surfaces only; the
-        head-read hot path is :meth:`latest_version`'s checkpoint probe.
-        Versions retired by :meth:`expire_versions` are EXCLUDED via
-        their ``v{N}.retired`` sidecar (r16: expiry tombstones retired
-        names instead of deleting them, so the name keeps refusing
-        create-if-absent; the sidecar keeps one name-based LIST
-        sufficient — no GET per file)."""
-        out, retired = [], set()
-        names = self._log_names()
-        for name in names:
-            if name.startswith("v") and name.endswith(".retired"):
-                try:
-                    retired.add(int(name[1:-8]))
-                except ValueError:
-                    continue
-        for name in names:
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    v = int(name[1:-5])
-                except ValueError:
-                    continue
-                if v not in retired:
-                    out.append(v)
-        return sorted(out)
-
-    def _manifest_exists(self, version: int) -> bool:
-        if self._use_os:
-            return os.path.exists(os.path.join(self.log_dir, f"v{version}.json"))
-        from pyarrow import fs as pafs
-
-        filesystem, _ = self._fs()
-        info = filesystem.get_file_info(f"{self._fs_log_path()}/v{version}.json")
-        return info.type != pafs.FileType.NotFound
+        """LIVE manifest versions — maintenance/history surfaces only; the
+        head-read hot path is :meth:`latest_version`."""
+        return self.log.versions()
 
     def latest_version(self) -> int | None:
-        """Head resolution. With a checkpoint: probe FORWARD from the
-        recorded version until the first missing manifest — versions are
-        dense (every commit is create-if-absent at prev+1), so the probe
-        finds the true head in O(commits-since-checkpoint) exists-checks,
-        no directory LIST. Without one (young table, torn checkpoint):
-        full LIST fallback. A stale checkpoint can only UNDER-estimate,
-        and probing forward corrects that — it can never over-estimate,
-        because :meth:`expire_versions` advances it past every deletion."""
-        ckpt = self._read_checkpoint()
-        if ckpt is None:
-            vs = self._versions()
-            self.last_head_resolution = {"mode": "list", "entries": len(vs)}
-            return vs[-1] if vs else None
-        v, probes = ckpt, 0
-        while True:
-            probes += 1
-            if not self._manifest_exists(v + 1):
-                break
-            v += 1
-        self.last_head_resolution = {"mode": "checkpoint", "entries": probes}
-        return v
+        """Head resolution through the checkpoint hint
+        (:meth:`VersionLog.head`): O(commits-since-checkpoint) exists
+        probes, the full LIST only as fallback."""
+        return self.log.head()
 
     def _read_manifest(self, version: int) -> dict:
-        if self._use_os:
-            with open(os.path.join(self.log_dir, f"v{version}.json")) as f:
-                m = json.load(f)
-        else:
-            filesystem, _ = self._fs()
-            with filesystem.open_input_file(
-                f"{self._fs_log_path()}/v{version}.json"
-            ) as f:
-                m = json.loads(f.read().decode("utf-8"))
-        if m.get("tombstone"):
-            # retired by expire_versions (r16: retention tombstones the
-            # name instead of deleting it) — raise the same LOUD signal a
-            # deleted manifest always gave (time travel to an expired
-            # version fails cleanly), as a subclass (r17) so the tolerant
-            # reader can classify by CONTENT: a tombstone is only ever
-            # written by retention, so it proves expiry without
-            # consulting the watermark — which matters under the r17
-            # zero-width ordering, where atomic-replace stores tombstone
-            # BEFORE the watermark marker lands
-            raise ManifestRetired(
-                f"manifest v{version} at {self.path!r} was expired by "
-                "retention — the version is no longer time-travelable"
-            )
-        return m
+        """Manifest ``version``; a version retired by :meth:`expire_versions`
+        raises :class:`versionlog.ManifestRetired` — time travel to an
+        expired version fails loudly."""
+        return self.log.read(version)
 
     def _commit(self, version: int, manifest: dict) -> None:
-        """Atomic commit via :func:`commitio.commit_if_absent` — the
-        content-carrying create-if-absent shared with the index
-        generation log: it fails with FileExistsError if version N is
-        already committed (two-writer race becomes loud, like Delta's
-        optimistic concurrency) and readers can never observe a
-        partially-written manifest. After a successful commit at a
-        checkpoint boundary, the head hint is refreshed."""
-        from etl_hiscox_spark.sources.commitio import commit_if_absent
-
-        # version-number reuse guard, PRE-link half (r16, ADVICE r15
-        # low): refuse a version the expire watermark already covers
-        # BEFORE anything lands — nothing to unwind, so the refusal can
-        # never misclassify a live commit. Catches names freed by
-        # tombstone coalescing (and any r15-era deleted name); retired
-        # but not-yet-coalesced names refuse themselves at the
-        # create-if-absent below (tombstoned names still EXIST — r16).
-        # An unreadable sentinel/watermark means "unknown" and the
-        # commit proceeds — the post-link classifier is the backstop.
-        try:
-            retired_name = (
-                self._expired_ever()
-                and version <= self._read_expire_watermark()
-            )
-        except OSError:
-            retired_name = False
-        if retired_name:
-            raise FileExistsError(
-                f"manifest v{version} at {self.path!r} was already retired "
-                "by expire_versions (stale head resolve spanning a "
-                "retention run) — re-resolve the log head and re-run"
-            )
-        uri = "/".join([self.path.rstrip("/"), _LOG_DIR, f"v{version}.json"])
-        raw = json.dumps(manifest).encode("utf-8")
-        commit_if_absent(self.spark, uri, raw)
-        # POST-link half: the watermark may have advanced mid-commit.
-        # r15 compared version <= watermark alone — false positive: a
-        # FRESH commit swept by a concurrent retention run in this
-        # window was unwound and surfaced as an OCC conflict, and the
-        # caller's retry re-appended the same batch (ADVICE r15).
-        # Classify by CONTENT: my-bytes means the link won a freed
-        # retired name (true stale reuse that slipped the pre-link
-        # guard) and unwinds; a tombstone or missing file means THIS
-        # commit landed live and was already legitimately retired
-        # (newer commits carried its cumulative file list forward) —
-        # success, NOT a conflict. Store hiccups must not fail a commit
-        # that already landed: unreadable states proceed as success.
-        try:
-            wm_advanced = (
-                self._expired_ever()
-                and version <= self._read_expire_watermark()
-            )
-        except OSError:
-            wm_advanced = False
-        if wm_advanced:
-            mine = False
-            try:
-                if self._use_os:
-                    with open(
-                        os.path.join(self.log_dir, f"v{version}.json"), "rb"
-                    ) as f:
-                        mine = f.read() == raw
-                else:
-                    with self._fs()[0].open_input_file(
-                        f"{self._fs_log_path()}/v{version}.json"
-                    ) as f:
-                        mine = f.read() == raw
-            except OSError:
-                mine = False  # tombstoned+coalesced or unreadable: landed live
-            if mine:
-                try:
-                    if self._use_os:
-                        os.remove(os.path.join(self.log_dir, f"v{version}.json"))
-                    else:
-                        self._fs()[0].delete_file(
-                            f"{self._fs_log_path()}/v{version}.json"
-                        )
-                except (FileNotFoundError, OSError):
-                    pass
-                raise FileExistsError(
-                    f"manifest v{version} at {self.path!r} was already retired "
-                    "by expire_versions (stale head resolve spanning a "
-                    "retention run) — re-resolve the log head and re-run"
-                )
-        if version > 0 and version % self.checkpoint_interval == 0:
-            self._write_checkpoint(version)
-
-    # -- checkpoint hint (r13, Delta's _last_checkpoint analog) --------------
-
-    def _ckpt_paths(self) -> tuple[str, str]:
-        """(final, tmp) checkpoint paths in the ACTIVE branch's form."""
-        if self._use_os:
-            final = os.path.join(self.log_dir, _CKPT_NAME)
-        else:
-            final = f"{self._fs_log_path()}/{_CKPT_NAME}"
-        return final, f"{final}.{uuid.uuid4().hex}.tmp"
-
-    def _write_checkpoint(self, version: int) -> None:
-        """Record ``version`` as a known-committed head hint (tmp +
-        replace: last-writer-wins is CORRECT here — every writer records
-        a version it itself committed, and readers probe forward from
-        whatever they find). The pyarrow replace handles HDFS rename
-        semantics (refuses an existing destination, r13 review): move
-        first — atomic where the store supports replace — and on refusal
-        delete the old hint and move again; the instant with no
-        checkpoint on disk just means one LIST fallback, never a wrong
-        head. Failures are swallowed by design for the opportunistic
-        per-commit refresh: the commit this hint describes has already
-        landed, and failing the writer over a lost hint would be
-        backwards. :meth:`expire_versions` — where the advance is a
-        correctness PREcondition — verifies the result itself."""
-        record = json.dumps({"version": int(version)}).encode("utf-8")
-        final, tmp = self._ckpt_paths()
-        try:
-            if self._use_os:
-                with open(tmp, "wb") as f:
-                    f.write(record)
-                os.replace(tmp, final)
-                return
-            filesystem, _ = self._fs()
-            self._fs_replace(filesystem, tmp, final, record)
-        except OSError:
-            pass
-
-    def _fs_replace(self, filesystem, tmp: str, final: str, data: bytes) -> None:
-        """Write ``data`` at ``final`` via staged tmp + move, replacing
-        any existing file, through ``pyarrow.fs`` — delegates to
-        :func:`commitio.replace_put`, THE one hint-record primitive
-        (review: two hand-rolled copies of the HDFS-rename-refusal dance
-        would drift on exactly the failure step a crash needs). The
-        brief no-file window on a rename-refusing store is tolerated by
-        both callers' contracts (checkpoint: LIST fallback; erase
-        repoint: documented maintenance window). ``tmp`` is unused —
-        the primitive stages its own."""
-        from etl_hiscox_spark.sources.commitio import replace_put
-
-        replace_put(filesystem, final, data)
-
-    def _drop_checkpoint(self) -> None:
-        """Remove the head hint entirely — readers fall back to the full
-        LIST, which is always correct (expire's refusal path)."""
-        final, _ = self._ckpt_paths()
-        if self._use_os:
-            try:
-                os.remove(final)
-            except FileNotFoundError:
-                pass
-            return
-        try:
-            self._fs()[0].delete_file(final)
-        except (OSError, FileNotFoundError):
-            pass
-
-    def _read_checkpoint(self) -> int | None:
-        """The recorded head hint, or None (absent / unreadable / torn —
-        the caller falls back to the full LIST)."""
-        final, _ = self._ckpt_paths()
-        try:
-            if self._use_os:
-                with open(final, "rb") as f:
-                    raw = f.read()
-            else:
-                filesystem, _ = self._fs()
-                with filesystem.open_input_file(final) as f:
-                    raw = f.read()
-            return int(json.loads(raw.decode("utf-8"))["version"])
-        except (OSError, ValueError, KeyError):
-            return None
-
-    # -- expire watermark (r15, ADVICE r14) -----------------------------------
-    #
-    # The "_expired" sentinel plus immutable "_expired_v{F}" marker files
-    # record the highest manifest version retention has EVER expired at
-    # this root, committed by :meth:`expire_versions` BEFORE it deletes
-    # anything. Two consumers:
-    #
-    # - classification — "this listed manifest is unreadable: expired, or
-    #   mid-REPLACE?" — which a re-LIST cannot answer (ADVICE r14:
-    #   erase_keys' repoint on a rename-refusing store has a brief
-    #   no-file window, during which the manifest is absent from a fresh
-    #   LIST too, so the r14 discrimination misclassified an in-flight
-    #   repoint as expired and could drop its files from vacuum's live
-    #   set). Expiry is prefix-only and marks first, so a missing
-    #   manifest with version > watermark CANNOT have been expired.
-    # - the version-number REUSE guard in :meth:`_commit`. r16 (ADVICE
-    #   r15 low): expiry now TOMBSTONES retired names instead of
-    #   deleting them (``_retire_manifest`` — the name keeps refusing
-    #   create-if-absent naturally, with a ``v{N}.retired`` sidecar
-    #   keeping the LIST name-based), so the watermark's commit-guard
-    #   role narrows to the PRE-link refusal of names freed by
-    #   tombstone COALESCING (one retention cycle later) and to
-    #   classifying the post-link window — where my-bytes means a true
-    #   stale reuse and a tombstone/missing file means a fresh commit
-    #   that retention legitimately swept after it landed (the r15
-    #   classifier unwound that fresh commit as a false OCC conflict,
-    #   and the caller's retry double-appended).
-    #
-    # Markers are create-if-absent and never replaced: the watermark
-    # (max marker) is monotonic by construction, immune to the
-    # lost-update race a replace-written file would have under two
-    # RACING expires. Old markers are garbage-collected after each
-    # expire; the log dir is prefix-trimmed, so the LIST these reads pay
-    # stays small, and the per-commit guard first probes only the
-    # sentinel.
-
-    def _expired_ever(self) -> bool:
-        if self._use_os:
-            return os.path.exists(os.path.join(self.log_dir, _EXPIRED_SENTINEL))
-        from pyarrow import fs as pafs
-
-        filesystem, _ = self._fs()
-        info = filesystem.get_file_info(
-            f"{self._fs_log_path()}/{_EXPIRED_SENTINEL}"
+        """Atomic create-if-absent commit of ``manifest`` at ``version``
+        (:meth:`VersionLog.commit`): a concurrent writer that won the
+        version makes it raise ``FileExistsError``, like Delta's
+        optimistic concurrency."""
+        self.log.commit(
+            version, json.dumps(manifest).encode("utf-8"), self.checkpoint_interval
         )
-        return info.type == pafs.FileType.File
-
-    def _read_expire_watermark(self) -> int:
-        """Highest version ever expired at this root, or -1 (no marker —
-        nothing provably expired, the caller refuses instead)."""
-        best = -1
-        for name in self._log_names():
-            m = _EXPIRED_RE.match(name)
-            if m:
-                best = max(best, int(m.group(1)))
-        return best
-
-    def _mark_expire_watermark(self, version: int) -> None:
-        """Commit the sentinel + marker for an expiry through ``version``
-        — create-if-absent; already-present means a racing expire did the
-        same work. Raises on store failure: expire must NOT delete
-        without the marker down."""
-        from etl_hiscox_spark.sources.commitio import commit_if_absent
-
-        base = self.path.rstrip("/")
-        for name in (_EXPIRED_SENTINEL, f"_expired_v{version}"):
-            try:
-                commit_if_absent(
-                    self.spark, "/".join([base, _LOG_DIR, name]), b""
-                )
-            except FileExistsError:
-                pass
-
-    def _retire_manifest(self, version: int) -> None:
-        """Tombstone one retired manifest name (r16, ADVICE r15 low):
-        sidecar first (listing), then the atomic content replace — the
-        name keeps refusing create-if-absent, so a stale-resolved commit
-        fails naturally instead of winning a freed name. Store errors
-        absorbed: a skipped victim is retried by the next expire, and a
-        half-retired pair degrades to states readers already handle."""
-        tomb = json.dumps({"tombstone": True, "retired_at": time.time()}).encode(
-            "utf-8"
-        )
-        if self._use_os:
-            try:
-                with open(os.path.join(self.log_dir, f"v{version}.retired"), "wb"):
-                    pass
-                tmp = os.path.join(self.log_dir, f".v{version}.retire.tmp")
-                with open(tmp, "wb") as f:
-                    f.write(tomb)
-                os.replace(tmp, os.path.join(self.log_dir, f"v{version}.json"))
-            except OSError:
-                pass
-            return
-        from etl_hiscox_spark.sources.commitio import replace_put
-
-        filesystem, _ = self._fs()
-        log_path = self._fs_log_path()
-        try:
-            replace_put(filesystem, f"{log_path}/v{version}.retired", b"")
-            replace_put(filesystem, f"{log_path}/v{version}.json", tomb)
-        except OSError:
-            pass
-
-    def _retire_is_atomic(self) -> bool:
-        """Store class for the retire-vs-marker ordering (r17): True when
-        the tombstone content replace is one atomic swap (local
-        ``os.replace``, or a registered single-shot replace hook) —
-        see :func:`commitio.replace_is_atomic`. Separate method so tests
-        can drive the rename-refusing branch on a local root."""
-        from etl_hiscox_spark.sources.commitio import replace_is_atomic
-
-        return self._use_os or replace_is_atomic(self._fs()[0])
-
-    def _retry_half_retired_manifests(self, min_age_seconds: float = 600.0) -> None:
-        """Finish retirements an earlier expire left half done (ADVICE
-        r16 low, the txn twin of genlog's retry): a ``v{N}.retired``
-        sidecar whose content file still holds a LIVE manifest is a
-        :meth:`_retire_manifest` that wrote the sidecar and then lost
-        the content replace — the name is excluded from
-        :meth:`_versions` (no expire re-victims it), a direct read keeps
-        serving the retired manifest, and the coalesce pass skips the
-        pair forever: unbounded residue without this retry. Crashed
-        stale-commit leftovers are NOT confused with these — they land
-        at coalesce-FREED names, which have no sidecar. The age gate on
-        the manifest's own ``committed_at`` is the vacuum
-        no-maintenance-op-is-mid-flight contract: never tombstone a
-        record whose writer's post-link classification may still be in
-        flight. Store errors absorbed — the next expire retries."""
-        cutoff = time.time() - min_age_seconds
-        for name in self._log_names():
-            if not (name.startswith("v") and name.endswith(".retired")):
-                continue
-            try:
-                v = int(name[1:-8])
-            except ValueError:
-                continue
-            try:
-                m = self._read_manifest(v)
-            except (FileNotFoundError, OSError, ValueError):
-                continue  # tombstone / coalesced / transient: not this pass's job
-            if m.get("committed_at", 0.0) > cutoff:
-                continue
-            self._retire_manifest(v)
-
-    def _coalesce_manifest_tombstones(self, floor_before: int) -> None:
-        """Delete tombstone pairs the watermark already covered BEFORE
-        this run — they survived a full retention cycle, and the
-        pre-link watermark guard keeps refusing their freed names. Only
-        names whose content IS a tombstone are deleted (a live record at
-        a retired version is a crashed stale commit's leftover — never
-        coalesce-bait). Racing deletes absorbed."""
-        if floor_before < 0:
-            return
-        for name in self._log_names():
-            if not (name.startswith("v") and name.endswith(".retired")):
-                continue
-            try:
-                v = int(name[1:-8])
-            except ValueError:
-                continue
-            if v > floor_before:
-                continue
-            try:
-                self._read_manifest(v)
-                continue  # read succeeded => LIVE content: skip the pair
-            except FileNotFoundError:
-                pass  # tombstone (or already coalesced): delete below
-            except OSError:
-                continue  # unreadable: let the next run decide
-            for fname in (f"v{v}.json", name):
-                try:
-                    if self._use_os:
-                        os.remove(os.path.join(self.log_dir, fname))
-                    else:
-                        self._fs()[0].delete_file(f"{self._fs_log_path()}/{fname}")
-                except (FileNotFoundError, OSError):
-                    pass
-
-    def _cleanup_expire_markers(self, floor: int) -> None:
-        """Drop markers strictly below ``floor`` — the max marker never
-        decreases; racing deletes absorbed."""
-        for name in self._log_names():
-            m = _EXPIRED_RE.match(name)
-            if not m or int(m.group(1)) >= floor:
-                continue
-            try:
-                if self._use_os:
-                    os.remove(os.path.join(self.log_dir, name))
-                else:
-                    self._fs()[0].delete_file(f"{self._fs_log_path()}/{name}")
-            except (FileNotFoundError, OSError):
-                pass
 
     def _read_manifest_tolerant(self, version: int, op: str) -> dict | None:
         """Read manifest ``version``, classifying concurrent-maintenance
@@ -686,7 +191,7 @@ class TxnTable:
                 # turning readers of that version into RuntimeErrors)
                 return None
             except (FileNotFoundError, OSError) as exc:
-                if version <= self._read_expire_watermark():
+                if version <= self.log.read_floor():
                     return None  # provably expired concurrently
                 last = exc
         _LOG.warning(
@@ -724,20 +229,13 @@ class TxnTable:
         batch_dir = f"{prefix}-{uuid.uuid4().hex}"
         out_dir = "/".join([self.path.rstrip("/"), "data", batch_dir])
         df.write.mode("error").parquet(out_dir)
-        if self._use_os:
-            names = os.listdir(out_dir)
-        else:
-            from pyarrow import fs as pafs
-
-            filesystem, base = self._fs()
-            infos = filesystem.get_file_info(
-                pafs.FileSelector(
-                    f"{base.rstrip('/')}/data/{batch_dir}", recursive=False
-                )
-            )
-            names = [i.base_name for i in infos]
+        infos = self.fs.get_file_info(
+            pafs.FileSelector(f"{self.base}/data/{batch_dir}", recursive=False)
+        )
         return sorted(
-            f"data/{batch_dir}/{f}" for f in names if f.endswith(".parquet")
+            f"data/{batch_dir}/{i.base_name}"
+            for i in infos
+            if i.base_name.endswith(".parquet")
         )
 
     def write(
@@ -759,7 +257,7 @@ class TxnTable:
         (e.g. ``OPTIMIZE`` from :meth:`compact`).
 
         Multi-writer OCC (r12): when a concurrent writer wins the version,
-        the ``os.link`` commit raises ``FileExistsError``; the loop
+        the create-if-absent commit raises ``FileExistsError``; the loop
         re-reads the new latest manifest, re-merges the file list
         (append keeps BOTH writers' batches — the write sets are disjoint
         uuid dirs, so the merge is conflict-free, Delta's AddFile logic),
@@ -993,119 +491,52 @@ class TxnTable:
         )
 
     def expire_versions(self, keep_last: int, min_age_seconds: float = 600.0) -> int:
-        """Retention: drop the manifests of all but the newest
-        ``keep_last`` versions, so :meth:`vacuum` can reclaim the data
-        files only they referenced (post-compaction history storage —
-        Delta's log-retention half of OPTIMIZE/VACUUM). Time travel to
-        expired versions becomes a LOUD FileNotFoundError (the manifest
-        is gone), never a partial read. Returns the number of versions
-        expired.
+        """Retention: retire the manifests of all but the newest
+        ``keep_last`` versions (:meth:`VersionLog.retire` — tombstoned,
+        watermark-marked), so :meth:`vacuum` can reclaim the data files
+        only they referenced (post-compaction history storage — Delta's
+        log-retention half of OPTIMIZE/VACUUM). Time travel to expired
+        versions becomes a LOUD FileNotFoundError, never a partial read.
+        Returns the number of versions expired.
 
         The head checkpoint ADVANCES to the newest surviving version
-        before any manifest is deleted (r13): :meth:`latest_version`'s
-        probe relies on manifests being dense ABOVE the checkpoint, and
-        expiry deletes from the bottom — a checkpoint left pointing into
-        the deleted range would make the probe see a gap and under-report
-        the head.
+        before any manifest is retired (r13): retention works from the
+        bottom and later coalesces retired names away, so a checkpoint
+        left pointing into that range would send head reads to a stale
+        or missing version. The advance is a correctness PREcondition: if
+        it does not land, the hint is dropped (LIST fallback is always
+        correct); if even the drop fails, expiry REFUSES.
 
-        ``min_age_seconds`` gates the half-retired repair pass (ADVICE
-        r16: re-running the tombstone replace for sidecar-listed names a
-        crashed expire left with live content) — the same
+        ``min_age_seconds`` gates the half-retired repair pass — the same
         no-maintenance-op-is-mid-flight contract as :meth:`vacuum`'s
         parameter of the same name. Pass 0 only when no commit can be
-        mid-flight."""
+        mid-flight. A watermark marker that cannot land raises
+        ``RuntimeError`` describing the (safe) state left behind."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         versions = self._versions()
         victims = versions[:-keep_last]
-        # ADVICE r16: finish crashed retires
-        self._retry_half_retired_manifests(min_age_seconds)
-        if not victims:
-            return 0
-        self._write_checkpoint(versions[-1])
-        if self._read_checkpoint() != versions[-1]:
-            # the advance is a correctness PREcondition here, not an
-            # opportunistic hint (r13 review): a stale checkpoint inside
-            # the soon-deleted range would make the forward probe see a
-            # gap and under-report the head. If the advance did not land,
-            # drop the hint (LIST fallback is always correct); if even
-            # the drop fails, REFUSE to expire rather than delete
-            # manifests a stale hint still points into.
-            self._drop_checkpoint()
-            if self._read_checkpoint() is not None:
-                raise RuntimeError(
-                    f"expire_versions at {self.path!r}: could not advance "
-                    "or remove the head checkpoint — refusing to delete "
-                    "manifests a stale checkpoint may point into"
-                )
-        try:
-            floor_before = (
-                self._read_expire_watermark() if self._expired_ever() else -1
-            )
-        except OSError:
-            floor_before = -1  # unknown: coalesce nothing this run
-        # Retired names are TOMBSTONED, not deleted (r16, ADVICE r15
-        # low): the name keeps refusing create-if-absent, so a stale
-        # writer fails naturally. Ordering vs the watermark marker is
-        # store-class-dependent (r17, VERDICT r16 item 4 — genlog's
-        # vacuum_generations carries the full analysis):
-        #  - atomic-replace stores (local os.replace / hooked single
-        #    PUT): tombstone FIRST, mark second — zero-width false-unwind
-        #    window: by the time _commit's post-link check can see
-        #    version <= watermark, the content is already a tombstone,
-        #    so a fresh commit swept mid-window classifies as
-        #    retired-after-landing SUCCESS, never my-bytes. The
-        #    marker-first discipline protects nothing here (names are
-        #    never absent mid-replace), and readers classify tombstones
-        #    by CONTENT (ManifestRetired), not by watermark.
-        #  - rename-refusing stores: marker first (r15/r16 order) — the
-        #    pre-link watermark refusal is what keeps stragglers out of
-        #    replace_put's delete+move absence window; the documented
-        #    one-replace-wide false-unwind gap remains.
-        # NEWEST victim first in both orders. A concurrent expire
-        # retiring the same name is the same work — replace idempotent.
-        atomic = self._retire_is_atomic()
-        if atomic:
-            for v in reversed(victims):
-                self._retire_manifest(v)
-        try:
-            self._mark_expire_watermark(victims[-1])
-        except OSError:
-            pass  # the re-read below is the authoritative verdict
-        if self._read_expire_watermark() < victims[-1]:
-            if atomic:
-                raise RuntimeError(
-                    f"expire_versions at {self.path!r}: victims tombstoned "
-                    f"but the expire watermark marker for v{victims[-1]} did "
-                    "not land — tombstoned names keep refusing commits "
-                    "naturally (safe state); coalescing and marker cleanup "
-                    "defer to a later expire whose watermark covers them"
-                )
+        if victims:
+            self.log.write_hint(versions[-1])
+            if self.log.read_hint() != versions[-1]:
+                self.log.drop_hint()
+                if self.log.read_hint() is not None:
+                    raise RuntimeError(
+                        f"expire_versions at {self.path!r}: could not advance "
+                        "or remove the head checkpoint — refusing to delete "
+                        "manifests a stale checkpoint may point into"
+                    )
+        if not self.log.retire(victims, min_age_seconds):
             raise RuntimeError(
-                f"expire_versions at {self.path!r}: could not commit the "
-                f"expire watermark marker for v{victims[-1]} — refusing to "
-                "retire manifests without it (a concurrent commit could "
-                "otherwise silently reuse a retired version number)"
+                f"expire_versions at {self.path!r}: {self.log.unmarked(victims[-1])}"
             )
-        if not atomic:
-            for v in reversed(victims):
-                self._retire_manifest(v)
-        self._coalesce_manifest_tombstones(floor_before)
-        self._cleanup_expire_markers(victims[-1])
         return len(victims)
 
     def _file_sizes(self, rel_files: list[str]) -> list[int]:
-        """On-disk sizes of table-relative files (compact's sizing facts).
-        The pyarrow branch resolves the whole batch in ONE get_file_info
-        call — per-file stat round trips are the object-store tax."""
-        if self._use_os:
-            return [
-                os.path.getsize(os.path.join(self.path, f)) for f in rel_files
-            ]
-        filesystem, base = self._fs()
-        infos = filesystem.get_file_info(
-            [f"{base.rstrip('/')}/{f}" for f in rel_files]
-        )
+        """On-disk sizes of table-relative files (compact's sizing facts),
+        resolved in ONE get_file_info call — per-file stat round trips are
+        the object-store tax."""
+        infos = self.fs.get_file_info([f"{self.base}/{f}" for f in rel_files])
         return [i.size for i in infos]
 
     def last_txn_version(self, app_id: str) -> int | None:
@@ -1176,7 +607,7 @@ class TxnTable:
         v = self.latest_version() if version is None else version
         # a single exists-probe, not a full _versions() LIST — the head
         # read is the hot path the checkpoint exists for (r13)
-        if v is None or not self._manifest_exists(v):
+        if v is None or not self.log.exists(v):
             raise FileNotFoundError(f"no committed version {version!r} at {self.path}")
         # the documented reader contract of _replace_manifest ("a
         # concurrent read of THIS version fails loudly and retries"),
@@ -1216,13 +647,7 @@ class TxnTable:
 
             first = None
             for rel in rel_files:
-                if self._use_os:
-                    sch = pq.read_schema("/".join([self.path.rstrip("/"), rel]))
-                else:
-                    filesystem, base = self._fs()
-                    sch = pq.read_schema(
-                        f"{base.rstrip('/')}/{rel}", filesystem=filesystem
-                    )
+                sch = pq.read_schema(f"{self.base}/{rel}", filesystem=self.fs)
                 if first is None:
                     first = sch
                 elif not sch.equals(first):
@@ -1349,48 +774,13 @@ class TxnTable:
             live.update(m["files"])
         removed = 0
         cutoff = time.time() - min_age_seconds
-        if self._use_os:
-            data_root = os.path.join(self.path, "data")
-            if not os.path.isdir(data_root):
-                return 0
-            for batch in os.listdir(data_root):
-                bdir = os.path.join(data_root, batch)
-                for f in os.listdir(bdir):
-                    rel = f"data/{batch}/{f}"
-                    full = os.path.join(bdir, f)
-                    try:
-                        if (
-                            f.endswith(".parquet")
-                            and rel not in live
-                            and os.path.getmtime(full) <= cutoff
-                        ):
-                            os.remove(full)
-                            removed += 1
-                    except (FileNotFoundError, OSError):
-                        continue  # the racing vacuum reclaimed it first
-                try:
-                    # age-gated like the files (r15, found by the r15
-                    # stress run): a CONCURRENT writer's batch dir is
-                    # briefly empty between its creation and Spark
-                    # staging _temporary/ into it — rmdir in that window
-                    # fails the writer's job. An empty dir younger than
-                    # the retention window may be exactly that; leave it
-                    # for the next run.
-                    if not os.listdir(bdir) and os.path.getmtime(bdir) <= cutoff:
-                        os.rmdir(bdir)
-                except OSError:
-                    pass  # repopulated or removed by the racing vacuum
-            return removed
-        # pyarrow branch: ONE recursive LIST under data/ (object-store
-        # LISTs are paginated-but-cheap; per-dir round trips are not),
-        # age from FileInfo.mtime, plain DELETEs. Empty batch "dirs" are
-        # left behind — on a real object store they do not exist, and on
-        # LocalFileSystem an empty dir is harmless debris.
-        from pyarrow import fs as pafs
-
-        filesystem, base = self._fs()
-        data_root = f"{base.rstrip('/')}/data"
-        infos = filesystem.get_file_info(
+        # ONE recursive LIST under data/ (object-store LISTs are
+        # paginated-but-cheap; per-dir round trips are not), age from
+        # FileInfo.mtime, plain DELETEs. Empty batch dirs are left behind —
+        # on an object store they do not exist, on a local disk an empty
+        # dir is harmless debris.
+        data_root = f"{self.base}/data"
+        infos = self.fs.get_file_info(
             pafs.FileSelector(data_root, recursive=True, allow_not_found=True)
         )
         for info in infos:
@@ -1400,8 +790,8 @@ class TxnTable:
             mtime = info.mtime.timestamp() if info.mtime else 0.0
             if rel not in live and mtime <= cutoff:
                 try:
-                    filesystem.delete_file(info.path)
-                except (FileNotFoundError, OSError):
+                    self.fs.delete_file(info.path)
+                except OSError:
                     continue  # the racing vacuum reclaimed it first
                 removed += 1
         return removed
@@ -1614,40 +1004,17 @@ class TxnTable:
 
     def _replace_manifest(self, version: int, manifest: dict) -> None:
         """IN-PLACE manifest update (erase repointing only — commits go
-        through the create-if-absent :meth:`_commit`): tmp + replace.
-        Atomic where the store replaces in one step (local rename, S3
-        single-PUT copy); on HDFS — whose rename refuses an existing
-        destination — :meth:`_fs_replace` deletes the old manifest and
-        moves the new one in, a brief absence window during which a
+        through the create-if-absent :meth:`_commit`) via
+        :meth:`VersionLog.replace`. Atomic where the store replaces in one
+        step (local rename, S3 single PUT); on HDFS — whose rename refuses
+        an existing destination — a brief absence window during which a
         concurrent time-travel read of THIS version fails loudly and
-        retries (erase is a stop-the-world compliance op, the same
-        reader contract as Delta's REORG). The RACE guarantee only
-        commits need comes from commit_if_absent."""
-        data = json.dumps(manifest).encode("utf-8")
-        if self._use_os:
-            tmp = os.path.join(self.log_dir, f".v{version}.erase.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(data)
-            os.replace(tmp, os.path.join(self.log_dir, f"v{version}.json"))
-            return
-        filesystem, _ = self._fs()
-        log_path = self._fs_log_path()
-        self._fs_replace(
-            filesystem,
-            f"{log_path}/.v{version}.erase.{uuid.uuid4().hex}.tmp",
-            f"{log_path}/v{version}.json",
-            data,
-        )
+        retries (erase is a stop-the-world compliance op, the same reader
+        contract as Delta's REORG)."""
+        self.log.replace(version, json.dumps(manifest).encode("utf-8"))
 
     def _delete_data_file(self, rel: str) -> None:
-        if self._use_os:
-            try:
-                os.remove(os.path.join(self.path, rel))
-            except FileNotFoundError:
-                pass
-            return
-        filesystem, base = self._fs()
         try:
-            filesystem.delete_file(f"{base.rstrip('/')}/{rel}")
-        except (OSError, FileNotFoundError):
+            self.fs.delete_file(f"{self.base}/{rel}")
+        except OSError:
             pass

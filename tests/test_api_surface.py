@@ -267,3 +267,30 @@ def test_every_query_has_driver_coverage_plan():
     current = active_window()[0]
     stale = [n for n in PENDING_NEXT_WINDOW if last.get(n, 10**9) <= current - 2]
     assert not stale, f"banked a full round ago, remove from PENDING: {stale}"
+
+
+def test_sources_never_import_operators():
+    """The storage layer sits below the operators: no module under
+    ``etl_hiscox_spark/sources`` imports ``etl_hiscox_spark.operators``
+    (the driver-local path check lives in ``sources/listing``)."""
+    import ast
+    from pathlib import Path
+
+    import etl_hiscox_spark.sources as sources
+
+    def imported(node):
+        if isinstance(node, ast.Import):
+            return [a.name for a in node.names]
+        if isinstance(node, ast.ImportFrom) and node.module:
+            return [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+        return []
+
+    offenders = [
+        f"{path.name}:{node.lineno} imports {mod}"
+        for path in sorted(Path(sources.__file__).parent.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        for mod in imported(node)
+        if mod == "etl_hiscox_spark.operators"
+        or mod.startswith("etl_hiscox_spark.operators.")
+    ]
+    assert offenders == []

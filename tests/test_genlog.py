@@ -344,10 +344,9 @@ def test_ivf_generational_full_lifecycle_no_renames(
 
 
 def test_resolve_root_rejects_schemeless_on_remote_default_fs(spark, monkeypatch):
-    from etl_hiscox_spark.operators import dedup
-    from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources import genlog, listing
 
-    monkeypatch.setattr(dedup, "_meta_is_local", lambda s, p: False)
+    monkeypatch.setattr(listing, "_meta_is_local", lambda s, p: False)
     with pytest.raises(ValueError, match="scheme-less"):
         genlog.resolve_root(spark, "/warehouse/idx")
     # and is_generational answers False without touching the filesystem
@@ -792,7 +791,7 @@ def test_checkpointed_head_resolution_is_bounded(spark, tmp_path):
     (txnlog's x16 treatment applied to the genlog), with the full LIST
     only as the torn-hint fallback."""
     from etl_hiscox_spark.operators.dedup import write_minhash_index
-    from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources import genlog, listing
 
     root = "file://" + str(tmp_path / "mh")
     write_minhash_index(_docs(spark, 10), "text", "doc_id", root)  # v0
@@ -807,7 +806,7 @@ def test_checkpointed_head_resolution_is_bounded(spark, tmp_path):
         genlog.last_head_resolution["entries"] <= genlog.CHECKPOINT_INTERVAL + 1
     )
     # torn hint: LIST fallback, same head, never a wrong answer
-    fsys, p = genlog._fs(
+    fsys, p = listing._resolve_fs(
         genlog._join(genlog.resolve_root(spark, root), "_gen_log", "_last_checkpoint")
     )
     with fsys.open_output_stream(p) as f:
@@ -1297,6 +1296,7 @@ def test_vacuum_with_stale_snapshot_never_reclaims_the_real_heads_segments(
     import time as _time
 
     from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     local = str(tmp_path / "stale")
     root = "file://" + local
@@ -1325,12 +1325,12 @@ def test_vacuum_with_stale_snapshot_never_reclaims_the_real_heads_segments(
 
     # vacuum B (the "other" vacuum, with the full snapshot) runs first
     genlog.vacuum_generations(None, root, keep_last=3, min_age_seconds=600.0)
-    assert genlog._pointer_versions(root) == [2, 3, 4]
+    assert genlog.pointer_log(root).versions() == [2, 3, 4]
 
     # vacuum A replays with the STALE pre-B snapshot: its keep window
     # ({0, 1} at keep_last=3) is entirely deleted — it must reclaim
     # NOTHING, not compute liveness from the stale view
-    monkeypatch.setattr(genlog, "_pointer_versions", lambda r: [0, 1])
+    monkeypatch.setattr(VersionLog, "versions", lambda self: [0, 1])
     # r15 (VERDICT r14 "what's wrong" #1): the deferred reclamation must
     # be OBSERVABLE — a bare 0 reads as "nothing to reclaim" to a
     # scheduler watching return values
@@ -1363,7 +1363,7 @@ def test_coarse_mtime_store_fingerprint_binds_to_content(
     ``seconds*1e9`` stamp, which the r15 None-only discriminator missed
     (the r16 fix; the moto test in test_s3_commit.py pins the real
     store)."""
-    from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources import genlog, listing
 
     local = str(tmp_path / "coarse")
     root = "file://" + local
@@ -1371,7 +1371,7 @@ def test_coarse_mtime_store_fingerprint_binds_to_content(
     with open(os.path.join(local, "gen-a", "part-0.bin"), "wb") as f:
         f.write(b"d")
 
-    real_fs = genlog._fs
+    real_fs = listing._resolve_fs
 
     class CoarseInfo:
         def __init__(self, info):
@@ -1394,7 +1394,7 @@ def test_coarse_mtime_store_fingerprint_binds_to_content(
             return getattr(self._fs, name)
 
     monkeypatch.setattr(
-        genlog, "_fs", lambda path: (lambda fs_p: (CoarseFS(fs_p[0]), fs_p[1]))(real_fs(path))
+        listing, "_resolve_fs", lambda path: (lambda fs_p: (CoarseFS(fs_p[0]), fs_p[1]))(real_fs(path))
     )
 
     genlog.commit_generation(
@@ -1470,10 +1470,10 @@ def test_pointer_commit_refuses_to_reuse_a_vacuumed_version(tmp_path):
             None, root, f"gen-{i}", "rebuild", i - 1,
             segments=[f"gen-{i}"], geometry_id=genlog.new_geometry_id(),
         )
-    assert genlog._read_vacuum_floor(root) == -1
+    assert genlog.pointer_log(root).read_floor() == -1
     genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
-    assert genlog._pointer_versions(root) == [4, 5]
-    assert genlog._read_vacuum_floor(root) == 3  # marker down before the trim
+    assert genlog.pointer_log(root).versions() == [4, 5]
+    assert genlog.pointer_log(root).read_floor() == 3  # marker down before the trim
 
     # the stale-resolved op: captured base v2 long ago, commits at v3 —
     # a name vacuum retired; the old create-if-absent would have "won"
@@ -1483,13 +1483,13 @@ def test_pointer_commit_refuses_to_reuse_a_vacuumed_version(tmp_path):
             None, root, "gen-stale", "compact", 2,
             segments=["gen-stale"], geometry_id=gid,
         )
-    assert genlog._pointer_versions(root) == [4, 5]  # bogus pointer unwound
+    assert genlog.pointer_log(root).versions() == [4, 5]  # bogus pointer unwound
 
     # the protocol proceeds normally above the floor
     seg("gen-new")
     assert genlog.append_segment(None, root, "gen-new") == 6
     genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
-    assert genlog._read_vacuum_floor(root) == 4
+    assert genlog.pointer_log(root).read_floor() == 4
     # old floor markers garbage-collected, the max retained
     names = sorted(
         n for n in os.listdir(os.path.join(local, "_gen_log"))
@@ -1546,7 +1546,7 @@ def test_fresh_pointer_swept_by_concurrent_vacuum_is_not_a_conflict(
                     segments=[f"gen-{i}"], geometry_id=genlog.new_geometry_id(),
                 )
             genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
-            assert genlog._read_vacuum_floor(root) == 3  # v3 swept
+            assert genlog.pointer_log(root).read_floor() == 3  # v3 swept
 
     monkeypatch.setattr(commitio, "commit_if_absent", commit_then_sweep)
     seg("gen-3")
@@ -1560,7 +1560,7 @@ def test_fresh_pointer_swept_by_concurrent_vacuum_is_not_a_conflict(
 
     # the swept commit entered the chain (v4 built on it); head is sane
     assert genlog.current_generation(None, root)[0] == 5
-    assert genlog._pointer_versions(root) == [4, 5]
+    assert genlog.pointer_log(root).versions() == [4, 5]
     # and a TRUE stale reuse at the swept name still refuses loudly
     seg("gen-stale")
     with pytest.raises(FileExistsError, match="retired"):
@@ -1580,6 +1580,7 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(tmp_path, monkeypat
     backstop; the fresh-commit case (tombstone state) is proven
     non-conflicting by the sweep test above."""
     from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     local = str(tmp_path / "slip")
     root = "file://" + local
@@ -1610,16 +1611,16 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(tmp_path, monkeypat
     assert "v1.json" not in os.listdir(log_dir)  # coalesced: name freed
 
     # pre-link guard blind-folded: floor reads fail ONCE each call site
-    real_floor = genlog._read_vacuum_floor
+    real_floor = VersionLog.read_floor
     calls = {"n": 0}
 
-    def flaky_floor(r):
+    def flaky_floor(self):
         calls["n"] += 1
         if calls["n"] == 1:  # the pre-link read only
             raise OSError("floor store hiccup")
-        return real_floor(r)
+        return real_floor(self)
 
-    monkeypatch.setattr(genlog, "_read_vacuum_floor", flaky_floor)
+    monkeypatch.setattr(VersionLog, "read_floor", flaky_floor)
     seg("gen-stale")
     with pytest.raises(FileExistsError, match="retired by vacuum"):
         genlog.commit_generation(
@@ -1629,7 +1630,7 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(tmp_path, monkeypat
     monkeypatch.undo()
     # the unwind removed the bogus record from the freed name
     assert "v1.json" not in os.listdir(log_dir)
-    assert genlog._pointer_versions(genlog.resolve_root(None, root)) == [4, 5]
+    assert genlog.pointer_log(genlog.resolve_root(None, root)).versions() == [4, 5]
 
 
 def test_vacuum_tombstones_before_floor_marker_on_atomic_store(tmp_path, monkeypatch):
@@ -1642,6 +1643,7 @@ def test_vacuum_tombstones_before_floor_marker_on_atomic_store(tmp_path, monkeyp
     import json as _json
 
     from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     local = str(tmp_path / "order")
     root = "file://" + local
@@ -1663,26 +1665,26 @@ def test_vacuum_tombstones_before_floor_marker_on_atomic_store(tmp_path, monkeyp
             None, root, f"gen-{i}", "rebuild", i - 1,
             segments=[f"gen-{i}"], geometry_id=genlog.new_geometry_id(),
         )
-    assert genlog._retire_is_atomic(genlog.resolve_root(None, root))
+    assert genlog.pointer_log(genlog.resolve_root(None, root)).retire_is_atomic()
 
     log_dir = os.path.join(local, "_gen_log")
-    real_mark = genlog._mark_vacuum_floor
+    real_mark = VersionLog.mark
     seen = {}
 
-    def asserting_mark(sp, r, floor):
+    def asserting_mark(self, floor):
         # every victim (0..floor) must ALREADY be a tombstone pair
         for v in range(floor + 1):
             with open(os.path.join(log_dir, f"v{v}.json")) as f:
                 assert _json.load(f).get("tombstone") is True
             assert os.path.exists(os.path.join(log_dir, f"v{v}.retired"))
         seen["floor"] = floor
-        return real_mark(sp, r, floor)
+        return real_mark(self, floor)
 
-    monkeypatch.setattr(genlog, "_mark_vacuum_floor", asserting_mark)
+    monkeypatch.setattr(VersionLog, "mark", asserting_mark)
     genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
     monkeypatch.undo()
     assert seen["floor"] == 2  # victims 0..2, marker last
-    assert genlog._read_vacuum_floor(genlog.resolve_root(None, root)) == 2
+    assert genlog.pointer_log(genlog.resolve_root(None, root)).read_floor() == 2
 
 
 def test_fresh_commit_inside_retire_to_marker_gap_is_success(tmp_path, monkeypatch):
@@ -1694,6 +1696,7 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(tmp_path, monkeypat
     tombstone content — success either way. Also proves the
     tombstoned-but-unmarked crash state is safe and self-repairs."""
     from etl_hiscox_spark.sources import commitio, genlog
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     local = str(tmp_path / "gapfresh")
     root = "file://" + local
@@ -1732,13 +1735,13 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(tmp_path, monkeypat
             # vacuum tombstones victims (incl. the fresh v3) then CRASHES
             # at the floor marker — the tombstoned-but-unmarked state
             monkeypatch.setattr(
-                genlog, "_mark_vacuum_floor",
-                lambda s, r, f: (_ for _ in ()).throw(OSError("marker down")),
+                VersionLog, "mark",
+                lambda self, f: (_ for _ in ()).throw(OSError("marker down")),
             )
             genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
-            monkeypatch.setattr(genlog, "_mark_vacuum_floor", real_mark)
+            monkeypatch.setattr(VersionLog, "mark", real_mark)
 
-    real_mark = genlog._mark_vacuum_floor
+    real_mark = VersionLog.mark
     monkeypatch.setattr(commitio, "commit_if_absent", commit_then_crashing_sweep)
     seg("gen-3")
     # the fresh commit must report SUCCESS, not unwind (its pointer was
@@ -1751,8 +1754,8 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(tmp_path, monkeypat
     rroot = genlog.resolve_root(None, root)
 
     # crash state: victims tombstoned, NO floor marker committed
-    assert not genlog._vacuum_floor_trimmed_ever(rroot)
-    assert genlog._pointer_versions(rroot) == [4, 5]
+    assert not genlog.pointer_log(rroot).marked_ever()
+    assert genlog.pointer_log(rroot).versions() == [4, 5]
     log_dir = os.path.join(local, "_gen_log")
     import json as _json
     with open(os.path.join(log_dir, "v3.json")) as f:
@@ -1767,7 +1770,7 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(tmp_path, monkeypat
             segments=[f"gen-{i}"], geometry_id=genlog.new_geometry_id(),
         )
     genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
-    assert genlog._read_vacuum_floor(rroot) == 5  # covers the residue
+    assert genlog.pointer_log(rroot).read_floor() == 5  # covers the residue
     seg("gen-8")
     genlog.commit_generation(
         None, root, "gen-8", "rebuild", 7,
@@ -1784,7 +1787,7 @@ def test_coalesce_skips_pair_on_transient_read_error(tmp_path, monkeypatch):
     transient OSError — the old fall-through resurfaced a possibly-live
     below-floor record as live until the next vacuum re-victimized it.
     Matching txnlog behavior: skip the pair, let the next run decide."""
-    from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources import genlog, listing
 
     local = str(tmp_path / "coal")
     root = "file://" + local
@@ -1828,13 +1831,13 @@ def test_coalesce_skips_pair_on_transient_read_error(tmp_path, monkeypatch):
         def __getattr__(self, name):
             return getattr(self._real, name)
 
-    real_fs = genlog._fs
+    real_fs = listing._resolve_fs
 
     def flaky_fs(path):
         fs, p = real_fs(path)
         return FlakyFS(fs), p
 
-    monkeypatch.setattr(genlog, "_fs", flaky_fs)
+    monkeypatch.setattr(listing, "_resolve_fs", flaky_fs)
     genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)
     monkeypatch.undo()
 
@@ -1844,7 +1847,7 @@ def test_coalesce_skips_pair_on_transient_read_error(tmp_path, monkeypatch):
     assert "v2.json" not in names and "v2.retired" not in names
     assert "v1.json" in names and "v1.retired" in names
     # v1 stays excluded from the live listing (sidecar intact)
-    assert genlog._pointer_versions(rroot) == [4, 5]
+    assert genlog.pointer_log(rroot).versions() == [4, 5]
     # next (unflaky) vacuum coalesces it
     seg("gen-6")
     genlog.append_segment(None, root, "gen-6")
@@ -1902,7 +1905,7 @@ def test_vacuum_finishes_half_retired_pairs(tmp_path, monkeypatch):
     with open(os.path.join(log_dir, "v0.json")) as f:
         assert not _json.load(f).get("tombstone")  # half-retired: live content
     assert os.path.exists(os.path.join(log_dir, "v0.retired"))
-    assert genlog._pointer_versions(rroot) == [2, 3]  # excluded regardless
+    assert genlog.pointer_log(rroot).versions() == [2, 3]  # excluded regardless
 
     # age-gated: a young record is NOT touched (600s gate)
     genlog.vacuum_generations(None, root, keep_last=2, min_age_seconds=600.0)

@@ -151,7 +151,7 @@ def test_pointer_protocol_multiactor_stress(tmp_path, seed):
 
     # -- invariants at quiescence ------------------------------------------
     head, _gen = genlog.current_generation(None, root)  # (6) resolves
-    surviving = genlog._pointer_versions(root)
+    surviving = genlog.pointer_log(root).versions()
     assert surviving == list(range(surviving[0], head + 1))  # (1) dense
     assert head == len(commits) - 1  # (2) every success has its version
     records = {v: genlog.read_pointer(root, v) for v in surviving}

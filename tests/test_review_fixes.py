@@ -502,7 +502,7 @@ def test_local_fs_path_normalizes_both_file_uri_forms():
 def test_meta_is_local_accepts_hadoop_single_slash_file_uri(spark):
     """ADVICE r11: 'file:/x' (no '://') must be recognized as driver-local
     even when it would otherwise fall through to the defaultFS check."""
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+    from etl_hiscox_spark.sources.listing import _meta_is_local
 
     assert _meta_is_local(spark, "file:/tmp/idx")
     assert _meta_is_local(spark, "file:///tmp/idx")
@@ -515,9 +515,9 @@ def test_distributed_dir_stats_rejects_relative_schemeless_paths(spark, monkeypa
     would qualify to a malformed URI ('hdfs://nnrel/x') — reject loudly."""
     import pytest
 
-    from etl_hiscox_spark.operators import dedup
+    from etl_hiscox_spark.sources import listing
     from etl_hiscox_spark.sources.listing import distributed_dir_stats
 
-    monkeypatch.setattr(dedup, "_meta_is_local", lambda spark, d: False)
+    monkeypatch.setattr(listing, "_meta_is_local", lambda spark, d: False)
     with pytest.raises(ValueError, match="relative path"):
         distributed_dir_stats(spark, [(0, "rel/dir")])

@@ -141,8 +141,8 @@ def test_hook_non_collision_errors_surface_as_oserror(s3env, s3hook):
 
 def test_replace_hook_errors_surface_as_oserror(s3env, s3hook):
     """Same contract for the replace hook (the ADVICE r15 finding site):
-    genlog._write_head_hint and TxnTable._write_checkpoint swallow only
-    OSError around replace_put, so the hook must never leak botocore
+    the core's VersionLog.write_hint swallows only OSError around
+    replace_put, so the hook must never leak botocore
     types."""
     from botocore.exceptions import ClientError
 
@@ -309,7 +309,7 @@ def test_genlog_vacuum_reclaims_on_s3(s3env, s3hook):
     )
     assert tomb.get("tombstone") is True
     assert "vac/_gen_log/v0.retired" in keys
-    assert genlog._pointer_versions(root) == [1]  # retired name delisted
+    assert genlog.pointer_log(root).versions() == [1]  # retired name delisted
     assert "vac/_gen_log/_floor_v0" in keys  # reuse-guard marker landed
     assert "vac/_gen_log/_last_checkpoint" in keys  # REAL hint write landed
     assert genlog.current_generation(None, root) == (1, "gen-b")
@@ -379,7 +379,7 @@ def test_txn_expire_on_s3_advances_checkpoint_watermark_and_expires(s3env, s3hoo
     assert t.expire_versions(keep_last=1) == 2
     assert t.latest_version() == 2
     assert t.last_head_resolution["mode"] == "checkpoint"  # hint landed
-    assert t._read_expire_watermark() == 1 and t._expired_ever()
+    assert t.log.read_floor() == 1 and t.log.marked_ever()
     keys = {
         o["Key"]
         for o in s3env["client"].list_objects_v2(

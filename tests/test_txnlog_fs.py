@@ -143,10 +143,9 @@ def test_file_uri_root_two_writer_occ(spark, tmp_path, forbid_os_manifest_io):
 
 
 def test_scheme_less_root_on_remote_default_fs_rejected(spark, tmp_path, monkeypatch):
-    from etl_hiscox_spark.operators import dedup
-    from etl_hiscox_spark.sources import txnlog
+    from etl_hiscox_spark.sources import listing, txnlog
 
-    monkeypatch.setattr(dedup, "_meta_is_local", lambda s, p: False)
+    monkeypatch.setattr(listing, "_meta_is_local", lambda s, p: False)
     with pytest.raises(ValueError, match="fully-qualified URI"):
         txnlog.TxnTable(spark, str(tmp_path / "tbl"))
 
@@ -164,7 +163,7 @@ def test_checkpoint_caps_head_resolution_to_tail(spark, tmp_path):
     files = t._read_manifest(0)["files"]
     for v in range(1, 501):  # synthetic commits: the LOG layer under test
         t._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t._read_checkpoint() == 500
+    assert t.log.read_hint() == 500
     assert t.latest_version() == 500
     assert t.last_head_resolution["mode"] == "checkpoint"
     # head == checkpoint -> exactly one probe (v501 missing); bounded by
@@ -190,9 +189,9 @@ def test_expire_advances_checkpoint_past_deleted_range(spark, tmp_path):
     files = t._read_manifest(0)["files"]
     for v in range(1, 13):
         t._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t._read_checkpoint() == 10
+    assert t.log.read_hint() == 10
     assert t.expire_versions(keep_last=1) == 12  # v0..v11 gone
-    assert t._read_checkpoint() == 12
+    assert t.log.read_hint() == 12
     assert t.latest_version() == 12
     assert t.last_head_resolution["mode"] == "checkpoint"
     with pytest.raises(FileNotFoundError):
@@ -202,19 +201,20 @@ def test_expire_advances_checkpoint_past_deleted_range(spark, tmp_path):
     t2 = TxnTable(spark, str(tmp_path / "tbl2"), checkpoint_interval=1000)
     t2.write(_events(spark, 0, 5))
     t2.write(_events(spark, 5, 8))
-    assert t2._read_checkpoint() is None
+    assert t2.log.read_hint() is None
     t2.expire_versions(keep_last=1)
-    assert t2._read_checkpoint() == 1
+    assert t2.log.read_hint() == 1
     assert t2.latest_version() == 1
 
 
 def test_torn_checkpoint_falls_back_to_list(spark, tmp_path):
-    from etl_hiscox_spark.sources.txnlog import TxnTable, _CKPT_NAME
+    from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import _CKPT_NAME
 
     t = TxnTable(spark, str(tmp_path / "tbl"), checkpoint_interval=1)
     t.write(_events(spark, 0, 5))
     t.write(_events(spark, 5, 8))
-    ckpt = os.path.join(t.log_dir, _CKPT_NAME)
+    ckpt = os.path.join(t.log.dir, _CKPT_NAME)
     assert json.load(open(ckpt))["version"] == 1
     with open(ckpt, "w") as f:
         f.write('{"vers')  # torn write survivor
@@ -225,12 +225,12 @@ def test_torn_checkpoint_falls_back_to_list(spark, tmp_path):
 def test_fs_replace_handles_rename_refusing_store(spark, tmp_path):
     """r13 review: checkpoint refresh and erase repointing REPLACE an
     existing file; HDFS rename refuses an existing destination, so
-    _fs_replace must fall back to delete+move there — before the fix
+    replace_put must fall back to delete+move there — before the fix
     every checkpoint refresh after the first silently failed on HDFS
     and GDPR erase crashed at its first manifest repoint."""
     from pyarrow import fs as pafs
 
-    from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources import commitio
 
     class RefusingFs:  # HDFS rename semantics over the local fs
         def __init__(self):
@@ -250,11 +250,10 @@ def test_fs_replace_handles_rename_refusing_store(spark, tmp_path):
                 raise OSError(f"rename destination exists: {dst}")
             self._fs.move(src, dst)
 
-    t = TxnTable(spark, "file://" + str(tmp_path / "tbl"))
     fake = RefusingFs()
     final = str(tmp_path / "f.json")
-    t._fs_replace(fake, str(tmp_path / ".f.1.tmp"), final, b"one")
-    t._fs_replace(fake, str(tmp_path / ".f.2.tmp"), final, b"two")  # replace
+    commitio.replace_put(fake, final, b"one")
+    commitio.replace_put(fake, final, b"two")  # replace
     assert open(final, "rb").read() == b"two"
     assert sorted(os.listdir(tmp_path)) == ["f.json"]  # no tmp debris
 
@@ -272,12 +271,12 @@ def test_expire_refuses_when_checkpoint_cannot_advance(spark, tmp_path, monkeypa
     files = t._read_manifest(0)["files"]
     for v in range(1, 13):
         t._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t._read_checkpoint() == 10
+    assert t.log.read_hint() == 10
 
     # advance fails -> hint dropped -> expiry proceeds, head via LIST
-    monkeypatch.setattr(t, "_write_checkpoint", lambda v: None)
+    monkeypatch.setattr(t.log, "write_hint", lambda v: None)
     assert t.expire_versions(keep_last=1) == 12
-    assert t._read_checkpoint() is None
+    assert t.log.read_hint() is None
     assert t.latest_version() == 12
     assert t.last_head_resolution["mode"] == "list"
 
@@ -286,9 +285,9 @@ def test_expire_refuses_when_checkpoint_cannot_advance(spark, tmp_path, monkeypa
     t2.write(_events(spark, 0, 5))
     for v in range(1, 7):
         t2._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t2._read_checkpoint() == 5
-    monkeypatch.setattr(t2, "_write_checkpoint", lambda v: None)
-    monkeypatch.setattr(t2, "_drop_checkpoint", lambda: None)
+    assert t2.log.read_hint() == 5
+    monkeypatch.setattr(t2.log, "write_hint", lambda v: None)
+    monkeypatch.setattr(t2.log, "drop_hint", lambda: None)
     with pytest.raises(RuntimeError, match="refusing to delete"):
         t2.expire_versions(keep_last=1)
     assert t2._versions() == list(range(7))  # nothing expired
@@ -411,7 +410,7 @@ def test_vacuum_skips_manifest_proven_expired_by_watermark(
     )
     removed = t.vacuum(min_age_seconds=0.0)
     assert removed >= 1  # v0/v1-only files reclaimed, no refusal
-    assert t._read_expire_watermark() == 1
+    assert t.log.read_floor() == 1
     assert t.read().count() == 10  # head intact
 
 
@@ -471,7 +470,7 @@ def test_readers_skip_watermark_covered_versions(spark, tmp_path, monkeypatch):
     t.write(_events(spark, 10, 20), mode="append")
     t.write(_events(spark, 20, 30), mode="append")
     ts1 = t._read_manifest(1)["committed_at"]
-    t._mark_expire_watermark(1)
+    t.log.mark(1)
     man = os.path.join(root, "_txn_log", "v1.json")
     _hostile_manifest_read(monkeypatch, 1, lambda: os.remove(man))
     assert t.version_as_of(ts1 + 0.0001) == 0  # v1 expired -> newest survivor
@@ -488,22 +487,23 @@ def test_expire_watermark_ordering_atomic_store(spark, tmp_path, monkeypatch):
     (ManifestRetired) without the watermark, and a later expire whose
     watermark covers the version coalesces the pair."""
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "wm_mark")
     t = TxnTable(spark, root)
     for lo in (0, 10, 20):
         t.write(_events(spark, lo, lo + 10), mode="append")
-    assert t._read_expire_watermark() == -1 and not t._expired_ever()
+    assert t.log.read_floor() == -1 and not t.log.marked_ever()
     assert t.expire_versions(keep_last=2) == 1
-    assert t._read_expire_watermark() == 0 and t._expired_ever()
+    assert t.log.read_floor() == 0 and t.log.marked_ever()
     # markers are create-if-absent: a stale smaller mark never regresses
-    t._mark_expire_watermark(0)
-    assert t._read_expire_watermark() == 0
+    t.log.mark(0)
+    assert t.log.read_floor() == 0
 
     t2 = TxnTable(spark, root)
     monkeypatch.setattr(
-        TxnTable,
-        "_mark_expire_watermark",
+        VersionLog,
+        "mark",
         lambda self, v: (_ for _ in ()).throw(OSError("marker store down")),
     )
     with pytest.raises(RuntimeError, match="tombstoned names keep refusing"):
@@ -514,7 +514,7 @@ def test_expire_watermark_ordering_atomic_store(spark, tmp_path, monkeypatch):
     assert t2._versions() == [2]
     with pytest.raises(FileNotFoundError, match="expired by retention"):
         t2._read_manifest(1)
-    assert t2._read_expire_watermark() == 0  # marker never landed
+    assert t2.log.read_floor() == 0  # marker never landed
     # history and head are consistent in the tombstoned-but-unmarked state
     assert [m["version"] for m in t2.history()] == [2]
     assert t2.latest_version() == 2
@@ -522,7 +522,7 @@ def test_expire_watermark_ordering_atomic_store(spark, tmp_path, monkeypatch):
     # and the NEXT one coalesces the orphaned pair
     t2.write(_events(spark, 30, 40), mode="append")
     assert t2.expire_versions(keep_last=1) == 1  # victims v2 -> watermark 2
-    assert t2._read_expire_watermark() == 2
+    assert t2.log.read_floor() == 2
     t2.write(_events(spark, 40, 50), mode="append")
     assert t2.expire_versions(keep_last=1) == 1  # floor_before=2 covers v1
     log_names = set(os.listdir(os.path.join(root, "_txn_log")))
@@ -538,17 +538,17 @@ def test_expire_marks_watermark_first_on_rename_refusing_store(
     the pre-link watermark refusal is what keeps stragglers out of
     replace_put's absence window there, so if the marker cannot land,
     expire refuses and retires NOTHING."""
-    from etl_hiscox_spark.sources import txnlog
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "wm_mark_hdfs")
     t = TxnTable(spark, root)
     for lo in (0, 10, 20):
         t.write(_events(spark, lo, lo + 10), mode="append")
-    monkeypatch.setattr(TxnTable, "_retire_is_atomic", lambda self: False)
+    monkeypatch.setattr(VersionLog, "retire_is_atomic", lambda self: False)
     monkeypatch.setattr(
-        TxnTable,
-        "_mark_expire_watermark",
+        VersionLog,
+        "mark",
         lambda self, v: (_ for _ in ()).throw(OSError("marker store down")),
     )
     with pytest.raises(RuntimeError, match="refusing to retire"):
@@ -557,7 +557,7 @@ def test_expire_marks_watermark_first_on_rename_refusing_store(
     assert t._read_manifest(0)["version"] == 0  # content untouched
     monkeypatch.undo()
     assert t.expire_versions(keep_last=1) == 2  # re-run completes
-    assert t._read_expire_watermark() == 1
+    assert t.log.read_floor() == 1
 
 
 def test_commit_refuses_to_reuse_an_expired_version_number(spark, tmp_path):
@@ -637,7 +637,7 @@ def test_fresh_commit_swept_by_concurrent_retention_is_not_a_conflict(
             other.write(_events(spark, 50, 55), mode="append")   # v5
             other.write(_events(spark, 60, 65), mode="append")   # v6
             assert other.expire_versions(keep_last=2) == 5       # sweeps v4
-            assert other._read_expire_watermark() == 4
+            assert other.log.read_floor() == 4
 
     monkeypatch.setattr(commitio, "commit_if_absent", commit_then_sweep)
     # the r15 classifier would raise FileExistsError here and the OCC
@@ -663,8 +663,8 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(
     bytes, unwinds, and raises the standard conflict."""
     import time as _time
 
-    from etl_hiscox_spark.sources import txnlog
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "slip")
     t = TxnTable(spark, root)
@@ -677,7 +677,7 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(
     assert t.expire_versions(keep_last=2) == 1
     assert "v1.json" not in os.listdir(os.path.join(root, "_txn_log"))
 
-    real_wm = txnlog.TxnTable._read_expire_watermark
+    real_wm = VersionLog.read_floor
     calls = {"n": 0}
 
     def flaky_wm(self):
@@ -686,7 +686,7 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(
             raise OSError("watermark store hiccup")
         return real_wm(self)
 
-    monkeypatch.setattr(txnlog.TxnTable, "_read_expire_watermark", flaky_wm)
+    monkeypatch.setattr(VersionLog, "read_floor", flaky_wm)
     stale = {"version": 1, "mode": "append", "files": ["data/zz/p.parquet"],
              "schema": "{}", "committed_at": _time.time(), "n_added": 1}
     with pytest.raises(FileExistsError, match="already retired"):
@@ -708,6 +708,7 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(
     content — success either way, rows exactly once."""
     from etl_hiscox_spark.sources import commitio
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "gapsweep")
     t = TxnTable(spark, root)
@@ -725,15 +726,15 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(
             other.write(_events(spark, 50, 55), mode="append")   # v5
             other.write(_events(spark, 60, 65), mode="append")   # v6
             monkeypatch.setattr(
-                TxnTable, "_mark_expire_watermark",
+                VersionLog, "mark",
                 lambda self, v: (_ for _ in ()).throw(OSError("marker down")),
             )
             with pytest.raises(RuntimeError, match="tombstoned names"):
                 other.expire_versions(keep_last=2)  # sweeps v4, marker dies
-            monkeypatch.setattr(TxnTable, "_mark_expire_watermark", real_mark)
-            assert not other._expired_ever()  # crash state: no marker
+            monkeypatch.setattr(VersionLog, "mark", real_mark)
+            assert not other.log.marked_ever()  # crash state: no marker
 
-    real_mark = TxnTable._mark_expire_watermark
+    real_mark = VersionLog.mark
     monkeypatch.setattr(commitio, "commit_if_absent", commit_then_crashing_sweep)
     assert t.write(_events(spark, 40, 45), mode="append") == 4
     monkeypatch.undo()
@@ -757,6 +758,7 @@ def test_expire_finishes_half_retired_manifests(spark, tmp_path, monkeypatch):
     _versions yet still serving the retired manifest on a direct read,
     skipped by coalescing forever. The repair pass in expire_versions
     re-runs the replace, age-gated by the manifest's committed_at."""
+    from etl_hiscox_spark.sources import commitio
     from etl_hiscox_spark.sources.txnlog import TxnTable
 
     root = str(tmp_path / "halfman")
@@ -764,15 +766,15 @@ def test_expire_finishes_half_retired_manifests(spark, tmp_path, monkeypatch):
     for lo in (0, 10, 20, 30):
         t.write(_events(spark, lo, lo + 10), mode="append")
 
-    # inject: v0's content replace (os.replace on a local root) fails
-    real_replace = os.replace
+    # inject: v0's content replace fails
+    real_replace = commitio.replace_put
 
-    def flaky_replace(src, dst, *a, **kw):
-        if str(dst).endswith("v0.json"):
+    def flaky_replace(fs, path, data):
+        if path.endswith("v0.json"):
             raise OSError("content replace lost")
-        return real_replace(src, dst, *a, **kw)
+        return real_replace(fs, path, data)
 
-    monkeypatch.setattr(os, "replace", flaky_replace)
+    monkeypatch.setattr(commitio, "replace_put", flaky_replace)
     assert t.expire_versions(keep_last=2) == 2  # v0 half-retired, v1 full
     monkeypatch.undo()
 
@@ -823,7 +825,7 @@ def test_erase_recheck_repoints_append_committed_after_scan(
         if not injected:
             injected["v"] = 1
             old = json.loads(
-                open(os.path.join(racer.log_dir, "v0.json")).read()
+                open(os.path.join(racer.log.dir, "v0.json")).read()
             )
             # the racing append read v0 BEFORE the repoint: stale list
             racer._commit(
@@ -886,3 +888,58 @@ def test_append_syncs_inherited_files_after_racing_erase(
     assert got.count() == 18 + 10
     ids = {r["event_id"] for r in got.select("event_id").collect()}
     assert 3 not in ids and 7 not in ids
+
+
+def test_lost_log_replace_leaves_no_tmp_on_scheme_less_root(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint, tombstone or erase-repoint replace that fails on a
+    scheme-less local root leaves no staged ``*.tmp`` in ``_txn_log`` and
+    keeps the record it failed to replace. The failure is injected both
+    at ``os.replace`` and at the resolved filesystem's ``move`` (a local
+    rename that errors: an atomic-replace store class, so no
+    delete-and-retry fallback may touch the destination)."""
+    from etl_hiscox_spark.sources import listing
+    from etl_hiscox_spark.sources.txnlog import TxnTable
+
+    root = str(tmp_path / "tbl")
+    t = TxnTable(spark, root)
+    for lo in (0, 10, 20):
+        t.write(_events(spark, lo, lo + 10), mode="append")
+    log_dir = os.path.join(root, "_txn_log")
+
+    real_replace = os.replace
+
+    def lost_replace(src, dst, *a, **kw):
+        if "_txn_log" in str(dst):
+            raise OSError("replace lost")
+        return real_replace(src, dst, *a, **kw)
+
+    class MoveLosingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def move(self, src, dst):
+            raise OSError("replace lost")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    MoveLosingFs.__name__ = "LocalFileSystem"
+    real_resolve = listing._resolve_fs
+
+    def losing_resolve(uri):
+        filesystem, path = real_resolve(uri)
+        return MoveLosingFs(filesystem), path
+
+    monkeypatch.setattr(os, "replace", lost_replace)
+    monkeypatch.setattr(listing, "_resolve_fs", losing_resolve)
+    t = TxnTable(spark, root)
+    t.expire_versions(keep_last=1)  # checkpoint advance + tombstones lost
+    with pytest.raises(OSError, match="replace lost"):
+        t._replace_manifest(0, dict(t._read_manifest(0), erased_at=0.0))
+    monkeypatch.undo()
+
+    assert [n for n in os.listdir(log_dir) if n.endswith(".tmp")] == []
+    assert "erased_at" not in TxnTable(spark, root)._read_manifest(0)
+    assert TxnTable(spark, root).latest_version() == 2
