@@ -1032,6 +1032,33 @@ def keep_best_survivors(
 # ---------------------------------------------------------------------------
 
 
+def _stage_minhash_index(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    target: str,
+    num_hashes: int,
+    num_bands: int,
+    shingle_k: int,
+) -> None:
+    """Write one complete LSH segment at a fresh ``target``: the banded
+    (doc, band, bucket) table under ``buckets/``, then the banding meta —
+    the segment's commit record — LAST, so a stage cut short has no meta
+    and every reader rejects it. The one staging write behind build,
+    append and rebuild."""
+    if num_hashes % num_bands != 0:
+        # same guard as minhash_candidates: trailing signature hashes
+        # would be computed but never banded — a silent recall loss the
+        # meta would then propagate to every probe
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by num_bands "
+            f"({num_bands}) — trailing hashes would be computed but never banded"
+        )
+    sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_k)
+    _LSH.write_data(_banded_buckets(sig, num_hashes, num_bands), _LSH.data(target))
+    _write_index_meta(df.sparkSession, target, num_hashes, num_bands, shingle_k)
+
+
 def write_minhash_index(
     df: DataFrame,
     text_col: str,
@@ -1041,132 +1068,75 @@ def write_minhash_index(
     num_bands: int = 6,
     shingle_k: int = 3,
     mode: str = "overwrite",
-    generational: bool = True,
     txn: tuple[str, int] | None = None,
 ) -> None:
     """Persist the banded LSH bucket table as the near-dedup index.
 
-    Layout: ``path/buckets`` = (doc, band, bucket) parquet; ``path/meta``
+    Layout: generation-pointer segments (:mod:`operators.segindex`). Each
+    segment holds ``buckets/`` = (doc, band, bucket) parquet and ``meta``
     = a 1-row parquet pinning (num_hashes, num_bands, shingle_k). Probes
     read their banding parameters FROM the meta — a probe banded
     differently from its index silently misses every duplicate, so the
-    parameters travel with the data, never with the caller.
-    ``mode="append"`` adds a new batch's buckets to an existing index
-    (parameters must already match — validated against meta).
+    parameters travel with the data, never with the caller. A build
+    stages one segment and an atomic ``_gen_log`` pointer commit makes it
+    live; compact/erase/rebuild commit new segments the same way, so the
+    full maintenance lifecycle runs on any filesystem.
 
-    ``generational=True`` — the DEFAULT since r13 (VERDICT r12 item 3:
-    new indexes must be object-store-safe without the user knowing to
-    ask) — builds the GENERATION-POINTER layout (r12,
-    :mod:`sources/genlog`): the flat index above is staged as a complete
-    generation under ``<path>/gen-*/`` and an atomic ``_gen_log``
-    pointer commit makes it live; compact/erase/rebuild then commit new
-    generations with pointer flips instead of directory renames, so the
-    FULL maintenance lifecycle runs on any filesystem.
-    ``generational=False`` opts into the legacy FLAT layout (rename-
-    committed maintenance, driver-local only) — kept readable and
-    maintainable forever; :func:`migrate_flat_index_to_generational`
-    upgrades it in place. A root that is already generational stays
-    generational regardless of the flag.
+    ``mode="append"`` stages the batch's buckets as a self-contained DELTA
+    segment (its own buckets + meta) and commits it through
+    :func:`segindex.append`; the parameters must match the index's meta.
+    A lost pointer race re-commits the same delta; a winner that re-banded
+    the index fails the parameter check loudly.
 
-    On a generational root ``mode="append"`` stages the batch's buckets
-    as a self-contained DELTA segment (its own buckets + meta) and commits
-    it through :func:`segindex.append`. A lost pointer race re-commits the
-    same delta; a winner that re-banded the index fails the parameter
-    check loudly. Flat roots keep the plain in-place parquet append.
-
-    ``txn=(app_id, batch_id)`` makes a generational append EXACTLY-ONCE
-    under streaming redelivery (:func:`genlog.append_segment`'s
-    watermark ledger — a foreachBatch replay at or below its app's
-    committed watermark is a no-op): the streaming ingest path passes
-    Structured Streaming's batch id here. REJECTED loudly on flat roots
-    (no commit record to carry a ledger — silently degrading to
-    at-least-once is the failure mode the tag exists to prevent).
+    ``txn=(app_id, batch_id)`` makes an append EXACTLY-ONCE under
+    streaming redelivery (:func:`genlog.append_segment`'s watermark
+    ledger — a foreachBatch replay at or below its app's committed
+    watermark is a no-op): the streaming ingest path passes Structured
+    Streaming's batch id here.
 
     At 100 TB: the index is |corpus| × num_bands fixed-width rows; the
     probe join shuffles on (band, bucket) 16-byte keys. Bucketing the
     parquet on ``bucket`` (``save_as_catalog_table`` + bucketBy) upgrades
     the probe to a shuffle-free sort-merge — layout choice, same contract.
     """
-    from etl_hiscox_spark.sources import genlog
-
     spark = df.sparkSession
-    if num_hashes % num_bands != 0:
-        # same guard as minhash_candidates: trailing signature hashes
-        # would be computed but never banded — a silent recall loss the
-        # meta would then propagate to every probe
+    if txn is not None and mode != "append":
         raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by num_bands "
-            f"({num_bands}) — trailing hashes would be computed but never banded"
+            f"txn=(app_id, batch_id) tags an append — got mode={mode!r}; the "
+            "watermark ledger records appended batches only"
         )
-    gen_layout = genlog.is_generational(spark, path)
-    if txn is not None and not (mode == "append" and gen_layout):
-        # fail-loud convention: silently dropping the exactly-once
-        # contract on a flat root (no commit record to carry the ledger)
-        # would let a crash-replayed micro-batch land twice with no signal
-        raise ValueError(
-            "txn=(app_id, batch_id) requires mode='append' on a GENERATIONAL "
-            f"index root (got mode={mode!r}, generational={gen_layout}) — the "
-            "watermark ledger lives in the pointer records; migrate the flat "
-            "index with migrate_flat_index_to_generational first"
-        )
-    if gen_layout or (generational and mode != "append"):
-        requested = (num_hashes, num_bands, shingle_k)
+    requested = (num_hashes, num_bands, shingle_k)
 
-        def _stage(_head, target: str) -> None:
-            write_minhash_index(
-                df, text_col, id_col, target, num_hashes=num_hashes,
-                num_bands=num_bands, shingle_k=shingle_k, generational=False,
-            )
+    def _stage(_head, target: str) -> None:
+        _stage_minhash_index(df, text_col, id_col, target, *requested)
 
-        def _validate_banding(_staged, current) -> None:
-            # checked against the head before the staging write, then again
-            # inside each commit attempt (a rebuild landing mid-append
-            # changes the banding out from under the staged delta)
-            meta = _read_index_meta(spark, current.paths[0], resolved=True)
-            if meta != requested:
-                raise ValueError(
-                    "minhash index parameter mismatch: index has "
-                    f"{meta}, append asked for {requested}"
-                )
-
-        if mode == "append":
-            segindex.append(spark, path, _stage, _validate_banding, txn)
-        else:
-            segindex.build(spark, path, _stage)
+    if mode != "append":
+        segindex.build(spark, path, _stage)
         return
-    if mode == "append":
-        meta = _read_index_meta(spark, path)
-        if meta != (num_hashes, num_bands, shingle_k):
+
+    def _validate_banding(_staged, current) -> None:
+        # checked against the head before the staging write, then again
+        # inside each commit attempt (a rebuild landing mid-append
+        # changes the banding out from under the staged delta)
+        meta = _read_index_meta(spark, current.paths[0], resolved=True)
+        if meta != requested:
             raise ValueError(
                 "minhash index parameter mismatch: index has "
-                f"{meta}, append asked for {(num_hashes, num_bands, shingle_k)}"
+                f"{meta}, append asked for {requested}"
             )
-    else:
-        # Commit protocol (ADVICE r8): meta is the index's commit record.
-        # Invalidate it BEFORE overwriting buckets and rewrite it only
-        # AFTER the bucket write succeeds — a failure in between leaves an
-        # index with buckets but no meta, and every probe then fails
-        # loudly in _read_index_meta instead of banding against a STALE
-        # meta and silently missing every duplicate (the drift the meta
-        # exists to prevent). Append mode needs no invalidation: the
-        # parameters were just validated equal, so a partial bucket append
-        # can lose rows but can never band a probe differently.
-        _invalidate_index_meta(spark, path)
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_k)
-    _banded_buckets(sig, num_hashes, num_bands).write.mode(mode).parquet(
-        os.path.join(path, "buckets")
-    )
-    _write_index_meta(spark, path, num_hashes, num_bands, shingle_k)
+
+    segindex.append(spark, path, _stage, _validate_banding, txn)
 
 
 def migrate_flat_index_to_generational(spark, path: str) -> str:
-    """One-time in-place upgrade of a FLAT index root (either layout) to
-    the generation-pointer layout: the flat tree's entries move into a
-    fresh ``gen-*`` directory (os.rename — driver-local only, like every
-    flat-layout maintenance op; remote flat indexes don't exist because
-    flat maintenance already refuses remote paths) and a v0 pointer
-    commits it. Every subsequent probe resolves the pointer and every
-    maintenance op commits by pointer flip. Returns the generation name.
+    """One-time in-place upgrade of a FLAT index root (either index) to the
+    generation-pointer layout. A flat tree is what older releases wrote:
+    one index tree straight at the root, with no pointer log. Its entries
+    move into a fresh ``gen-*`` directory (os.rename — driver-local only;
+    flat trees were only ever written locally) and a v0 pointer commits
+    it. Every subsequent probe resolves the pointer
+    and every maintenance op commits by pointer flip. Returns the
+    generation name.
 
     RE-RUNNABLE across every crash window (second review + ADVICE r12):
     a crash mid-rename or before the pointer commit leaves a root with
@@ -1180,8 +1150,15 @@ def migrate_flat_index_to_generational(spark, path: str) -> str:
     with a committed pointer is. The pointer commit is last, so the root
     only serves probes once the generation is whole."""
     from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.sources.writers import _local_fs_path, refresh_swapped_path
 
-    local = _require_local_index_path(spark, path, "migrate_flat_index_to_generational")
+    if not _meta_is_local(spark, path):
+        raise ValueError(
+            "migrate_flat_index_to_generational: driver-local index paths "
+            f"only — moving a flat tree into a generation uses os.rename, "
+            f"which cannot reach {path!r}"
+        )
+    local = _local_fs_path(path)
     root = genlog.resolve_root(spark, path)
     if (
         genlog.is_generational(spark, root)
@@ -1210,83 +1187,25 @@ def migrate_flat_index_to_generational(spark, path: str) -> str:
     # the pointer makes it live
     _validate_live_index(spark, path.rstrip("/") + "/" + gen)
     segindex.adopt(spark, root, gen)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
     refresh_swapped_path(spark, path)
     return gen
 
 
-def _require_local_index_path(spark, path: str, op: str) -> str:
-    """Maintenance ops (compact/erase/rebuild) swap files with
-    os.rename/shutil — driver-local filesystems only. An index on s3a://
-    or a non-file defaultFS would fail with an opaque OSError AFTER the
-    Spark tmp write already ran, leaking the tmp dir (ADVICE r10); fail
-    loudly up front instead, and hand back the ``file://``-stripped local
-    path for the os-level steps (Spark-facing calls keep the original)."""
-    if not _meta_is_local(spark, path):
-        raise ValueError(
-            f"{op}: driver-local index paths only — the FLAT index layout "
-            f"commits maintenance with os.rename, which cannot reach "
-            f"{path!r}. On a cluster filesystem build the index with "
-            "generational=True (sources/genlog): its maintenance commits "
-            "by atomic pointer flip and runs anywhere."
-        )
-    from etl_hiscox_spark.sources.writers import _local_fs_path
-
-    return _local_fs_path(path)
-
-
-def begin_staged_rebuild(spark, path: str, op: str) -> str:
-    """First half of the staged-rebuild commit protocol shared by
-    :func:`rebuild_minhash_index` and ``similarity.rebuild_ivf_index``
-    (ONE implementation — the repo's swap_and_refresh rule: hand-rolled
-    copies of a multi-step swap drift apart on exactly the step a crash
-    needs). Validates there are no ``__rebuild``/``__old`` leftovers from
-    an interrupted run and returns the STAGING uri (``<path>__rebuild``)
-    for the caller to write the complete new index into; commit with
-    :func:`commit_staged_rebuild`."""
-    local = _require_local_index_path(spark, path, op)
-    for leftover in (local.rstrip("/") + "__rebuild", local.rstrip("/") + "__old"):
-        if os.path.exists(leftover):
-            raise ValueError(
-                f"{op}: leftover {leftover!r} from an interrupted rebuild "
-                "— run recover_staged_rebuild(spark, path) first (it "
-                "completes or rolls back the interrupted swap and "
-                "validates the live index)."
-            )
-    return path.rstrip("/") + "__rebuild"
-
-
-def commit_staged_rebuild(spark, path: str, op: str) -> None:
-    """Second half: two atomic renames (live → ``__old``, staged → live),
-    remove ``__old`` last, refresh Spark's path caches. Every crash
-    window leaves either the untouched live index or two complete
-    indexes with the live name absent — never a half-valid index under
-    the live name."""
-    import shutil
-
-    local = _require_local_index_path(spark, path, op)
-    lold = local.rstrip("/") + "__old"
-    os.rename(local, lold)
-    os.rename(local.rstrip("/") + "__rebuild", local)
-    shutil.rmtree(lold)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
-    refresh_swapped_path(spark, path)
-
-
 def _validate_live_index(spark, path: str) -> str:
-    """Loud validity check of the index at ``path``, layout-detected:
+    """Loud validity check of the index tree at the driver-local ``path``
+    (a flat root, or a generation directory), layout-detected:
     ``_centroids`` → IVF (centroid commit record must load), ``meta`` →
     minhash (banding meta must load). Returns the layout name."""
-    local = _require_local_index_path(spark, path, "_validate_live_index")
+    from etl_hiscox_spark.sources.writers import _local_fs_path
+
+    local = _local_fs_path(path)
     if os.path.isdir(os.path.join(local, "_centroids")):
         from etl_hiscox_spark.operators.similarity import load_ivf_centroids
 
-        load_ivf_centroids(spark, path)
+        load_ivf_centroids(spark, path, resolved=True)
         return "ivf"
     if os.path.isdir(os.path.join(local, "meta")):
-        _read_index_meta(spark, path)
+        _read_index_meta(spark, path, resolved=True)
         return "minhash"
     raise ValueError(
         f"{path!r} is not a committed index: neither an IVF _centroids "
@@ -1294,158 +1213,31 @@ def _validate_live_index(spark, path: str) -> str:
     )
 
 
-def recover_staged_rebuild(spark, path: str) -> str:
-    """Complete or roll back an INTERRUPTED staged rebuild (VERDICT r11
-    item 4 — the recovery that was previously a docstring instruction to
-    a human). Inspects the ``<path>`` / ``<path>__rebuild`` /
-    ``<path>__old`` triple, applies the one action each crash window
-    admits, validates the resulting live index (layout-detected: IVF
-    centroids or minhash meta must load), refreshes Spark's path caches,
-    and returns the action taken:
-
-    - live only → ``"none"`` (nothing was interrupted).
-    - live + ``__rebuild`` → crash during/after staging, before the
-      commit's first rename: the live index was never touched, so ROLL
-      BACK — remove the stage (``"rolled_back_stage"``). The staged tree
-      may be incomplete (its commit record is written last), so
-      completing from it would be guessing; re-run the rebuild instead.
-    - ``__old`` + ``__rebuild``, live absent → crash between the two
-      renames: the stage is COMPLETE by protocol (staging finished
-      before the first rename ran), so COMPLETE the swap — rename the
-      stage to live, drop ``__old`` (``"completed_swap"``).
-    - live + ``__old`` → crash after the second rename, before ``__old``
-      cleanup: the swap landed; drop ``__old`` (``"removed_old"``).
-    - ``__old`` only, live absent → the stage vanished outside the
-      protocol; restore the pre-rebuild index — rename ``__old`` back to
-      live (``"restored_old"``).
-    - anything else (no index at all; live + BOTH leftovers) is
-      unreachable under the protocol → raise, touch nothing.
-
-    Idempotent: every terminal state maps to ``"none"`` on a re-run, so
-    crash-during-recovery is recovered by recovering again.
-    """
-    import shutil
-
-    local = _require_local_index_path(spark, path, "recover_staged_rebuild")
-    live, stage, old = (
-        local.rstrip("/"),
-        local.rstrip("/") + "__rebuild",
-        local.rstrip("/") + "__old",
-    )
-    has = {p: os.path.exists(p) for p in (live, stage, old)}
-    if has[live] and has[stage] and has[old]:
-        raise ValueError(
-            f"recover_staged_rebuild: {path!r} has live, __rebuild AND "
-            "__old — unreachable under the staged-rebuild protocol; "
-            "refusing to guess (inspect by hand)"
-        )
-    if has[live] and not has[stage] and not has[old]:
-        action = "none"
-    elif has[live] and has[stage]:
-        shutil.rmtree(stage)
-        action = "rolled_back_stage"
-    elif has[live] and has[old]:
-        shutil.rmtree(old)
-        action = "removed_old"
-    elif has[stage] and has[old]:
-        os.rename(stage, live)
-        shutil.rmtree(old)
-        action = "completed_swap"
-    elif has[old]:
-        os.rename(old, live)
-        action = "restored_old"
-    elif has[stage]:
-        # stage only, no live, no __old: begin_staged_rebuild requires a
-        # live index and the commit moves it to __old before anything
-        # else — this state cannot arise from the protocol
-        raise ValueError(
-            f"recover_staged_rebuild: {path!r} has ONLY a __rebuild stage "
-            "— unreachable under the staged-rebuild protocol (the live "
-            "index moves to __old before the stage is promoted); refusing "
-            "to promote an unverifiable stage"
-        )
-    else:
-        raise ValueError(
-            f"recover_staged_rebuild: nothing to recover at {path!r} — no "
-            "live index, no __rebuild, no __old (was the index ever built?)"
-        )
-    _validate_live_index(spark, path)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
-    refresh_swapped_path(spark, path)
-    return action
-
-
-def _rename_meta_aside(spark, path: str, aside_name: str) -> None:
-    """Recoverable invalidation for MAINTENANCE ops whose meta is
-    unchanged: rename ``<path>/meta`` to ``<path>/<aside_name>`` instead
-    of deleting it (ADVICE r10 — a crash between a delete-style
-    invalidation and the final meta rewrite would permanently lose the
-    banding parameters even though the bucket data is intact). Mirrors
-    the IVF erase ``_centroids__erase`` protocol: after a crash the
-    parameters are still on disk under the aside name, and a successful
-    op restores the exact original bytes. Overwrite-style builds (whose
-    meta legitimately changes) keep delete-style invalidation."""
-    local = _require_local_index_path(spark, path, "_rename_meta_aside")
-    aside = os.path.join(local, aside_name)
-    if os.path.exists(aside):
-        raise ValueError(
-            f"minhash index at {path!r} has a leftover {aside_name!r} from "
-            "an interrupted maintenance run — recover first (rename it "
-            "back to 'meta' if the bucket table is intact, or rebuild)."
-        )
-    os.rename(os.path.join(local, "meta"), aside)
-
-
-def _restore_meta_from_aside(spark, path: str, aside_name: str) -> None:
-    local = _require_local_index_path(spark, path, "_restore_meta_from_aside")
-    os.rename(os.path.join(local, aside_name), os.path.join(local, "meta"))
-
-
 def compact_minhash_index(spark, path: str, target_file_mb: int = 256) -> int:
-    """Rewrite a minhash index's bucket table into ~target-sized files.
+    """Merge every live segment of a minhash index into ONE segment of
+    ~target-sized bucket files (:func:`segindex.compact`).
 
-    ``write_minhash_index(mode="append")`` adds one file set per batch —
-    at daily-ingest cadence the bucket table fragments into thousands of
-    small files and every probe's (band, bucket) join pays an open/LIST
-    tax (VERDICT r9). Compaction rewrites ``<path>/buckets`` range-
+    ``write_minhash_index(mode="append")`` adds one delta segment per
+    batch — at daily-ingest cadence the bucket table fragments into
+    thousands of small files and every probe's (band, bucket) join pays
+    an open/LIST tax (VERDICT r9). Compaction rewrites the union range-
     partitioned AND sorted on (band, bucket) — beyond defragmenting, the
-    layout now clusters each probe key into one file-contiguous run.
+    layout clusters each probe key into one file-contiguous run.
 
     Bucket CONTENT is untouched, so probe results are equal by
-    construction (pinned by test and by the l2_lsh_compact_probe oracle).
-    The rewrite runs under the index's own commit protocol: meta is
-    renamed ASIDE first (``meta__compact`` — recoverable, never deleted:
-    the parameters are unchanged by compaction, so a crash must not lose
-    the only copy; ADVICE r10) and renamed back only after the bucket
-    rewrite lands — an interrupted compaction leaves a meta-less index
-    every probe rejects loudly, never a half-rewritten bucket table read
-    silently. Returns the post-compaction bucket file count. A
-    generational root instead merges its segments into one under
-    :mod:`operators.segindex`'s protocol.
+    construction (pinned by test and by the l2_lsh_compact_probe oracle);
+    the merged segment carries the meta unchanged. Returns the
+    post-compaction bucket file count.
     """
-    from etl_hiscox_spark.sources import genlog
-    from etl_hiscox_spark.sources.writers import (
-        compact_parquet_to_dir,
-        compact_small_files,
-    )
+    from etl_hiscox_spark.sources.writers import compact_parquet_to_dir
 
-    if genlog.is_generational(spark, path):
-        return segindex.compact(
-            spark, path, _LSH,
-            lambda h, target: compact_parquet_to_dir(
-                spark, [_LSH.data(p) for p in h.paths], target, target_file_mb,
-                sort_by=("band", "bucket"),
-            ),
-        )
-    _require_local_index_path(spark, path, "compact_minhash_index")
-    _read_index_meta(spark, path)  # loud on an uncommitted index
-    _rename_meta_aside(spark, path, "meta__compact")
-    n = compact_small_files(
-        spark, os.path.join(path, "buckets"), target_file_mb, sort_by=("band", "bucket")
+    return segindex.compact(
+        spark, path, _LSH,
+        lambda h, target: compact_parquet_to_dir(
+            spark, [_LSH.data(p) for p in h.paths], target, target_file_mb,
+            sort_by=("band", "bucket"),
+        ),
     )
-    _restore_meta_from_aside(spark, path, "meta__compact")
-    return n
 
 
 def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
@@ -1456,42 +1248,11 @@ def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> 
     The index retains a banded fingerprint of every ingested document —
     GDPR reaches it exactly like the primary table
     (``sources/writers.erase_keys``), and an erased doc must stop
-    surfacing as ``dup_of`` in every future probe. A generational root
-    erases under :mod:`operators.segindex`'s segment protocol. On a flat
-    root the rewrite runs under the index's commit protocol (meta renamed
-    aside to
-    ``meta__erase`` first — recoverable, the parameters are unchanged by
-    erasure; ADVICE r10 — and renamed back after the bucket swap) so an
-    interrupted erasure leaves a loudly-rejected index with its
-    parameters still on disk, never a half-erased one read
-    silently. Whole-bucket-table rewrite (tmp + swap) — the honest
-    fallback at this layout; at 100 TB partition the bucket table by
-    ``band`` (or bucket prefix) so erasure rewrites only affected
-    partitions, the same upgrade path erase_keys documents.
+    surfacing as ``dup_of`` in every future probe. The erase runs under
+    :mod:`operators.segindex`'s segment protocol: only the segments it
+    hits are rewritten, and one pointer commit publishes the result.
     """
-    from etl_hiscox_spark.sources import genlog
-
-    if genlog.is_generational(spark, path):
-        return segindex.erase(spark, path, _LSH, keys, id_col)
-    _require_local_index_path(spark, path, "erase_from_minhash_index")
-    _read_index_meta(spark, path)  # loud on an uncommitted index
-    buckets_path = os.path.join(path, "buckets")
-    buckets = spark.read.parquet(buckets_path)
-    k = F.broadcast(keys.select(F.col(id_col).alias("doc")).distinct())
-    n_erased = buckets.join(k, "doc", "left_semi").count()
-    if n_erased == 0:
-        return 0
-    kept = buckets.join(k, "doc", "left_anti")
-    tmp = buckets_path.rstrip("/") + "__erase"
-    kept.write.mode("overwrite").parquet(tmp)
-    # invalidate only once the replacement bucket table is fully staged —
-    # the uncommitted window is just the swap + rename-back
-    _rename_meta_aside(spark, path, "meta__erase")
-    from etl_hiscox_spark.sources.writers import swap_and_refresh
-
-    swap_and_refresh(spark, tmp, buckets_path)
-    _restore_meta_from_aside(spark, path, "meta__erase")
-    return n_erased
+    return segindex.erase(spark, path, _LSH, keys, id_col)
 
 
 def minhash_fragmentation_stats(spark, path: str) -> DataFrame:
@@ -1517,7 +1278,7 @@ def minhash_fragmentation_stats(spark, path: str) -> DataFrame:
     paths = live_index_paths(spark, path)
     _read_index_meta(spark, paths[0], resolved=True)  # loud on an uncommitted index
     stats = distributed_dir_stats(
-        spark, [(i, os.path.join(p, "buckets")) for i, p in enumerate(paths)]
+        spark, [(i, _LSH.data(p)) for i, p in enumerate(paths)]
     )
     return stats.agg(
         F.sum("n_files").alias("n_files"),
@@ -1543,69 +1304,40 @@ def rebuild_minhash_index(
 ) -> tuple[int, int, int]:
     """Re-band a LIVE minhash index under new parameters — the parameter
     migration the meta-pinning design otherwise forbids (r11; the IVF
-    side's geometry repair is :func:`similarity.rebuild_ivf_index`, same
-    protocol family). ``write_minhash_index`` pins (num_hashes,
-    num_bands, shingle_k) at build time and every probe/append validates
-    against them FOREVER — correct by design, but when recall
-    requirements change (more bands → higher recall, fewer → cheaper
-    probes) the lifecycle previously had no migration path that kept the
-    commit protocol: hand-composing a fresh build at a new path leaves a
-    window with two divergent indexes and re-points every probe.
+    side's geometry repair is :func:`similarity.rebuild_ivf_index`).
+    ``write_minhash_index`` pins (num_hashes, num_bands, shingle_k) at
+    build time and every probe/append validates against them FOREVER —
+    correct by design, but when recall requirements change (more bands →
+    higher recall, fewer → cheaper probes) the lifecycle needs a
+    migration that keeps the commit protocol: hand-composing a fresh
+    build at a new path leaves a window with two divergent indexes and
+    re-points every probe.
 
     Unlike the IVF index (which stores its vectors and can self-rebuild),
     the bucket table stores only banded fingerprints — re-shingling needs
     the source corpus, so the caller supplies ``df``; the rebuilt index
     indexes EXACTLY those rows. That also makes this the
     fingerprint-refresh op: pass the current base table (post-erasures)
-    and the index drops any stragglers in the same swap. ``None``
+    and the index drops any stragglers in the same commit. ``None``
     parameters keep the live meta's values.
 
-    Commit protocol (rename-aside, mirroring ``rebuild_ivf_index``): the
-    COMPLETE new index is staged at ``<path>__rebuild`` (buckets first,
-    meta LAST — the staged tree is a valid index only once finished),
-    then two atomic renames: live → ``<path>__old``, staged → live;
-    ``__old`` is removed last. Every crash window leaves either the
-    untouched live index or two complete indexes with the live name
-    absent (probes fail loudly on the missing path;
-    :func:`recover_staged_rebuild` completes or rolls back the swap).
-    Driver-local paths only, like the other maintenance ops. Returns the
-    new (num_hashes, num_bands, shingle_k).
+    The complete new index stages as one fresh segment and a single
+    pointer commit under a new geometry epoch makes it live
+    (:func:`segindex.rebuild`); a crash before the commit leaves the old
+    head serving and a vacuum-reclaimable stage. Returns the new
+    (num_hashes, num_bands, shingle_k).
     """
-    from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # generational form: the pointer flip IS the two-rename swap
-        def _reband(h, target: str) -> tuple[int, int, int]:
-            cur_hashes, cur_bands, cur_k = _read_index_meta(spark, h.paths[0], resolved=True)
-            new = (
-                int(num_hashes) if num_hashes is not None else cur_hashes,
-                int(num_bands) if num_bands is not None else cur_bands,
-                int(shingle_k) if shingle_k is not None else cur_k,
-            )
-            write_minhash_index(
-                df, text_col, id_col, target,
-                num_hashes=new[0], num_bands=new[1], shingle_k=new[2], generational=False,
-            )
-            return new
+    def _reband(h, target: str) -> tuple[int, int, int]:
+        cur = _read_index_meta(spark, h.paths[0], resolved=True)
+        new = tuple(
+            int(v) if v is not None else c
+            for v, c in zip((num_hashes, num_bands, shingle_k), cur)
+        )
+        _stage_minhash_index(df, text_col, id_col, target, *new)
+        return new
 
-        return segindex.rebuild(spark, path, _reband)
-    tmp = begin_staged_rebuild(spark, path, "rebuild_minhash_index")
-    cur_hashes, cur_bands, cur_k = _read_index_meta(spark, path)  # loud on uncommitted
-    new = (
-        int(num_hashes) if num_hashes is not None else cur_hashes,
-        int(num_bands) if num_bands is not None else cur_bands,
-        int(shingle_k) if shingle_k is not None else cur_k,
-    )
-    # write_minhash_index stages the complete new index (divisibility
-    # guard included; buckets first, meta last) — on a FRESH tmp path its
-    # meta invalidation is a no-op, so the staging inherits the build
-    # path's own commit ordering
-    write_minhash_index(
-        df, text_col, id_col, tmp,
-        num_hashes=new[0], num_bands=new[1], shingle_k=new[2], generational=False,
-    )
-    commit_staged_rebuild(spark, path, "rebuild_minhash_index")
-    return new
+    return segindex.rebuild(spark, path, _reband)
 
 
 def _write_index_meta(spark, path: str, num_hashes: int, num_bands: int, shingle_k: int) -> None:
@@ -1640,25 +1372,6 @@ def _write_index_meta(spark, path: str, num_hashes: int, num_bands: int, shingle
         [(num_hashes, num_bands, shingle_k)],
         "num_hashes int, num_bands int, shingle_k int",
     ).write.mode("overwrite").parquet(meta_path)
-
-
-def _invalidate_index_meta(spark, path: str) -> None:
-    """Remove the index meta — the 'uncommitted' state of the overwrite
-    protocol in :func:`write_minhash_index`. Local paths via shutil;
-    remote via the Hadoop FileSystem API (recursive delete)."""
-    meta_path = os.path.join(path, "meta")
-    if _meta_is_local(spark, path):
-        import shutil
-
-        from etl_hiscox_spark.sources.writers import _local_fs_path
-
-        shutil.rmtree(_local_fs_path(meta_path), ignore_errors=True)
-        return
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(meta_path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
 
 
 def _read_index_meta(spark, path: str, resolved: bool = False) -> tuple[int, int, int]:
@@ -1702,6 +1415,7 @@ _LSH = segindex.SegmentKind(
     data_dir="buckets",
     key_col="doc",
     write_data=lambda rows, path: rows.write.mode("error").parquet(path),
+    read_data=lambda spark, paths: spark.read.parquet(*paths),
     read_record=lambda spark, seg: _read_index_meta(spark, seg, resolved=True),
     write_record=lambda spark, seg, params: _write_index_meta(spark, seg, *params),
 )
@@ -1736,9 +1450,9 @@ def probe_minhash_index(
     from etl_hiscox_spark.sources.genlog import live_index_paths
 
     spark = new_df.sparkSession
-    # generational roots probe every live segment (build + OCC append
-    # deltas, r13); banding comes from the geometry segment, which every
-    # delta was validated against at append time
+    # probe every live segment (build + OCC append deltas, r13); banding
+    # comes from the geometry segment, which every delta was validated
+    # against at append time
     paths = live_index_paths(spark, path)
     num_hashes, num_bands, shingle_k = _read_index_meta(spark, paths[0], resolved=True)
     sig = minhash_signature_table(new_df, text_col, id_col, num_hashes, shingle_k)
@@ -1749,7 +1463,7 @@ def probe_minhash_index(
     # scan time
     from etl_hiscox_spark.fastschema import fast_parquet_schema
 
-    bucket_dirs = [os.path.join(p, "buckets") for p in paths]
+    bucket_dirs = [_LSH.data(p) for p in paths]
     fast = fast_parquet_schema(bucket_dirs[0])
     reader = spark.read.schema(fast) if fast is not None else spark.read
     idx = reader.parquet(*bucket_dirs).alias("i")

@@ -1,11 +1,17 @@
-"""The generational segment lifecycle shared by the LSH index
-(:mod:`operators.dedup`) and the IVF index (:mod:`operators.similarity`).
+"""The segment lifecycle shared by the LSH index (:mod:`operators.dedup`)
+and the IVF index (:mod:`operators.similarity`).
 
 Both indexes live as SEGMENTS under one generation-pointer log
-(:mod:`sources.genlog`). This module owns their lifecycle — head
-snapshot, build, append, compact, erase, rebuild — and is the only code
-that commits index pointers (appends commit through
-:func:`genlog.append_segment`). The protocol, stated once:
+(:mod:`sources.genlog`) — the only layout either index is written or
+maintained in. This module owns their lifecycle — head snapshot, build,
+append, compact, erase, rebuild — and is the only code that commits
+index pointers (appends commit through :func:`genlog.append_segment`).
+Code outside the index modules reads live rows through :func:`live_rows`.
+A root without a pointer log (nothing built, or a FLAT tree from before
+the pointer layout) is rejected by genlog's head resolution, which every
+op but ``build`` goes through; ``build`` refuses to strand a flat tree
+(:func:`_reject_flat_index_debris`). Flat trees are upgraded in place by
+``dedup.migrate_flat_index_to_generational``. The protocol, stated once:
 
 - A segment is a complete ``gen-*`` tree: its data plus the index's commit
   record (LSH banding ``meta``, IVF ``_centroids``), written LAST. A
@@ -53,6 +59,7 @@ class SegmentKind(NamedTuple):
     data_dir: str | None  # data below the segment root; None = the root
     key_col: str | None  # erase key column; None = the caller's id column
     write_data: Callable[[DataFrame, str], None]  # stage rows at a data path
+    read_data: Callable[[Any, list[str]], DataFrame]  # (spark, data paths) -> rows
     read_record: Callable[[Any, str], Any]  # (spark, segment) -> record
     write_record: Callable[[Any, str, Any], None]  # (spark, segment, record)
 
@@ -86,6 +93,12 @@ def head(spark, path: str) -> Head:
     return Head(root, base, genlog.read_pointer(root, base))
 
 
+def live_rows(spark, path: str, kind: SegmentKind) -> DataFrame:
+    """Every live row of an index root, read through its pointer — a raw
+    read of the root would also scan superseded and staged generations."""
+    return kind.read_data(spark, [kind.data(p) for p in genlog.live_index_paths(spark, path)])
+
+
 def _commit(spark, h: Head, gen: str, operation: str, segments=None, geometry_id=None):
     genlog.commit_generation(
         spark, h.root, gen, operation, base_version=h.base,
@@ -111,8 +124,8 @@ def _reject_flat_index_debris(root: str) -> None:
     try:
         filesystem, p = _resolve_fs(root)
     except (ValueError, KeyError):
-        # a scheme pyarrow cannot RESOLVE — is_generational answered the
-        # same way; the staging write decides reachability loudly itself
+        # a scheme pyarrow cannot RESOLVE: the staging write decides
+        # reachability loudly itself
         return
     # IO errors (throttling, timeouts) propagate: skipping the guard on a
     # transient listing failure would strand the debris it exists to catch

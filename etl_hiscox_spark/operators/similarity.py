@@ -18,7 +18,7 @@ A pandas_udf batch-scoring variant is provided for many-query workloads
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -456,21 +456,20 @@ def write_ivf_index(
     max_iter: int | None = None,
     centroids: np.ndarray | None = None,
     quantize: bool = False,
-    generational: bool = True,
-    _staged: bool = False,
 ) -> np.ndarray:
     """Materialize the IVF index as a cluster-partitioned parquet table;
     returns the centroid matrix and ALSO persists it inside the index
-    (``<path>/_centroids`` — the leading underscore hides it from the
+    (``_centroids`` — the leading underscore hides it from the
     partitioned data scan), so probes and appends read their geometry
     FROM the index, never from the caller — the same params-travel-with-
     the-data rule as the minhash index meta.
 
-    Commit protocol for free: the partitioned overwrite clears ``path``
-    (including any previous ``_centroids``) and the centroids are written
-    LAST — a failure in between leaves an index without centroids, which
-    :func:`load_ivf_centroids` rejects loudly instead of probing with
-    stale geometry.
+    Layout: generation-pointer segments (:mod:`operators.segindex`). The
+    build stages one complete segment — partitions first, ``_centroids``
+    LAST as its commit record (:func:`_stage_ivf_segment`) — and an atomic
+    ``_gen_log`` pointer commit makes it live; compact/erase/rebuild then
+    commit new segments the same way, so the full maintenance lifecycle
+    runs on any filesystem.
 
     ``centroids`` pins EXPLICIT geometry instead of fitting k-means — the
     rebuild-preserving-geometry path (re-materialize a fragmented or
@@ -491,88 +490,28 @@ def write_ivf_index(
     so :func:`ivf_probe_topk_quantized`'s candidate scan then reads the
     codes column only — ~4x less IO than the float32 embeddings on the
     probe path — while the float column stays in the same row for the
-    exact rerank fetch. Appends inherit the layout (the append path
-    detects ``__codes`` in the index schema and quantizes the batch with
-    the same expression); compaction/erase/rebuild carry the columns
-    through as ordinary payload.
-
-    ``generational=True`` — the DEFAULT since r13 (VERDICT r12 item 3:
-    new indexes must be object-store-safe without the user knowing to
-    ask) — builds the GENERATION-POINTER layout (r12,
-    :mod:`sources/genlog`): the index stages as a complete generation
-    under ``<path>/gen-*/`` and an atomic ``_gen_log`` pointer commit
-    makes it live — compact/erase/rebuild then flip pointers instead of
-    renaming data dirs, so the full maintenance lifecycle runs on any
-    filesystem. ``generational=False`` opts into the legacy FLAT layout
-    (rename-committed maintenance, driver-local only) — kept readable
-    and maintainable forever;
-    ``dedup.migrate_flat_index_to_generational`` upgrades it in place.
-    A root that is already generational stays generational regardless
-    of the flag.
+    exact rerank fetch. Appends inherit the layout (the ``_centroids``
+    record carries the flag, and the append quantizes the batch with the
+    same expression); compaction/erase/rebuild carry the columns through
+    as ordinary payload.
     """
-    from etl_hiscox_spark.sources import genlog
 
-    spark = df.sparkSession
-    if generational or genlog.is_generational(spark, path):
-        return segindex.build(
-            spark, path,
-            lambda _head, target: write_ivf_index(
-                df, target, embedding_col, id_col,
-                n_clusters=n_clusters, seed=seed, train_fraction=train_fraction,
-                max_iter=max_iter, centroids=centroids, quantize=quantize,
-                generational=False, _staged=True,
-            ),
-        )
-
-    def _with_codes(assigned: DataFrame) -> DataFrame:
-        if not quantize:
-            return assigned
-        from etl_hiscox_spark.operators.vectors import quantize_int8
-
-        codes, scale = quantize_int8(F.col(embedding_col))
-        return assigned.withColumn("__codes", codes).withColumn("__qscale", scale)
-
-    if centroids is not None:
-        C = np.asarray(centroids, dtype=np.float64)
-        assigned = _with_codes(
-            df.withColumn("__cluster", _nearest_centroid_col(C, F.col(embedding_col)))
-        )
-        if _staged:
-            # staged tree (generational build): the malformed gate rides
-            # the write itself via observe() — one action instead of
-            # count-then-write (r17, guide §5). Raising AFTER the write
-            # but BEFORE _write_ivf_centroids leaves a centroid-less
-            # staged tree no reader trusts and vacuum reclaims — the
-            # exact crash-mid-stage state the protocol already covers.
-            _write_observed_gate(assigned, path, "write_ivf_index", C)
+    def _stage(_head, target: str) -> np.ndarray:
+        if centroids is not None:
+            C = np.asarray(centroids, dtype=np.float64)
+            assigned = _assign_to_centroids(df, C, quantize, embedding_col)
         else:
-            # flat root: the overwrite clears the LIVE index, so the gate
-            # must fire before any byte lands — bad input leaves the old
-            # index intact (the pre-r17 contract, kept)
-            assigned = assigned.persist()
-            try:
-                bad = assigned.filter(F.col("__cluster") < 0).count()
-                if bad:
-                    raise ValueError(
-                        f"write_ivf_index: {bad} embedding(s) are NULL, empty, NaN, "
-                        f"or not {C.shape[1]}-dimensional — repair or drop them "
-                        "before indexing (a written -1 partition would be "
-                        "invisible to every probe)"
-                    )
-                _write_ivf_partitions(assigned, path)
-            finally:
-                assigned.unpersist(blocking=False)
-        _write_ivf_centroids(df.sparkSession, path, C, quantized=quantize)
+            assigned, C = ivf_index(
+                df, embedding_col, id_col, n_clusters, seed, train_fraction, max_iter
+            )
+            assigned = _with_codes(assigned, quantize, embedding_col)
+        _stage_ivf_segment(assigned, target, C, quantize, "write_ivf_index")
         return C
-    assigned, centroids = ivf_index(
-        df, embedding_col, id_col, n_clusters, seed, train_fraction, max_iter
-    )
-    _write_ivf_partitions(_with_codes(assigned), path)
-    _write_ivf_centroids(df.sparkSession, path, centroids, quantized=quantize)
-    return centroids
+
+    return segindex.build(df.sparkSession, path, _stage)
 
 
-def _write_ivf_partitions(assigned: DataFrame, path: str, mode: str = "overwrite") -> None:
+def _write_ivf_partitions(assigned: DataFrame, path: str) -> None:
     # Cluster-wise pre-shuffle before the partitioned write: without it
     # every write task holds rows of every cluster and emits one file per
     # (task, cluster) — shuffle_partitions × n_clusters KB-scale files on
@@ -581,16 +520,10 @@ def _write_ivf_partitions(assigned: DataFrame, path: str, mode: str = "overwrite
     # time listing/reading the 512-file build than probing it). One
     # exchange of the assigned frame; at 100 TB clusters larger than a
     # healthy task add a size salt (compact_ivf_index's mechanism).
-    #
-    # The commit protocol REQUIRES the overwrite to clear the whole path
-    # (stale cluster partitions and the previous _centroids must not
-    # survive a rebuild). Under the session config
-    # spark.sql.sources.partitionOverwriteMode=dynamic an overwrite only
-    # replaces partitions present in the new data — so pin static mode on
-    # THIS writer; the safety invariant must not depend on session config
-    # (ADVICE r9).
-    assigned.repartition("__cluster").write.partitionBy("__cluster").mode(mode).option(
-        "partitionOverwriteMode", "static"
+    # Targets are always fresh segment directories, so the write refuses
+    # an existing path instead of overwriting it.
+    assigned.repartition("__cluster").write.partitionBy("__cluster").mode(
+        "error"
     ).parquet(path)
 
 
@@ -605,9 +538,9 @@ def _write_ivf_centroids(
     # needs "does this layout store __codes?" in O(1), and a full-index
     # schema inference per daily append is exactly the listing tax the
     # fragmentation stats were moved off the driver to avoid. _centroids
-    # survives every maintenance op by construction (compact copies it
-    # byte-for-byte, erase renames it aside and back, rebuild rewrites
-    # it), so the flag can never drift from the layout.
+    # survives every maintenance op by construction (compact and erase
+    # carry the record into their new segment, rebuild rewrites it), so
+    # the flag can never drift from the layout.
     from etl_hiscox_spark.sources.listing import _meta_is_local
 
     cdir = os.path.join(path, "_centroids")
@@ -719,34 +652,43 @@ def _read_ivf_segments(spark, paths: list[str]) -> DataFrame:
     return out
 
 
+def _with_codes(assigned: DataFrame, quantized: bool, embedding_col: str) -> DataFrame:
+    """``assigned`` plus the int8 codes columns when the layout stores
+    them (an appended row without ``__codes`` would be invisible to the
+    codes-only probe scan)."""
+    if not quantized:
+        return assigned
+    from etl_hiscox_spark.operators.vectors import quantize_int8
+
+    codes, scale = quantize_int8(F.col(embedding_col))
+    return assigned.withColumn("__codes", codes).withColumn("__qscale", scale)
+
+
 def _assign_to_centroids(
     df: DataFrame, C: np.ndarray, quantized: bool, embedding_col: str
 ) -> DataFrame:
-    """The shared append-side assignment: nearest pinned centroid, plus
-    the quantized codes columns when the index layout stores them (an
-    appended row without ``__codes`` would be invisible to the codes-only
-    probe scan)."""
-    assigned = df.withColumn(
-        "__cluster", _nearest_centroid_col(C, F.col(embedding_col))
+    """Nearest pinned centroid per row (plus the codes columns of a
+    quantized layout) — the assignment of explicit-geometry builds and of
+    every append."""
+    return _with_codes(
+        df.withColumn("__cluster", _nearest_centroid_col(C, F.col(embedding_col))),
+        quantized,
+        embedding_col,
     )
-    if quantized:
-        from etl_hiscox_spark.operators.vectors import quantize_int8
-
-        codes, scale = quantize_int8(F.col(embedding_col))
-        assigned = assigned.withColumn("__codes", codes).withColumn("__qscale", scale)
-    return assigned
 
 
-def _write_observed_gate(
-    assigned: DataFrame, target: str, op: str, C: np.ndarray
+def _stage_ivf_segment(
+    assigned: DataFrame, target: str, C: np.ndarray, quantized: bool, op: str
 ) -> None:
-    """Write a STAGED cluster tree with the malformed-row gate riding the
-    write action itself (``observe`` — one pass, one action) instead of a
-    count-then-write over a persisted frame (r17, guide §5: per-action
-    latency dominated the lifecycle ops). Only for staged targets: a bad
-    batch raises AFTER partitions land but BEFORE the ``_centroids``
-    commit record, leaving exactly the crash-mid-stage state the
-    generational protocol already rejects loudly and vacuums."""
+    """Write one complete IVF segment at a fresh ``target``: the
+    ``__cluster=`` partitions with the malformed-row gate riding the write
+    action itself (``observe`` — one pass, one action, r17 guide §5), then
+    the ``_centroids`` commit record LAST. assign() marks NULL / wrong-dim
+    / NaN embeddings as -1, and a written ``__cluster=-1`` partition is
+    read by no probe — stored-but-unsearchable forever, silently. A bad
+    batch therefore raises AFTER the partitions land but BEFORE the
+    record: a record-less stage no reader trusts and vacuum reclaims. The
+    one staging write behind build, append and rebuild."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -764,26 +706,7 @@ def _write_observed_gate(
             "indexing (a written -1 partition would be invisible to "
             "every probe)"
         )
-
-
-def _reject_malformed_assignments(assigned: DataFrame, C: np.ndarray) -> None:
-    """ONE copy of the append-side malformed-row gate (review: the delta
-    and in-place branches each carried it verbatim — a fix to one would
-    silently leave the other behind). Reject LOUDLY before anything lands
-    on disk (r9 review): assign() marks NULL / wrong-dim / NaN embeddings
-    as -1, and writing them would create a ``__cluster=-1`` partition no
-    probe ever reads — stored-but-unsearchable forever, silently. The
-    build path fails on the same input (KMeansModel.transform throws on
-    null vectors); appends must be symmetric. Callers persist ``assigned``
-    first so this check and the write are one computation."""
-    bad = assigned.filter(F.col("__cluster") < 0).count()
-    if bad:
-        raise ValueError(
-            f"append_to_ivf_index: {bad} embedding(s) are NULL, empty, "
-            f"NaN, or not {C.shape[1]}-dimensional — repair or drop them "
-            "before appending (a written -1 partition would be invisible "
-            "to every probe)"
-        )
+    _write_ivf_centroids(assigned.sparkSession, target, C, quantized=quantized)
 
 
 def append_to_ivf_index(
@@ -808,69 +731,37 @@ def append_to_ivf_index(
     re-clustering (centroid drift repair) is an explicit rebuild, not a
     side effect.
 
-    On a generational root the batch stages as a self-contained DELTA
-    segment (its ``__cluster=`` partitions plus a copy of the geometry
-    record) and commits through :func:`segindex.append`. A lost pointer
-    race re-commits the same delta; a REBUILD winning mid-append makes the
-    delta's assignments stale (:class:`genlog.GeometryChanged`), so it
-    re-stages against the new centroids. Flat roots keep the plain
-    in-place partition append.
+    The batch stages as a self-contained DELTA segment (its ``__cluster=``
+    partitions plus a copy of the geometry record) and commits through
+    :func:`segindex.append`. A lost pointer race re-commits the same
+    delta; a REBUILD winning mid-append makes the delta's assignments
+    stale (:class:`genlog.GeometryChanged`), so it re-stages against the
+    new centroids.
 
-    ``txn=(app_id, batch_id)`` makes a generational append EXACTLY-ONCE
-    under streaming redelivery (:func:`genlog.append_segment`'s watermark
-    ledger); REJECTED loudly on flat roots — they have no commit record
-    to carry the ledger, and silently degrading to at-least-once is the
-    failure mode the tag exists to prevent.
+    ``txn=(app_id, batch_id)`` makes the append EXACTLY-ONCE under
+    streaming redelivery (:func:`genlog.append_segment`'s watermark
+    ledger).
     """
     from etl_hiscox_spark.sources import genlog
 
     spark = df.sparkSession
-    if not genlog.is_generational(spark, path):
-        if txn is not None:
-            # fail-loud convention: silently dropping the exactly-once
-            # contract on a flat root would let a crash-replayed
-            # micro-batch land twice with no signal
-            raise ValueError(
-                "txn=(app_id, batch_id) requires a GENERATIONAL index root "
-                "— the watermark ledger lives in the pointer records; "
-                "migrate the flat index with "
-                "migrate_flat_index_to_generational first"
+
+    def _same_geometry(staged, current) -> None:
+        if current.record.get("geometry_id") != staged.record.get("geometry_id"):
+            raise genlog.GeometryChanged(
+                "IVF geometry changed mid-append (a rebuild "
+                "committed) — the staged delta's cluster "
+                "assignments are stale; re-staging"
             )
-    else:
-        def _same_geometry(staged, current) -> None:
-            if current.record.get("geometry_id") != staged.record.get("geometry_id"):
-                raise genlog.GeometryChanged(
-                    "IVF geometry changed mid-append (a rebuild "
-                    "committed) — the staged delta's cluster "
-                    "assignments are stale; re-staging"
-                )
 
-        def _stage_delta(h, target: str) -> None:
-            # the malformed gate rides the write (observe, one action): a
-            # bad batch leaves a record-less stage no reader trusts
-            C, quantized = record = _IVF.read_record(spark, h.paths[0])
-            assigned = _assign_to_centroids(df, C, quantized, embedding_col)
-            _write_observed_gate(assigned, target, "append_to_ivf_index", C)
-            _IVF.write_record(spark, target, record)
+    def _stage_delta(h, target: str) -> None:
+        C, quantized = _IVF.read_record(spark, h.paths[0])
+        _stage_ivf_segment(
+            _assign_to_centroids(df, C, quantized, embedding_col),
+            target, C, quantized, "append_to_ivf_index",
+        )
 
-        segindex.append(spark, path, _stage_delta, _same_geometry, txn)
-        return
-    # flat layout: in-place partition append (driver-local maintenance).
-    # quantized layouts propagate — the flag comes from the _centroids
-    # commit record in O(1), a full index schema inference per daily
-    # append would pay the very listing tax this module keeps off the
-    # driver (r11 review).
-    C = load_ivf_centroids(spark, path, resolved=True)
-    assigned = _assign_to_centroids(
-        df, C, ivf_index_is_quantized(spark, path, resolved=True), embedding_col
-    ).persist()
-    try:
-        _reject_malformed_assignments(assigned, C)
-        # same cluster-wise pre-shuffle as the build write: one file per
-        # TOUCHED partition per batch instead of one per (task, cluster)
-        _write_ivf_partitions(assigned, path, mode="append")
-    finally:
-        assigned.unpersist(blocking=False)
+    segindex.append(spark, path, _stage_delta, _same_geometry, txn)
 
 
 # The IVF answers to the segment protocol (operators/segindex): the
@@ -880,6 +771,7 @@ _IVF = segindex.SegmentKind(
     data_dir=None,
     key_col=None,
     write_data=_write_ivf_partitions,
+    read_data=_read_ivf_segments,
     read_record=lambda spark, seg: (
         load_ivf_centroids(spark, seg, resolved=True),
         ivf_index_is_quantized(spark, seg, resolved=True),
@@ -935,88 +827,27 @@ def _merge_ivf_segments(spark, segs: list[str], target: str, target_file_mb: int
 
 
 def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
-    """Rewrite an IVF index's cluster partitions into ~target-sized files.
+    """Merge every live segment of an IVF index into ONE segment of
+    ~target-sized files per cluster (:func:`segindex.compact`).
 
-    :func:`append_to_ivf_index` adds ONE parquet file per touched
-    partition per batch — at daily-ingest cadence the index fragments
-    into thousands of KB-scale files and every probe pays an open/LIST
-    tax (VERDICT r9). Compaction rewrites each ``__cluster`` partition
-    into ``ceil(bytes / target)`` files (1 at typical partition sizes)
-    while preserving BOTH index contracts: the ``partitionBy(__cluster)``
-    layout (partition pruning untouched) and the ``_centroids`` commit
-    record byte-for-byte (geometry is pinned at build time — maintenance
-    must never drift it). Probe results are therefore equal by
-    construction; pinned by test and by the l3_ivf_compact_probe oracle.
-
-    Per-cluster file counts come from the actual on-disk bytes; rows are
-    salted ``hash(payload) % n_files[cluster]`` so each output file is a
-    deterministic subset. Write-to-tmp + swap, same recipe as
-    ``compact_small_files`` (the plan lazily reads ``path``; an in-place
-    overwrite would delete its own input mid-job). Local-filesystem swap
-    here; on a cluster the identical rewrite is table-format ``OPTIMIZE``.
-    Returns the post-compaction data file count. A generational root
-    instead merges its segments into one under :mod:`operators.segindex`'s
-    protocol.
+    :func:`append_to_ivf_index` adds one delta segment per batch, with
+    ONE parquet file per touched partition — at daily-ingest cadence the
+    index fragments into thousands of KB-scale files and every probe pays
+    an open/LIST tax (VERDICT r9). Compaction rewrites each ``__cluster``
+    partition into ``ceil(bytes / target)`` files (1 at typical partition
+    sizes; rows salted ``hash(payload) % n_files[cluster]``, so each
+    output file is a deterministic subset) while preserving BOTH index
+    contracts: the ``partitionBy(__cluster)`` layout (partition pruning
+    untouched) and the ``_centroids`` commit record (geometry is pinned
+    at build time — maintenance must never drift it). Probe results are
+    therefore equal by construction; pinned by test and by the
+    l3_ivf_compact_probe oracle. A fully-erased placeholder head has
+    nothing to merge: no commit, returns 0. Returns the post-compaction
+    data file count.
     """
-    import shutil
-
-    from etl_hiscox_spark.operators.dedup import _require_local_index_path
-    from etl_hiscox_spark.sources import genlog
-
-    if genlog.is_generational(spark, path):
-        return segindex.compact(
-            spark, path, _IVF,
-            lambda h, target: _merge_ivf_segments(spark, h.paths, target, target_file_mb),
-        )
-    # driver-local paths only (ADVICE r10): the swap below is os.rename —
-    # fail loudly BEFORE the Spark tmp write, never leak a __compact dir
-    local = _require_local_index_path(spark, path, "compact_ivf_index")
-    # validate the commit record first — compacting an interrupted index
-    # must fail loudly, not re-materialize a centroid-less layout
-    load_ivf_centroids(spark, path)
-    sizes: dict[int, int] = {}
-    for entry in os.listdir(local):
-        if not entry.startswith("__cluster="):
-            continue
-        cdir = os.path.join(local, entry)
-        sizes[int(entry.split("=", 1)[1])] = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(cdir)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    if not sizes:
-        # fully-erased flat index: geometry record present (validated
-        # above), zero partitions — same no-op contract as the
-        # generational branch (ADVICE r13)
-        return 0
-    step = target_file_mb * 1024 * 1024
-    n_files = {c: max(1, -(-b // step)) for c, b in sizes.items()}
-    df = spark.read.parquet(path)
-    data_cols = [c for c in df.columns if c != "__cluster"]
-    n_map = F.create_map(*[F.lit(x) for item in n_files.items() for x in item])
-    # pmod already returns a non-negative result for negative hashes; an
-    # abs() here would overflow loudly under ANSI mode (Spark 4 default)
-    # on the one-in-2^32 row whose int32 hash is Integer.MIN_VALUE
-    salt = F.pmod(F.hash(*[F.col(c) for c in data_cols]), n_map[F.col("__cluster")])
-    tmp = path.rstrip("/") + "__compact"
-    ltmp = local.rstrip("/") + "__compact"
-    (
-        df.repartition(sum(n_files.values()), F.col("__cluster"), salt)
-        .write.partitionBy("__cluster")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(tmp)
-    )
-    shutil.copytree(os.path.join(local, "_centroids"), os.path.join(ltmp, "_centroids"))
-    from etl_hiscox_spark.sources.writers import swap_and_refresh
-
-    swap_and_refresh(spark, tmp, path)
-    return sum(
-        1
-        for root, _, files in os.walk(local)
-        for f in files
-        if f.endswith(".parquet") and os.sep + "_centroids" not in root
+    return segindex.compact(
+        spark, path, _IVF,
+        lambda h, target: _merge_ivf_segments(spark, h.paths, target, target_file_mb),
     )
 
 
@@ -1027,76 +858,14 @@ def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
 
     Table-level erasure (``sources/writers.erase_keys``) leaves index
     layouts retaining the erased payload — an index IS a copy of the
-    data, so GDPR reaches it too. A generational root erases under
-    :mod:`operators.segindex`'s segment protocol. On a flat root erasure
-    touches ONLY the affected cluster partitions: the erase set
-    semi-joins the index to find its clusters (a collect bounded by
-    n_clusters ints), the kept rows of those partitions are staged to a
-    tmp dir (the lazy plan reads ``path``, so an in-place overwrite would
-    delete its own input), and each affected partition directory is
-    swapped. Centroid geometry and
-    every unaffected partition are untouched byte-for-byte — erasure is
-    maintenance, it must never drift the index contract. A cluster whose
-    rows are ALL erased simply loses its directory (an empty partition,
-    which every probe handles). ``keys`` broadcasts (erasure requests
-    are tiny next to the index).
-
-    Commit protocol: ``_centroids`` is the index's commit record
-    (:func:`load_ivf_centroids` rejects an index without it) — it is
-    RENAMED ASIDE (atomic, byte-preserving) before the first partition
-    swap and renamed back only after the last one lands, so a crash
-    mid-loop leaves a loudly-rejected index, never a silently
-    half-erased one (or one missing a cluster's kept rows — a vanished
-    directory is indistinguishable from a legitimately fully-erased
-    cluster). Rename, not delete: the geometry stays recoverable on disk
-    (``_centroids__erase``) after a crash, and the centroid bytes are
-    untouched by a successful erasure.
+    data, so GDPR reaches it too. The erase runs under
+    :mod:`operators.segindex`'s segment protocol: only the segments it
+    hits are rewritten, the centroid geometry is carried unchanged (erasure
+    is maintenance, it must never drift the index contract), and one
+    pointer commit publishes the result. ``keys`` broadcasts (erasure
+    requests are tiny next to the index).
     """
-    import shutil
-
-    from etl_hiscox_spark.operators.dedup import _require_local_index_path
-    from etl_hiscox_spark.sources import genlog
-
-    if genlog.is_generational(spark, path):
-        return segindex.erase(spark, path, _IVF, keys, id_col)
-    # driver-local paths only (ADVICE r10): the partition swaps below are
-    # os.rename — fail loudly BEFORE any Spark work, never leak __erase
-    local = _require_local_index_path(spark, path, "erase_from_ivf_index")
-    load_ivf_centroids(spark, path)  # loud on an uncommitted index
-    idx = spark.read.parquet(path)
-    k = F.broadcast(keys.select(F.col(id_col)).distinct())
-    hits = idx.join(k, id_col, "left_semi").persist()
-    try:
-        n_erased = hits.count()
-        if n_erased == 0:
-            return 0
-        affected = sorted(
-            r["__cluster"] for r in hits.select("__cluster").distinct().collect()
-        )
-    finally:
-        hits.unpersist(blocking=False)
-    kept = idx.filter(F.col("__cluster").isin(affected)).join(k, id_col, "left_anti")
-    tmp = path.rstrip("/") + "__erase"
-    ltmp = local.rstrip("/") + "__erase"
-    _write_ivf_partitions(kept, tmp)
-    # invalidate the commit record before mutating any partition (see
-    # docstring): rename aside, never delete — the only on-disk copy of
-    # the geometry must survive a crash in the swap window (r10 review)
-    cdir = os.path.join(local, "_centroids")
-    cbak = os.path.join(local, "_centroids__erase")
-    os.rename(cdir, cbak)
-    for c in affected:
-        dst = os.path.join(local, f"__cluster={c}")
-        src = os.path.join(ltmp, f"__cluster={c}")
-        shutil.rmtree(dst)
-        if os.path.exists(src):  # fully-erased cluster: directory disappears
-            os.rename(src, dst)
-    shutil.rmtree(ltmp)
-    os.rename(cbak, cdir)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
-    refresh_swapped_path(spark, path)
-    return n_erased
+    return segindex.erase(spark, path, _IVF, keys, id_col)
 
 
 def rebuild_ivf_index(
@@ -1125,61 +894,53 @@ def rebuild_ivf_index(
     ``_centroids`` commit record; ``n_clusters=None`` keeps the current
     cluster count. Returns the new centroid matrix.
 
-    Commit protocol (rename-aside, the same family as
-    :func:`erase_from_ivf_index`): the COMPLETE new index is staged at
-    ``<path>__rebuild`` — partitions first, centroids LAST, so the staged
-    tree is itself a valid index only once finished — then two atomic
-    renames: live → ``<path>__old``, staged → live; ``__old`` is removed
-    last. Every crash window leaves either the untouched live index, or
-    two complete indexes on disk with the live name absent (probes fail
-    loudly on the missing path; ``dedup.recover_staged_rebuild``
-    completes or rolls back the interrupted swap).
-    There is never a half-valid index under the live name, and the
-    pre-rebuild geometry stays on disk until the swap has fully landed.
-    Driver-local paths only, like the other maintenance ops.
+    The complete new index stages as one fresh segment and a single
+    pointer commit under a new geometry epoch makes it live
+    (:func:`segindex.rebuild`); a crash before the commit leaves the old
+    head and its geometry serving, and the orphaned stage is
+    vacuum-reclaimable.
     """
-    from etl_hiscox_spark.operators.dedup import (
-        begin_staged_rebuild,
-        commit_staged_rebuild,
-    )
-    from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # generational form: the pointer flip replaces the two-rename swap
-        def _retrain(h, target: str) -> np.ndarray:
-            old_C = load_ivf_centroids(spark, h.paths[0], resolved=True)
-            k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
-            live_df = _read_ivf_segments(spark, h.paths).drop("__cluster")
+    return segindex.rebuild(
+        spark, path,
+        _retrain_stage(spark, embedding_col, id_col, n_clusters, seed, train_fraction, max_iter),
+    )
+
+
+def _retrain_stage(
+    spark, embedding_col: str, id_col: str, n_clusters: int | None,
+    seed: int, train_fraction: float, max_iter: int | None,
+) -> Callable[[segindex.Head, str], np.ndarray]:
+    """The stage callback :func:`rebuild_ivf_index` hands to
+    :func:`segindex.rebuild`: ``(head, target)`` re-fits k-means over the
+    head's live rows and stages the reassigned index at ``target``;
+    returns the new centroid matrix."""
+
+    def _retrain(h: segindex.Head, target: str) -> np.ndarray:
+        old_C = load_ivf_centroids(spark, h.paths[0], resolved=True)
+        k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
+        # k-means|| seeds from per-partition samples, so the fit reads the
+        # live rows in id order: the same rows fit the same centroids
+        # however the head is split into segments (build + appends, or
+        # compacted). Persisted, so the fit, its summary and the staged
+        # write sort once.
+        live_df = (
+            _read_ivf_segments(spark, h.paths).drop("__cluster").orderBy(id_col).persist()
+        )
+        try:
             assigned, C = ivf_index(
                 live_df, embedding_col, id_col, k, seed, train_fraction, max_iter
             )
-            _write_ivf_partitions(assigned, target)
-            _write_ivf_centroids(spark, target, C, quantized="__codes" in live_df.columns)
-            return C
+            # quantized layouts survive a rebuild: the __codes/__qscale
+            # columns ride through ivf_index as ordinary payload, so the
+            # staged commit record must carry the same flag for appends
+            quantized = "__codes" in live_df.columns
+            _stage_ivf_segment(assigned, target, C, quantized, "rebuild_ivf_index")
+        finally:
+            live_df.unpersist()
+        return C
 
-        return segindex.rebuild(spark, path, _retrain)
-
-    # leftover check FIRST (r11 review): after a crash in the two-rename
-    # swap window the live path is absent and load_ivf_centroids' "rebuild
-    # with write_ivf_index" advice would direct the operator to orphan the
-    # recovery copies — begin_staged_rebuild's leftover message is the
-    # correct recovery (shared protocol with rebuild_minhash_index)
-    tmp = begin_staged_rebuild(spark, path, "rebuild_ivf_index")
-    old_C = load_ivf_centroids(spark, path)  # loud on an uncommitted index
-    k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
-    live = spark.read.parquet(path).drop("__cluster")
-    assigned, C = ivf_index(
-        live, embedding_col, id_col, k, seed, train_fraction, max_iter
-    )
-    _write_ivf_partitions(assigned, tmp)
-    # quantized layouts survive a rebuild: the __codes/__qscale columns
-    # ride through ivf_index as ordinary payload, so the staged commit
-    # record must carry the same flag for future appends
-    _write_ivf_centroids(
-        spark, tmp, C, quantized="__codes" in live.columns
-    )
-    commit_staged_rebuild(spark, path, "rebuild_ivf_index")
-    return C
+    return _retrain
 
 
 def ivf_fragmentation_stats(spark, path: str) -> DataFrame:

@@ -61,8 +61,9 @@ def erase_subject(
     and paying that (plus four residual scans) for a guaranteed no-op is
     hours of wasted IO at scale (r11 review).
     """
-    from etl_hiscox_spark.operators.dedup import erase_from_minhash_index
-    from etl_hiscox_spark.operators.similarity import erase_from_ivf_index
+    from etl_hiscox_spark.operators.dedup import _LSH, erase_from_minhash_index
+    from etl_hiscox_spark.operators.segindex import live_rows
+    from etl_hiscox_spark.operators.similarity import _IVF, erase_from_ivf_index
     from etl_hiscox_spark.sources.txnlog import TxnTable
     from etl_hiscox_spark.sources.writers import erase_keys as erase_base
 
@@ -129,43 +130,25 @@ def erase_subject(
                 "n_files_rewritten": int(n),
             }
 
-        # residual scans of index stores resolve the LIVE generation for
-        # the pointer layout (reading a generational root raw would scan
-        # every superseded generation — r12); flat layouts resolve to
-        # themselves
-        from etl_hiscox_spark.sources.genlog import live_index_paths
-
+        # residual scans of index stores read the LIVE segments (reading
+        # an index root raw would scan every superseded generation — r12)
         def do_ivf(path: str, id_col: str) -> dict:
             k = kdf.select(F.col(kc).alias(id_col))
             n = erase_from_ivf_index(spark, path, k, id_col)
-            if verify:
-                from etl_hiscox_spark.operators.similarity import _read_ivf_segments
-
-                if residuals(
-                    _read_ivf_segments(spark, live_index_paths(spark, path)), id_col
-                ):
-                    raise ValueError(
-                        f"erase_subject: residual subject rows in IVF index {path!r}"
-                    )
+            if verify and residuals(live_rows(spark, path, _IVF), id_col):
+                raise ValueError(
+                    f"erase_subject: residual subject rows in IVF index {path!r}"
+                )
             return {"kind": "ivf_index", "path": path, "key_col": id_col, "n_erased": int(n)}
 
         def do_minhash(path: str, id_col: str) -> dict:
             k = kdf.select(F.col(kc).alias(id_col))
             n = erase_from_minhash_index(spark, path, k, id_col)
-            if verify:
-                import os
-
-                buckets = spark.read.parquet(
-                    *[
-                        os.path.join(p, "buckets")
-                        for p in live_index_paths(spark, path)
-                    ]
+            if verify and residuals(live_rows(spark, path, _LSH), "doc"):
+                raise ValueError(
+                    f"erase_subject: residual subject fingerprints in minhash "
+                    f"index {path!r}"
                 )
-                if residuals(buckets, "doc"):
-                    raise ValueError(
-                        f"erase_subject: residual subject fingerprints in minhash "
-                        f"index {path!r}"
-                    )
             return {"kind": "minhash_index", "path": path, "key_col": id_col, "n_erased": int(n)}
 
         # The stores are DISJOINT paths with independent commit protocols,

@@ -26,13 +26,15 @@ from etl_hiscox_spark.functions.text import (
     tokens,
 )
 from etl_hiscox_spark.operators.dedup import (
+    _LSH,
     exact_dedup,
     jaccard_pairs,
     near_dedup_minhash,
     simhash_candidates,
 )
 from etl_hiscox_spark.concurrency import run_overlapped
-from etl_hiscox_spark.operators.similarity import cosine_topk
+from etl_hiscox_spark.operators.segindex import live_rows
+from etl_hiscox_spark.operators.similarity import _IVF, cosine_topk
 from etl_hiscox_spark.queries import QUERIES, register
 from etl_hiscox_spark.registry import load_table
 from etl_hiscox_spark.smalldf import local_rows_df
@@ -224,7 +226,7 @@ def l2_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l2_incr_index", sf_dir), "minhash_index")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     out = probe_minhash_index(
         new, "text", "doc_id", path, verify_df=docs, threshold=0.8
     )
@@ -232,23 +234,26 @@ def l2_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _parquet_content_checksum(
-    spark: SparkSession, path: str, exclude_col: str | None = None
+    spark: SparkSession, root: str, kind, exclude_col: str | None = None
 ) -> tuple:
-    """(row count, exact decimal sum of xxhash64 over every column) of a
-    parquet dir — the content-equality invariant the index-maintenance
-    queries raise on. decimal(38,0): a long sum of ~2^63-scale hashes
-    overflows under ANSI mode; decimal is exact at any corpus size.
-    ``exclude_col`` drops one column from the hash — the rebuild
-    invariant, where row payloads must survive byte-for-byte while the
-    ``__cluster`` label (the thing a rebuild exists to change) is left
-    out."""
-    d = spark.read.parquet(path)
+    """(row count, exact decimal sum of xxhash64 over every column) of the
+    live rows of an index root of ``kind`` (``dedup._LSH`` or
+    ``similarity._IVF``; :func:`segindex.live_rows`), in ONE action over
+    the segment union — count and the hash-sum are distributive, so
+    the union checksum equals the summed per-segment checksums. It is the
+    content-equality invariant the index-maintenance queries raise on.
+    decimal(38,0): a long sum of ~2^63-scale hashes overflows under ANSI
+    mode; decimal is exact at any corpus size. ``exclude_col`` drops one
+    column from the hash — the rebuild invariant, where row payloads must
+    survive byte-for-byte while the ``__cluster`` label (the thing a
+    rebuild exists to change) is left out."""
+    d = live_rows(spark, root, kind)
     cols = sorted(c for c in d.columns if c != exclude_col)
     row = d.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")).alias("h"),
     ).first()
-    return (row["n"], row["h"])
+    return (row["n"], row["h"] or 0)
 
 
 def _qvec_and(emb: DataFrame, first_op):
@@ -269,19 +274,20 @@ def _qvec_and(emb: DataFrame, first_op):
     )
 
 
-def _parquet_file_count(path: str, exclude: str | None = None) -> int:
-    """Data-file count under ``path`` (optionally skipping one subdir name,
-    e.g. the IVF _centroids commit record)."""
+def _live_file_count(spark: SparkSession, root: str, kind) -> int:
+    """Data-file count over the live segments of an index root of
+    ``kind`` (the IVF ``_centroids`` commit record is not data)."""
     import os as _os
+
+    from etl_hiscox_spark.sources.genlog import live_index_paths
 
     return sum(
         1
-        for root, _, files in _os.walk(path)
+        for p in live_index_paths(spark, root)
+        for d, _, files in _os.walk(kind.data(p))
         for f in files
-        if f.endswith(".parquet")
-        and (exclude is None or _os.sep + exclude not in root)
+        if f.endswith(".parquet") and _os.sep + "_centroids" not in d
     )
-
 
 
 @register(
@@ -307,9 +313,10 @@ def _parquet_file_count(path: str, exclude: str | None = None) -> int:
 def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH index MAINTENANCE lifecycle (VERDICT r9 item 3): the historical
     # half is ingested in TWO batches (initial write + one append — each
-    # append adds a file set to <path>/buckets), then COMPACTED
-    # (operators/dedup.compact_minhash_index: range-partitioned + sorted
-    # on the (band, bucket) probe key, meta-last commit protocol) before
+    # append adds a delta segment with its own bucket files), then
+    # COMPACTED (operators/dedup.compact_minhash_index: the segments merge
+    # into one, range-partitioned + sorted on the (band, bucket) probe
+    # key, committed by one pointer flip) before
     # the odd-id batch probes it. Loud invariants before the oracle sees
     # the probe: bucket-table content checksum identical across the
     # rewrite, file count strictly reduced. The declared output is then
@@ -329,18 +336,17 @@ def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(F.col("doc_id") % 2 == 1)
     write_minhash_index(
         docs.filter(F.col("doc_id") % 4 == 0), "text", "doc_id", path,
-        num_hashes=24, num_bands=6, generational=False,
+        num_hashes=24, num_bands=6,
     )
     write_minhash_index(
         docs.filter(F.col("doc_id") % 4 == 2), "text", "doc_id", path,
         num_hashes=24, num_bands=6, mode="append",
     )
-    buckets = _os.path.join(path, "buckets")
-    sig_before = _parquet_content_checksum(spark, buckets)
-    files_before = _parquet_file_count(buckets)
+    sig_before = _parquet_content_checksum(spark, path, _LSH)
+    files_before = _live_file_count(spark, path, _LSH)
     compact_minhash_index(spark, path)
-    sig_after = _parquet_content_checksum(spark, buckets)
-    files_after = _parquet_file_count(buckets)
+    sig_after = _parquet_content_checksum(spark, path, _LSH)
+    files_after = _live_file_count(spark, path, _LSH)
     if sig_after != sig_before:
         raise ValueError(
             f"compact_minhash_index changed bucket content: {sig_before} -> {sig_after}"
@@ -380,8 +386,9 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # erase_from_minhash_index): the index retains a banded fingerprint
     # of every ingested doc, so right-to-be-forgotten reaches it like
     # the primary table. History = even doc_ids; erase doc_id % 10 == 6
-    # from the index (meta-last commit protocol — an interrupted erasure
-    # rejects loudly); the odd-id batch then probes it and the declared
+    # from the index (a new segment, published by one pointer commit — an
+    # interrupted erasure leaves the old head serving); the odd-id batch
+    # then probes it and the declared
     # output must equal the exact cross-batch Jaccard graph EXCLUDING
     # the erased docs from the dup_of side — a fingerprint surviving
     # erasure (or collateral bucket loss) hash-fails. Loud invariants:
@@ -400,7 +407,7 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l2_lsh_erase", sf_dir), "minhash_index")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     erase = old.filter(F.col("doc_id") % 10 == 6).select("doc_id")
     expected = erase.count() * 6  # num_bands rows per indexed doc
     n_erased = erase_from_minhash_index(spark, path, erase, "doc_id")
@@ -409,9 +416,7 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"erase_from_minhash_index erased {n_erased} bucket rows, expected {expected}"
         )
     remaining = (
-        spark.read.parquet(_os.path.join(path, "buckets"))
-        .filter(F.col("doc") % 10 == 6)
-        .count()
+        live_rows(spark, path, _LSH).filter(F.col("doc") % 10 == 6).count()
     )
     if remaining:
         raise ValueError(f"{remaining} erased docs still fingerprinted in the index")
@@ -450,8 +455,8 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IVF side closed with l3_ivf_rebuild_probe): the meta pins the
     # banding forever by design, so changing recall requirements needs
     # operators/dedup.rebuild_minhash_index — re-shingle the supplied
-    # corpus under NEW parameters and swap atomically under the
-    # rename-aside protocol. History = even doc_ids indexed at
+    # corpus under NEW parameters into a fresh segment and publish it by
+    # one pointer commit. History = even doc_ids indexed at
     # (24 hashes, 6 bands); rebuild migrates the live index to
     # (32 hashes, 8 bands); the odd-id batch then probes it reading the
     # NEW banding from the meta. Loud invariants before the oracle sees
@@ -472,7 +477,7 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l2_lsh_rebuild", sf_dir), "minhash_index")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     migrated = rebuild_minhash_index(
         spark, old, "text", "doc_id", path, num_hashes=32, num_bands=8
     )
@@ -481,7 +486,7 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"rebuild_minhash_index did not migrate the meta: {migrated}"
         )
     n_docs = old.count()
-    n_rows = spark.read.parquet(_os.path.join(path, "buckets")).count()
+    n_rows = live_rows(spark, path, _LSH).count()
     if n_rows != 8 * n_docs:
         raise ValueError(
             f"rebuilt bucket table has {n_rows} rows for {n_docs} docs — "
@@ -553,7 +558,7 @@ def l2_lsh_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     write_minhash_index(
-        old, "text", "doc_id", root, num_hashes=24, num_bands=6, generational=True
+        old, "text", "doc_id", root, num_hashes=24, num_bands=6
     )
     erase = old.filter(F.col("doc_id") % 10 == 6).select("doc_id")
     # the erase-predicate count reads the base table only — overlap it
@@ -911,7 +916,7 @@ def l3_ivf_quantized_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
             centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-            quantize=True, generational=False,
+            quantize=True,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
@@ -1998,7 +2003,7 @@ def l3_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec, centroids = _qvec_and(
         emb,
         lambda: write_ivf_index(
-            emb, path, "embedding", "vec_id", n_clusters=16, seed=42, generational=False
+            emb, path, "embedding", "vec_id", n_clusters=16, seed=42
         ),
     )
     out = ivf_probe_topk(
@@ -2039,7 +2044,7 @@ def l3_ivf_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            n_clusters=16, seed=42, max_iter=4, generational=False,
+            n_clusters=16, seed=42, max_iter=4,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
@@ -2082,17 +2087,17 @@ def l3_ivf_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42), generational=False,
+            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == 1), path, "embedding", "vec_id")
     append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == 3), path, "embedding", "vec_id")
 
-    sig_before = _parquet_content_checksum(spark, path)
-    files_before = _parquet_file_count(path, exclude="_centroids")
+    sig_before = _parquet_content_checksum(spark, path, _IVF)
+    files_before = _live_file_count(spark, path, _IVF)
     compact_ivf_index(spark, path)
-    sig_after = _parquet_content_checksum(spark, path)
-    files_after = _parquet_file_count(path, exclude="_centroids")
+    sig_after = _parquet_content_checksum(spark, path, _IVF)
+    files_after = _live_file_count(spark, path, _IVF)
     if sig_after != sig_before:
         raise ValueError(
             f"compact_ivf_index changed index content: {sig_before} -> {sig_after}"
@@ -2144,7 +2149,7 @@ def l3_ivf_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb, path, "embedding", "vec_id",
-            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42), generational=False,
+            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
         ),
     )
     erase = emb.filter(F.col("vec_id") % 10 == 7).select("vec_id")
@@ -2154,9 +2159,7 @@ def l3_ivf_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"erase_from_ivf_index erased {n_erased} rows, predicate covers {expected}"
         )
-    remaining = (
-        spark.read.parquet(path).filter(F.col("vec_id") % 10 == 7).count()
-    )
+    remaining = live_rows(spark, path, _IVF).filter(F.col("vec_id") % 10 == 7).count()
     if remaining:
         raise ValueError(f"{remaining} erased vec_ids still readable in the index")
     out = ivf_probe_topk(
@@ -2309,7 +2312,7 @@ def l3_ivf_drift_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l3_ivf_drift", sf_dir), "ivf_index")
     C = random_hyperplanes(dim=64, n_planes=8, seed=7)
     write_ivf_index(
-        emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id", centroids=C, generational=False
+        emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id", centroids=C
     )
     batch = emb.filter(F.col("vec_id") % 2 == 1)
     return ivf_centroid_drift(spark, path, batch, "embedding")
@@ -2323,9 +2326,9 @@ def l3_ivf_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "drifted" centroids the 1.25x trigger exists to flag), the other
     # half is appended against that frozen geometry, then
     # operators/similarity.rebuild_ivf_index retrains k-means over the
-    # LIVE corpus and re-materializes the layout under the rename-aside
-    # commit protocol (stage complete at __rebuild, two atomic renames,
-    # pre-rebuild geometry on disk until the swap lands). Loud invariants
+    # LIVE corpus and re-materializes the layout as one fresh segment
+    # published by a single pointer commit (the pre-rebuild geometry
+    # serves until that commit lands). Loud invariants
     # before the oracle sees the probe: (1) the row PAYLOAD checksum
     # (every column except the __cluster label, which rebuild exists to
     # change) is identical across the rebuild — a dropped/duplicated/
@@ -2358,16 +2361,16 @@ def l3_ivf_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            centroids=planes, generational=False,
+            centroids=planes,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
 
-    sig_before = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    sig_before = _parquet_content_checksum(spark, path, _IVF, exclude_col="__cluster")
     # max_iter=4: the probe below is centroid-independent (full probe), so
     # the fit is capped — see l3_ivf_append_probe
     C = rebuild_ivf_index(spark, path, "embedding", "vec_id", max_iter=4)
-    sig_after = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    sig_after = _parquet_content_checksum(spark, path, _IVF, exclude_col="__cluster")
     if sig_after != sig_before:
         raise ValueError(
             f"rebuild_ivf_index changed the row payload: {sig_before} -> {sig_after}"
@@ -2392,14 +2395,14 @@ def l3_ivf_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sources/genlog, the LSH twin is l2_lsh_gen_lifecycle_probe): a
     # QUANTIZED index on a file://-prefixed root in the object-store
     # layout. Build on even vec_ids (pinned geometry, int8 codes stored
-    # in-partition) -> APPEND the odd half inside the live generation
-    # (plain parquet append, no flip needed) -> COMPACT as a new
+    # in-partition) -> APPEND the odd half as a delta segment (an OCC
+    # pointer commit) -> COMPACT as a new
     # generation (pointer flip; per-cluster sizing via the distributed
     # listing) -> ERASE vec_id % 10 == 7 (a full staged generation — the
     # pointer names one directory, so partial reuse is the file-manifest
     # upgrade, documented on the operator) -> vacuum the superseded
     # generations -> full probe. Loud invariants: pointer history is
-    # exactly [build, compact, erase], vacuum removes exactly 2
+    # exactly [build, append, compact, erase], vacuum removes exactly 3
     # generations, and the QUANTIZED codes-only probe (reading the live
     # generation's stored codes) agrees with the float probe on the
     # top-1 id — the quantized flag must survive every pointer flip.
@@ -2434,7 +2437,7 @@ def l3_ivf_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: write_ivf_index(
                 emb.filter(F.col("vec_id") % 2 == 0), root, "embedding", "vec_id",
                 centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-                quantize=True, generational=True,
+                quantize=True,
             ),
         ]
     )
@@ -2516,7 +2519,7 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), root, "embedding", "vec_id",
             centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-            quantize=True, generational=True,
+            quantize=True,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), root, "embedding", "vec_id")
@@ -2528,26 +2531,6 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     if len(segs) != 2:
         raise ValueError(f"expected a two-segment head, got {len(segs)}")
 
-    def _segments_checksum() -> tuple:
-        # ONE action over the segment union instead of one per segment
-        # (r17): count and the decimal hash-sum are distributive, so the
-        # union checksum equals the summed per-segment checksums — a
-        # two-segment head pays one job, not two. (Union via
-        # _read_ivf_segments: each gen-* is its own partition tree, so a
-        # single multi-root read is refused by Spark.)
-        from etl_hiscox_spark.operators.similarity import _read_ivf_segments
-
-        segs = genlog.live_index_paths(spark, root)
-        d = _read_ivf_segments(spark, segs)
-        cols = sorted(d.columns)
-        row = d.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"] or 0)
-
     # the codes-only probe and the content checksum both READ the same
     # two-segment head — independent actions, overlapped (r17, guide §2.6)
     top_q, sig_before = run_overlapped(
@@ -2555,7 +2538,7 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: ivf_probe_topk_quantized(
                 spark, root, "embedding", "vec_id", qvec, k=1, n_probe=16
             ).first(),
-            _segments_checksum,
+            lambda: _parquet_content_checksum(spark, root, _IVF),
         ]
     )
     compact_ivf_index(spark, root)
@@ -2565,7 +2548,9 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, root, None, "embedding", "vec_id", qvec, k=10, n_probe=16
     )
     # post-compact checksum and the float probe both read the merged head
-    sig_after, top_f = run_overlapped([_segments_checksum, out.first])
+    sig_after, top_f = run_overlapped(
+        [lambda: _parquet_content_checksum(spark, root, _IVF), out.first]
+    )
     if sig_after != sig_before:
         raise ValueError(
             f"segment merge changed index content: {sig_before} -> {sig_after}"
@@ -2581,78 +2566,82 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("l3_ivf_recover_rebuild_probe", oracle=_COSINE_ORACLE)
 def l3_ivf_recover_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # CRASH RECOVERY of the flat layout's staged rebuild (r12, VERDICT
-    # r11 item 4 — operators/dedup.recover_staged_rebuild): the rebuild
-    # protocol stages the complete retrained index at <path>__rebuild and
-    # commits with two renames; this query simulates the worst crash
-    # window — AFTER the live index moved to __old, BEFORE the stage was
-    # promoted (live name absent, probes would fail loudly) — and recovery
-    # must COMPLETE the swap, because the stage is complete by protocol
-    # the moment the first rename ran. Build on even vec_ids with pinned
-    # planes, append the odd half, stage a k-means retrain of the live
-    # corpus exactly as rebuild_ivf_index would, crash, recover. Loud
-    # invariants before the oracle sees the probe: recovery reports
-    # 'completed_swap'; the row payload checksum (everything except the
-    # __cluster label the rebuild exists to change) is identical across
-    # crash + recovery; the recovered geometry is the RETRAINED one (a
-    # rollback would leave the pinned planes); and a second recover is a
-    # 'none' no-op. The probe then reads the recovered index and must
-    # return the exact brute-force top-10 over the full corpus
-    # (n_probe = n_clusters, recall-exact by construction).
-    import os as _os
-
+    # CRASH RECOVERY of a rebuild (operators/segindex): a rebuild stages
+    # the complete retrained index as a fresh segment, then ONE pointer
+    # commit makes it live. This query simulates the crash window between
+    # the two — the retrain is staged through rebuild_ivf_index's own
+    # stage callback against the live head, and the commit never runs.
+    # Build on even vec_ids with pinned planes, append the odd half, stage
+    # the k-means retrain, crash. Loud invariants before the oracle sees
+    # the probe: the head and its geometry are unchanged (still the
+    # planes — a stage is invisible until its commit); the row payload
+    # checksum over the live segments (everything except the __cluster
+    # label a rebuild exists to change) is unchanged; vacuum reclaims the
+    # orphaned stage; and re-running rebuild_ivf_index commits the
+    # retrained geometry with the payload intact. The probe then reads
+    # the recovered index and must return the exact brute-force top-10
+    # over the full corpus (n_probe = n_clusters, recall-exact by
+    # construction).
     import numpy as _np
 
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
+    from etl_hiscox_spark.operators import segindex
     from etl_hiscox_spark.operators.similarity import (
+        _retrain_stage,
         append_to_ivf_index,
-        ivf_index,
         ivf_probe_topk,
         load_ivf_centroids,
         random_hyperplanes,
+        rebuild_ivf_index,
         write_ivf_index,
     )
     from etl_hiscox_spark.queries.writes import _scratch
+    from etl_hiscox_spark.sources import genlog
 
     emb = load_table(spark, "embeddings", sf_dir)
-    path = _os.path.join(_scratch("l3_ivf_recover", sf_dir), "ivf_index")
+    path = os.path.join(_scratch("l3_ivf_recover", sf_dir), "ivf_index")
     planes = random_hyperplanes(dim=64, n_planes=16, seed=42)
     qvec, _ = _qvec_and(
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            centroids=planes, generational=False,
+            centroids=planes,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
-    sig_before = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    sig_before = _parquet_content_checksum(spark, path, _IVF, exclude_col="__cluster")
 
-    # stage the retrain exactly as rebuild_ivf_index does (max_iter=4:
-    # the full probe below is centroid-independent — l3_ivf_append_probe)
-    live = spark.read.parquet(path).drop("__cluster")
-    assigned, C = ivf_index(live, "embedding", "vec_id", 16, 42, 1.0, 4)
-    from etl_hiscox_spark.operators.similarity import (
-        _write_ivf_centroids,
-        _write_ivf_partitions,
-    )
+    # stage the retrain exactly as rebuild_ivf_index does, then CRASH: the
+    # pointer commit never runs (max_iter=1: the crashed stage is
+    # discarded, so the cheapest fit that is still a retrain will do)
+    head = segindex.head(spark, path)
+    stage = head.path(genlog.new_generation_name())
+    _retrain_stage(spark, "embedding", "vec_id", None, 42, 1.0, 1)(head, stage)
 
-    _write_ivf_partitions(assigned, path + "__rebuild")
-    _write_ivf_centroids(spark, path + "__rebuild", C, quantized=False)
-    _os.rename(path, path + "__old")  # first rename landed, then CRASH
+    after = segindex.head(spark, path)
+    if after.base != head.base or after.record != head.record:
+        raise ValueError(f"the uncommitted stage moved the head: {head} -> {after}")
+    if not _np.allclose(load_ivf_centroids(spark, path), planes):
+        raise ValueError("the uncommitted stage changed the live geometry")
+    sig_crashed = _parquet_content_checksum(spark, path, _IVF, exclude_col="__cluster")
+    if sig_crashed != sig_before:
+        raise ValueError(
+            f"the uncommitted stage changed the live payload: {sig_before} -> {sig_crashed}"
+        )
+    n_vacuumed = genlog.vacuum_generations(spark, path, keep_last=1, min_age_seconds=0)
+    if n_vacuumed != 1 or os.path.exists(stage):
+        raise ValueError(f"vacuum removed {n_vacuumed} generations, expected the one orphaned stage")
 
-    action = recover_staged_rebuild(spark, path)
-    if action != "completed_swap":
-        raise ValueError(f"recovery took {action!r}, expected completed_swap")
-    sig_after = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    # max_iter=4: the full probe below is centroid-independent — see
+    # l3_ivf_append_probe
+    C = rebuild_ivf_index(spark, path, "embedding", "vec_id", max_iter=4)
+    sig_after = _parquet_content_checksum(spark, path, _IVF, exclude_col="__cluster")
     if sig_after != sig_before:
         raise ValueError(
             f"recovery changed the row payload: {sig_before} -> {sig_after}"
         )
     C_live = load_ivf_centroids(spark, path)
-    if C_live.shape != planes.shape or _np.allclose(C_live, planes):
-        raise ValueError("recovery restored the stale geometry, not the retrain")
-    if recover_staged_rebuild(spark, path) != "none":
-        raise ValueError("a second recovery was not a no-op")
+    if C_live.shape != planes.shape or _np.allclose(C_live, planes) or not _np.allclose(C_live, C):
+        raise ValueError("the re-run rebuild did not commit the retrained geometry")
     out = ivf_probe_topk(
         spark, path, None, "embedding", "vec_id", qvec, k=10, n_probe=16
     )

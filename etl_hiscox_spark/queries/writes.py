@@ -869,8 +869,13 @@ def s19_gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subject, ivf/minhash count their own layouts — each with a pure
     # exclusion-predicate SQL twin, the same oracle shape as the
     # l3/l2 erase probes.
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
-    from etl_hiscox_spark.operators.similarity import random_hyperplanes, write_ivf_index
+    from etl_hiscox_spark.operators.dedup import _LSH, write_minhash_index
+    from etl_hiscox_spark.operators.segindex import live_rows
+    from etl_hiscox_spark.operators.similarity import (
+        _IVF,
+        random_hyperplanes,
+        write_ivf_index,
+    )
     from etl_hiscox_spark.plans.gdpr import erase_subject
     from etl_hiscox_spark.sources.txnlog import TxnTable
 
@@ -903,9 +908,8 @@ def s19_gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: write_ivf_index(
                 emb, ivf, "embedding", "vec_id",
                 centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-                generational=False,
             ),
-            lambda: write_minhash_index(docs, "text", "doc_id", mh, generational=False),
+            lambda: write_minhash_index(docs, "text", "doc_id", mh),
         ]
     )
 
@@ -954,9 +958,8 @@ def s19_gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
             run_overlapped(
                 [
                     lambda: spark.read.parquet(base).count(),
-                    lambda: spark.read.parquet(ivf).count(),
-                    lambda: spark.read.parquet(os.path.join(mh, "buckets"))
-                    .select("doc").distinct().count(),
+                    lambda: live_rows(spark, ivf, _IVF).count(),
+                    lambda: live_rows(spark, mh, _LSH).select("doc").distinct().count(),
                     lambda: t.read().count(),
                     lambda: t.read(0).count(),
                 ]

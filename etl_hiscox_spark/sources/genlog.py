@@ -78,23 +78,18 @@ resolve_root = check_root
 
 
 def is_generational(spark, root: str) -> bool:
-    """True when ``<root>/_gen_log`` exists — the layout marker every
-    index entry point checks before resolving. A scheme-less path on a
-    non-file defaultFS is answered ``False`` without touching the
-    filesystem: generational roots are always addressed by qualified URI
-    (:func:`resolve_root` enforces it at build/commit time), so a path
-    this function cannot resolve cannot name one — and the flat-layout
-    probes that only ever hand the path to Spark must keep working."""
+    """True when ``<root>/_gen_log`` exists. Index entry points do not ask:
+    every read and every maintenance op resolves the head
+    (:func:`current_generation`), which rejects a root without a log.
+    Among the operators only ``dedup.migrate_flat_index_to_generational``
+    asks, to tell a flat tree (or a crashed migration) from a committed
+    index. A path pyarrow cannot resolve or reach is answered ``False``."""
     from pyarrow import fs as pafs
 
     try:
         log = pointer_log(resolve_root(spark, root))
         return log.fs.get_file_info(log.dir).type == pafs.FileType.Directory
     except (OSError, ValueError, KeyError):
-        # a scheme pyarrow cannot resolve (or a store it cannot reach)
-        # cannot be ANSWERED generational — treat as flat and let the
-        # downstream op produce its own loud, actionable rejection
-        # (maintenance: the driver-local guard; probes: Spark's reader)
         return False
 
 
@@ -276,7 +271,11 @@ def interpose_head_resolution(hook):
 
 
 def current_generation(spark, root: str) -> tuple[int, str]:
-    """(pointer version, live generation dir name) — loud when the log is
+    """(pointer version, live generation dir name) — THE head resolution
+    every index reader and maintenance op goes through, so it is the one
+    place a root without a pointer log is rejected (nothing built there,
+    or a flat tree to migrate with
+    ``migrate_flat_index_to_generational``). Also loud when the log is
     present but empty (an interrupted first build: the generation data
     may exist but nothing ever became live). Resolution goes through the
     checkpoint hint (:func:`_head_version`) — O(commits-since-checkpoint)
@@ -294,6 +293,13 @@ def current_generation(spark, root: str) -> tuple[int, str]:
 def _current_generation(spark, root: str) -> tuple[int, str]:
     root = resolve_root(spark, root)
     head = _head_version(root)
+    if head is None and not is_generational(spark, root):
+        raise ValueError(
+            f"{root!r} is not a GENERATIONAL index root (no {_GEN_LOG}): "
+            "nothing was built there, or it holds a flat index tree — "
+            "upgrade a flat tree in place with "
+            "migrate_flat_index_to_generational(spark, root)"
+        )
     if head is None:
         raise ValueError(
             f"generational index at {root!r} has no committed pointer — "
@@ -314,24 +320,22 @@ def pointer_segments(record: dict) -> list[str]:
 
 def live_index_paths(spark, root: str) -> list[str]:
     """The directories a reader must scan: the live pointer's segment
-    list for a generational root (one entry after a build/compact/erase/
-    rebuild; build + one delta per OCC append until the next compact
-    merges them — the LSM shape), ``[root]`` for the flat layout. Every
-    index read path calls this once, so both layouts and both segment
-    shapes share all downstream code."""
-    if not is_generational(spark, root):
-        return [root]
+    list (one entry after a build/compact/erase/rebuild; build + one delta
+    per OCC append until the next compact merges them — the LSM shape).
+    Every index read path calls this once, so both segment shapes share
+    all downstream code; a root without a pointer log is rejected by the
+    head resolution (:func:`current_generation`)."""
     version, _ = current_generation(spark, root)
     rec = read_pointer(resolve_root(spark, root), version)
     return [_join(root, s) for s in pointer_segments(rec)]
 
 
 def live_index_path(spark, root: str) -> str:
-    """Single-directory form of :func:`live_index_paths` — the flat root,
-    or a generational head with exactly one segment. A multi-segment head
-    (delta appends pending compaction) has no single live directory, so
-    this raises rather than silently dropping the deltas; multi-segment-
-    capable callers use the plural form."""
+    """Single-directory form of :func:`live_index_paths` — a head with
+    exactly one segment. A multi-segment head (delta appends pending
+    compaction) has no single live directory, so this raises rather than
+    silently dropping the deltas; multi-segment-capable callers use the
+    plural form."""
     paths = live_index_paths(spark, root)
     if len(paths) == 1:
         return paths[0]

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 def _local_fs_path(path: str) -> str:
     """``file:``-scheme strip for the os/shutil legs of a tmp+swap —
     Spark-facing calls keep the original URI. (A ``file:`` path is
-    always driver-local; callers gate remote schemes separately via
-    ``operators.dedup._require_local_index_path``.) Both URI renderings
+    always driver-local; callers gate remote schemes separately with
+    ``listing._meta_is_local``.) Both URI renderings
     are normalized — ``file:///x`` (RFC form) AND ``file:/x`` (Hadoop's
     ``Path.toString()`` single-slash form, ADVICE r11): strip the scheme,
     then collapse leading slashes to one, the same normalization as

@@ -294,3 +294,50 @@ def test_sources_never_import_operators():
         or mod.startswith("etl_hiscox_spark.operators.")
     ]
     assert offenders == []
+
+
+def test_index_layout_is_known_in_one_place():
+    """The generation-pointer layout is the only index layout, and one
+    place knows it: under ``operators/`` nothing but ``segindex.py`` and
+    ``dedup.migrate_flat_index_to_generational`` asks
+    ``genlog.is_generational`` — every other entry point resolves the head
+    through genlog, which rejects a root without a pointer log — and no
+    call anywhere in the package passes ``generational=``."""
+    import ast
+    from pathlib import Path
+
+    import etl_hiscox_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    asks, switches = [], []
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.fns = rel, []
+
+        def visit_FunctionDef(self, node):
+            self.fns.append(node.name)
+            self.generic_visit(node)
+            self.fns.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            where = f"{self.rel}:{node.lineno}"
+            if (
+                name == "is_generational"
+                and self.rel.startswith("operators/")
+                and self.rel != "operators/segindex.py"
+                and "migrate_flat_index_to_generational" not in self.fns
+            ):
+                asks.append(where)
+            if any(k.arg == "generational" for k in node.keywords):
+                switches.append(where)
+            self.generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        Scan(path.relative_to(root).as_posix()).visit(ast.parse(path.read_text()))
+    assert asks == []
+    assert switches == []

@@ -7,6 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from etl_hiscox_spark.operators.dedup import (
+    _LSH,
     exact_dedup,
     jaccard_pairs,
     minhash_candidates,
@@ -14,7 +15,9 @@ from etl_hiscox_spark.operators.dedup import (
     simhash64,
     simhash_candidates,
 )
+from etl_hiscox_spark.operators.segindex import live_rows
 from etl_hiscox_spark.operators.similarity import (
+    _IVF,
     ann_topk_lsh,
     batch_cosine_topk_pandas,
     cosine_topk,
@@ -24,6 +27,14 @@ BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the window and the birds sing in the morning light over the hills"
 )
+
+
+def _live_dirs(spark, root):
+    """Driver-local paths of an index root's live segments."""
+    from etl_hiscox_spark.sources.genlog import live_index_paths
+    from etl_hiscox_spark.sources.writers import _local_fs_path
+
+    return [_local_fs_path(p) for p in live_index_paths(spark, root)]
 
 
 def _docs(spark):
@@ -390,7 +401,7 @@ def test_minhash_index_roundtrip_probe(spark, tmp_path):
     old = spark.createDataFrame(old_rows, "doc_id long, text string")
     new = spark.createDataFrame(new_rows, "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
 
     cand = probe_minhash_index(new, "text", "doc_id", path).collect()
     pairs = {(r["new_id"], r["dup_of"]) for r in cand}
@@ -411,7 +422,7 @@ def test_minhash_index_append_and_param_guard(spark, tmp_path):
     d1 = spark.createDataFrame([(1, "a b c d e f g h")], "doc_id long, text string")
     d2 = spark.createDataFrame([(2, "p q r s t u v w")], "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(d1, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(d1, "text", "doc_id", path, num_hashes=24, num_bands=6)
     # append with matching params extends the index
     write_minhash_index(d2, "text", "doc_id", path, num_hashes=24, num_bands=6, mode="append")
     probe = spark.createDataFrame([(9, "p q r s t u v w")], "doc_id long, text string")
@@ -434,7 +445,7 @@ def test_minhash_index_rejects_unbandable_width(spark, tmp_path):
 
     d = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="divisible"):
-        write_minhash_index(d, "text", "doc_id", str(tmp_path / "idx"), num_hashes=24, num_bands=5, generational=False)
+        write_minhash_index(d, "text", "doc_id", str(tmp_path / "idx"), num_hashes=24, num_bands=5)
 
 
 def test_probe_unresolved_candidates_surface_as_null(spark, tmp_path):
@@ -446,7 +457,7 @@ def test_probe_unresolved_candidates_surface_as_null(spark, tmp_path):
     old = spark.createDataFrame([(0, base)], "doc_id long, text string")
     new = spark.createDataFrame([(101, base)], "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, generational=False)
+    write_minhash_index(old, "text", "doc_id", path)
     # verify_df resolves only the NEW side — the old doc's counts are missing
     out = probe_minhash_index(new, "text", "doc_id", path, verify_df=new, threshold=0.5).collect()
     assert [(r["new_id"], r["dup_of"], r["jaccard"]) for r in out] == [(101, 0, None)]
@@ -459,11 +470,11 @@ def test_probe_unresolved_candidates_surface_as_null(spark, tmp_path):
 
 
 def test_interrupted_index_overwrite_fails_loud(spark, tmp_path):
-    """Commit protocol (ADVICE r8): meta is invalidated BEFORE an
-    overwrite's bucket write and rewritten only after it succeeds, so a
-    failure in between leaves a meta-less index and every probe fails
-    LOUDLY — never a stale meta banding probes differently from the
-    buckets (which would silently return zero duplicates)."""
+    """Commit protocol (ADVICE r8): an overwrite that dies mid-flight fails
+    LOUDLY and commits nothing — meta and buckets live in one immutable
+    segment, so probes keep answering from the previous head and can never
+    band against a meta that differs from the buckets (which would
+    silently return zero duplicates)."""
     import pytest as _pytest
 
     from etl_hiscox_spark.operators.dedup import (
@@ -475,18 +486,17 @@ def test_interrupted_index_overwrite_fails_loud(spark, tmp_path):
     old = spark.createDataFrame([(0, base)], "doc_id long, text string")
     new = spark.createDataFrame([(1, base)], "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     assert probe_minhash_index(new, "text", "doc_id", path).count() == 1
 
     # an overwrite that dies mid-flight: the signature build fails (bad
-    # column) AFTER the protocol has already invalidated the meta
+    # column) while staging, before any pointer commit
     with _pytest.raises(Exception):
-        write_minhash_index(old, "no_such_col", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
-    with _pytest.raises(ValueError, match="no readable meta"):
-        probe_minhash_index(new, "text", "doc_id", path)
+        write_minhash_index(old, "no_such_col", "doc_id", path, num_hashes=24, num_bands=6)
+    assert probe_minhash_index(new, "text", "doc_id", path).count() == 1
 
-    # recovery is a clean rebuild
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    # a clean rebuild still lands
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     assert probe_minhash_index(new, "text", "doc_id", path).count() == 1
 
 
@@ -513,7 +523,7 @@ def test_probe_with_verify_releases_owned_caches(spark, tmp_path):
         [(1, base.replace("kappa", "lambda"))], "doc_id long, text string"
     )
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, generational=False)
+    write_minhash_index(old, "text", "doc_id", path)
 
     # id-SET comparison, not counts: the ContextCleaner may reap caches
     # an earlier test released with blocking=False at any moment, so an
@@ -902,13 +912,12 @@ def test_mmr_topk_generic_id_types(spark):
 
 
 def test_ivf_rebuild_clears_stale_partitions_under_dynamic_mode(spark, tmp_path):
-    """write_ivf_index's commit protocol requires the overwrite to clear
-    the WHOLE index path. Under the session config
+    """A re-build must leave no stale cluster partition (or stale row) a
+    probe silently reads. Under the session config
     spark.sql.sources.partitionOverwriteMode=dynamic a plain overwrite
-    only replaces partitions present in the new data, so a rebuild that
-    lands in fewer clusters would leave stale cluster partitions (and
-    stale rows) a probe silently reads (ADVICE r9). The writer pins
-    static mode, so this must hold regardless of session config."""
+    only replaces partitions present in the new data (ADVICE r9); every
+    build stages a FRESH segment and the pointer names only it, so this
+    must hold regardless of session config."""
     import numpy as np
 
     from etl_hiscox_spark.operators.similarity import write_ivf_index
@@ -926,11 +935,11 @@ def test_ivf_rebuild_clears_stale_partitions_under_dynamic_mode(spark, tmp_path)
     old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        write_ivf_index(big, path, "embedding", "vec_id", n_clusters=8, max_iter=2, generational=False)
+        write_ivf_index(big, path, "embedding", "vec_id", n_clusters=8, max_iter=2)
         # rebuild with a tiny corpus in fewer clusters — every old row and
         # every old cluster partition must be gone
-        write_ivf_index(small, path, "embedding", "vec_id", n_clusters=2, max_iter=2, generational=False)
-        back = spark.read.parquet(path)
+        write_ivf_index(small, path, "embedding", "vec_id", n_clusters=2, max_iter=2)
+        back = live_rows(spark, path, _IVF)
         ids = {r["vec_id"] for r in back.select("vec_id").collect()}
         assert ids == {100 + i for i in range(8)}, (
             f"stale rows survived the rebuild: {sorted(ids - set(range(100, 108)))[:5]}"
@@ -970,13 +979,13 @@ def test_ivf_append_assignment_matches_kmeans_predict(spark, tmp_path):
     old = df.filter(F.col("vec_id") < 60)
     new = df.filter(F.col("vec_id") >= 60)
     path = str(tmp_path / "ivf")
-    centroids = write_ivf_index(old, path, "embedding", "vec_id", n_clusters=4, seed=7, generational=False)
+    centroids = write_ivf_index(old, path, "embedding", "vec_id", n_clusters=4, seed=7)
     assert np.allclose(load_ivf_centroids(spark, path), centroids)
 
     append_to_ivf_index(new, path, "embedding", "vec_id")
     stored = {
         r["vec_id"]: r["__cluster"]
-        for r in spark.read.parquet(path).filter(F.col("vec_id") >= 60).collect()
+        for r in live_rows(spark, path, _IVF).filter(F.col("vec_id") >= 60).collect()
     }
     # the model the index was built from, applied to the SAME new vectors
     model = KMeans(k=4, seed=7, featuresCol="__v", predictionCol="__c").fit(
@@ -1001,7 +1010,7 @@ def test_ivf_append_assignment_matches_kmeans_predict(spark, tmp_path):
     # interrupted write -> loud rejection
     import shutil
 
-    shutil.rmtree(str(tmp_path / "ivf" / "_centroids"))
+    shutil.rmtree(str(tmp_path / "ivf" / _live_dirs(spark, path)[0] / "_centroids"))
     with _pytest.raises(ValueError, match="no readable centroids"):
         ivf_probe_topk(spark, path, None, "embedding", "vec_id", q, k=5)
 
@@ -1026,8 +1035,8 @@ def test_ivf_append_rejects_malformed_embeddings(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    write_ivf_index(df, path, "embedding", "vec_id", n_clusters=2, seed=1, generational=False)
-    n0 = spark.read.parquet(path).count()
+    write_ivf_index(df, path, "embedding", "vec_id", n_clusters=2, seed=1)
+    n0 = live_rows(spark, path, _IVF).count()
 
     bad = spark.createDataFrame(
         [(100, [1.0, 2.0, 3.0, 4.0]), (101, None), (102, [1.0, 2.0])],
@@ -1035,7 +1044,7 @@ def test_ivf_append_rejects_malformed_embeddings(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
         append_to_ivf_index(bad, path, "embedding", "vec_id")
-    assert spark.read.parquet(path).count() == n0  # nothing landed
+    assert live_rows(spark, path, _IVF).count() == n0  # nothing landed
 
 
 def test_write_ivf_index_explicit_centroids(spark, tmp_path):
@@ -1059,10 +1068,10 @@ def test_write_ivf_index_explicit_centroids(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    out = write_ivf_index(df, path, "embedding", "vec_id", centroids=C, generational=False)
+    out = write_ivf_index(df, path, "embedding", "vec_id", centroids=C)
     assert np.allclose(out, C)
     assert np.allclose(load_ivf_centroids(spark, path), C)
-    back = {r["vec_id"]: r["__cluster"] for r in spark.read.parquet(path).collect()}
+    back = {r["vec_id"]: r["__cluster"] for r in live_rows(spark, path, _IVF).collect()}
     m = np.asarray([[float(x) for x in vecs[i]] for i in range(40)], dtype=np.float64)
     d = (m * m).sum(axis=1, keepdims=True) - 2.0 * (m @ C.T) + (C * C).sum(axis=1)
     expected = d.argmin(axis=1)
@@ -1072,7 +1081,7 @@ def test_write_ivf_index_explicit_centroids(spark, tmp_path):
         [(0, [1.0, 2.0]), (1, None)], "vec_id long, embedding array<float>"
     )
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
-        write_ivf_index(bad, str(tmp_path / "ivf_bad"), "embedding", "vec_id", centroids=C, generational=False)
+        write_ivf_index(bad, str(tmp_path / "ivf_bad"), "embedding", "vec_id", centroids=C)
 
 
 def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
@@ -1100,20 +1109,21 @@ def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
         )
 
     path = str(tmp_path / "ivf")
-    write_ivf_index(frame(range(40)), path, "embedding", "vec_id", n_clusters=4, max_iter=2, generational=False)
+    write_ivf_index(frame(range(40)), path, "embedding", "vec_id", n_clusters=4, max_iter=2)
     for k in range(3):
         append_to_ivf_index(frame(range(100 + 10 * k, 110 + 10 * k)), path, "embedding", "vec_id")
 
     def files_per_partition():
         out = {}
-        for entry in os.listdir(path):
-            if entry.startswith("__cluster="):
-                out[entry] = sum(
-                    1
-                    for root, _, files in os.walk(os.path.join(path, entry))
-                    for f in files
-                    if f.endswith(".parquet")
-                )
+        for seg in _live_dirs(spark, path):
+            for entry in os.listdir(seg):
+                if entry.startswith("__cluster="):
+                    out[entry] = out.get(entry, 0) + sum(
+                        1
+                        for root, _, files in os.walk(os.path.join(seg, entry))
+                        for f in files
+                        if f.endswith(".parquet")
+                    )
         return out
 
     before_files = files_per_partition()
@@ -1121,7 +1131,7 @@ def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
     cent_before = load_ivf_centroids(spark, path)
     content_before = sorted(
         (r["vec_id"], r["__cluster"], tuple(r["embedding"]))
-        for r in spark.read.parquet(path).collect()
+        for r in live_rows(spark, path, _IVF).collect()
     )
     qv = [float(x) for x in rng.standard_normal(6)]
     # 9-dp rounding: the scoring matvec is per-Arrow-batch BLAS, and
@@ -1141,7 +1151,7 @@ def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
     assert np.array_equal(load_ivf_centroids(spark, path), cent_before)
     content_after = sorted(
         (r["vec_id"], r["__cluster"], tuple(r["embedding"]))
-        for r in spark.read.parquet(path).collect()
+        for r in live_rows(spark, path, _IVF).collect()
     )
     assert content_after == content_before
     probe_after = [
@@ -1165,7 +1175,7 @@ def test_compact_minhash_index_defragments_and_preserves_probe(spark, tmp_path):
 
     docs = _docs(spark)
     path = str(tmp_path / "mh")
-    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path, generational=False)
+    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path)
     write_minhash_index(
         docs.filter("doc_id IN (2, 3)"), "text", "doc_id", path, mode="append"
     )
@@ -1176,15 +1186,14 @@ def test_compact_minhash_index_defragments_and_preserves_probe(spark, tmp_path):
     def bucket_files():
         return sum(
             1
-            for root, _, files in os.walk(os.path.join(path, "buckets"))
+            for seg in _live_dirs(spark, path)
+            for root, _, files in os.walk(os.path.join(seg, "buckets"))
             for f in files
             if f.endswith(".parquet")
         )
 
     assert bucket_files() > 1, "appends did not fragment the bucket table"
-    content_before = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(path, "buckets")).collect()
-    )
+    content_before = sorted(tuple(r) for r in live_rows(spark, path, _LSH).collect())
     new_batch = docs.filter("doc_id = 5")
     probe_before = sorted(
         (r["new_id"], r["dup_of"])
@@ -1194,9 +1203,7 @@ def test_compact_minhash_index_defragments_and_preserves_probe(spark, tmp_path):
 
     n = compact_minhash_index(spark, path)
     assert n == 1 == bucket_files()
-    content_after = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(path, "buckets")).collect()
-    )
+    content_after = sorted(tuple(r) for r in live_rows(spark, path, _LSH).collect())
     assert content_after == content_before
     probe_after = sorted(
         (r["new_id"], r["dup_of"])
@@ -1230,7 +1237,7 @@ def test_ivf_centroid_drift_detects_planted_drift(spark, tmp_path):
         )
 
     path = str(tmp_path / "ivf")
-    write_ivf_index(frame(base, 0), path, "embedding", "vec_id", centroids=C, generational=False)
+    write_ivf_index(frame(base, 0), path, "embedding", "vec_id", centroids=C)
 
     def expected_stats(mat32):
         m = np.asarray(mat32, dtype=np.float64)
@@ -1365,6 +1372,7 @@ def test_erase_from_ivf_index_touches_only_affected_partitions(spark, tmp_path):
     import numpy as np
 
     from etl_hiscox_spark.operators.similarity import (
+        append_to_ivf_index,
         erase_from_ivf_index,
         ivf_probe_topk,
         load_ivf_centroids,
@@ -1381,18 +1389,21 @@ def test_erase_from_ivf_index_touches_only_affected_partitions(spark, tmp_path):
         rows.append((i, [float(x) for x in C[c] + 0.1 * rng.standard_normal(4)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     path = str(tmp_path / "ivf")
-    write_ivf_index(df, path, "embedding", "vec_id", centroids=C, generational=False)
+    # one segment per cluster: the build holds cluster 0, two appends
+    # bring clusters 1 and 2
+    write_ivf_index(df.filter("vec_id < 20"), path, "embedding", "vec_id", centroids=C)
+    append_to_ivf_index(df.filter("vec_id >= 20 AND vec_id < 40"), path, "embedding", "vec_id")
+    append_to_ivf_index(df.filter("vec_id >= 40"), path, "embedding", "vec_id")
 
     def listing(cluster):
-        d = os.path.join(path, f"__cluster={cluster}")
-        if not os.path.isdir(d):
-            return None
-        return sorted(
-            (f, os.path.getsize(os.path.join(r, f)))
-            for r, _, fs in os.walk(d)
+        found = sorted(
+            (os.path.relpath(os.path.join(r, f), path), os.path.getsize(os.path.join(r, f)))
+            for seg in _live_dirs(spark, path)
+            for r, _, fs in os.walk(os.path.join(seg, f"__cluster={cluster}"))
             for f in fs
             if f.endswith(".parquet")
         )
+        return found or None
 
     l0, l1 = listing(0), listing(1)
     cents = load_ivf_centroids(spark, path)
@@ -1401,7 +1412,7 @@ def test_erase_from_ivf_index_touches_only_affected_partitions(spark, tmp_path):
     keys = spark.createDataFrame([(i,) for i in range(40, 45)], "vec_id long")
     assert erase_from_ivf_index(spark, path, keys, "vec_id") == 5
     assert listing(0) == l0 and listing(1) == l1, "unaffected partitions rewritten"
-    back = {r["vec_id"] for r in spark.read.parquet(path).collect()}
+    back = {r["vec_id"] for r in live_rows(spark, path, _IVF).collect()}
     assert back == set(range(40)) | set(range(45, 50))
 
     # zero-match erase: no-op
@@ -1438,7 +1449,7 @@ def test_erase_from_minhash_index_removes_fingerprints(spark, tmp_path):
     # index docs 0,1,2 (0 and 1 exact dups; 2 a near dup); probe with 5
     write_minhash_index(
         docs.filter("doc_id IN (0, 1, 2)"), "text", "doc_id", path,
-        num_hashes=24, num_bands=6, generational=False,
+        num_hashes=24, num_bands=6,
     )
     new = docs.filter("doc_id = 5")
     before = {r["dup_of"] for r in probe_minhash_index(new, "text", "doc_id", path).collect()}
@@ -1450,7 +1461,7 @@ def test_erase_from_minhash_index_removes_fingerprints(spark, tmp_path):
     after = {r["dup_of"] for r in probe_minhash_index(new, "text", "doc_id", path).collect()}
     assert 1 not in after, "erased doc still surfaces as dup_of"
     assert after == before - {1}
-    remaining = spark.read.parquet(os.path.join(path, "buckets"))
+    remaining = live_rows(spark, path, _LSH)
     assert remaining.filter("doc = 1").count() == 0
 
     ghost = spark.createDataFrame([(42,)], "doc_id long")
@@ -1482,23 +1493,23 @@ def test_ivf_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_path):
         )
 
     path = str(tmp_path / "ivf")
-    write_ivf_index(frame(range(30)), path, "embedding", "vec_id", n_clusters=3, max_iter=2, generational=False)
+    write_ivf_index(frame(range(30)), path, "embedding", "vec_id", n_clusters=3, max_iter=2)
     append_to_ivf_index(frame(range(100, 120)), path, "embedding", "vec_id")
 
     def disk_truth():
-        out = {}
-        for entry in os.listdir(path):
-            if not entry.startswith("__cluster="):
-                continue
-            c = int(entry.split("=", 1)[1])
-            files = [
-                os.path.join(r, f)
-                for r, _, fs in os.walk(os.path.join(path, entry))
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-            out[c] = (len(files), sum(os.path.getsize(f) for f in files))
-        return out
+        files: dict[int, list[str]] = {}
+        for seg in _live_dirs(spark, path):
+            for entry in os.listdir(seg):
+                if not entry.startswith("__cluster="):
+                    continue
+                c = int(entry.split("=", 1)[1])
+                files.setdefault(c, []).extend(
+                    os.path.join(r, f)
+                    for r, _, fs in os.walk(os.path.join(seg, entry))
+                    for f in fs
+                    if f.endswith(".parquet")
+                )
+        return {c: (len(fs), sum(os.path.getsize(f) for f in fs)) for c, fs in files.items()}
 
     stats = {
         r["cluster"]: (r["n_files"], r["total_bytes"])
@@ -1514,33 +1525,6 @@ def test_ivf_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_path):
     }
     assert stats2 == disk_truth()
     assert all(n == 1 for n, _ in stats2.values())
-
-
-def test_index_maintenance_rejects_remote_paths(spark):
-    """ADVICE r10: compact/erase swap files with os.rename — an index on
-    a remote scheme must be rejected LOUDLY up front, before any Spark
-    tmp write runs (the old failure mode was an opaque OSError after the
-    rewrite, leaking the tmp dir)."""
-    import pytest
-
-    from etl_hiscox_spark.operators.dedup import (
-        compact_minhash_index,
-        erase_from_minhash_index,
-    )
-    from etl_hiscox_spark.operators.similarity import (
-        compact_ivf_index,
-        erase_from_ivf_index,
-    )
-
-    keys = spark.createDataFrame([(1,)], "doc_id long")
-    for op in (
-        lambda: compact_ivf_index(spark, "s3a://bucket/ivf"),
-        lambda: erase_from_ivf_index(spark, "s3a://bucket/ivf", keys, "doc_id"),
-        lambda: compact_minhash_index(spark, "hdfs://nn/idx"),
-        lambda: erase_from_minhash_index(spark, "hdfs://nn/idx", keys, "doc_id"),
-    ):
-        with pytest.raises(ValueError, match="driver-local"):
-            op()
 
 
 def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
@@ -1565,7 +1549,7 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
 
     docs = _docs(spark)
     mh_path = "file://" + str(tmp_path / "mh")
-    write_minhash_index(docs.filter("doc_id IN (0, 1, 2)"), "text", "doc_id", mh_path, generational=False)
+    write_minhash_index(docs.filter("doc_id IN (0, 1, 2)"), "text", "doc_id", mh_path)
     write_minhash_index(
         docs.filter("doc_id = 4"), "text", "doc_id", mh_path, mode="append"
     )
@@ -1575,7 +1559,7 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     new = docs.filter("doc_id = 5")
     dups = {r["dup_of"] for r in probe_minhash_index(new, "text", "doc_id", mh_path).collect()}
     assert 0 in dups and 1 not in dups
-    assert os.path.isdir(str(tmp_path / "mh" / "meta"))
+    assert os.path.isdir(os.path.join(_live_dirs(spark, mh_path)[0], "meta"))
 
     rng = np.random.default_rng(17)
     emb = spark.createDataFrame(
@@ -1585,7 +1569,7 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     ivf_path = "file://" + str(tmp_path / "ivf")
     write_ivf_index(
         emb.filter("vec_id < 20"), ivf_path, "embedding", "vec_id",
-        n_clusters=3, max_iter=2, generational=False,
+        n_clusters=3, max_iter=2,
     )
     append_to_ivf_index(emb.filter("vec_id >= 20"), ivf_path, "embedding", "vec_id")
     assert compact_ivf_index(spark, ivf_path) >= 1
@@ -1597,59 +1581,6 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     )
     ids = {r["vec_id"] for r in got.collect()}
     assert len(ids) == 38 and 7 not in ids and 23 not in ids
-
-
-def test_interrupted_minhash_maintenance_is_recoverable(spark, tmp_path, monkeypatch):
-    """ADVICE r10: a crash mid-compaction must leave the banding
-    parameters ON DISK (meta renamed aside, not deleted) — probes fail
-    loudly while the crash window is open, and renaming the aside back
-    restores the index without a rebuild."""
-    import os
-
-    import pytest
-
-    from etl_hiscox_spark.operators import dedup
-    from etl_hiscox_spark.sources import writers
-
-    docs = _docs(spark)
-    path = str(tmp_path / "mh")
-    dedup.write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path, generational=False)
-    dedup.write_minhash_index(
-        docs.filter("doc_id = 2"), "text", "doc_id", path, mode="append"
-    )
-    new = docs.filter("doc_id = 5")
-    before = {
-        r["dup_of"]
-        for r in dedup.probe_minhash_index(new, "text", "doc_id", path).collect()
-    }
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated crash mid-rewrite")
-
-    monkeypatch.setattr(writers, "compact_small_files", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        dedup.compact_minhash_index(spark, path)
-    monkeypatch.undo()
-
-    # crash window: meta gone (probes reject loudly), params recoverable
-    assert not os.path.exists(os.path.join(path, "meta"))
-    assert os.path.isdir(os.path.join(path, "meta__compact"))
-    with pytest.raises(ValueError, match="no readable meta"):
-        dedup.probe_minhash_index(new, "text", "doc_id", path).collect()
-    # a second maintenance attempt must not clobber the aside copy
-    with pytest.raises(ValueError, match="leftover"):
-        dedup._rename_meta_aside(spark, path, "meta__compact")
-
-    # recovery = rename back; the index probes identically, no rebuild
-    os.rename(os.path.join(path, "meta__compact"), os.path.join(path, "meta"))
-    after = {
-        r["dup_of"]
-        for r in dedup.probe_minhash_index(new, "text", "doc_id", path).collect()
-    }
-    assert after == before
-    assert dedup._read_index_meta(spark, path) == (24, 6, 3)
-    # and the real compaction still works post-recovery
-    assert dedup.compact_minhash_index(spark, path) == 1
 
 
 def _clustered_frame(spark, rng, centers, ids):
@@ -1666,11 +1597,14 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
     against the build-time geometry; after rebuild_ivf_index retrains on
     the live corpus (which now contains that batch), the same batch's
     drift drops below the trigger — and the rebuilt index holds exactly
-    the same rows (payload preserved, only __cluster labels change)."""
+    the same rows (payload preserved, only __cluster labels change). The
+    fit reads the live rows in id order, so the same head compacted into
+    one segment retrains the same centroids."""
     import numpy as np
 
     from etl_hiscox_spark.operators.similarity import (
         append_to_ivf_index,
+        compact_ivf_index,
         ivf_centroid_drift,
         ivf_probe_topk,
         load_ivf_centroids,
@@ -1685,7 +1619,7 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
                  ([-5, -5, 0, 0], [0, 0, -5, -5], [-5, 0, 0, -5])]
     path = str(tmp_path / "ivf")
     base = _clustered_frame(spark, rng, centers_a, range(60))
-    write_ivf_index(base, path, "embedding", "vec_id", n_clusters=3, max_iter=8, generational=False)
+    write_ivf_index(base, path, "embedding", "vec_id", n_clusters=3, max_iter=8)
     batch = _clustered_frame(spark, rng, centers_b, range(100, 140))
     append_to_ivf_index(batch, path, "embedding", "vec_id")
 
@@ -1701,17 +1635,25 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
 
     payload_before = sorted(
         (r["vec_id"], tuple(round(float(x), 6) for x in r["embedding"]))
-        for r in spark.read.parquet(path).select("vec_id", "embedding").collect()
+        for r in live_rows(spark, path, _IVF).select("vec_id", "embedding").collect()
     )
     C = rebuild_ivf_index(spark, path, "embedding", "vec_id", max_iter=8)
     assert C.shape == (3, 4)
     np.testing.assert_allclose(load_ivf_centroids(spark, path), C)
     payload_after = sorted(
         (r["vec_id"], tuple(round(float(x), 6) for x in r["embedding"]))
-        for r in spark.read.parquet(path).select("vec_id", "embedding").collect()
+        for r in live_rows(spark, path, _IVF).select("vec_id", "embedding").collect()
     )
     assert payload_after == payload_before
     assert drift_ratio() <= 1.25, "rebuild did not absorb the drifted batch"
+
+    compacted = str(tmp_path / "ivf_compacted")
+    write_ivf_index(base, compacted, "embedding", "vec_id", n_clusters=3, max_iter=8)
+    append_to_ivf_index(batch, compacted, "embedding", "vec_id")
+    compact_ivf_index(spark, compacted)
+    np.testing.assert_allclose(
+        rebuild_ivf_index(spark, compacted, "embedding", "vec_id", max_iter=8), C
+    )
 
     # full probe over the rebuilt layout sees every row exactly once
     got = ivf_probe_topk(
@@ -1725,8 +1667,8 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
 
 def test_rebuild_ivf_index_commit_protocol(spark, tmp_path, monkeypatch):
     """A crash while staging leaves the LIVE index untouched and probing
-    identically; the leftover staging dir makes the next rebuild fail
-    loudly until recovered; n_clusters can change across a rebuild."""
+    identically; the crashed stage commits nothing and vacuum reclaims
+    it; n_clusters can change across a rebuild."""
     import os
 
     import numpy as np
@@ -1740,7 +1682,7 @@ def test_rebuild_ivf_index_commit_protocol(spark, tmp_path, monkeypatch):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    sim.write_ivf_index(emb, path, "embedding", "vec_id", n_clusters=4, max_iter=2, generational=False)
+    sim.write_ivf_index(emb, path, "embedding", "vec_id", n_clusters=4, max_iter=2)
     qvec = [float(x) for x in rng.standard_normal(4)]
     before = [
         (r["vec_id"], round(r["cosine_sim"], 9))
@@ -1769,20 +1711,18 @@ def test_rebuild_ivf_index_commit_protocol(spark, tmp_path, monkeypatch):
         ).collect()
     ]
     assert after_crash == before
-    # leftover staging dir -> loud rejection until the operator recovers
-    assert os.path.isdir(path + "__rebuild")
-    with pytest.raises(ValueError, match="leftover"):
-        sim.rebuild_ivf_index(spark, path, "embedding", "vec_id")
-    import shutil
+    # the crashed stage committed nothing; vacuum reclaims it
+    from etl_hiscox_spark.sources import genlog
 
-    shutil.rmtree(path + "__rebuild")
+    assert [g["operation"] for g in genlog.list_generations(spark, path)] == ["build"]
+    assert genlog.vacuum_generations(spark, path, keep_last=1, min_age_seconds=0) == 1
 
-    # recovery done: rebuild with a DIFFERENT cluster count
+    # rebuild with a DIFFERENT cluster count
     C = sim.rebuild_ivf_index(spark, path, "embedding", "vec_id", n_clusters=6, max_iter=2)
     assert C.shape == (6, 4)
-    parts = {e for e in os.listdir(path) if e.startswith("__cluster=")}
+    (live,) = _live_dirs(spark, path)
+    parts = {e for e in os.listdir(live) if e.startswith("__cluster=")}
     assert parts and all(int(p.split("=")[1]) in range(6) for p in parts)
-    assert not os.path.exists(path + "__old")
     final = sim.ivf_probe_topk(
         spark, path, None, "embedding", "vec_id", qvec, k=40, n_probe=6
     )
@@ -1806,10 +1746,10 @@ def test_minhash_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_pa
 
     docs = _docs(spark)
     path = str(tmp_path / "mh")
-    with pytest.raises(ValueError, match="no readable meta"):
+    with pytest.raises(ValueError, match="not a GENERATIONAL index root"):
         minhash_fragmentation_stats(spark, path).collect()
 
-    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path, generational=False)
+    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path)
     write_minhash_index(
         docs.filter("doc_id IN (2, 3)"), "text", "doc_id", path, mode="append"
     )
@@ -1820,7 +1760,8 @@ def test_minhash_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_pa
     def disk_truth():
         files = [
             os.path.join(r, f)
-            for r, _, fs in os.walk(os.path.join(path, "buckets"))
+            for seg in _live_dirs(spark, path)
+            for r, _, fs in os.walk(os.path.join(seg, "buckets"))
             for f in fs
             if f.endswith(".parquet")
         ]
@@ -1861,13 +1802,13 @@ def test_quantized_ivf_layout_probe_matches_quantized_topk(spark, tmp_path):
     path = str(tmp_path / "ivf")
     write_ivf_index(
         emb.filter("vec_id < 50"), path, "embedding", "vec_id",
-        n_clusters=4, max_iter=2, quantize=True, generational=False,
+        n_clusters=4, max_iter=2, quantize=True,
     )
-    cols = set(spark.read.parquet(path).columns)
+    cols = set(live_rows(spark, path, _IVF).columns)
     assert {"__codes", "__qscale", "__cluster"} <= cols
     # append into the quantized layout: codes must materialize for the batch
     append_to_ivf_index(emb.filter("vec_id >= 50"), path, "embedding", "vec_id")
-    appended = spark.read.parquet(path).filter("vec_id >= 50")
+    appended = live_rows(spark, path, _IVF).filter("vec_id >= 50")
     assert appended.count() == 30
     assert appended.filter(F.col("__codes").isNull()).count() == 0
 
@@ -1892,7 +1833,7 @@ def test_quantized_ivf_layout_probe_matches_quantized_topk(spark, tmp_path):
 
     plain = str(tmp_path / "plain")
     write_ivf_index(
-        emb, plain, "embedding", "vec_id", n_clusters=2, max_iter=2, generational=False
+        emb, plain, "embedding", "vec_id", n_clusters=2, max_iter=2
     )
     with pytest.raises(ValueError, match="__codes"):
         ivf_probe_topk_quantized(spark, plain, "embedding", "vec_id", qvec)
@@ -1911,10 +1852,10 @@ def test_quantized_ivf_stage1_scan_prunes_embedding_column(spark, tmp_path):
     )
     path = str(tmp_path / "ivf")
     write_ivf_index(emb, path, "embedding", "vec_id", n_clusters=4, max_iter=2,
-                    quantize=True, generational=False)
+                    quantize=True)
     # the probe's stage-1 frame, reconstructed for explain (the operator
     # collects the shortlist eagerly, so gate the plan on its exact shape)
-    idx = spark.read.parquet(path)
+    idx = live_rows(spark, path, _IVF)
     stage1 = idx.filter(F.col("__cluster").isin([0, 1])).select("vec_id", "__codes")
     plan = stage1._sc is not None and stage1._jdf.queryExecution().executedPlan().toString()
     scan = [ln for ln in plan.splitlines() if "FileScan" in ln]
@@ -1929,8 +1870,8 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
     """The stored-codes layout must survive every maintenance op written
     before it landed: compact and erase rewrite partitions from the live
     rows (codes are data columns), rebuild re-quantizes under the new
-    geometry, and the commit record's quantized flag rides each op's
-    rename-aside protocol — so the codes-only probe stays exact over the
+    geometry, and the commit record's quantized flag rides into each op's
+    new segment — so the codes-only probe stays exact over the
     surviving corpus after compact -> erase -> rebuild."""
     from etl_hiscox_spark.operators.similarity import (
         append_to_ivf_index,
@@ -1951,7 +1892,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
     path = str(tmp_path / "ivf_q")
     write_ivf_index(
         emb.filter("vec_id < 60"), path, "embedding", "vec_id",
-        n_clusters=3, max_iter=2, quantize=True, generational=False,
+        n_clusters=3, max_iter=2, quantize=True,
     )
     append_to_ivf_index(emb.filter("vec_id >= 60"), path, "embedding", "vec_id")
 
@@ -1960,7 +1901,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
             (r["vec_id"], round(r["approx_cos"], 9), round(r["exact_cos"], 9), r["rank"])
             for r in ivf_probe_topk_quantized(
                 spark, path, "embedding", "vec_id", qvec, k=8,
-                n_probe=spark.read.parquet(path).select("__cluster").distinct().count(),
+                n_probe=live_rows(spark, path, _IVF).select("__cluster").distinct().count(),
                 rerank_factor=3,
             ).collect()
         ]
@@ -1976,7 +1917,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
 
     compact_ivf_index(spark, path, target_file_mb=256)
     assert ivf_index_is_quantized(spark, path)
-    live = spark.read.parquet(path)
+    live = live_rows(spark, path, _IVF)
     assert live.filter(F.col("__codes").isNull()).count() == 0
     probe_pairs(emb, qvec)
 
@@ -1990,17 +1931,16 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
 
     rebuild_ivf_index(spark, path, "embedding", "vec_id", n_clusters=4, max_iter=2)
     assert ivf_index_is_quantized(spark, path)
-    rebuilt = spark.read.parquet(path)
+    rebuilt = live_rows(spark, path, _IVF)
     assert rebuilt.filter(F.col("__codes").isNull()).count() == 0
     probe_pairs(survivors, qvec)
 
 
 def test_rebuild_minhash_index_rebands_live_index(spark, tmp_path):
-    """rebuild_minhash_index (r11): parameter migration under the
-    rename-aside protocol — new banding lands atomically, probes/appends
-    validate against the NEW meta, the supplied corpus defines exactly
-    what stays indexed (fingerprint refresh), and crash leftovers are
-    rejected loudly."""
+    """rebuild_minhash_index (r11): parameter migration by one pointer
+    commit — new banding lands atomically, probes/appends validate
+    against the NEW meta, and the supplied corpus defines exactly what
+    stays indexed (fingerprint refresh)."""
     import os
 
     import pytest
@@ -2022,7 +1962,7 @@ def test_rebuild_minhash_index_rebands_live_index(spark, tmp_path):
         [(101, base.replace("kappa", "lambda"))], "doc_id long, text string"
     )
     path = str(tmp_path / "idx")
-    write_minhash_index(corpus, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(corpus, "text", "doc_id", path, num_hashes=24, num_bands=6)
     assert {(r["new_id"], r["dup_of"])
             for r in probe_minhash_index(probe, "text", "doc_id", path).collect()
             } == {(101, 0)}
@@ -2057,195 +1997,16 @@ def test_rebuild_minhash_index_rebands_live_index(spark, tmp_path):
     )
     assert _read_index_meta(spark, path) == (32, 8, 3)
     assert probe_minhash_index(probe, "text", "doc_id", path).count() == 0
-    buckets = spark.read.parquet(os.path.join(path, "buckets"))
+    buckets = live_rows(spark, path, _LSH)
     assert buckets.filter("doc = 0").count() == 0
     assert buckets.filter("doc = 7").count() == 0  # exactly df, appends excluded
 
-    # divisibility guard fires before anything is staged or renamed
+    # divisibility guard fires before anything is staged
     with pytest.raises(ValueError, match="divisible"):
         rebuild_minhash_index(
             spark, corpus, "text", "doc_id", path, num_hashes=32, num_bands=5
         )
     assert _read_index_meta(spark, path) == (32, 8, 3)
-
-    # crash leftovers are rejected loudly, live index untouched
-    os.mkdir(path + "__rebuild")
-    with pytest.raises(ValueError, match="leftover"):
-        rebuild_minhash_index(spark, corpus, "text", "doc_id", path)
-    os.rmdir(path + "__rebuild")
-    assert _read_index_meta(spark, path) == (32, 8, 3)
-
-
-# ---------------------------------------------------------------------------
-# recover_staged_rebuild (VERDICT r11 item 4): each crash window of the
-# staged-rebuild commit protocol must recover to a valid live index whose
-# probe answers are correct.
-# ---------------------------------------------------------------------------
-
-
-def _mh_corpus(spark):
-    rows = [(i, f"shared filler text body number {i} common tokens run") for i in range(30)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _mh_index(spark, tmp_path, name="mh"):
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
-
-    path = str(tmp_path / name)
-    docs = _mh_corpus(spark)
-    write_minhash_index(docs, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
-    return path, docs
-
-
-def _mh_probe_ok(spark, path, docs):
-    from etl_hiscox_spark.operators.dedup import probe_minhash_index
-
-    probe = spark.createDataFrame(
-        [(100, "shared filler text body number 3 common tokens run")],
-        "doc_id long, text string",
-    )
-    out = probe_minhash_index(probe, "text", "doc_id", path)
-    assert out.count() >= 1  # exact duplicate of doc 3 must be found
-
-
-def test_recover_staged_rebuild_noop_and_empty(spark, tmp_path):
-    import pytest
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    assert recover_staged_rebuild(spark, path) == "none"
-    _mh_probe_ok(spark, path, docs)
-    with pytest.raises(ValueError, match="nothing to recover"):
-        recover_staged_rebuild(spark, str(tmp_path / "absent"))
-
-
-def test_recover_staged_rebuild_after_stage_rolls_back(spark, tmp_path):
-    """Crash window 1: stage written (possibly incomplete), commit never
-    began — live untouched, stage removed, live still answers probes."""
-    import os
-
-    from etl_hiscox_spark.operators.dedup import (
-        _read_index_meta,
-        recover_staged_rebuild,
-        write_minhash_index,
-    )
-
-    path, docs = _mh_index(spark, tmp_path)
-    # simulate: a complete stage AND an incomplete one (meta missing)
-    write_minhash_index(docs, "text", "doc_id", path + "__rebuild",
-                        num_hashes=32, num_bands=8, generational=False)
-    assert recover_staged_rebuild(spark, path) == "rolled_back_stage"
-    assert not os.path.exists(path + "__rebuild")
-    assert _read_index_meta(spark, path) == (24, 6, 3)  # old params live
-    _mh_probe_ok(spark, path, docs)
-    # idempotent: a second recovery is a no-op
-    assert recover_staged_rebuild(spark, path) == "none"
-
-
-def test_recover_staged_rebuild_between_renames_completes(spark, tmp_path):
-    """Crash window 2: live renamed to __old, stage not yet promoted —
-    recovery promotes the (complete by protocol) stage."""
-    import os
-
-    from etl_hiscox_spark.operators.dedup import (
-        _read_index_meta,
-        recover_staged_rebuild,
-        write_minhash_index,
-    )
-
-    path, docs = _mh_index(spark, tmp_path)
-    write_minhash_index(docs, "text", "doc_id", path + "__rebuild",
-                        num_hashes=32, num_bands=8, generational=False)
-    os.rename(path, path + "__old")  # first rename landed, then crash
-    assert recover_staged_rebuild(spark, path) == "completed_swap"
-    assert not os.path.exists(path + "__old")
-    assert _read_index_meta(spark, path) == (32, 8, 3)  # migrated params live
-    _mh_probe_ok(spark, path, docs)
-
-
-def test_recover_staged_rebuild_before_old_cleanup(spark, tmp_path):
-    """Crash window 3: swap landed, __old not yet removed."""
-    import os
-    import shutil
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    shutil.copytree(path, path + "__old")
-    assert recover_staged_rebuild(spark, path) == "removed_old"
-    assert not os.path.exists(path + "__old")
-    _mh_probe_ok(spark, path, docs)
-
-
-def test_recover_staged_rebuild_old_only_restores(spark, tmp_path):
-    import os
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    os.rename(path, path + "__old")
-    assert recover_staged_rebuild(spark, path) == "restored_old"
-    _mh_probe_ok(spark, path, docs)
-
-
-def test_recover_staged_rebuild_refuses_unreachable_states(spark, tmp_path):
-    import shutil
-
-    import pytest
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    shutil.copytree(path, path + "__rebuild")
-    shutil.copytree(path, path + "__old")
-    with pytest.raises(ValueError, match="unreachable"):
-        recover_staged_rebuild(spark, path)
-    shutil.rmtree(path + "__old")
-    shutil.rmtree(path + "__rebuild")
-    # stage only (no live): refuse to promote
-    stage_only = str(tmp_path / "stage_only")
-    shutil.copytree(path, stage_only + "__rebuild")
-    with pytest.raises(ValueError, match="ONLY a __rebuild"):
-        recover_staged_rebuild(spark, stage_only)
-
-
-def test_recover_staged_rebuild_ivf_layout(spark, tmp_path):
-    """The same recovery drives the IVF layout: crash between the two
-    renames completes to the retrained index and the probe matches
-    brute force."""
-    import os
-
-    import numpy as np
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-    from etl_hiscox_spark.operators.similarity import (
-        cosine_topk,
-        ivf_probe_topk,
-        load_ivf_centroids,
-        random_hyperplanes,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(11)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    path = str(tmp_path / "ivf")
-    planes = random_hyperplanes(dim=8, n_planes=4, seed=3)
-    write_ivf_index(emb, path, "embedding", "vec_id", centroids=planes, generational=False)
-    # stage a complete retrained index, then crash between the renames
-    write_ivf_index(emb, path + "__rebuild", "embedding", "vec_id",
-                    n_clusters=4, seed=5, max_iter=3, generational=False)
-    os.rename(path, path + "__old")
-    assert recover_staged_rebuild(spark, path) == "completed_swap"
-    C = load_ivf_centroids(spark, path)
-    assert not np.allclose(C, planes)  # the retrained geometry is live
-    q = rows[0][1]
-    got = ivf_probe_topk(spark, path, None, "embedding", "vec_id", q, k=5, n_probe=4)
-    want = cosine_topk(emb, "embedding", "vec_id", q, k=5)
-    assert [r["vec_id"] for r in got.collect()] == [
-        r["vec_id"] for r in want.collect()
-    ]
 
 
 def test_segment_hit_stats_one_action(spark):
@@ -2285,7 +2046,7 @@ def test_staged_build_observed_gate_leaves_centroidless_stage(spark, tmp_path):
     )
     path = str(tmp_path / "ivf_gen_bad")
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
-        write_ivf_index(bad, path, "embedding", "vec_id", centroids=C, generational=True)
+        write_ivf_index(bad, path, "embedding", "vec_id", centroids=C)
     # no pointer committed: the root has no live generation
     assert genlog.latest_pointer_version(spark, genlog.resolve_root(spark, path)) is None
     # staged debris (if any) is centroid-less => loudly rejected by readers

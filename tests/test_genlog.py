@@ -44,6 +44,23 @@ def _docs(spark, n=40):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _flat_copy(spark, build, dest):
+    """A FLAT index tree at ``dest`` — the layout older releases wrote: one
+    index tree straight at the root, with no pointer log. A flat tree is
+    exactly one segment's contents, so ``build(root)`` writes a
+    generational index at a fresh sibling root and its single live
+    segment is copied to ``dest``. Returns the generational source root,
+    which answers probes exactly as the flat tree's contents do."""
+    import shutil
+
+    from etl_hiscox_spark.sources.genlog import live_index_path
+
+    src = os.path.join(os.path.dirname(dest), "gen-source-" + os.path.basename(dest))
+    build(src)
+    shutil.copytree(live_index_path(spark, src), dest)
+    return src
+
+
 def _probe_pairs(spark, path, docs):
     from etl_hiscox_spark.operators.dedup import probe_minhash_index
 
@@ -75,7 +92,7 @@ def test_minhash_generational_full_lifecycle_no_renames(
     root = "file://" + str(tmp_path / f"{forbid_data_dir_renames}_mh")
     docs = _docs(spark)
     old = docs.filter(F.col("doc_id") < 20)
-    write_minhash_index(old, "text", "doc_id", root, generational=True)
+    write_minhash_index(old, "text", "doc_id", root)
     assert live_index_path(spark, root) != root.rstrip("/")
     base_pairs = _probe_pairs(spark, root, docs)
     assert base_pairs  # doc 3 found through the pointer resolution
@@ -135,20 +152,19 @@ def test_minhash_generational_crash_before_pointer_leaves_old_live(spark, tmp_pa
     """The staged-generation crash window: a complete (or partial) stage
     without a pointer commit is invisible — the old generation answers
     every probe, and vacuum reclaims the debris."""
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
+    from etl_hiscox_spark.operators.dedup import _stage_minhash_index, write_minhash_index
     from etl_hiscox_spark.sources import genlog
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root)
     v_before, gen_before = genlog.current_generation(spark, root)
     pairs_before = _probe_pairs(spark, root, docs)
 
     # simulate a maintenance run that crashed after staging: a complete
     # new index tree exists under the root but no pointer names it
     stage = genlog._join(root, genlog.new_generation_name())
-    write_minhash_index(docs.filter("doc_id < 5"), "text", "doc_id", stage,
-                        num_hashes=32, num_bands=8, generational=False)
+    _stage_minhash_index(docs.filter("doc_id < 5"), "text", "doc_id", stage, 32, 8, 3)
     assert genlog.current_generation(spark, root) == (v_before, gen_before)
     assert _probe_pairs(spark, root, docs) == pairs_before
     # the default retention window protects a possibly-in-flight stage...
@@ -169,7 +185,7 @@ def test_pointer_commit_collision_is_loud(spark, tmp_path):
     from etl_hiscox_spark.sources import genlog
 
     root = "file://" + str(tmp_path / "mh")
-    write_minhash_index(_docs(spark, 10), "text", "doc_id", root, generational=True)
+    write_minhash_index(_docs(spark, 10), "text", "doc_id", root)
     base, _ = genlog.current_generation(spark, root)  # both ops resolve here
 
     genlog.commit_generation(spark, root, "gen-aaaaaaaaaaaa", "erase", base_version=base)
@@ -193,7 +209,7 @@ def test_generational_maintenance_race_collides_end_to_end(spark, tmp_path):
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root)
 
     # interleave deterministically: when compact resolves its base, fire
     # the erase BEFORE compact's own commit lands (the scoped hook is
@@ -219,7 +235,7 @@ def test_generational_maintenance_race_collides_end_to_end(spark, tmp_path):
 
 
 def test_generational_build_rejects_flat_debris(spark, tmp_path):
-    """r12 review: generational=True over a root already holding a FLAT
+    """r12 review: a build over a root already holding a FLAT
     index would strand the flat tree as unreclaimable debris (a GDPR
     retention leak) — reject loudly; the explicit local migration folds
     it in as generation 0 instead."""
@@ -238,11 +254,11 @@ def test_generational_build_rejects_flat_debris(spark, tmp_path):
 
     docs = _docs(spark)
     flat = str(tmp_path / "mh_flat")
-    write_minhash_index(docs, "text", "doc_id", flat, generational=False)
+    src = _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), flat)
     with pytest.raises(ValueError, match="strand a flat index"):
-        write_minhash_index(docs, "text", "doc_id", flat, generational=True)
+        write_minhash_index(docs, "text", "doc_id", flat)
     # migration folds the flat tree into generation 0; probes keep working
-    pairs_before = _probe_pairs(spark, flat, docs)
+    pairs_before = _probe_pairs(spark, src, docs)
     migrate_flat_index_to_generational(spark, flat)
     assert genlog.is_generational(spark, flat)
     assert _probe_pairs(spark, flat, docs) == pairs_before
@@ -253,10 +269,14 @@ def test_generational_build_rejects_flat_debris(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     ivf_flat = str(tmp_path / "ivf_flat")
     planes = random_hyperplanes(dim=4, n_planes=3, seed=1)
-    write_ivf_index(emb, ivf_flat, "embedding", "vec_id", centroids=planes, generational=False)
+    _flat_copy(
+        spark,
+        lambda p: write_ivf_index(emb, p, "embedding", "vec_id", centroids=planes),
+        ivf_flat,
+    )
     with pytest.raises(ValueError, match="strand a flat index"):
         write_ivf_index(
-            emb, ivf_flat, "embedding", "vec_id", centroids=planes, generational=True
+            emb, ivf_flat, "embedding", "vec_id", centroids=planes
         )
     migrate_flat_index_to_generational(spark, ivf_flat)
     got = ivf_probe_topk(
@@ -293,7 +313,7 @@ def test_ivf_generational_full_lifecycle_no_renames(
     planes = random_hyperplanes(dim=8, n_planes=4, seed=3)
     write_ivf_index(
         emb.filter("vec_id < 40"), root, "embedding", "vec_id",
-        centroids=planes, quantize=True, generational=True,
+        centroids=planes, quantize=True,
     )
     append_to_ivf_index(emb.filter("vec_id >= 40"), root, "embedding", "vec_id")
     q = rows[0][1]
@@ -369,10 +389,9 @@ def test_gdpr_erase_subject_reaches_generational_indexes(spark, tmp_path):
     df = spark.createDataFrame(rows, "doc_id long, text string, embedding array<float>")
     ivf = "file://" + str(tmp_path / "ivf")
     write_ivf_index(df, ivf, "embedding", "doc_id",
-                    centroids=random_hyperplanes(dim=4, n_planes=3, seed=1),
-                    generational=True)
+                    centroids=random_hyperplanes(dim=4, n_planes=3, seed=1))
     mh = "file://" + str(tmp_path / "mh")
-    write_minhash_index(df, "text", "doc_id", mh, generational=True)
+    write_minhash_index(df, "text", "doc_id", mh)
     report = erase_subject(
         spark,
         spark.createDataFrame([(7,)], "doc_id long"),
@@ -402,15 +421,19 @@ def test_generational_build_rejects_cross_layout_debris(spark, tmp_path):
     planes = random_hyperplanes(dim=4, n_planes=3, seed=1)
 
     mh_root = str(tmp_path / "mh")
-    write_minhash_index(docs, "text", "doc_id", mh_root, generational=False)
+    _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), mh_root)
     with pytest.raises(ValueError, match="strand a flat index"):
         write_ivf_index(emb, mh_root, "embedding", "vec_id",
-                        centroids=planes, generational=True)
+                        centroids=planes)
 
     ivf_root = str(tmp_path / "ivf")
-    write_ivf_index(emb, ivf_root, "embedding", "vec_id", centroids=planes, generational=False)
+    _flat_copy(
+        spark,
+        lambda p: write_ivf_index(emb, p, "embedding", "vec_id", centroids=planes),
+        ivf_root,
+    )
     with pytest.raises(ValueError, match="strand a flat index"):
-        write_minhash_index(docs, "text", "doc_id", ivf_root, generational=True)
+        write_minhash_index(docs, "text", "doc_id", ivf_root)
 
 
 def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
@@ -428,8 +451,11 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 
     docs = _docs(spark)
     root = str(tmp_path / "mh")
-    write_minhash_index(docs, "text", "doc_id", root, generational=False)
-    pairs = _probe_pairs(spark, root, docs)
+
+    def build(p):
+        write_minhash_index(docs, "text", "doc_id", p)
+
+    pairs = _probe_pairs(spark, _flat_copy(spark, build, root), docs)
 
     # crash window 1: gen dir created, only ONE entry moved
     gen = "gen-aaaaaaaaaaaa"
@@ -441,7 +467,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 
     # crash window 2: everything moved, pointer commit never ran
     root2 = str(tmp_path / "mh2")
-    write_minhash_index(docs, "text", "doc_id", root2, generational=False)
+    _flat_copy(spark, build, root2)
     gen2 = "gen-bbbbbbbbbbbb"
     os.makedirs(os.path.join(root2, gen2))
     for entry in list(os.listdir(root2)):
@@ -452,7 +478,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 
     # two adoptable gen dirs and no pointer: refuse, never guess
     root3 = str(tmp_path / "mh3")
-    write_minhash_index(docs, "text", "doc_id", root3, generational=False)
+    _flat_copy(spark, build, root3)
     shutil.copytree(os.path.join(root3, "buckets"), os.path.join(root3, "gen-x1/buckets"))
     shutil.copytree(os.path.join(root3, "buckets"), os.path.join(root3, "gen-x2/buckets"))
     with pytest.raises(ValueError, match="gen-\\* dirs but no pointer"):
@@ -463,7 +489,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
     # an empty log; re-running migrate must adopt, not raise "already
     # generational" (and reads must work after, not demand manual cleanup)
     root4 = str(tmp_path / "mh4")
-    write_minhash_index(docs, "text", "doc_id", root4, generational=False)
+    _flat_copy(spark, build, root4)
     gen4 = "gen-dddddddddddd"
     os.makedirs(os.path.join(root4, gen4))
     for entry in list(os.listdir(root4)):
@@ -481,7 +507,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 def test_default_build_layout_is_generational(spark, tmp_path):
     """r13 (VERDICT r12 item 3): a bare build — no layout flag — must
     produce the object-store-safe generation-pointer layout for BOTH
-    index kinds; generational=False still builds the legacy flat tree."""
+    index kinds."""
     from etl_hiscox_spark.operators.dedup import write_minhash_index
     from etl_hiscox_spark.operators.similarity import ivf_probe_topk, write_ivf_index
     from etl_hiscox_spark.sources import genlog
@@ -507,11 +533,6 @@ def test_default_build_layout_is_generational(spark, tmp_path):
     )
     assert out.count() == 3
 
-    flat_root = str(tmp_path / "mh_flat")
-    write_minhash_index(docs, "text", "doc_id", flat_root, generational=False)
-    assert not genlog.is_generational(spark, flat_root)
-    assert os.path.isdir(os.path.join(flat_root, "buckets"))
-
 
 def test_generational_probe_keeps_partition_pruning(spark, tmp_path):
     """Pointer resolution must not cost the IVF layout its core property:
@@ -526,8 +547,7 @@ def test_generational_probe_keeps_partition_pruning(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     root = "file://" + str(tmp_path / "ivf")
-    write_ivf_index(emb, root, "embedding", "vec_id", n_clusters=4, max_iter=2,
-                    generational=True)
+    write_ivf_index(emb, root, "embedding", "vec_id", n_clusters=4, max_iter=2)
     live = live_index_path(spark, root)
     assert live != root  # resolution actually happened
     pruned = spark.read.parquet(live).filter(F.col("__cluster").isin([0, 1]))
@@ -554,8 +574,7 @@ def test_occ_append_survives_racing_erase(spark, tmp_path):
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs.filter("doc_id < 20"), "text", "doc_id", root,
-                        generational=True)
+    write_minhash_index(docs.filter("doc_id < 20"), "text", "doc_id", root)
 
     # fire the erase on the SECOND resolve — append_segment's own head
     # read — so the returned head is stale by the time the commit lands:
@@ -614,7 +633,7 @@ def test_occ_append_restages_after_geometry_rebuild(spark, tmp_path):
     planes = random_hyperplanes(dim=8, n_planes=4, seed=3)
     write_ivf_index(
         emb.filter("vec_id < 40"), root, "embedding", "vec_id",
-        centroids=planes, generational=True,
+        centroids=planes,
     )
 
     fired = {"done": False}
@@ -662,7 +681,7 @@ def test_multi_segment_probe_keeps_partition_pruning(spark, tmp_path):
     )
     root = "file://" + str(tmp_path / "ivf")
     write_ivf_index(emb.filter("vec_id < 30"), root, "embedding", "vec_id",
-                    n_clusters=4, max_iter=2, generational=True)
+                    n_clusters=4, max_iter=2)
     append_to_ivf_index(emb.filter("vec_id >= 30"), root, "embedding", "vec_id")
     paths = live_index_paths(spark, root)
     assert len(paths) == 2
@@ -689,8 +708,7 @@ def test_txn_watermark_appends_are_exactly_once(spark, tmp_path):
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs.filter("doc_id < 10"), "text", "doc_id", root,
-                        generational=True)
+    write_minhash_index(docs.filter("doc_id < 10"), "text", "doc_id", root)
 
     def append(lo, hi, batch):
         write_minhash_index(
@@ -733,7 +751,7 @@ def test_txn_tag_on_flat_root_is_rejected(spark, tmp_path):
 
     docs = _docs(spark)
     flat = str(tmp_path / "mh_flat")
-    write_minhash_index(docs, "text", "doc_id", flat, generational=False)
+    _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), flat)
     with pytest.raises(ValueError, match="GENERATIONAL"):
         write_minhash_index(
             docs, "text", "doc_id", flat, mode="append", txn=("app", 0)
@@ -745,9 +763,14 @@ def test_txn_tag_on_flat_root_is_rejected(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     ivf_flat = str(tmp_path / "ivf_flat")
-    write_ivf_index(emb, ivf_flat, "embedding", "vec_id",
-                    centroids=random_hyperplanes(dim=8, n_planes=4, seed=3),
-                    generational=False)
+    _flat_copy(
+        spark,
+        lambda p: write_ivf_index(
+            emb, p, "embedding", "vec_id",
+            centroids=random_hyperplanes(dim=8, n_planes=4, seed=3),
+        ),
+        ivf_flat,
+    )
     with pytest.raises(ValueError, match="GENERATIONAL"):
         append_to_ivf_index(emb, ivf_flat, "embedding", "vec_id", txn=("app", 0))
 
@@ -1935,7 +1958,7 @@ def test_generational_single_segment_no_hit_erase_commits_nothing(spark, tmp_pat
 
     root = "file://" + str(tmp_path / "mh_nohit")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root)
     assert [g["operation"] for g in genlog.list_generations(spark, root)] == ["build"]
     ghost = spark.createDataFrame([(424242,)], "doc_id long")
     assert erase_from_minhash_index(spark, root, ghost, "doc_id") == 0
@@ -1959,9 +1982,110 @@ def test_generational_single_segment_hit_erase_counts_exact_rows(spark, tmp_path
 
     root = "file://" + str(tmp_path / "mh_hit")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, num_hashes=24, num_bands=6, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root, num_hashes=24, num_bands=6)
     keys = spark.createDataFrame([(3,), (7,)], "doc_id long")
     assert erase_from_minhash_index(spark, root, keys, "doc_id") == 12  # 2 docs x 6 bands
     ops = [g["operation"] for g in genlog.list_generations(spark, root)]
     assert ops == ["build", "erase"]
     assert 3 not in _probe_pairs(spark, root, docs)
+
+
+@pytest.fixture(scope="module")
+def flat_trees(spark, tmp_path_factory):
+    """One flat LSH tree and one flat quantized-IVF tree (``_flat_copy``),
+    plus the frames the entry points below are called with."""
+    from etl_hiscox_spark.operators.dedup import write_minhash_index
+    from etl_hiscox_spark.operators.similarity import random_hyperplanes, write_ivf_index
+
+    d = tmp_path_factory.mktemp("flat_trees")
+    docs = _docs(spark, 10)
+    rng = np.random.default_rng(13)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(4)]) for i in range(10)],
+        "vec_id long, embedding array<float>",
+    )
+    _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), str(d / "mh"))
+    _flat_copy(
+        spark,
+        lambda p: write_ivf_index(
+            emb, p, "embedding", "vec_id",
+            centroids=random_hyperplanes(dim=4, n_planes=3, seed=1), quantize=True,
+        ),
+        str(d / "ivf"),
+    )
+    return {
+        "mh": str(d / "mh"), "ivf": str(d / "ivf"), "docs": docs, "emb": emb,
+        "keys": spark.createDataFrame([(3,)], "doc_id long"),
+        "vkeys": spark.createDataFrame([(3,)], "vec_id long"),
+        "q": [1.0, 0.0, 0.0, 0.0],
+    }
+
+
+def _flat_entry_points():
+    from etl_hiscox_spark.operators import dedup, similarity as sim
+    from etl_hiscox_spark.plans.gdpr import erase_subject
+
+    return {
+        "probe_minhash_index": lambda s, t: dedup.probe_minhash_index(
+            t["docs"], "text", "doc_id", t["mh"]
+        ).collect(),
+        "minhash_fragmentation_stats": lambda s, t: dedup.minhash_fragmentation_stats(
+            s, t["mh"]
+        ).collect(),
+        "append_minhash": lambda s, t: dedup.write_minhash_index(
+            t["docs"], "text", "doc_id", t["mh"], mode="append"
+        ),
+        "compact_minhash_index": lambda s, t: dedup.compact_minhash_index(s, t["mh"]),
+        "erase_from_minhash_index": lambda s, t: dedup.erase_from_minhash_index(
+            s, t["mh"], t["keys"], "doc_id"
+        ),
+        "rebuild_minhash_index": lambda s, t: dedup.rebuild_minhash_index(
+            s, t["docs"], "text", "doc_id", t["mh"]
+        ),
+        "ivf_probe_topk": lambda s, t: sim.ivf_probe_topk(
+            s, t["ivf"], None, "embedding", "vec_id", t["q"], k=3, n_probe=3
+        ).collect(),
+        "ivf_probe_topk_quantized": lambda s, t: sim.ivf_probe_topk_quantized(
+            s, t["ivf"], "embedding", "vec_id", t["q"], k=3, n_probe=3
+        ).collect(),
+        "ivf_fragmentation_stats": lambda s, t: sim.ivf_fragmentation_stats(
+            s, t["ivf"]
+        ).collect(),
+        "ivf_centroid_drift": lambda s, t: sim.ivf_centroid_drift(
+            s, t["ivf"], t["emb"], "embedding"
+        ).collect(),
+        "append_to_ivf_index": lambda s, t: sim.append_to_ivf_index(
+            t["emb"], t["ivf"], "embedding", "vec_id"
+        ),
+        "compact_ivf_index": lambda s, t: sim.compact_ivf_index(s, t["ivf"]),
+        "erase_from_ivf_index": lambda s, t: sim.erase_from_ivf_index(
+            s, t["ivf"], t["vkeys"], "vec_id"
+        ),
+        "rebuild_ivf_index": lambda s, t: sim.rebuild_ivf_index(
+            s, t["ivf"], "embedding", "vec_id", max_iter=2
+        ),
+        "gdpr_erase_subject": lambda s, t: erase_subject(
+            s, t["keys"],
+            ivf_indexes=[(t["ivf"], "vec_id")],
+            minhash_indexes=[(t["mh"], "doc_id")],
+        ),
+    }
+
+
+@pytest.mark.parametrize("entry_point", sorted(_flat_entry_points()))
+def test_every_index_entry_point_rejects_a_flat_root(spark, flat_trees, entry_point):
+    """The generational layout is the only one: every probe, append,
+    compact, erase and rebuild entry point (and the GDPR composition)
+    rejects a flat tree loudly, in genlog's head resolution, and names the
+    migration — it never reads or rewrites the flat tree in place."""
+    def files():
+        return {
+            k: sorted(os.path.relpath(os.path.join(r, f), flat_trees[k])
+                      for r, _, fs in os.walk(flat_trees[k]) for f in fs)
+            for k in ("mh", "ivf")
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match="migrate_flat_index_to_generational"):
+        _flat_entry_points()[entry_point](spark, flat_trees)
+    assert files() == before  # nothing staged, nothing moved

@@ -299,7 +299,7 @@ def test_streaming_ingest_probes_minhash_index(spark, tmp_path):
     hist = spark.createDataFrame([(0, base)], "doc_id long, text string")
     idx = str(tmp_path / "idx")
     corpus = str(tmp_path / "corpus")
-    write_minhash_index(hist, "text", "doc_id", idx, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(hist, "text", "doc_id", idx, num_hashes=24, num_bands=6)
     hist.write.mode("overwrite").parquet(corpus)
 
     inbox = tmp_path / "inbox"
@@ -379,7 +379,7 @@ def test_streaming_ingest_appends_ivf_index(spark, tmp_path):
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(90)]
     hist = spark.createDataFrame(rows[:30], "vec_id long, embedding array<float>")
     idx = str(tmp_path / "ivf")
-    write_ivf_index(hist, idx, "embedding", "vec_id", n_clusters=4, seed=3, generational=False)
+    write_ivf_index(hist, idx, "embedding", "vec_id", n_clusters=4, seed=3)
 
     inbox = tmp_path / "vin"
     inbox.mkdir()
@@ -403,7 +403,10 @@ def test_streaming_ingest_appends_ivf_index(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    assert spark.read.parquet(idx).count() == 90
+    from etl_hiscox_spark.operators.segindex import live_rows
+    from etl_hiscox_spark.operators.similarity import _IVF
+
+    assert live_rows(spark, idx, _IVF).count() == 90
     full = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     qv = [float(x) for x in vecs[0]]
     got = [
