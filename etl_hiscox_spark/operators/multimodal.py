@@ -652,7 +652,7 @@ def audio_band_fingerprint(
     return df.select(path_col, content_col).mapInPandas(extract, FINGERPRINT_SCHEMA)
 
 
-AUDIO_WINDOWS_SCHEMA = T.StructType(
+AUDIO_FRAME_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType()),
         T.StructField("window_index", T.IntegerType()),
@@ -697,9 +697,9 @@ def audio_frame_windows(
                             "rms": float(np.sqrt((seg * seg).mean())),
                         }
                     )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_WINDOWS_SCHEMA.fields])
+            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FRAME_SCHEMA.fields])
 
-    return df.select(path_col, content_col).mapInPandas(frames, AUDIO_WINDOWS_SCHEMA)
+    return df.select(path_col, content_col).mapInPandas(frames, AUDIO_FRAME_SCHEMA)
 
 
 def gif_frame_features(

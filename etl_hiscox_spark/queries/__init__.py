@@ -37,1197 +37,19 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# ---------------------------------------------------------------------------
-# Driver correctness window rotation.
-#
-# The driver hard-checks only the FIRST 50 entries of ``queries()`` each
-# round (CORRECTNESS_r{N}.json). With ~100 declared queries, registration
-# order decides which ever get a hard signal — so the window is an explicit,
-# rotated list, not an accident of import order (VERDICT r2 item 1).
-#
-# Round 5 window (VERDICT r4 item 1): staleness-driven full rotation. By
-# r4 the union covered all 124 registered queries, but 39 were last
-# driver-checked in r2 and 35 in r3. WINDOW_R5 = the 11 queries whose
-# declared output is new or changed this round (g12 threshold cast to
-# DOUBLE both sides, a16 upgraded from rows-only to a partial oracle, new
-# l3_ivf_probe_topk / s12_orc_roundtrip / t16_bigram_lm_nll /
-# t17_semantic_decontamination / t18_span_dedup /
-# t19_nb_language_classifier, and t3/t7/t12 whose declared outputs
-# switched to engine-portable forms (sha256 draws, polynomial rolling
-# fingerprint) and gained full oracles — new/changed queries outrank
-# stale greens) + all 39 r2-stale greens. The eight r3-stale paths
-# displaced by the new declarations (s1/s8/a11 write/stats round-trips
-# pinned by pytest; f4/f6_f9 date chains and q2's unpivot seam covered
-# by the randomized oracle-dialect property tests,
-# tests/test_oracle_dialect_properties.py; g8/g9 plan-gated in
-# tests/test_plans.py and watched by bench) rotate with the other
-# r3-checked queries into WINDOW_R6; after r6 no green is older than
-# two rounds.
-# ---------------------------------------------------------------------------
-
-# Round 6 window (VERDICT r5 item 2): lead with the 6 queries declared
-# after the r5 window froze (never driver-checked) plus the one new r6
-# declaration (s14), then the 4 r5 oracle upgrades whose declared
-# output/oracle changed after the freeze (l2_minhash gained the DuckDB
-# brute-force exact-Jaccard recall tripwire; l2_transitive the
-# recursive-CTE closure; t13 the full per-stage recompute; t8 the partial
-# exact-totals invariant), then ALL 35 r3-stale greens, then 4 of the r4
-# greens whose PLANS changed this round (forced-broadcast removal — j3,
-# g1, g10, g11; outputs unchanged, re-banked as plan-change canaries).
-# 7 + 4 + 35 + 4 = 50. After r6 no green is older than r4 (staleness ≤ 2
-# rounds — now enforced mechanically by
-# tests/test_api_surface.py::test_window_r6_leaves_no_query_stale_beyond_two_rounds).
-WINDOW_R6: tuple[str, ...] = (
-    # never driver-checked (declared post-freeze in r5) + new in r6
-    "t20_tfidf_keywords",
-    "s13_fixed_width_roundtrip",
-    "g13_top_revenue_supplier",
-    "f17_golden_record",
-    "q7_outlier_zscore",
-    "x12_click_abandonment",
-    "s14_incremental_refresh",
-    "g14_custdist",
-    "t21_bpe_merges",
-    "v4_pca_projection",
-    # oracle upgrades — declared output/oracle changed post-r5-freeze
-    # (l2s/t13/t8 in r5; l3_ann gained its literal-plane SQL twin in r6).
-    # l2_simhash_candidates also upgraded in r6 (portable sha256 bit
-    # source + full SQL twin, locally hash-green at sf0.001 AND sf0.01)
-    # but takes no slot — the staleness guard auto-forces its r4 green
-    # into WINDOW_R7.
-    "l2_minhash_near_dup",
-    "l2_transitive_clusters",
-    "t13_corpus_prep_pipeline",
-    "t8_pack_sequences",
-    "l3_ann_topk",
-    # all 35 queries whose latest green is r3
-    "a11_table_stats",
-    "f16_fuzzy_name_pairs",
-    "f4_multiformat_dates",
-    "f6_f9_date_math",
-    "g8_large_order_customers",
-    "g9_exclusive_late_supplier",
-    "l3_embedding_near_pairs",
-    "l4_text_stats",
-    "l5_token_stats",
-    "l6_json_extraction",
-    "q2_rule_profile",
-    "q3_threshold_alerts",
-    "q4_failure_tagging",
-    "q5_store_failures",
-    "s10_seed_load",
-    "s1_csv_roundtrip",
-    "s6_json_roundtrip",
-    "s8_ctas_roundtrip",
-    "t10_repetition_stats",
-    "t11_gopher_flags",
-    "t1_language_id",
-    "t2_quality_score",
-    "t4_vocabulary",
-    "t5_bigram_frequency",
-    "t6_train_test_split",
-    "v1_embedding_norms",
-    "v2_quantize_int8",
-    "v3_random_projection",
-    "x10_click_purchase_join",
-    "x11_funnel_stages",
-    "x3_tumbling_window",
-    "x4_sliding_window",
-    "x5_session_window",
-    "x8_threshold_crossing",
-    "x9_stream_static_enrich",
-    # (the r4 plan-change canaries j3/g1/g10/g11 were displaced one by one
-    # as g14/t21/v4/l3_ann declarations+upgrades landed — new and upgraded
-    # outrank re-banked greens; their r4 signals stay within the 2-round
-    # staleness bound and their plan shapes are pytest-gated)
-)
-
-# Round 7 window (VERDICT r6 item 1): the r6 comment above feared a
-# 51-for-50 overflow, but that arithmetic double-counted l2_simhash —
-# its upgraded oracle landed in r6 while its latest DRIVER signal is r4,
-# so it is one OF the 40 r4-stale greens, not an extra slot. Recomputed
-# against CORRECTNESS_r01–r06: exactly 10 never-checked r6 declarations
-# + exactly 40 r4-stale greens = 50. No exception needed; never-checked
-# lead per the guard in tests/test_api_surface.py.
-WINDOW_R7: tuple[str, ...] = (
-    # never driver-checked (declared post-r6-freeze) — lead the window
-    "w8_gap_fill_daily",
-    "s15_corrupt_json_quarantine",
-    "x13_exactly_once_txn_sink",
-    "a18_approx_quantile_rollup",
-    "g15_small_quantity_revenue",
-    "m3_gif_frame_sample",
-    "s16_avro_roundtrip",
-    "t22_upsample_mixture",
-    "t23_bpe_segmentation",
-    "t24_heavy_hitter_terms",
-    # all 40 queries whose latest driver green is r4 (includes the
-    # l2_simhash oracle upgrade, which re-banks with its full SQL twin)
-    "a10_grouping_sets",
-    "a17_order_items_array",
-    "a1_a5_global_stats",
-    "a8_completeness_profile",
-    "f14_explicit_schema_cast",
-    "f3_money_parse",
-    "f8_batch_id_format",
-    "f_string_cleaning",
-    "g10_volume_shipping",
-    "g11_disjunctive_brackets",
-    "g1_star_join_revenue",
-    "g7_scalar_subquery_share",
-    "j3_broadcast_dim_join",
-    "j6_range_interval_join",
-    "j7_asof_join",
-    "l1_exact_dedup",
-    "l2_connected_clusters",
-    "l2_ngram_jaccard_pairs",
-    "l2_simhash_candidates",
-    "l3_cosine_topk",
-    "l3_semantic_dedup",
-    "m1_multimodal_features",
-    "m2_audio_features",
-    "p9_conditional_business_rule",
-    "q1_rule_violations",
-    "q4_quarantine_split",
-    "q6_observe_metrics",
-    "r3_topk_orders",
-    "s11_snapshot_diff",
-    "s3_append_schema_merge",
-    "s5_xlsx_roundtrip",
-    "s7_object_listing",
-    "s9_scd2_snapshot",
-    "t14_pii_scrub",
-    "t15_decontamination",
-    "t9_chunk_documents",
-    "w5_running_total",
-    "x1_x2_stream_roundtrip",
-    "x6_stateful_dedup_batch_twin",
-    "x7_upsert_batch_twin",
-)
-
-# WINDOW_R8 arithmetic: after r7 banks, latest signals are r7 for the 50
-# above, r6 for WINDOW_R6's 50, r5 for the remaining 50 — the population
-# (150) exactly saturates a 50-slot window under the old "≤2 rounds
-# stale" bound, leaving ZERO slots for new declarations ever again. The
-# staleness bound is therefore relaxed to ≤3 rounds (sustainable
-# population 200) starting with the r7 guard roll-forward in
-# tests/test_api_surface.py; WINDOW_R8 takes new declarations plus an
-# early-rechecked slice of the 49 r5 greens so the r9 rotation doesn't
-# spike.
-
-# Round 8 window (ADVICE r7 items 1-2): staleness accounting is now
-# HASH-green only (a no_oracle entry is a rows-only smoke signal, not a
-# verification — s7_object_listing burned slots in r4/r7 without ever
-# being hash-verified). Under that stricter ledger the never-hash-checked
-# set is exactly {s7_object_listing, l3_ivf_probe_topk,
-# v4_pca_projection}:
-#   - v4 gained its partial-invariant oracle in r7 (ADVICE item 2) — it
-#     leads this window;
-#   - l3_ivf gains a FULL oracle this round: at the driver's check scale
-#     (sf0.01) the seeded-kmeans probe provably returns the exact
-#     brute-force top-10 (pinned by pytest), so the exact-cosine SQL twin
-#     applies verbatim;
-#   - s7 stays rows-only BY DESIGN (filesystem mtimes have no SQL twin)
-#     and stops burning slots — explicit ROWS_ONLY_BY_DESIGN exemption in
-#     tests/test_api_surface.py, pinned by
-#     tests/test_pipeline.py::test_object_listing_and_binary_read.
-# Head = v4 + l3_ivf + the 7 r7-declared PENDING queries + this round's
-# new declarations (m5_jpeg_features, l3_quantized_topk,
-# m6_audio_spectral_peak); tail = the remaining r5-stale greens. The
-# deferred r5 greens (all property/plan/pytest-covered) are mandatory
-# WINDOW_R9 entries under the ≤3-round bound.
-WINDOW_R8: tuple[str, ...] = (
-    # never hash-checked — lead the window
-    "v4_pca_projection",
-    "l3_ivf_probe_topk",
-    # declared during r7 (PENDING_NEXT_WINDOW), never driver-checked
-    "m4_png_features",
-    "t25_token_budget_sample",
-    "t26_dsir_weights",
-    "t27_boilerplate_lines",
-    "t28_domain_quality_gate",
-    "t29_gumbel_weighted_topk",
-    "s17_training_shards",
-    # declared during r8 — JPEG codec leg, quantized ANN, audio FFT,
-    # wildcard-domain blocklist, key-skew diagnostics, incremental
-    # LSH-index probe, CCNet perplexity buckets, image dHash, audio
-    # band fingerprint
-    "m5_jpeg_features",
-    "l3_quantized_topk",
-    "m6_audio_spectral_peak",
-    "t30_domain_blocklist",
-    "a19_key_skew_profile",
-    "l2_incremental_probe",
-    "t31_perplexity_buckets",
-    "m7_image_dhash",
-    "m8_audio_fingerprint",
-    # r5-stale greens (32 of 49; the deferred 17 — p1/p3/p5/p6/j4/u1/u3/w1
-    # plus the nine displaced by the r8 declarations (w6/w7/w4_ties/
-    # w4_rank_per_group/w3_lag_delta/w2_rolling_average/
-    # u2_except_difference/t19_nb/t18_span_dedup), all property/plan/
-    # pytest-covered simple shapes — lead WINDOW_R9 as mandatory entries)
-    "a6_grouped_pricing_summary",
-    "a7_conditional_aggregate",
-    "a9_duplicate_stats",
-    "a10_rollup_summary",
-    "a12_percentiles",
-    "a13_histogram",
-    "a14_pivot",
-    "a15_distinct_rollup",
-    "a16_hll_distinct_rollup",
-    "f7_freshness_tiers",
-    "g2_top_unshipped_orders",
-    "g3_supplier_part_matrix",
-    "g4_promo_revenue_share",
-    "g5_exists_late_orders",
-    "g6_having_large_customers",
-    "g12_sales_opportunity",
-    "j1_inner_equijoin",
-    "j2_left_outer_join",
-    "j5_left_anti_join",
-    "l5_bpe_token_count",
-    "l6_from_json_struct",
-    "p2_computed_columns",
-    "p4_filter_range",
-    "p7_filter_regex",
-    "p8_filter_cross_column",
-    "s4_sql_entry_point",
-    "s12_orc_roundtrip",
-    "t3_fingerprint",
-    "t7_mixture_sample",
-    "t12_weighted_sample",
-    "t16_bigram_lm_nll",
-    "t17_semantic_decontamination",
-)
-
-# Round 9 window — PRE-DEFINED at the end of r8 so the staleness guard
-# never goes red at judge time (every prior round left pytest failing the
-# moment the driver banked CORRECTNESS_r{N}: the guard computed
-# current = N+1 and demanded a window that didn't exist yet — flagged as
-# a hard-gate blemish in the r6 verdict). ``active_window()`` below
-# serves THIS list automatically once CORRECTNESS_r08.json exists.
-#
-# Composition (latest-green histogram after r8 banks:
-# {r5: 17, r6: 49, r7: 49, r8: 50} over 166 queries, s7 exempt):
-# the 9 NEW r9 declarations lead (never-checked queries outrank stale
-# greens — guard below), then the 17 mandatory r5 greens (their signals
-# hit the 3-round bound at current=9), then 24 of the 49 r6 greens as
-# early prechecks — the heavier oracle shapes; the 16 simplest
-# (s1/s6/s8/s10 round-trips, f4/f6_f9 date chains, a11, l4/l5/l6,
-# t1/t2/t4/t6, v1/v3) plus the 9 prechecks displaced by the new
-# declarations (x3/x4/x5/x8/x9/x10/x11/x12/v2 — r9 swap rule: new
-# queries lead, prechecks move back) form the mandatory WINDOW_R10 head
-# of 25.
-WINDOW_R9: tuple[str, ...] = (
-    # NEW r9 declarations — never driver-checked, must lead (locally
-    # hash-green vs DuckDB at sf0.001 AND sf0.01 before declaring):
-    # m9 = cross-modal block-bucket near-dup pairing (image dHash + audio
-    # band fingerprints through dedup.bitstring_block_pairs), m10 = video
-    # frame-hash containment join, t32 = survivorship-policy dedup.
-    "m9_media_near_dup_pairs",
-    "m10_video_frame_near_dup",
-    "t32_cluster_keep_best",
-    "t33_leakage_safe_split",
-    "s18_bucketed_colocated_join",
-    "l3_mmr_topk",
-    "l3_ivf_append_probe",
-    "q8_median_imputation",
-    "t34_ngram_novelty_score",
-    # mandatory: latest green is r5 — stale-beyond-3 at current=9
-    "j4_left_semi_join",
-    "p1_column_projection",
-    "p3_filter_equality",
-    "p5_filter_not_null",
-    "p6_filter_in_list",
-    "t18_span_dedup",
-    "t19_nb_language_classifier",
-    "u1_union_append",
-    "u2_except_difference",
-    "u3_intersect",
-    "w1_dedup_rank",
-    "w2_rolling_average",
-    "w3_lag_delta",
-    "w4_rank_per_group",
-    "w4_rank_with_ties",
-    "w6_trailing_week_spend",
-    "w7_distribution_ranks",
-    # r6-green prechecks (33 of 49) — smooths the r10 rotation
-    "f16_fuzzy_name_pairs",
-    "f17_golden_record",
-    "g13_top_revenue_supplier",
-    "g14_custdist",
-    "g8_large_order_customers",
-    "g9_exclusive_late_supplier",
-    "l2_minhash_near_dup",
-    "l2_transitive_clusters",
-    "l3_ann_topk",
-    "l3_embedding_near_pairs",
-    "q2_rule_profile",
-    "q3_threshold_alerts",
-    "q4_failure_tagging",
-    "q5_store_failures",
-    "q7_outlier_zscore",
-    "s13_fixed_width_roundtrip",
-    "s14_incremental_refresh",
-    "t10_repetition_stats",
-    "t11_gopher_flags",
-    "t13_corpus_prep_pipeline",
-    "t20_tfidf_keywords",
-    "t21_bpe_merges",
-    "t5_bigram_frequency",
-    "t8_pack_sequences",
-)
-
-# Round 10 window — PRE-DEFINED at the end of r9 (same self-advance
-# mechanism as WINDOW_R9; ``active_window()`` serves this once
-# CORRECTNESS_r09.json exists). Composition (histogram after r9 banks,
-# assuming r9 green: {r6: 25, r7: 49, r8: 50, r9: 50} — the 25 r6-latest
-# are the 16 deferred-by-plan plus the 9 r9-displaced prechecks):
-# head = the 25 r6 greens left out of WINDOW_R9 (stale-beyond-3 at
-# current=10): the 16 deferred-by-plan simple round-trips plus the 9
-# prechecks displaced by r9's new declarations
-# (x3/x4/x5/x8/x9/x10/x11/x12/v2). Then 25 of the 49 r7 greens as early prechecks —
-# the heavier oracle shapes (joins, gold analytics, media codecs,
-# streaming twins, write paths); the 24 simplest r7 greens (scalar
-# chains, 1-pass profiles, round-trip seams s5/s16, t15/t22/t24's
-# samplers and sketches, f_string_cleaning) defer to a mandatory
-# WINDOW_R11 head, leaving r11 load = 24 + any r10 declarations. The r10 builder SWAPS
-# prechecks for new declarations (new queries must lead; prechecks move
-# toward r11) — keep new declarations <= ~15.
-#
-# r10 build swap (per plan): the 6 new r10 declarations lead —
-# l3_ivf_compact_probe / l2_lsh_compact_probe (index compaction with
-# content-checksum + probe oracles, VERDICT r9 item 3),
-# l3_ivf_drift_diag (centroid-drift diagnostic, literal-geometry SQL
-# twin, item 4), t35_keep_best_survivors (the survivor frame, item 5),
-# l3_ivf_erase_probe / l2_lsh_erase_probe (GDPR erasure inside the two
-# index layouts — completes the maintenance tier append/compact/erase).
-# The 6 displaced PRECHECKS (never mandatory entries) —
-# w8_gap_fill_daily, x13_exactly_once_txn_sink, x1_x2_stream_roundtrip,
-# x6_stateful_dedup_batch_twin, q6_observe_metrics, s11_snapshot_diff —
-# move to WINDOW_R11's mandatory head (r7-latest, stale-beyond-3 at
-# current=11).
-WINDOW_R10: tuple[str, ...] = (
-    # new r10 declarations — never driver-checked, must lead
-    "l3_ivf_compact_probe",
-    "l2_lsh_compact_probe",
-    "l3_ivf_erase_probe",
-    "l2_lsh_erase_probe",
-    "l3_ivf_drift_diag",
-    "t35_keep_best_survivors",
-    # mandatory: latest green r6 — stale-beyond-3 at current=10
-    "a11_table_stats",
-    "f4_multiformat_dates",
-    "f6_f9_date_math",
-    "l4_text_stats",
-    "l5_token_stats",
-    "l6_json_extraction",
-    "s10_seed_load",
-    "s1_csv_roundtrip",
-    "s6_json_roundtrip",
-    "s8_ctas_roundtrip",
-    "t1_language_id",
-    "t2_quality_score",
-    "t4_vocabulary",
-    "t6_train_test_split",
-    "v1_embedding_norms",
-    "v2_quantize_int8",
-    "v3_random_projection",
-    "x3_tumbling_window",
-    "x4_sliding_window",
-    "x5_session_window",
-    "x8_threshold_crossing",
-    "x9_stream_static_enrich",
-    "x10_click_purchase_join",
-    "x11_funnel_stages",
-    "x12_click_abandonment",
-    # r7-green prechecks (25 of 49) — smooths the r11 rotation
-    "a17_order_items_array",
-    "a18_approx_quantile_rollup",
-    "g10_volume_shipping",
-    "g11_disjunctive_brackets",
-    "g1_star_join_revenue",
-    "j3_broadcast_dim_join",
-    "j6_range_interval_join",
-    "j7_asof_join",
-    "l2_connected_clusters",
-    "l2_ngram_jaccard_pairs",
-    "l2_simhash_candidates",
-    "l3_cosine_topk",
-    "l3_semantic_dedup",
-    "m1_multimodal_features",
-    "m2_audio_features",
-    "m3_gif_frame_sample",
-    "s15_corrupt_json_quarantine",
-    "s9_scd2_snapshot",
-    "t23_bpe_segmentation",
-)
-
-# Round 11 window — PRE-DEFINED at the end of r10 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r10.json
-# exists). Composition (histogram after r10 banks, assuming r10 green:
-# {r7: 30, r8: 50, r9: 50, r10: 50}):
-# head = the 30 r7-latest greens (stale-beyond-3 at current=11): the 24
-# simplest r7 greens deferred by the r9 plan plus the 6 prechecks
-# displaced by r10's new declarations (w8/x13/x1_x2/x6/q6/s11). Then 20
-# of the 50 r8 greens as early prechecks — the heavier oracle shapes
-# (index round-trips, sketches/samplers, media codecs, PCA/quantized
-# vectors); the 30 simplest r8 greens (projections/filters/joins/aggs,
-# scalar gold queries, t3/t12 samplers) defer to a mandatory WINDOW_R12
-# head, leaving r12 load = 30 + any r11 declarations. The r11 builder SWAPS prechecks for new
-# declarations (new queries must lead; prechecks move toward r12) —
-# keep new declarations <= ~15.
-WINDOW_R11: tuple[str, ...] = (
-    # new r11 declarations — never driver-checked, must lead:
-    # l3_ivf_rebuild_probe (drift->rebuild loop closed under the
-    # rename-aside commit protocol, VERDICT r10 item 1),
-    # x14_txn_optimize_compaction (manifest-aware OPTIMIZE on the
-    # streaming txn sink + post-compaction exactly-once replay, item 3),
-    # s19_gdpr_erase_subject (one-call erasure across base/txn-history/
-    # IVF/minhash with residual verification, item 6),
-    # l3_ivf_quantized_probe (int8 codes stored in the cluster
-    # partitions, codes-only candidate scan + exact rerank, item 8),
-    # l2_lsh_rebuild_probe (minhash banding-parameter migration under
-    # the rename-aside protocol — the LSH twin of l3_ivf_rebuild_probe,
-    # declared later in r11).
-    # They displace the 5 tail r8-green prechecks (t27/t29/t31/v4/t26),
-    # which move to WINDOW_R12's mandatory head.
-    "l3_ivf_rebuild_probe",
-    "x14_txn_optimize_compaction",
-    "s19_gdpr_erase_subject",
-    "l3_ivf_quantized_probe",
-    "l2_lsh_rebuild_probe",
-    # mandatory: latest green r7 — stale-beyond-3 at current=11
-    "a10_grouping_sets",
-    "a1_a5_global_stats",
-    "a8_completeness_profile",
-    "f14_explicit_schema_cast",
-    "f3_money_parse",
-    "f8_batch_id_format",
-    "f_string_cleaning",
-    "g15_small_quantity_revenue",
-    "g7_scalar_subquery_share",
-    "l1_exact_dedup",
-    "p9_conditional_business_rule",
-    "q1_rule_violations",
-    "q4_quarantine_split",
-    "r3_topk_orders",
-    "s16_avro_roundtrip",
-    "s3_append_schema_merge",
-    "s5_xlsx_roundtrip",
-    "t14_pii_scrub",
-    "t15_decontamination",
-    "t22_upsample_mixture",
-    "t24_heavy_hitter_terms",
-    "t9_chunk_documents",
-    "w5_running_total",
-    "x7_upsert_batch_twin",
-    "w8_gap_fill_daily",
-    "x13_exactly_once_txn_sink",
-    "x1_x2_stream_roundtrip",
-    "x6_stateful_dedup_batch_twin",
-    "q6_observe_metrics",
-    "s11_snapshot_diff",
-    # r8-green prechecks (15 of 50; t27/t29/t31/v4/t26 displaced by the
-    # five r11 declarations) — smooths the r12 rotation
-    "a16_hll_distinct_rollup",
-    "a19_key_skew_profile",
-    "g12_sales_opportunity",
-    "l2_incremental_probe",
-    "l3_ivf_probe_topk",
-    "l3_quantized_topk",
-    "m4_png_features",
-    "m5_jpeg_features",
-    "m6_audio_spectral_peak",
-    "m7_image_dhash",
-    "m8_audio_fingerprint",
-    "s12_orc_roundtrip",
-    "s17_training_shards",
-    "t16_bigram_lm_nll",
-    "t17_semantic_decontamination",
-)
-
-# Round 12 window — pre-defined at the end of r11; r12 SWAPPED its five
-# new declarations into the lead (never driver-checked queries outrank
-# everything), displacing the 5 tail r9-green prechecks
-# (s18/t13/t21/t32/t33) to WINDOW_R13's mandatory head. Composition
-# (histogram recomputed from CORRECTNESS artifacts at swap time:
-# {r8: 35, r9: 50, r10: 50, r11: 50} over 185 + s7):
-# 5 new r12 declarations, then ALL 35 r8-latest greens (stale-beyond-3
-# at current=12), then 10 of the 50 r9 greens as early prechecks (the
-# heavier oracle shapes — pair-graph dedup, media near-dup, MMR/ANN,
-# incremental refresh). The r13 builder SWAPS prechecks for new
-# declarations and ALWAYS recomputes cohorts from the CORRECTNESS
-# artifacts before editing.
-WINDOW_R12: tuple[str, ...] = (
-    # new r12 declarations — never driver-checked, must lead:
-    # l2_lsh_gen_lifecycle_probe / l3_ivf_gen_lifecycle_probe (the
-    # generation-pointer object-store layout, sources/genlog: full
-    # build->compact->erase->rebuild lifecycle committed by pointer
-    # flips on a file:// root, VERDICT r11 item 1),
-    # l3_ivf_recover_rebuild_probe (crash recovery of the flat staged
-    # rebuild, item 4), x15_txn_multi_writer_occ (two-writer OCC commit
-    # loop + exactly-once duplicate rejection under a real thread race,
-    # item 6), s20_bulk_frame_erase (frame-based bulk GDPR erasure, no
-    # driver collect / IN-literal, item 5).
-    "l2_lsh_gen_lifecycle_probe",
-    "l3_ivf_gen_lifecycle_probe",
-    "l3_ivf_recover_rebuild_probe",
-    "x15_txn_multi_writer_occ",
-    "s20_bulk_frame_erase",
-    # mandatory: latest green r8 — stale-beyond-3 at current=12
-    "a10_rollup_summary",
-    "a12_percentiles",
-    "a13_histogram",
-    "a14_pivot",
-    "a15_distinct_rollup",
-    "a6_grouped_pricing_summary",
-    "a7_conditional_aggregate",
-    "a9_duplicate_stats",
-    "f7_freshness_tiers",
-    "g2_top_unshipped_orders",
-    "g3_supplier_part_matrix",
-    "g4_promo_revenue_share",
-    "g5_exists_late_orders",
-    "g6_having_large_customers",
-    "j1_inner_equijoin",
-    "j2_left_outer_join",
-    "j5_left_anti_join",
-    "l5_bpe_token_count",
-    "l6_from_json_struct",
-    "p2_computed_columns",
-    "p4_filter_range",
-    "p7_filter_regex",
-    "p8_filter_cross_column",
-    "s4_sql_entry_point",
-    "t12_weighted_sample",
-    "t25_token_budget_sample",
-    "t27_boilerplate_lines",
-    "t28_domain_quality_gate",
-    "t26_dsir_weights",
-    "t29_gumbel_weighted_topk",
-    "t30_domain_blocklist",
-    "t31_perplexity_buckets",
-    "t3_fingerprint",
-    "t7_mixture_sample",
-    "v4_pca_projection",
-    # r9-green prechecks (10 of 50) — the heavier shapes, smoothing r13;
-    # the 5 displaced by the r12 declarations (s18/t13/t21/t32/t33)
-    # moved to WINDOW_R13's mandatory head
-    "f17_golden_record",
-    "l2_minhash_near_dup",
-    "l2_transitive_clusters",
-    "l3_ann_topk",
-    "l3_embedding_near_pairs",
-    "l3_ivf_append_probe",
-    "l3_mmr_topk",
-    "m10_video_frame_near_dup",
-    "m9_media_near_dup_pairs",
-    "s14_incremental_refresh",
-)
-
-# Round 13 window — PRE-DEFINED at the end of r12 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r12.json
-# exists). Composition (histogram after r12 banks, assuming r12 green:
-# {r9: 40, r10: 50, r11: 50, r12: 50} over 190 + s7):
-# head = ALL 40 r9-latest greens (stale-beyond-3 at current=13): the 35
-# r9 greens the r12 plan deferred plus the 5 prechecks displaced by
-# r12's new declarations (s18/t13/t21/t32/t33). Then 10 of the 50 r10
-# greens as early prechecks — the heavier oracle shapes (index
-# compact/erase lifecycles, semantic dedup, media codecs, BPE
-# segmentation); the 40 remaining r10 greens defer to a mandatory
-# WINDOW_R14 head. The r13 builder SWAPS prechecks for new declarations
-# (new queries must lead; displaced r10-green prechecks move toward
-# r14) — keep new declarations <= ~10 and ALWAYS recompute cohorts from
-# the CORRECTNESS artifacts before editing.
-WINDOW_R13: tuple[str, ...] = (
-    # new r13 declarations — never driver-checked, must lead:
-    # x16_txn_checkpoint_head (the _last_checkpoint analog: O(tail)
-    # head resolution + checkpoint advance on expiry, VERDICT r12
-    # item 5), x17_txn_object_store_roundtrip (the whole txn protocol
-    # stack — append/exactly-once/OPTIMIZE/erase/time-travel — on a
-    # file:// root through the pyarrow.fs manifest branch, item 2),
-    # s21_schema_widen_append (numeric-family widening + cross-family
-    # write-time rejection, ADVICE r12 item 4),
-    # l2_lsh_collision_rerun_probe (generational-by-default build +
-    # maintenance collision re-run wrapper, items 3+6).
-    # They displace the 4 tail r10-green prechecks (l3_semantic_dedup /
-    # m1_multimodal_features / m3_gif_frame_sample /
-    # t23_bpe_segmentation), which move to WINDOW_R14's mandatory head.
-    "x16_txn_checkpoint_head",
-    "x17_txn_object_store_roundtrip",
-    "s21_schema_widen_append",
-    "l2_lsh_collision_rerun_probe",
-    # mandatory: latest green r9 — stale-beyond-3 at current=13
-    "f16_fuzzy_name_pairs",
-    "g13_top_revenue_supplier",
-    "g14_custdist",
-    "g8_large_order_customers",
-    "g9_exclusive_late_supplier",
-    "j4_left_semi_join",
-    "p1_column_projection",
-    "p3_filter_equality",
-    "p5_filter_not_null",
-    "p6_filter_in_list",
-    "q2_rule_profile",
-    "q3_threshold_alerts",
-    "q4_failure_tagging",
-    "q5_store_failures",
-    "q7_outlier_zscore",
-    "q8_median_imputation",
-    "s13_fixed_width_roundtrip",
-    "s18_bucketed_colocated_join",
-    "t10_repetition_stats",
-    "t11_gopher_flags",
-    "t13_corpus_prep_pipeline",
-    "t18_span_dedup",
-    "t19_nb_language_classifier",
-    "t20_tfidf_keywords",
-    "t21_bpe_merges",
-    "t32_cluster_keep_best",
-    "t33_leakage_safe_split",
-    "t34_ngram_novelty_score",
-    "t5_bigram_frequency",
-    "t8_pack_sequences",
-    "u1_union_append",
-    "u2_except_difference",
-    "u3_intersect",
-    "w1_dedup_rank",
-    "w2_rolling_average",
-    "w3_lag_delta",
-    "w4_rank_per_group",
-    "w4_rank_with_ties",
-    "w6_trailing_week_spend",
-    "w7_distribution_ranks",
-    # r10-green prechecks (6 of 50; l3_semantic_dedup /
-    # m1_multimodal_features / m3_gif_frame_sample / t23_bpe_segmentation
-    # displaced by the four r13 declarations) — smoothing r14
-    "l2_lsh_compact_probe",
-    "l2_lsh_erase_probe",
-    "l2_ngram_jaccard_pairs",
-    "l2_simhash_candidates",
-    "l3_ivf_compact_probe",
-    "l3_ivf_erase_probe",
-)
-
-# Round 14 window — PRE-DEFINED at the end of r13 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r13.json
-# exists). Composition (histogram after r13 banks, assuming r13 green:
-# {r10: 44, r11: 50, r12: 50, r13: 50} over 194 + s7):
-# head = ALL 44 r10-latest greens (stale-beyond-3 at current=14) — the 4
-# prechecks displaced by r13's declarations (l3_semantic_dedup /
-# m1_multimodal_features / m3_gif_frame_sample / t23_bpe_segmentation)
-# lead, then the 40 r10 greens the r13 plan deferred. Then 6 of the 50
-# r11 greens as early prechecks — the heaviest oracle shapes (index
-# rebuild/quantized lifecycles, txn OPTIMIZE + exactly-once, GDPR
-# composition); the 44 remaining r11 greens defer to a mandatory
-# WINDOW_R15 head. The r14 builder SWAPS prechecks for new declarations
-# (new queries must lead; displaced r11-green prechecks move toward
-# r15) — keep new declarations <= ~6 and ALWAYS recompute cohorts from
-# the CORRECTNESS artifacts before editing.
-WINDOW_R14: tuple[str, ...] = (
-    # new r13 declarations — never driver-checked, must lead (declared
-    # mid-r13 AFTER WINDOW_R13 was already being served, so they bank in
-    # r14; the OCC delta-append layout closing the ADVICE r12 lost-append
-    # race): l2_lsh_delta_append_probe (delta segment committed by
-    # pointer flip, racing erase collides and the append retries past
-    # it), l3_ivf_delta_append_probe (self-contained quantized delta
-    # segment, union probes, compact merges segments checksum-equal),
-    # l2_stream_index_ingest (foreachBatch micro-batches each commit an
-    # OCC delta — continuous ingestion at stream cadence), and
-    # x18_txn_time_travel (timestampAsOf snapshot resolution).
-    # They displace the 4 tail r11-green prechecks
-    # (l3_ivf_rebuild_probe / s19_gdpr_erase_subject /
-    # x13_exactly_once_txn_sink / x14_txn_optimize_compaction), which
-    # move to WINDOW_R15's mandatory head.
-    "l2_lsh_delta_append_probe",
-    "l3_ivf_delta_append_probe",
-    "l2_stream_index_ingest",
-    "x18_txn_time_travel",
-    # mandatory: latest green r10 — stale-beyond-3 at current=14; the 4
-    # prechecks displaced from WINDOW_R13 lead
-    "l3_semantic_dedup",
-    "m1_multimodal_features",
-    "m3_gif_frame_sample",
-    "t23_bpe_segmentation",
-    "a11_table_stats",
-    "a17_order_items_array",
-    "a18_approx_quantile_rollup",
-    "f4_multiformat_dates",
-    "f6_f9_date_math",
-    "g10_volume_shipping",
-    "g11_disjunctive_brackets",
-    "g1_star_join_revenue",
-    "j3_broadcast_dim_join",
-    "j6_range_interval_join",
-    "j7_asof_join",
-    "l2_connected_clusters",
-    "l3_cosine_topk",
-    "l3_ivf_drift_diag",
-    "l4_text_stats",
-    "l5_token_stats",
-    "l6_json_extraction",
-    "m2_audio_features",
-    "s10_seed_load",
-    "s15_corrupt_json_quarantine",
-    "s1_csv_roundtrip",
-    "s6_json_roundtrip",
-    "s8_ctas_roundtrip",
-    "s9_scd2_snapshot",
-    "t1_language_id",
-    "t2_quality_score",
-    "t35_keep_best_survivors",
-    "t4_vocabulary",
-    "t6_train_test_split",
-    "v1_embedding_norms",
-    "v2_quantize_int8",
-    "v3_random_projection",
-    "x10_click_purchase_join",
-    "x11_funnel_stages",
-    "x12_click_abandonment",
-    "x3_tumbling_window",
-    "x4_sliding_window",
-    "x5_session_window",
-    "x8_threshold_crossing",
-    "x9_stream_static_enrich",
-    # r11-green prechecks (2 of 50; l3_ivf_rebuild_probe /
-    # s19_gdpr_erase_subject / x13_exactly_once_txn_sink /
-    # x14_txn_optimize_compaction displaced by the four r13
-    # declarations) — the heaviest shapes, smoothing r15
-    "l2_lsh_rebuild_probe",
-    "l3_ivf_quantized_probe",
-)
-
-# Round 15 window — PRE-DEFINED at the end of r13 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r14.json
-# exists). Composition (recomputed from the CORRECTNESS artifacts at
-# definition time — cohorts {r9: 40, r10: 50, r11: 50, r12: 50} before
-# r13 banks — and assuming r13/r14 bank green: {r10: 44→r14, r11: 48,
-# r12: 50, r13: 50, r14: 50} over 198 + s7):
-# head = ALL 48 r11-latest greens (stale-beyond-3 at current=15) — the 4
-# prechecks displaced by r13's four mid-round declarations
-# (l3_ivf_rebuild_probe / s19_gdpr_erase_subject /
-# x13_exactly_once_txn_sink / x14_txn_optimize_compaction) lead, then
-# the remaining 44 r11 greens (the r11 cohort minus l2_lsh_rebuild_probe
-# / l3_ivf_quantized_probe, which banked as r14 prechecks). Then the
-# r12-green precheck slots — originally 2 (the heaviest oracle shapes,
-# the generation-pointer lifecycles); the r14 builder used one slot for
-# its mid-round declaration (l3_ivf_full_erase_recovery_probe leads,
-# l3_ivf_gen_lifecycle_probe moved to WINDOW_R16's mandatory head), so
-# ONE r12 precheck remains; the other r12 greens defer to a mandatory
-# WINDOW_R16 head. The r15 builder SWAPS prechecks for new declarations
-# (new queries must lead; displaced r12-green prechecks move toward
-# r16) — only 1 swappable slot remains (more displaces mandatory r11
-# entries, which must NOT happen) and ALWAYS recompute cohorts from the
-# CORRECTNESS artifacts before editing.
-WINDOW_R15: tuple[str, ...] = (
-    # new r14 declaration — never driver-checked, must lead (declared
-    # mid-r14 AFTER WINDOW_R14 was already being served, so it banks in
-    # r15): l3_ivf_full_erase_recovery_probe (the readable-empty
-    # lifecycle: full erase → placeholder head probes empty → compact
-    # NO-OPS without committing (ADVICE r13 fix) → append recovers →
-    # odds-only exact-cosine oracle). It displaces the
-    # l3_ivf_gen_lifecycle_probe r12-green precheck (same family), which
-    # moves to WINDOW_R16's mandatory head.
-    "l3_ivf_full_erase_recovery_probe",
-    # mandatory: latest green r11 — stale-beyond-3 at current=15; the 4
-    # prechecks displaced from WINDOW_R14 lead
-    "l3_ivf_rebuild_probe",
-    "s19_gdpr_erase_subject",
-    "x13_exactly_once_txn_sink",
-    "x14_txn_optimize_compaction",
-    "a10_grouping_sets",
-    "a16_hll_distinct_rollup",
-    "a19_key_skew_profile",
-    "a1_a5_global_stats",
-    "a8_completeness_profile",
-    "f14_explicit_schema_cast",
-    "f3_money_parse",
-    "f8_batch_id_format",
-    "f_string_cleaning",
-    "g12_sales_opportunity",
-    "g15_small_quantity_revenue",
-    "g7_scalar_subquery_share",
-    "l1_exact_dedup",
-    "l2_incremental_probe",
-    "l3_ivf_probe_topk",
-    "l3_quantized_topk",
-    "m4_png_features",
-    "m5_jpeg_features",
-    "m6_audio_spectral_peak",
-    "m7_image_dhash",
-    "m8_audio_fingerprint",
-    "p9_conditional_business_rule",
-    "q1_rule_violations",
-    "q4_quarantine_split",
-    "q6_observe_metrics",
-    "r3_topk_orders",
-    "s11_snapshot_diff",
-    "s12_orc_roundtrip",
-    "s16_avro_roundtrip",
-    "s17_training_shards",
-    "s3_append_schema_merge",
-    "s5_xlsx_roundtrip",
-    "t14_pii_scrub",
-    "t15_decontamination",
-    "t16_bigram_lm_nll",
-    "t17_semantic_decontamination",
-    "t22_upsample_mixture",
-    "t24_heavy_hitter_terms",
-    "t9_chunk_documents",
-    "w5_running_total",
-    "w8_gap_fill_daily",
-    "x1_x2_stream_roundtrip",
-    "x6_stateful_dedup_batch_twin",
-    "x7_upsert_batch_twin",
-    # r12-green precheck (1 of 50 after the r14 declaration took the
-    # other slot; l3_ivf_gen_lifecycle_probe moved to WINDOW_R16's
-    # mandatory head) — the heaviest shape, smoothing r16
-    "l2_lsh_gen_lifecycle_probe",
-)
-
-# Round 16 window — PRE-DEFINED at the end of r14 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r15.json
-# exists). Composition (recomputed programmatically from the CORRECTNESS
-# artifacts + the pre-defined R14/R15 windows, assuming both bank green:
-# {r12: 49, r13: 50, r14: 50, r15: 50} over 199 + s7): head = ALL 49
-# r12-latest greens (stale-beyond-3 at current=16) — the r12 cohort
-# minus l2_lsh_gen_lifecycle_probe (banks as an r15 precheck), plus
-# l3_ivf_gen_lifecycle_probe (displaced from WINDOW_R15 by the r14
-# declaration). Then 1 r13-green precheck — the heaviest remaining
-# oracle shape (the LSH compact lifecycle); the other r13 greens defer
-# to a mandatory WINDOW_R17 head. The r16 builder SWAPS the precheck
-# for a new declaration (new queries must lead; at most 1 here — more
-# displaces mandatory r12 entries, which must NOT happen) and ALWAYS
-# recomputes cohorts from the CORRECTNESS artifacts before editing.
-WINDOW_R16: tuple[str, ...] = (
-    # new r15 declaration — never driver-checked, must lead (declared
-    # mid-r15 AFTER WINDOW_R15 was already being served, so it banks in
-    # r16): l2_lsh_retired_version_guard_probe (the retention
-    # version-number reuse guard found by the r15 multi-actor stress:
-    # build → delta append → compact → vacuum trims the pointer prefix
-    # behind the immutable floor marker → a stale compact staged from
-    # the vacuumed v0 snapshot is REFUSED at the retired v1 name →
-    # erase recovers above the floor → odds-vs-evens exact-Jaccard
-    # oracle). It displaces the l2_lsh_compact_probe r13-green precheck
-    # (same family), which moves to WINDOW_R17's mandatory head.
-    "l2_lsh_retired_version_guard_probe",
-    "a10_rollup_summary",
-    "a12_percentiles",
-    "a13_histogram",
-    "a14_pivot",
-    "a15_distinct_rollup",
-    "a6_grouped_pricing_summary",
-    "a7_conditional_aggregate",
-    "a9_duplicate_stats",
-    "f17_golden_record",
-    "f7_freshness_tiers",
-    "g2_top_unshipped_orders",
-    "g3_supplier_part_matrix",
-    "g4_promo_revenue_share",
-    "g5_exists_late_orders",
-    "g6_having_large_customers",
-    "j1_inner_equijoin",
-    "j2_left_outer_join",
-    "j5_left_anti_join",
-    "l2_minhash_near_dup",
-    "l2_transitive_clusters",
-    "l3_ann_topk",
-    "l3_embedding_near_pairs",
-    "l3_ivf_append_probe",
-    "l3_ivf_gen_lifecycle_probe",
-    "l3_ivf_recover_rebuild_probe",
-    "l3_mmr_topk",
-    "l5_bpe_token_count",
-    "l6_from_json_struct",
-    "m10_video_frame_near_dup",
-    "m9_media_near_dup_pairs",
-    "p2_computed_columns",
-    "p4_filter_range",
-    "p7_filter_regex",
-    "p8_filter_cross_column",
-    "s14_incremental_refresh",
-    "s20_bulk_frame_erase",
-    "s4_sql_entry_point",
-    "t12_weighted_sample",
-    "t25_token_budget_sample",
-    "t26_dsir_weights",
-    "t27_boilerplate_lines",
-    "t28_domain_quality_gate",
-    "t29_gumbel_weighted_topk",
-    "t30_domain_blocklist",
-    "t31_perplexity_buckets",
-    "t3_fingerprint",
-    "t7_mixture_sample",
-    "v4_pca_projection",
-    "x15_txn_multi_writer_occ",
-    # the r13-green precheck slot was taken by the r15 declaration above
-    # (l2_lsh_compact_probe moved to WINDOW_R17's mandatory head)
-)
-
-# Round 17 window — PRE-DEFINED at the end of r15 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r16.json
-# exists). Composition recomputed programmatically (simulate r15/r16
-# banking their pre-defined windows green over the CORRECTNESS
-# artifacts; cohorts then {r13: 50, r14: 50, r15: 50, r16: 50} over 200
-# + s7): ALL 50 r13-latest greens are stale-beyond-3 at current=17 —
-# the window is exactly that cohort, ZERO precheck slots. NOTE FOR THE
-# r16 BUILDER: the oracle-checked population (200) now saturates the
-# 50-slot × 4-round rotation exactly; a new mid-r16 declaration CANNOT
-# swap into this window without going red — either relax the staleness
-# bound to four rounds in tests/test_api_surface.py first (the r7
-# precedent: the bound moved 2→3 for the same arithmetic reason), or
-# declare nothing new.
-WINDOW_R17: tuple[str, ...] = (
-    # new r16 declaration — never driver-checked, must lead (declared
-    # mid-r16 AFTER WINDOW_R16 was already being served, so it banks in
-    # r17): l2_lsh_tombstone_coalesce_probe (the r16 retired-name
-    # tombstone protocol: vacuum tombstones trimmed pointers instead of
-    # deleting them, stale commits refuse naturally at occupied names,
-    # pairs coalesce one cycle later with the floor guard covering the
-    # freed names — odds-vs-evens exact-Jaccard oracle). It displaces
-    # the w4_rank_with_ties r13-green, which moves to WINDOW_R18's head
-    # (legal under the r16 four-round staleness bound: at current=17
-    # nothing r13 is stale yet, and WINDOW_R18 re-banks it at r18).
-    "l2_lsh_tombstone_coalesce_probe",
-    "f16_fuzzy_name_pairs",
-    "g13_top_revenue_supplier",
-    "g14_custdist",
-    "g8_large_order_customers",
-    "g9_exclusive_late_supplier",
-    "j4_left_semi_join",
-    "l2_lsh_collision_rerun_probe",
-    "l2_lsh_compact_probe",
-    "l2_lsh_erase_probe",
-    "l2_ngram_jaccard_pairs",
-    "l2_simhash_candidates",
-    "l3_ivf_compact_probe",
-    "l3_ivf_erase_probe",
-    "p1_column_projection",
-    "p3_filter_equality",
-    "p5_filter_not_null",
-    "p6_filter_in_list",
-    "q2_rule_profile",
-    "q3_threshold_alerts",
-    "q4_failure_tagging",
-    "q5_store_failures",
-    "q7_outlier_zscore",
-    "q8_median_imputation",
-    "s13_fixed_width_roundtrip",
-    "s18_bucketed_colocated_join",
-    "s21_schema_widen_append",
-    "t10_repetition_stats",
-    "t11_gopher_flags",
-    "t13_corpus_prep_pipeline",
-    "t18_span_dedup",
-    "t19_nb_language_classifier",
-    "t20_tfidf_keywords",
-    "t21_bpe_merges",
-    "t32_cluster_keep_best",
-    "t33_leakage_safe_split",
-    "t34_ngram_novelty_score",
-    "t5_bigram_frequency",
-    "t8_pack_sequences",
-    "u1_union_append",
-    "u2_except_difference",
-    "u3_intersect",
-    "w1_dedup_rank",
-    "w2_rolling_average",
-    "w3_lag_delta",
-    "w4_rank_per_group",
-    # w4_rank_with_ties displaced to WINDOW_R18 by the r16 declaration
-    "w6_trailing_week_spend",
-    "w7_distribution_ranks",
-    "x16_txn_checkpoint_head",
-    "x17_txn_object_store_roundtrip",
-)
-
-# Round 18 window — PRE-DEFINED at the end of r16 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r17.json
-# exists). Composition recomputed programmatically (simulate r16/r17
-# banking their pre-defined windows green over the CORRECTNESS
-# artifacts; cohorts then {r13: 1, r14: 50, r15: 50, r16: 50, r17: 50}
-# over 201 + s7): head = w4_rank_with_ties — the one r13-green the r16
-# tombstone-probe declaration displaced from WINDOW_R17, mandatory here
-# under the four-round bound (last green r13, stale at current=18) —
-# then 49 of the 50 r14-latest greens. The remaining r14 green,
-# f6_f9_date_math, defers to WINDOW_R19's mandatory slots (it is the
-# lowest-risk deferral: its date chains are double-covered by the
-# randomized oracle-dialect property tests). r17 mid-round declaration:
-# l2_lsh_half_retired_repair_probe (the r17 half-retired repair + r17
-# tombstone-first ordering lifecycle, declared after WINDOW_R17 was
-# already serving) takes the head for its first driver check,
-# displacing x9_stream_static_enrich (r14 green) to WINDOW_R19's
-# mandatory slots. The r18 builder SWAPS tail entries for new
-# declarations (new queries must lead; displaced r14 entries move to
-# WINDOW_R19) and ALWAYS recomputes cohorts from the CORRECTNESS
-# artifacts before editing.
-WINDOW_R18: tuple[str, ...] = (
-    "l2_lsh_half_retired_repair_probe",
-    "w4_rank_with_ties",
-    "a11_table_stats",
-    "a17_order_items_array",
-    "a18_approx_quantile_rollup",
-    "f4_multiformat_dates",
-    "g10_volume_shipping",
-    "g11_disjunctive_brackets",
-    "g1_star_join_revenue",
-    "j3_broadcast_dim_join",
-    "j6_range_interval_join",
-    "j7_asof_join",
-    "l2_connected_clusters",
-    "l2_lsh_delta_append_probe",
-    "l2_lsh_rebuild_probe",
-    "l2_stream_index_ingest",
-    "l3_cosine_topk",
-    "l3_ivf_delta_append_probe",
-    "l3_ivf_drift_diag",
-    "l3_ivf_quantized_probe",
-    "l3_semantic_dedup",
-    "l4_text_stats",
-    "l5_token_stats",
-    "l6_json_extraction",
-    "m1_multimodal_features",
-    "m2_audio_features",
-    "m3_gif_frame_sample",
-    "s10_seed_load",
-    "s15_corrupt_json_quarantine",
-    "s1_csv_roundtrip",
-    "s6_json_roundtrip",
-    "s8_ctas_roundtrip",
-    "s9_scd2_snapshot",
-    "t1_language_id",
-    "t23_bpe_segmentation",
-    "t2_quality_score",
-    "t35_keep_best_survivors",
-    "t4_vocabulary",
-    "t6_train_test_split",
-    "v1_embedding_norms",
-    "v2_quantize_int8",
-    "v3_random_projection",
-    "x10_click_purchase_join",
-    "x11_funnel_stages",
-    "x12_click_abandonment",
-    "x18_txn_time_travel",
-    "x3_tumbling_window",
-    "x4_sliding_window",
-    "x5_session_window",
-    "x8_threshold_crossing",
-)
-
-# Round 19 window — PRE-DEFINED at the end of r17 (same self-advance
-# mechanism; ``active_window()`` serves this once CORRECTNESS_r18.json
-# exists). Composition recomputed programmatically (simulate r17/r18
-# banking their pre-defined windows green over the CORRECTNESS
-# artifacts; cohorts then {r14: 2, r15: 50, r16: 50, r17: 49, r18: 50}
-# over 202 + s7): mandatory head = the two r14-latest greens the earlier
-# windows could not hold — f6_f9_date_math (deferred from WINDOW_R18)
-# and x9_stream_static_enrich (displaced from WINDOW_R18 by the r17
-# half-retired-repair declaration), both stale at current=19 under the
-# four-round bound — then 48 of the 50 r15-latest greens. The two
-# remaining r15 greens, a1_a5_global_stats and f_string_cleaning, defer
-# to WINDOW_R20's mandatory head (lowest-risk deferrals: the global
-# count/sum/mean/min-max shape is implicitly re-verified by dozens of
-# other oracle queries, and the trim/upper/empty-as-null functions are
-# double-covered by their dedicated cleaning pytests). The r18 builder
-# SWAPS tail entries for new declarations (new queries must lead;
-# displaced r15 entries move to WINDOW_R20 alongside the two deferrals)
-# and ALWAYS recomputes cohorts from the CORRECTNESS artifacts before
-# editing.
-WINDOW_R19: tuple[str, ...] = (
-    "f6_f9_date_math",
-    "x9_stream_static_enrich",
-    "a10_grouping_sets",
-    "a16_hll_distinct_rollup",
-    "a19_key_skew_profile",
-    "a8_completeness_profile",
-    "f14_explicit_schema_cast",
-    "f3_money_parse",
-    "f8_batch_id_format",
-    "g12_sales_opportunity",
-    "g15_small_quantity_revenue",
-    "g7_scalar_subquery_share",
-    "l1_exact_dedup",
-    "l2_incremental_probe",
-    "l2_lsh_gen_lifecycle_probe",
-    "l3_ivf_full_erase_recovery_probe",
-    "l3_ivf_probe_topk",
-    "l3_ivf_rebuild_probe",
-    "l3_quantized_topk",
-    "m4_png_features",
-    "m5_jpeg_features",
-    "m6_audio_spectral_peak",
-    "m7_image_dhash",
-    "m8_audio_fingerprint",
-    "p9_conditional_business_rule",
-    "q1_rule_violations",
-    "q4_quarantine_split",
-    "q6_observe_metrics",
-    "r3_topk_orders",
-    "s11_snapshot_diff",
-    "s12_orc_roundtrip",
-    "s16_avro_roundtrip",
-    "s17_training_shards",
-    "s19_gdpr_erase_subject",
-    "s3_append_schema_merge",
-    "s5_xlsx_roundtrip",
-    "t14_pii_scrub",
-    "t15_decontamination",
-    "t16_bigram_lm_nll",
-    "t17_semantic_decontamination",
-    "t22_upsample_mixture",
-    "t24_heavy_hitter_terms",
-    "t9_chunk_documents",
-    "w5_running_total",
-    "w8_gap_fill_daily",
-    "x13_exactly_once_txn_sink",
-    "x14_txn_optimize_compaction",
-    "x1_x2_stream_roundtrip",
-    "x6_stateful_dedup_batch_twin",
-    "x7_upsert_batch_twin",
-)
-
-WINDOWS: dict[int, tuple[str, ...]] = {
-    8: WINDOW_R8,
-    9: WINDOW_R9,
-    10: WINDOW_R10,
-    11: WINDOW_R11,
-    12: WINDOW_R12,
-    13: WINDOW_R13,
-    14: WINDOW_R14,
-    15: WINDOW_R15,
-    16: WINDOW_R16,
-    17: WINDOW_R17,
-    18: WINDOW_R18,
-    19: WINDOW_R19,
-}
-
-
 def _repo_root() -> str:
     import os
 
     return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _banked_rounds() -> list[int]:
-    import glob
-    import os
-
-    out = []
-    for p in glob.glob(os.path.join(_repo_root(), "CORRECTNESS_r*.json")):
-        try:
-            out.append(int(os.path.basename(p).split("_r")[1].split(".")[0]))
-        except (IndexError, ValueError):
-            pass
-    return out
-
-
 def latest_green_rounds() -> dict[str, int]:
     """Latest round each query was HASH-verified (rows+schema+values).
 
-    The ONE parser of the CORRECTNESS artifacts — the staleness/coverage
-    guards in tests/test_api_surface.py consume this; keeping a second
-    copy there diverged on path anchoring (CWD-relative vs repo-root).
+    The ONE parser of the CORRECTNESS artifacts — :func:`served_order`
+    and the staleness/coverage guards in tests/test_api_surface.py
+    consume this; keeping a second copy there diverged on path anchoring
+    (CWD-relative vs repo-root).
     no_oracle entries are deliberately excluded (ADVICE r7 item 1):
     counting them let rows-only checks masquerade as greens.
     """
@@ -1241,220 +63,35 @@ def latest_green_rounds() -> dict[str, int]:
             rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
         except (IndexError, ValueError):
             continue
-        for name, res in json.load(open(path)).items():
+        with open(path) as f:
+            banked = json.load(f)
+        for name, res in banked.items():
             if isinstance(res, dict) and res.get("hash_match") is True:
                 last[name] = max(last.get(name, 0), rnd)
     return last
 
 
-def active_window() -> tuple[int, tuple[str, ...]]:
-    """The rotation list the driver's NEXT correctness check should see.
+def served_order(queries: dict[str, Q], last: dict[str, int]) -> list[str]:
+    """The order ``all_queries()`` serves, given ``last`` = each query's
+    latest hash-green round (:func:`latest_green_rounds`).
 
-    Current round = max banked CORRECTNESS round + 1 (file existence, not
-    green-ness: the driver writes the file once per round regardless of
-    failures, and a failed round's re-check belongs to the NEXT window,
-    where the never-checked/staleness guards force the failures back in).
-    The registry serves the window defined for that round; out-of-range
-    rounds fall back to the nearest defined window, and an artifact-less
-    checkout (no CORRECTNESS files at all — pruned clone, installed
-    package) serves the OLDEST defined window: re-banking a known-good
-    rotation is harmless, silently skipping the newest declarations'
-    first-ever verification is not."""
-    banked = _banked_rounds()
-    if not banked:
-        key = min(WINDOWS)
-    else:
-        current = max(banked) + 1
-        if current in WINDOWS:
-            key = current
-        else:
-            lower = [k for k in WINDOWS if k <= current]
-            key = max(lower) if lower else min(WINDOWS)
-    return key, WINDOWS[key]
+    The driver hash-checks only the FIRST 50 entries of ``queries()`` each
+    round, so the order decides which queries get a driver signal. One
+    key, computed from the banked CORRECTNESS files:
 
-# Round 5 window (historical — r5 driver results in CORRECTNESS_r05.json).
-WINDOW_R5: tuple[str, ...] = (
-    # output changed / newly declared this round — must (re-)check
-    "g12_sales_opportunity",
-    "a16_hll_distinct_rollup",
-    "l3_ivf_probe_topk",
-    "s12_orc_roundtrip",
-    "t16_bigram_lm_nll",
-    "t17_semantic_decontamination",
-    "t18_span_dedup",
-    "t19_nb_language_classifier",
-    "t12_weighted_sample",
-    "t7_mixture_sample",
-    "t3_fingerprint",
-    # last driver-checked r2: projections/filters
-    "p1_column_projection",
-    "p2_computed_columns",
-    "p3_filter_equality",
-    "p4_filter_range",
-    "p5_filter_not_null",
-    "p6_filter_in_list",
-    "p7_filter_regex",
-    "p8_filter_cross_column",
-    # last checked r2: joins
-    "j1_inner_equijoin",
-    "j2_left_outer_join",
-    "j4_left_semi_join",
-    "j5_left_anti_join",
-    # last checked r2: aggregations
-    "a6_grouped_pricing_summary",
-    "a7_conditional_aggregate",
-    "a9_duplicate_stats",
-    "a10_rollup_summary",
-    "a12_percentiles",
-    "a13_histogram",
-    "a14_pivot",
-    "a15_distinct_rollup",
-    # last checked r2: windows
-    "w1_dedup_rank",
-    "w2_rolling_average",
-    "w3_lag_delta",
-    "w4_rank_per_group",
-    "w4_rank_with_ties",
-    "w6_trailing_week_spend",
-    "w7_distribution_ranks",
-    # last checked r2: set ops / sort / SQL entry / misc
-    "u1_union_append",
-    "u2_except_difference",
-    "u3_intersect",
-    "s4_sql_entry_point",
-    "f7_freshness_tiers",
-    "l5_bpe_token_count",
-    "l6_from_json_struct",
-    # last checked r2: gold analytics
-    "g2_top_unshipped_orders",
-    "g3_supplier_part_matrix",
-    "g4_promo_revenue_share",
-    "g5_exists_late_orders",
-    "g6_having_large_customers",
-)
+    1. oracle-backed queries that were never hash-green lead;
+    2. then the oldest latest-green round first;
+    3. ties break by name;
+    4. oracle-less queries come last — they can never bank a hash-green,
+       so they must not take a checked slot.
 
-# Round 4 window (historical — r4 driver results in CORRECTNESS_r04.json):
-# the two r3 driver-red queries fixed that round, the 14 never-checked,
-# the 10 newly declared, and a 24-query cross-tier canary. Union r1–r4 =
-# 124/124 registered queries driver-checked — zero never-checked.
-WINDOW_R4: tuple[str, ...] = (
-    # r3 driver-red, fixed this round
-    "f3_money_parse",
-    "a17_order_items_array",
-    # never-checked, hard oracles
-    "m1_multimodal_features",
-    "l2_connected_clusters",
-    "l3_semantic_dedup",
-    # never-checked, rows-only
-    "l2_minhash_near_dup",
-    "l2_simhash_candidates",
-    "l2_transitive_clusters",
-    "l3_ann_topk",
-    "t3_fingerprint",
-    "t7_mixture_sample",
-    "t8_pack_sequences",
-    "t12_weighted_sample",
-    "t13_corpus_prep_pipeline",
-    "s7_object_listing",
-    "a16_hll_distinct_rollup",
-    # newly declared this round
-    "s5_xlsx_roundtrip",
-    "f14_explicit_schema_cast",
-    "x1_x2_stream_roundtrip",
-    "t14_pii_scrub",
-    "t15_decontamination",
-    "m2_audio_features",
-    "s11_snapshot_diff",
-    "g10_volume_shipping",
-    "g11_disjunctive_brackets",
-    "g12_sales_opportunity",
-    # canary: one-per-tier sample of previously driver-green rows
-    "p9_conditional_business_rule",
-    "j3_broadcast_dim_join",
-    "j6_range_interval_join",
-    "j7_asof_join",
-    "a1_a5_global_stats",
-    "a8_completeness_profile",
-    "a10_grouping_sets",
-    "w5_running_total",
-    "r3_topk_orders",
-    "g1_star_join_revenue",
-    "g7_scalar_subquery_share",
-    "f_string_cleaning",
-    "f8_batch_id_format",
-    "q1_rule_violations",
-    "q4_quarantine_split",
-    "q6_observe_metrics",
-    "x6_stateful_dedup_batch_twin",
-    "x7_upsert_batch_twin",
-    "s3_append_schema_merge",
-    "s9_scd2_snapshot",
-    "l1_exact_dedup",
-    "l2_ngram_jaccard_pairs",
-    "l3_cosine_topk",
-    "t9_chunk_documents",
-)
+    A checkout without CORRECTNESS files therefore serves name order.
+    """
 
-# Round 3 window (historical — r3 driver results in CORRECTNESS_r03.json).
-WINDOW_R3: tuple[str, ...] = (
-    # silver cleaning semantics (reference test_ingestion.py:204-253)
-    "f_string_cleaning",
-    "f4_multiformat_dates",
-    "f6_f9_date_math",
-    # DQ engine (sources.yml declared tests -> rule profiles / quarantine)
-    "q2_rule_profile",
-    "q4_quarantine_split",
-    "q4_failure_tagging",
-    # streaming batch-twins (x*)
-    "x3_tumbling_window",
-    "x4_sliding_window",
-    "x5_session_window",
-    "x6_stateful_dedup_batch_twin",
-    "x8_threshold_crossing",
-    "x9_stream_static_enrich",
-    "x10_click_purchase_join",
-    "x11_funnel_stages",
-    # gold analytics declared after slot 50 in r1/r2
-    "g8_large_order_customers",
-    "g9_exclusive_late_supplier",
-    "a17_order_items_array",
-    "f16_fuzzy_name_pairs",
-    # LLM-pipeline tier (dedup / similarity / vectors / text)
-    "l1_exact_dedup",
-    "l2_ngram_jaccard_pairs",
-    "l3_cosine_topk",
-    "l3_embedding_near_pairs",
-    "v1_embedding_norms",
-    "v2_quantize_int8",
-    "v3_random_projection",
-    "l4_text_stats",
-    "l5_token_stats",
-    "l6_json_extraction",
-    "t1_language_id",
-    "t2_quality_score",
-    "t4_vocabulary",
-    "t5_bigram_frequency",
-    "t6_train_test_split",
-    "t9_chunk_documents",
-    "t10_repetition_stats",
-    "t11_gopher_flags",
-    # write-path round-trips (new this round — VERDICT r2 item 5)
-    "s1_csv_roundtrip",
-    "s3_append_schema_merge",
-    "s6_json_roundtrip",
-    "s8_ctas_roundtrip",
-    "s9_scd2_snapshot",
-    "s10_seed_load",
-    "a11_table_stats",
-    # DQ engine / scalar-function / streaming-sink queries (new this round)
-    "q1_rule_violations",
-    "q3_threshold_alerts",
-    "q5_store_failures",
-    "q6_observe_metrics",
-    "x7_upsert_batch_twin",
-    "f3_money_parse",
-    "f8_batch_id_format",
-)
+    def key(name: str) -> tuple[bool, int, str]:
+        return (queries[name].oracle is None, last.get(name, 0), name)
+
+    return sorted(queries, key=key)
 
 
 def all_queries() -> dict[str, Q]:
@@ -1467,11 +104,4 @@ def all_queries() -> dict[str, Q]:
             __import__(f"etl_hiscox_spark.queries.{mod}")
         except ImportError:
             pass
-    ordered: dict[str, Q] = {}
-    for name in active_window()[1]:
-        if name in QUERIES:
-            ordered[name] = QUERIES[name]
-    for name, q in QUERIES.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+    return {name: QUERIES[name] for name in served_order(QUERIES, latest_green_rounds())}

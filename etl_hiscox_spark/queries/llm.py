@@ -33,11 +33,22 @@ from etl_hiscox_spark.operators.dedup import (
     simhash_candidates,
 )
 from etl_hiscox_spark.concurrency import run_overlapped
+from etl_hiscox_spark.operators.caching import adopt_caches
 from etl_hiscox_spark.operators.segindex import live_rows
 from etl_hiscox_spark.operators.similarity import _IVF, cosine_topk
 from etl_hiscox_spark.queries import QUERIES, register
 from etl_hiscox_spark.registry import load_table
 from etl_hiscox_spark.smalldf import local_rows_df
+
+
+def _probe_pairs(out: DataFrame) -> DataFrame:
+    """Declared output of the index-probe queries: ``probe_minhash_index``
+    pairs with jaccard rounded, carrying the probe's persisted candidate
+    and set frames so ``release_caches`` on the result frees them."""
+    return adopt_caches(
+        out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard")), out
+    )
+
 
 def _raw_token_count() -> Column:
     """Single-space token count of the raw ``text`` column — the corpus
@@ -230,7 +241,7 @@ def l2_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = probe_minhash_index(
         new, "text", "doc_id", path, verify_df=docs, threshold=0.8
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 def _parquet_content_checksum(
@@ -358,7 +369,7 @@ def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = probe_minhash_index(
         new, "text", "doc_id", path, verify_df=docs, threshold=0.8
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -423,7 +434,7 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = probe_minhash_index(
         new, "text", "doc_id", path, verify_df=docs, threshold=0.8
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -495,7 +506,7 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = probe_minhash_index(
         new, "text", "doc_id", path, verify_df=docs, threshold=0.8
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -587,7 +598,7 @@ def l2_lsh_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = probe_minhash_index(
         new, "text", "doc_id", root, verify_df=docs, threshold=0.8
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -2796,7 +2807,6 @@ def t13_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is hash-gated end to end. The one genuinely non-SQL stage (BFD shard
     # packing) still RUNS but its pack ids are no longer in the declared
     # output; pack semantics stay pinned by t8 and the packing unit tests.
-    from etl_hiscox_spark.operators.caching import adopt_caches
     from etl_hiscox_spark.plans.llm_pipeline import prepare_corpus
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2957,7 +2967,7 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splits — 0 by construction, and BOTH engines recompute it from
     # their own independent pair graph + assignment, so a leak in either
     # pipeline surfaces as a nonzero (and a hash fail).
-    from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
+    from etl_hiscox_spark.operators.caching import attach_owned_caches
     from etl_hiscox_spark.operators.dedup import (
         confirmed_minhash_pairs,
         connected_components,
@@ -3047,7 +3057,8 @@ def l2_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = l2_ngram_jaccard_pairs(spark, sf_dir)  # register() returns fn unchanged
     confirmed = pairs.filter(F.col("jaccard") > 0.0).select("id_a", "id_b")
-    return connected_components(confirmed).select("node", "component")
+    # release handle for jaccard_pairs' persisted shingle-set stem
+    return adopt_caches(connected_components(confirmed).select("node", "component"), pairs)
 
 
 @register(
@@ -4671,7 +4682,7 @@ def l2_lsh_collision_rerun_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = probe_minhash_index(
         new, "text", "doc_id", root, verify_df=docs, threshold=0.8
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -4775,7 +4786,7 @@ def l2_lsh_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", root,
         verify_df=docs, threshold=0.8,
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -4890,7 +4901,7 @@ def l2_lsh_retired_version_guard_probe(spark: SparkSession, sf_dir: str) -> Data
         docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", root,
         verify_df=docs, threshold=0.8,
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -5033,7 +5044,7 @@ def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFra
         docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", root,
         verify_df=docs, threshold=0.8,
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -5192,7 +5203,7 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
         docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", root,
         verify_df=docs, threshold=0.8,
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)
 
 
 @register(
@@ -5306,4 +5317,4 @@ def l2_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", root,
         verify_df=docs, threshold=0.8,
     )
-    return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
+    return _probe_pairs(out)

@@ -135,43 +135,77 @@ def test_registry_conveniences(spark, sf_dir):
     assert spark.sql("SELECT COUNT(*) AS n FROM region").first()["n"] == 5
 
 
-def test_driver_window_rotation():
-    """The driver checks only the first 50 registered queries; the ACTIVE
-    window (WINDOW_R{N} for current round N, self-advancing the moment
-    the driver banks CORRECTNESS_r{N-1} — r8 change ending the
-    red-at-judge-time cycle) pins which ones those are. Guards: every
-    defined window has exactly 50 unique registered names, and the active
-    one is served first and in order."""
-    from etl_hiscox_spark.queries import WINDOWS, active_window, all_queries
-
-    qs = all_queries()
-    for rnd, win in WINDOWS.items():
-        assert len(win) == 50, f"WINDOW_R{rnd} has {len(win)} entries"
-        assert len(set(win)) == 50, f"WINDOW_R{rnd} has duplicates"
-        missing = [n for n in win if n not in qs]
-        assert not missing, f"WINDOW_R{rnd} names not registered: {missing}"
-    _, active = active_window()
-    assert list(qs)[:50] == list(active)
-
-
-# Queries whose declared output has NO SQL twin even in partial-invariant
-# form, pinned by dedicated pytests instead of the driver hash gate
-# (ADVICE r7 item 1: a driver `no_oracle` entry is a rows-only smoke
-# signal, not a verification — these stop burning window slots and are
-# tracked here explicitly).
-#   s7_object_listing: filesystem mtimes/paths; pinned by
-#     tests/test_pipeline.py::test_object_listing_and_binary_read.
-ROWS_ONLY_BY_DESIGN: set[str] = {"s7_object_listing"}
+# The driver hash-checks only the first DRIVER_WINDOW entries of
+# ``queries()`` each round.
+DRIVER_WINDOW = 50
 
 
 def _latest_green_rounds() -> dict[str, int]:
     """Shared parser in queries/__init__ — repo-root-anchored, so these
-    guards work from any cwd and cannot diverge from active_window()'s
+    guards work from any cwd and cannot diverge from served_order()'s
     view of the artifacts (r8 review: two copies had already diverged on
     path anchoring)."""
     from etl_hiscox_spark.queries import latest_green_rounds
 
     return latest_green_rounds()
+
+
+def _served_window() -> list[str]:
+    from etl_hiscox_spark.queries import all_queries
+
+    return list(all_queries())[:DRIVER_WINDOW]
+
+
+def _rows_only() -> set[str]:
+    """Queries with NO SQL twin even in partial-invariant form (today only
+    s7_object_listing: filesystem mtimes/paths, pinned by
+    tests/test_pipeline.py::test_object_listing_and_binary_read). A
+    driver ``no_oracle`` entry is a rows-only smoke signal, not a
+    verification, so these never bank a hash-green."""
+    from etl_hiscox_spark.queries import all_queries
+
+    return {n for n, q in all_queries().items() if q.oracle is None}
+
+
+def test_driver_window_rotation():
+    """The driver checks only the first 50 registered queries; the order
+    that decides which ones is computed from the banked CORRECTNESS files
+    (``served_order``). Guards: every registered query is served exactly
+    once, oracle-backed queries come first in (latest green round, name)
+    order with never-green ones (round 0) leading, and oracle-less
+    queries come last."""
+    from etl_hiscox_spark.queries import QUERIES, all_queries
+
+    qs = all_queries()
+    order = list(qs)
+    assert sorted(order) == sorted(QUERIES)
+    checked = [n for n in order if qs[n].oracle is not None]
+    assert order[: len(checked)] == checked, "oracle-less queries must come last"
+    last = _latest_green_rounds()
+    keys = [(last.get(n, 0), n) for n in checked]
+    assert keys == sorted(keys)
+
+
+def test_served_order_on_synthetic_artifacts():
+    from etl_hiscox_spark.queries import Q, served_order
+
+    names = ("b_green_r3", "a_green_r3", "c_never", "d_green_r1", "e_rows_only", "f_never")
+    qs = {n: Q(lambda spark, sf: None, None if n == "e_rows_only" else "SELECT 1") for n in names}
+    last = {"b_green_r3": 3, "a_green_r3": 3, "d_green_r1": 1}
+    assert served_order(qs, last) == [
+        "c_never",  # never hash-green lead
+        "f_never",
+        "d_green_r1",  # then rounds ascend
+        "a_green_r3",  # ties break by name
+        "b_green_r3",
+        "e_rows_only",  # oracle-less last
+    ]
+    # oracle-less stays last even if an artifact lists it green
+    assert served_order(qs, {**last, "e_rows_only": 1})[-1] == "e_rows_only"
+    # no CORRECTNESS artifacts: name order (oracle-less still last)
+    assert served_order(qs, {}) == sorted(set(names) - {"e_rows_only"}) + ["e_rows_only"]
+    all_sql = {n: Q(q.fn, "SELECT 1") for n, q in qs.items()}
+    assert served_order(all_sql, {}) == sorted(names)
 
 
 def test_current_window_leaves_no_query_stale_beyond_four_rounds():
@@ -196,12 +230,9 @@ def test_current_window_leaves_no_query_stale_beyond_four_rounds():
     FULL 201-query sweep (VERIFY_LOCAL_r{N}.txt) re-verifies every query
     at every closing commit regardless of the driver window.
 
-    Checked against the ACTIVE window (self-advancing since r8), so this
-    stays green across the driver's banking instead of demanding a
-    not-yet-written list."""
-    from etl_hiscox_spark.queries import active_window
-
-    _, win = active_window()
+    Checked against the served window, so this stays green across the
+    driver's banking instead of demanding a not-yet-written list."""
+    win = _served_window()
     last = _latest_green_rounds()
     current = max(last.values()) + 1
     too_stale = [n for n, r in last.items() if r <= current - 5 and n not in win]
@@ -211,62 +242,29 @@ def test_current_window_leaves_no_query_stale_beyond_four_rounds():
 def test_never_checked_queries_lead_the_window():
     """New declarations outrank stale greens: every registered query with
     NO hash-verified driver signal must occupy the earliest window slots
-    (or be explicitly listed in PENDING_NEXT_WINDOW / ROWS_ONLY_BY_DESIGN
-    below)."""
-    from etl_hiscox_spark.queries import active_window, all_queries
+    (oracle-less queries are exempt: they can never bank a hash-green)."""
+    from etl_hiscox_spark.queries import all_queries
 
-    _, win = active_window()
+    win = _served_window()
     last = _latest_green_rounds()
-    exempt = PENDING_NEXT_WINDOW | ROWS_ONLY_BY_DESIGN
+    exempt = _rows_only()
     never = [n for n in all_queries() if n not in last and n not in exempt]
     head = set(win[: max(len(never), 1)])
     missing = [n for n in never if n not in head]
     assert not missing, f"never-checked queries not leading the active window: {missing}"
 
 
-# Declared after the current window filled; first slots of the next one.
-# (WINDOW_R8's 50 slots: v4 + l3_ivf never-hash-checked lead, the 7
-# r7-declared PENDING queries, this round's new declarations, then
-# r5-stale greens. Queries declared during r8 AFTER the window fills go
-# here and lead WINDOW_R9.)
-# r14: the four r13 mid-round declarations now LEAD the served
-# WINDOW_R14 (they are "in the window", no exemption needed).
-# r15 mid-round declaration: WINDOW_R15 was already being served when
-# this was declared, so it led WINDOW_R16 (removed at the start of r16
-# once that window was being served — the one-round-grace tidy rule).
-# r16 mid-round declaration: the retired-name tombstone lifecycle probe
-# led WINDOW_R17 (removed at the start of r17 once that window was being
-# served — the one-round-grace tidy rule; it leads the served window, so
-# the never-checked-leads guard covers it without an exemption).
-# r17 mid-round declaration: the half-retired repair lifecycle probe
-# leads WINDOW_R18 (banks in r18; remove at the start of r18).
-PENDING_NEXT_WINDOW: set[str] = {
-    "l2_lsh_half_retired_repair_probe",
-}
-
-
 def test_every_query_has_driver_coverage_plan():
     """Every registered query must either have a hash-verified driver
-    signal (CORRECTNESS_r*.json), be in the current window, be pending the
-    next rotation, or be an explicit rows-only-by-design exemption.
-    Declaring a query without planning its driver signal is how coverage
-    gaps grew in r1/r2 — this fails loudly instead."""
-    from etl_hiscox_spark.queries import active_window, all_queries
+    signal (CORRECTNESS_r*.json), be in the served window, or be
+    oracle-less by design. Declaring a query without a driver signal is
+    how coverage gaps grew in r1/r2 — this fails loudly instead (e.g. more
+    never-green declarations than window slots)."""
+    from etl_hiscox_spark.queries import all_queries
 
-    checked: set[str] = (
-        set(active_window()[1]) | set(_latest_green_rounds()) | ROWS_ONLY_BY_DESIGN
-    )
-    unplanned = [n for n in all_queries() if n not in checked and n not in PENDING_NEXT_WINDOW]
+    checked = set(_served_window()) | set(_latest_green_rounds()) | _rows_only()
+    unplanned = [n for n in all_queries() if n not in checked]
     assert not unplanned, f"queries with no driver-coverage plan: {unplanned}"
-    # Tidy-up reminder with one round of grace: a PENDING entry banks in
-    # round N (it leads WINDOW_N by construction) and should be removed
-    # when that round's builder rotates the lists — flag it only once it
-    # has been green for a FULL round and is still listed, so the round
-    # that banks it doesn't start red before its builder touches anything.
-    last = _latest_green_rounds()
-    current = active_window()[0]
-    stale = [n for n in PENDING_NEXT_WINDOW if last.get(n, 10**9) <= current - 2]
-    assert not stale, f"banked a full round ago, remove from PENDING: {stale}"
 
 
 def test_sources_never_import_operators():

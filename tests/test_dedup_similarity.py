@@ -4,6 +4,7 @@ checks the DuckDB oracle can't express (xxhash-based signatures)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from etl_hiscox_spark.operators.dedup import (
@@ -639,6 +640,38 @@ def test_leakage_safe_split_releases_pair_graph(spark, sf_dir, persisted_rdd_ids
     assert release_caches(out) == 2
     assert persisted_rdd_ids() - before == set()
     assert release_caches(out) == 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "l2_incremental_probe",
+        "l2_lsh_compact_probe",
+        "l2_lsh_erase_probe",
+        "l2_lsh_rebuild_probe",
+        "l2_lsh_gen_lifecycle_probe",
+        "l2_lsh_collision_rerun_probe",
+        "l2_lsh_delta_append_probe",
+        "l2_lsh_retired_version_guard_probe",
+        "l2_lsh_tombstone_coalesce_probe",
+        "l2_lsh_half_retired_repair_probe",
+        "l2_stream_index_ingest",
+        "l2_ngram_jaccard_pairs",
+        "l2_connected_clusters",
+    ],
+)
+def test_pair_queries_release_every_persist(spark, sf_dir, persisted_rdd_ids, name):
+    """The declared output of a query derived from a cache-owning
+    operator (``probe_minhash_index``, ``jaccard_pairs``) carries those
+    caches, so one release after collect leaves no persist behind."""
+    from etl_hiscox_spark.operators.caching import release_caches
+    from etl_hiscox_spark.queries import all_queries
+
+    before = persisted_rdd_ids()
+    out = all_queries()[name].fn(spark, sf_dir)
+    out.collect()
+    release_caches(out)
+    assert persisted_rdd_ids() - before == set()
 
 
 def test_incremental_probe_banding_recall_margin_pinned(spark):

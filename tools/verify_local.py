@@ -131,7 +131,8 @@ def main():
     ap.add_argument(
         "--window",
         action="store_true",
-        help="check only the first 50 registered queries — the driver's CORRECTNESS view",
+        help="check only the first 50 served queries — the driver's CORRECTNESS view"
+        " (order: queries.served_order, computed from the banked CORRECTNESS files)",
     )
     ap.add_argument(
         "--vanilla",
@@ -154,7 +155,9 @@ def main():
         queries = {name: Q(fn, oracles.get(name)) for name, fn in fns.items()}
         n = entry_mod.entry(spark).count()
         print(f"entry(): {n} rows")
+        release = None
     else:
+        from etl_hiscox_spark.operators.caching import release_caches as release
         from etl_hiscox_spark.queries import all_queries
         from etl_hiscox_spark.session import get_spark
 
@@ -180,6 +183,9 @@ def main():
             s_cols = df.columns
             s_classes = {f.name: _class_spark(f.dataType.simpleString()) for f in df.schema.fields}
             s_rows = df.collect()
+            if release:
+                # free the query's operator caches before the next query runs
+                release(df)
         except Exception:
             print(f"FAIL  {name}: spark error")
             traceback.print_exc()
