@@ -192,16 +192,20 @@ _ORACLE_PAIR_CLOSURE_CTE = r"""inter AS (
     comp AS (SELECT node, MIN(reach) AS component FROM closure GROUP BY node)"""
 
 
-@register(
-    "l2_incremental_probe",
-    # Composed from the canonical shingle fragment — see l2_transitive_clusters.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
+def _cross_batch_oracle(erased: str = "") -> str:
+    """The brute-force cross-batch oracle of the LSH probe queries: every
+    (new odd doc, history even doc) pair with exact 3-gram Jaccard >= 0.8.
+    ``erased``, when given, is the predicate on ``b.doc_id`` that excludes
+    the history docs the query erased from the index before probing."""
+    keep = f" AND {erased}" if erased else ""
+    return (
+        "\n    WITH "
+        + _ORACLE_SHINGLE_N_CTE
+        + f""",
     inter AS (
       SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
       FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
+      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0{keep}
       GROUP BY a.doc_id, b.doc_id
     )
     SELECT new_id, dup_of,
@@ -209,7 +213,14 @@ _ORACLE_PAIR_CLOSURE_CTE = r"""inter AS (
     FROM inter
     JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
     WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    """
+    )
+
+
+@register(
+    "l2_incremental_probe",
+    # Composed from the canonical shingle fragment — see l2_transitive_clusters.
+    oracle=_cross_batch_oracle(),
 )
 def l2_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Incremental ingestion dedup: the "historical" half of the corpus
@@ -305,21 +316,7 @@ def _live_file_count(spark: SparkSession, root: str, kind) -> int:
     "l2_lsh_compact_probe",
     # Same brute-force cross-batch oracle as l2_incremental_probe — the
     # probe's declared output must be unchanged by index maintenance.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle(),
 )
 def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH index MAINTENANCE lifecycle (VERDICT r9 item 3): the historical
@@ -376,21 +373,7 @@ def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l2_lsh_erase_probe",
     # l2_incremental_probe's cross-batch oracle MINUS the erased history
     # docs: an erased doc must never surface as dup_of again.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 AND b.doc_id % 10 <> 6
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 10 <> 6"),
 )
 def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GDPR erasure inside the LSH index (operators/dedup.
@@ -445,21 +428,7 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the hard-equality recall tripwire now doubles as proof that the
     # re-banded index lost nothing (more bands can only raise recall;
     # the verify-side exact Jaccard pins precision).
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle(),
 )
 def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH index PARAMETER MIGRATION (r11, completing the lifecycle the
@@ -518,21 +487,7 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graph must equal the exact cross-batch Jaccard graph MINUS the
     # erased docs — any op that loses a fingerprint, resurrects an erased
     # one, or serves a stale generation hash-fails.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 AND b.doc_id % 10 <> 6
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 10 <> 6"),
 )
 def l2_lsh_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GENERATION-POINTER minhash lifecycle (r12, VERDICT r11 item 1 —
@@ -4602,21 +4557,7 @@ _assert_oracle_fragment_consistency()
     # erased docs — if the losing compact's stale stage (which still
     # holds the erased fingerprints) ever got published, the erased docs
     # resurface as dup_of and this hash-fails.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 AND b.doc_id % 10 <> 6
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 10 <> 6"),
 )
 def l2_lsh_collision_rerun_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Maintenance collision + bounded re-run (r13, VERDICT r12 item 6 —
@@ -4694,21 +4635,7 @@ def l2_lsh_collision_rerun_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pre-r13 lost-append race still existed, the erase's rewrite
     # would supersede the appended % 4 == 2 half and every probe pair
     # whose dup_of ≡ 2 (mod 4) would vanish — hash-fail.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 AND b.doc_id % 20 <> 16
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 20 <> 16"),
 )
 def l2_lsh_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OCC DELTA APPENDS under a genuine race (r13 — the ADVICE r12
@@ -4799,21 +4726,7 @@ def l2_lsh_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-append v0 snapshot) had published, the appended %4==2 half
     # would vanish from the head and every probe pair whose dup_of ≡ 2
     # (mod 4) would hash-fail.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 AND b.doc_id % 20 <> 16
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 20 <> 16"),
 )
 def l2_lsh_retired_version_guard_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VERSION-NUMBER REUSE GUARD, driver-executed for real (r15 — the
@@ -4913,21 +4826,7 @@ def l2_lsh_retired_version_guard_probe(spark: SparkSession, sf_dir: str) -> Data
     # commit had published (at the tombstoned v1 or at the coalesced-and-
     # freed v1), the head would regress to a pre-append or pre-erase
     # snapshot and the probe pairs would hash-fail.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0 AND b.doc_id % 20 <> 16
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 20 <> 16"),
 )
 def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RETIRED-NAME TOMBSTONE LIFECYCLE, driver-executed for real (r16,
@@ -5057,22 +4956,7 @@ def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFra
     # had damaged the head, or if the stale commit at the repaired name
     # had published, the head would regress and the pairs would
     # hash-fail.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-        AND b.doc_id % 20 NOT IN (8, 12, 16)
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle("b.doc_id % 20 NOT IN (8, 12, 16)"),
 )
 def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HALF-RETIRED REPAIR LIFECYCLE, driver-executed for real (r17,
@@ -5213,21 +5097,7 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
     # odds-vs-evens exact cross-batch Jaccard graph is the same proven
     # hard-equality recall tripwire — a micro-batch whose delta never
     # committed (or committed twice and broke the probe) hash-fails.
-    oracle="\n    WITH "
-    + _ORACLE_SHINGLE_N_CTE
-    + r""",
-    inter AS (
-      SELECT a.doc_id AS new_id, b.doc_id AS dup_of, COUNT(*) AS i
-      FROM grams a JOIN grams b ON a.g = b.g
-      WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT new_id, dup_of,
-           ROUND(i / CAST(na.n + nb.n - i AS DOUBLE), 6) AS jaccard
-    FROM inter
-    JOIN n na ON new_id = na.doc_id JOIN n nb ON dup_of = nb.doc_id
-    WHERE 5 * i >= 4 * (na.n + nb.n - i)
-    """,
+    oracle=_cross_batch_oracle(),
 )
 def l2_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CONTINUOUS index ingestion, EXACTLY-ONCE (r13): a Structured

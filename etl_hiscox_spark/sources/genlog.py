@@ -22,9 +22,6 @@ commit on object stores, where directory rename does not exist.
   segment list with a staged delta, carries the ``geometry_id`` epoch (a
   rebuild mid-append is detected, :class:`GeometryChanged`) and the
   ``txn_watermarks`` exactly-once ledger for streaming ingest;
-- immutable pointer records are served from a bounded, fingerprinted
-  process cache (genlog-only: TxnTable's erase replaces records in
-  place);
 - superseded generations stay on disk, readable, until
   :func:`vacuum_generations` retires the pointer history and deletes the
   directories nothing references — the OPTIMIZE/VACUUM split.
@@ -34,10 +31,8 @@ from __future__ import annotations
 
 import contextlib
 import contextvars
-import hashlib
 import json
 import logging
-import re
 import time
 import uuid
 
@@ -93,111 +88,6 @@ def is_generational(spark, root: str) -> bool:
         return False
 
 
-# Pointer records are IMMUTABLE once committed (create-if-absent is the
-# only writer), so caching them is correct for the life of the log —
-# this kills the second GET every head resolve used to pay
-# (current_generation reads the record for the generation name, then
-# the caller re-reads it for segments/geometry/watermarks). Bounded
-# FIFO. Entries are stored and served as COPIES — a caller mutating a
-# record it got from read_pointer/list_generations must never poison
-# the process-wide cache (review).
-#
-# Staleness guard (r14, closing the r13 carve-out): the ONE way a
-# (root, version) key can legitimately name new content is a root that
-# was DELETED and rebuilt (scratch wipes; versions restart at 0). A
-# same-process rebuild was already covered (commit_generation refreshes
-# the cache with the record it just committed); an EXTERNAL
-# delete-and-recreate used to be documentation-guarded only. Now every
-# entry carries the pointer file's fingerprint, captured at cache time,
-# and every cache hit re-verifies it — a mismatch (or a vanished file)
-# means the bytes on disk are not the bytes we cached, so ALL of the
-# root's entries are dropped and the read goes to disk. The fingerprint
-# is (size, mtime_ns) where the store exposes nanosecond mtimes (one
-# metadata stat per hit, the GET still saved); on coarse-mtime stores
-# (S3-class: seconds) it is the content sha256 instead (r15, ADVICE
-# r14: near-fixed-size JSON records made a same-second same-size
-# rebuild invisible to (size, mtime)), costing one KB-scale GET per
-# verify there. Keys are canonicalized by _cache_key
-# (ADVICE r13: '/x' and 'file:///x' must hit the same entry, or the
-# commit-time refresh covers only one spelling).
-_POINTER_CACHE: dict[tuple[str, int], tuple[dict, tuple]] = {}
-_POINTER_CACHE_MAX = 512
-
-
-def _cache_key(root: str) -> str:
-    """One canonical cache key per physical root (ADVICE r13): a local
-    root is legally addressed as ``/x``, ``file:/x`` or ``file:///x`` by
-    different callers — Hadoop renders single-slash, tests pass plain
-    paths — and a per-spelling key would let a rebuild committed under
-    one spelling serve stale records under another. ``file:`` with an
-    empty authority strips to the plain path; a non-empty authority
-    (``file://host/x``) is not a local spelling and stays verbatim, as
-    do all other schemes (scheme+bucket are identity there)."""
-    r = root.rstrip("/")
-    if r.startswith("file:"):
-        rest = r[5:]
-        if rest.startswith("//") and not rest.startswith("///"):
-            return r
-        return re.sub("^/+", "/", rest)
-    return r
-
-
-def _pointer_fingerprint(log: VersionLog, version: int) -> tuple | None:
-    """Identity of the pointer file a cached record is verified against
-    on every hit, or None when the file cannot be statted as a file
-    (missing, or a store error: the caller then skips caching / drops
-    the hit and reads the disk truth). Two forms (r15, ADVICE r14):
-
-    - ``("ns", size, mtime_ns)`` where the store exposes sub-second
-      mtimes (local filesystems) — one metadata stat per verify;
-    - ``("sha", digest)`` where mtime is coarse: pointer records are
-      near-fixed-size JSON, so an external same-second same-size
-      wipe-and-rebuild would defeat a (size, mtime) fingerprint — bind
-      the identity to the BYTES instead. The verify then costs one
-      KB-scale GET on those stores only; the cache still saves the
-      parse, and correctness no longer rides on mtime granularity.
-
-    Coarse means ``mtime_ns is None`` OR a whole-second stamp (r16,
-    ADVICE r15: pyarrow's S3FileSystem reports a NON-None mtime_ns of
-    seconds*1e9, so a None-only test never took the sha branch on the
-    exact store class it was written for — moto-verified in
-    tests/test_s3_commit.py). A local file legitimately landing on a
-    whole-second boundary just pays one sha GET — correct either way,
-    so the discriminator can be store-agnostic."""
-    from pyarrow import fs as pafs
-
-    p = log.path(f"v{version}.json")
-    try:
-        info = log.fs.get_file_info(p)
-    except OSError:
-        return None
-    if info.type != pafs.FileType.File:
-        return None
-    if info.mtime_ns is not None and info.mtime_ns % 1_000_000_000 != 0:
-        return ("ns", info.size, info.mtime_ns)
-    try:
-        with log.fs.open_input_file(p) as f:
-            return ("sha", hashlib.sha256(f.read()).digest())
-    except OSError:
-        return None
-
-
-def _drop_root_cache(root: str) -> None:
-    key = _cache_key(root)
-    for k in [k for k in _POINTER_CACHE if k[0] == key]:
-        _POINTER_CACHE.pop(k, None)
-
-
-def _cache_pointer(root: str, version: int, rec: dict, fingerprint: tuple | None) -> None:
-    import copy
-
-    if fingerprint is None:
-        return  # unverifiable entries are not worth serving later
-    if len(_POINTER_CACHE) >= _POINTER_CACHE_MAX:
-        _POINTER_CACHE.pop(next(iter(_POINTER_CACHE)))
-    _POINTER_CACHE[(_cache_key(root), int(version))] = (copy.deepcopy(rec), fingerprint)
-
-
 def _head_version(root: str) -> int | None:
     """The pointer log's head (:meth:`VersionLog.head`), mirrored into
     :data:`last_head_resolution`."""
@@ -209,36 +99,10 @@ def _head_version(root: str) -> int | None:
 
 
 def read_pointer(root: str, version: int) -> dict:
-    """Pointer record ``version`` of ``root``, from the verified cache or
-    the log; a retired version raises :class:`versionlog.ManifestRetired`
-    (a ``FileNotFoundError``), never cached."""
-    import copy
-
-    log = pointer_log(root)
-    key = (_cache_key(root), int(version))
-    hit = _POINTER_CACHE.get(key)
-    if hit is not None:
-        rec, fingerprint = hit
-        if _pointer_fingerprint(log, version) == fingerprint:
-            return copy.deepcopy(rec)
-        # the file at (root, version) is not the file we cached — an
-        # externally wiped-and-rebuilt root (versions restart at 0), so
-        # EVERY cached record for this root is suspect (r14, closing the
-        # r13 stale-pointer carve-out)
-        _drop_root_cache(root)
-    # fingerprint BEFORE the read: if the file is replaced in the
-    # stat→read window we cache new bytes under the old fingerprint, the
-    # next hit's verify mismatches, and the entry self-heals — the
-    # opposite order could pin new-fingerprint/old-bytes as verified
-    fingerprint = _pointer_fingerprint(log, version)
-    rec, raw = log.load(version)
-    if fingerprint is not None and fingerprint[0] == "sha":
-        # content-bound form: re-derive from the exact bytes being
-        # cached — then the fingerprint is consistent with the cached
-        # record by construction, whatever replaced the file mid-read
-        fingerprint = ("sha", hashlib.sha256(raw).digest())
-    _cache_pointer(root, version, rec, fingerprint)
-    return rec
+    """Pointer record ``version`` of ``root``, read from the log; a
+    retired version raises :class:`versionlog.ManifestRetired` (a
+    ``FileNotFoundError``)."""
+    return pointer_log(root).read(version)
 
 
 # Scoped race-injection point for tests and the declared race probes
@@ -404,17 +268,9 @@ def commit_generation(
         "operation": operation,
         "committed_at": time.time(),
     }
-    log = pointer_log(root, spark)
-    # the committer KNOWS this record is the truth at (root, version) —
-    # caching it here (not just on read) keeps a deleted-and-rebuilt root
-    # (scratch wipes restart versions at 0) from serving the old root's
-    # cached record to its own process; the fingerprint stat pins the
-    # entry to the file just committed (r14 staleness guard). SKIPPED when
-    # retention tombstoned the record right after it landed: caching the
-    # live record against the TOMBSTONE's fingerprint would make a later
-    # hit verify clean and serve the retired record as live.
-    if log.commit(version, json.dumps(rec).encode("utf-8"), CHECKPOINT_INTERVAL):
-        _cache_pointer(root, version, rec, _pointer_fingerprint(log, version))
+    pointer_log(root, spark).commit(
+        version, json.dumps(rec).encode("utf-8"), CHECKPOINT_INTERVAL
+    )
     return version
 
 

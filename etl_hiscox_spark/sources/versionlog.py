@@ -177,22 +177,18 @@ class VersionLog:
         info = self.fs.get_file_info(self.path(f"v{version}.json"))
         return info.type == pafs.FileType.File
 
-    def load(self, version: int) -> tuple[dict, bytes]:
-        """``(record, raw bytes)`` of version ``version``; raises
+    def read(self, version: int) -> dict:
+        """The record of version ``version``; raises
         :class:`ManifestRetired` on a tombstone."""
         with self.fs.open_input_file(self.path(f"v{version}.json")) as f:
-            raw = f.read()
-        rec = json.loads(raw.decode("utf-8"))
+            rec = json.loads(f.read().decode("utf-8"))
         if rec.get("tombstone"):
             raise ManifestRetired(
                 f"v{version} at {self.uri!r} was retired by vacuum (expired by "
                 "retention) — the version is no longer readable; re-resolve "
                 "the live head"
             )
-        return rec, raw
-
-    def read(self, version: int) -> dict:
-        return self.load(version)[0]
+        return rec
 
     # -- head hint and resolution --------------------------------------------
 
@@ -277,13 +273,11 @@ class VersionLog:
             "log head and re-run"
         )
 
-    def commit(self, version: int, raw: bytes, hint_every: int) -> bool:
+    def commit(self, version: int, raw: bytes, hint_every: int) -> None:
         """Commit ``raw`` at ``version`` create-if-absent, with both halves
         of the reuse guard (module docstring); raises ``FileExistsError``
         on a collision or a refused stale reuse. Refreshes the head hint
-        every ``hint_every`` versions. Returns False when the record landed
-        but retention already tombstoned it (the name no longer holds
-        ``raw``), True otherwise."""
+        every ``hint_every`` versions."""
         if self._covered(version):
             raise self._retired_error(version)
         try:
@@ -293,8 +287,7 @@ class VersionLog:
                 f"v{version} at {self.uri!r} already committed — concurrent "
                 "commit race; re-resolve the log head and re-run"
             ) from exc
-        swept = self._covered(version)
-        if swept:
+        if self._covered(version):
             try:
                 with self.fs.open_input_file(self.path(f"v{version}.json")) as f:
                     mine = f.read() == raw
@@ -305,7 +298,6 @@ class VersionLog:
                 raise self._retired_error(version)
         if version > 0 and version % hint_every == 0:
             self.write_hint(version)
-        return not swept
 
     def replace(self, version: int, raw: bytes) -> None:
         """Replace a committed record IN PLACE (erase repointing and

@@ -1197,35 +1197,22 @@ def test_externally_wiped_and_rebuilt_root_recovers_via_fingerprint(spark, tmp_p
 
 
 def test_pointer_cache_key_unifies_local_spellings(spark, tmp_path):
-    """ADVICE r13: '/x', 'file:/x' and 'file:///x' address the same
-    physical root and must share ONE cache entry — a rebuild committed
-    under one spelling used to leave stale records served under the
-    others. Unit-checks the canonicalization, then drives the scenario:
-    populate the cache under the plain spelling, wipe, rebuild under the
-    file:// spelling (commit refreshes the canonical key), and resolve
-    under the plain spelling again."""
+    """ADVICE r13: '/x' and 'file:///x' address the same physical root,
+    so a rebuild committed under one spelling must be what the other
+    spelling resolves. Resolve under the plain spelling, wipe, rebuild
+    under the file:// spelling, and resolve under the plain spelling
+    again."""
     import shutil
 
     from etl_hiscox_spark.operators.dedup import write_minhash_index
     from etl_hiscox_spark.sources import genlog
 
-    assert (
-        genlog._cache_key("file:///x/y")
-        == genlog._cache_key("file:/x/y")
-        == genlog._cache_key("/x/y/")
-        == "/x/y"
-    )
-    # a non-empty authority is NOT a local spelling; other schemes keep
-    # scheme+bucket as identity
-    assert genlog._cache_key("file://host/x") == "file://host/x"
-    assert genlog._cache_key("s3://bucket/x/") == "s3://bucket/x"
-
     local = str(tmp_path / "mh")
     docs = _docs(spark)
     write_minhash_index(docs.filter("doc_id < 20"), "text", "doc_id", local)
-    gen1 = genlog.current_generation(spark, local)[1]  # cached under '/x'
+    gen1 = genlog.current_generation(spark, local)[1]  # resolved under '/x'
     shutil.rmtree(local)
-    write_minhash_index(docs, "text", "doc_id", "file://" + local)  # refresh 'file:///x'
+    write_minhash_index(docs, "text", "doc_id", "file://" + local)  # 'file:///x'
     v, gen2 = genlog.current_generation(spark, local)  # resolved under '/x'
     assert v == 0 and gen2 != gen1
     assert _probe_pairs(spark, local, docs)
@@ -1378,14 +1365,11 @@ def test_coarse_mtime_store_fingerprint_binds_to_content(
 ):
     """ADVICE r14 (low) + ADVICE r15 (medium): on stores with
     second-resolution mtimes, pointer records are near-fixed-size JSON,
-    so an external same-second same-SIZE wipe-and-rebuild defeated the
-    (size, mtime) fingerprint and the stale cached record was still
-    served. On such stores the fingerprint is now the content sha256.
-    Both coarse shapes are covered: ``mtime_ns=None`` (the r15 fake) AND
-    the shape real pyarrow S3 actually reports — a NON-None whole-second
-    ``seconds*1e9`` stamp, which the r15 None-only discriminator missed
-    (the r16 fix; the moto test in test_s3_commit.py pins the real
-    store)."""
+    so an external same-second same-SIZE wipe-and-rebuild is invisible to
+    (size, mtime). A pointer read must still return the bytes on disk.
+    Both coarse shapes are covered: ``mtime_ns=None`` AND the shape real
+    pyarrow S3 actually reports — a NON-None whole-second ``seconds*1e9``
+    stamp (the moto test in test_s3_commit.py pins the real store)."""
     from etl_hiscox_spark.sources import genlog, listing
 
     local = str(tmp_path / "coarse")
@@ -1424,8 +1408,6 @@ def test_coarse_mtime_store_fingerprint_binds_to_content(
         None, root, "gen-a", "build", None, geometry_id=genlog.new_geometry_id()
     )
     rec1 = genlog.read_pointer(root, 0)
-    cached = genlog._POINTER_CACHE[(genlog._cache_key(root), 0)]
-    assert cached[1][0] == "sha"  # content-bound form chosen
 
     # the "other process": same-length different-content record, mtime
     # forced back to the original second — (size, mtime) would MATCH
@@ -1441,14 +1423,13 @@ def test_coarse_mtime_store_fingerprint_binds_to_content(
     os.utime(pfile, (st.st_atime, st.st_mtime))
 
     rec2 = genlog.read_pointer(root, 0)
-    assert rec2["geometry_id"] == new_gid  # served the disk truth, not the cache
+    assert rec2["geometry_id"] == new_gid  # the bytes on disk
 
 
-def test_fine_mtime_store_fingerprint_stays_stat_only(tmp_path):
-    """The local-filesystem contract is unchanged: nanosecond mtimes are
-    available, so the fingerprint stays (ns, size, mtime_ns) and a cache
-    verify costs one stat, never a GET."""
-    from etl_hiscox_spark.sources import genlog
+def test_fine_mtime_store_fingerprint_stays_stat_only(tmp_path, monkeypatch):
+    """A pointer read is one GET of ``v{N}.json`` and nothing else: no
+    stat of the pointer file, however often the same version is read."""
+    from etl_hiscox_spark.sources import genlog, listing
 
     local = str(tmp_path / "fine")
     root = "file://" + local
@@ -1458,9 +1439,34 @@ def test_fine_mtime_store_fingerprint_stays_stat_only(tmp_path):
     genlog.commit_generation(
         None, root, "gen-a", "build", None, geometry_id=genlog.new_geometry_id()
     )
-    genlog.read_pointer(root, 0)
-    form = genlog._POINTER_CACHE[(genlog._cache_key(root), 0)][1]
-    assert form[0] == "ns" and len(form) == 3
+
+    calls = {"open": [], "stat": 0}
+    real_fs = listing._resolve_fs
+
+    class CountingFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def open_input_file(self, p):
+            calls["open"].append(os.path.basename(p))
+            return self._fs.open_input_file(p)
+
+        def get_file_info(self, p):
+            calls["stat"] += 1
+            return self._fs.get_file_info(p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    monkeypatch.setattr(
+        listing, "_resolve_fs",
+        lambda path: (lambda fs_p: (CountingFS(fs_p[0]), fs_p[1]))(real_fs(path)),
+    )
+    for _ in range(2):
+        calls["open"].clear()
+        calls["stat"] = 0
+        assert genlog.read_pointer(root, 0)["generation"] == "gen-a"
+        assert calls == {"open": ["v0.json"], "stat": 0}
 
 
 def test_pointer_commit_refuses_to_reuse_a_vacuumed_version(tmp_path):
