@@ -1,7 +1,7 @@
 """Minimal transaction-log table format (SURVEY.md §2.1 S3 upgrade).
 
-The reference writes Delta (``scripts/ingestion.py:94-98``: append +
-mergeSchema); delta-spark is not deployable in this container, and the
+The reference writes Delta (``scripts/ingestion.py:94-98``: append with
+schema merging); delta-spark is not deployable in this container, and the
 plain-parquet emulation in :mod:`writers` loses the two properties Delta
 actually provides — an atomic commit point and readable history. This
 module restores both with the same public design Delta/Iceberg use
@@ -19,6 +19,9 @@ module restores both with the same public design Delta/Iceberg use
 - ``mode="append"`` adds files (schema widened by merge, missing columns
   read as NULL); ``mode="overwrite"`` starts a fresh file set. Old files
   are never mutated, so every prior version stays readable: time travel.
+- A version reads as ONE parquet scan pinned to its manifest schema;
+  the merge rule (:func:`_wider`) only records types the reader can
+  widen every file to (:meth:`TxnTable.read`).
 - Multi-writer optimistic concurrency (r12): data files land under
   unique names first, then the manifest commit loops re-read latest →
   re-merge file list → create-if-absent, retrying on the
@@ -50,10 +53,8 @@ _LOG = logging.getLogger("etl_hiscox_spark.txnlog")
 
 def _is_missing_path_error(exc: BaseException) -> bool:
     """True when a Spark read failed because a planned input file is gone
-    — the signature of racing an in-place manifest repoint (erase_keys)
-    or a retention sweep, as opposed to a schema/IO fault. Matched on the
-    stable error class/SQLSTATE Spark raises from both the multi-path
-    analysis and the per-file fallback."""
+    — racing an in-place manifest repoint (erase_keys) or a retention
+    sweep, not a schema/IO fault. Matched on Spark's stable error class."""
     s = str(exc)
     return "PATH_NOT_FOUND" in s or "Path does not exist" in s
 
@@ -62,44 +63,49 @@ _LOG_DIR = "_txn_log"
 _EXPIRED = "_expired"
 
 
-# integral family (tens digit 0) and fractional family (tens digit 1):
-# widening is defined within a family, never across — shared by the
-# schema merge and erase_keys' widest-across-versions cast target
+# integral family (tens digit 0) and fractional family (tens digit 1)
 _NUMERIC_WIDTH = {
     "byte": 0, "short": 1, "integer": 2, "long": 3,
     "float": 10, "double": 11,
 }
 
 
+def _wider(a: T.DataType, b: T.DataType) -> T.DataType | None:
+    """The wider of two column types, or None when they conflict: equal
+    types pass through, numeric types widen within their family — the
+    widenings Spark 4's parquet reader applies to a file read as the
+    manifest schema. Shared by the append merge and erase_keys."""
+    if a == b:
+        return a
+    wa, wb = _NUMERIC_WIDTH.get(a.typeName()), _NUMERIC_WIDTH.get(b.typeName())
+    if wa is None or wb is None or wa // 10 != wb // 10:
+        return None
+    return b if wb > wa else a
+
+
 def _merge_schema_json(base_json: str, new_json: str) -> str:
     """Union of two schema JSONs: base fields first (their order is the
-    table's), new-only fields appended. A field present in BOTH: equal
-    types pass through; numeric types in the same family resolve to the
-    WIDER one regardless of write order (r13, ADVICE r12: the previous
-    last-write-wins rule let a narrower append — int onto a bigint
-    column — silently narrow the manifest's recorded type while old
-    files kept bigint data, so ``read()`` reported a head schema the
-    table's own files contradicted); any other conflict is REJECTED at
-    write time, the same contract Delta applies to incompatible type
-    changes on append. Top-level only — nested struct evolution is out
-    of scope for this format, as the module docstring says."""
+    table's), new-only fields appended. A field present in BOTH resolves
+    to :func:`_wider` regardless of write order (r13: the previous
+    last-write-wins rule let an int append onto a bigint column narrow
+    the recorded type below the table's own files); any other conflict
+    is REJECTED at write time, the contract Delta applies to
+    incompatible type changes on append. Top-level only — nested struct
+    evolution is out of scope for this format."""
     base = T.StructType.fromJson(json.loads(base_json))
     new = T.StructType.fromJson(json.loads(new_json))
     new_by_name = {f.name: f for f in new.fields}
 
     def resolve(old_f: T.StructField, new_f: T.StructField) -> T.StructField:
-        if old_f.dataType == new_f.dataType:
-            return new_f
-        a = _NUMERIC_WIDTH.get(old_f.dataType.typeName())
-        b = _NUMERIC_WIDTH.get(new_f.dataType.typeName())
-        if a is None or b is None or (a // 10) != (b // 10):
+        t = _wider(old_f.dataType, new_f.dataType)
+        if t is None:
             raise ValueError(
                 f"txn append: column {old_f.name!r} would change type "
                 f"{old_f.dataType.simpleString()} -> "
                 f"{new_f.dataType.simpleString()} — incompatible with the "
                 "committed schema; cast the batch explicitly or overwrite"
             )
-        return new_f if b > a else old_f
+        return new_f if t == new_f.dataType else old_f
 
     fields = [
         resolve(f, new_by_name.pop(f.name)) if f.name in new_by_name else f
@@ -470,11 +476,13 @@ class TxnTable:
         # iteration, so later versions overwrite earlier ones)
         watermarks: dict[str, int] = {}
         for pv in self._versions():
-            try:
-                txn = self._read_manifest(pv).get("txn") or {}
-            except (FileNotFoundError, OSError):
-                continue  # expired by a concurrent retention run (r14)
-            for app, tv in txn.items():
+            # an unreadable manifest above the expire floor raises:
+            # skipping it would drop its app's watermark from the
+            # OPTIMIZE commit, and a replayed batch could land twice
+            m = self._read_manifest_tolerant(pv, "compact")
+            if m is None:
+                continue
+            for app, tv in (m.get("txn") or {}).items():
                 watermarks[str(app)] = max(int(tv), watermarks.get(str(app), int(tv)))
         head = self.read(v)
         # expected_prev pins the OPTIMIZE commit to the snapshot it read:
@@ -594,15 +602,13 @@ class TxnTable:
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read of ``version`` (default: latest) — time travel.
 
-        ONE multi-path parquet relation over the manifest's file list
-        (``mergeSchema`` reconciles per-file footer schemas distributedly,
-        filling columns a file lacks with NULL), projected to the
-        manifest's column order. The pre-r12 form built one relation PER
-        FILE and unioned pairwise — at streaming cadence (one file set
-        per micro-batch) a day of appends made every head read pay a
-        thousands-of-relations plan build on the driver before OPTIMIZE
-        ran (VERDICT r11). Plan size is now O(1) in the file count;
-        tests pin the single-scan plan shape.
+        ONE multi-path parquet scan of the manifest's files, pinned to the
+        manifest schema and column order: the reader widens a narrower
+        numeric column to the recorded type and reads a column a file
+        lacks as NULL — no schema inference, no footer reads first. A
+        file that cannot be read as the recorded type fails the scan
+        loudly, never NULL-filled or coerced. Plan size is O(1) in the
+        file count (VERDICT r11); tests pin the single-scan plan shape.
         """
         v = self.latest_version() if version is None else version
         # a single exists-probe, not a full _versions() LIST — the head
@@ -633,29 +639,6 @@ class TxnTable:
             "retention sweep raced this read; re-run"
         ) from last
 
-    def _uniform_footer_schemas(self, rel_files: list[str]) -> bool:
-        """True iff every data file's parquet footer schema is
-        byte-identical — the state every single-write, overwrite, and
-        post-compact version is in, where the manifest schema IS the file
-        schema and Spark's per-read mergeSchema inference (~0.1-0.2 s per
-        read, r18 guide §6) buys nothing. Footers read driver-side with
-        pyarrow (~1-3 ms each; file counts here are bounded by the
-        version's append count). Any failure answers False — the caller
-        keeps the inference path."""
-        try:
-            import pyarrow.parquet as pq
-
-            first = None
-            for rel in rel_files:
-                sch = pq.read_schema(f"{self.base}/{rel}", filesystem=self.fs)
-                if first is None:
-                    first = sch
-                elif not sch.equals(first):
-                    return False
-            return first is not None
-        except Exception:
-            return False
-
     def _read_version(self, v: int) -> DataFrame:
         m = self._read_manifest(v)
         paths = ["/".join([self.path.rstrip("/"), f]) for f in m["files"]]
@@ -664,36 +647,7 @@ class TxnTable:
             from etl_hiscox_spark.smalldf import local_rows_df
 
             return local_rows_df(self.spark, [], schema)
-        # Fast path (r18): when every footer is identical the manifest
-        # schema equals the file schema by the commit-time merge (merging
-        # identical schemas is the identity; widened/mixed versions have
-        # heterogeneous footers and take the inference path below), so
-        # the read can pin it and skip per-call mergeSchema inference. A
-        # state this guard mis-judges still fails loudly at scan time.
-        if self._uniform_footer_schemas(m["files"]):
-            out = self.spark.read.schema(schema).parquet(*paths)
-            return out.select(*schema.fieldNames())
-        try:
-            out = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        except Exception:
-            # parquet's footer merge rejects TYPE-widened columns (int file
-            # + bigint file) that the manifest legitimately records as the
-            # widened type (last-write-wins) — fall back to the legacy
-            # per-file unionByName, whose coercion rules widen (r12 review:
-            # the O(1)-relations fast path must not make a type-evolved
-            # table unreadable). O(n_files) plan build, correct result.
-            out = None
-            for p in paths:
-                part = self.spark.read.parquet(p)
-                out = part if out is None else out.unionByName(
-                    part, allowMissingColumns=True
-                )
-        import pyspark.sql.functions as F
-
-        for field in schema.fieldNames():
-            if field not in out.columns:
-                out = out.withColumn(field, F.lit(None).cast(schema[field].dataType))
-        return out.select(*schema.fieldNames())
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def history(self) -> list[dict]:
         """Commit log, oldest first (Delta DESCRIBE HISTORY shape). A
@@ -841,45 +795,30 @@ class TxnTable:
         keys_is_frame = isinstance(keys, DataFrame)
         if not all_files or (not keys_is_frame and not keys):
             return 0
-        paths = ["/".join([self.path.rstrip("/"), f]) for f in all_files]
-        # mergeSchema: the table supports schema widening, so key_col may be
-        # absent from older files — the merged schema carries it as NULL
-        # there (a file without the column can never be a hit). Without the
-        # merge, Spark samples ONE footer and the scan either throws or
-        # silently misses subject rows. input_file_name() is a URL-encoded
-        # URI — decode before computing the table-relative path.
         if keys_is_frame and len(keys.columns) != 1:
             raise ValueError(
                 f"keys frame must have exactly 1 column, got {keys.columns}"
             )
-        # the WIDEST committed type of key_col across ALL versions gives
-        # the cast target (an overwrite may have dropped the column from
-        # the head while old versions still carry subject rows, and
-        # last-write-wins schema merging can NARROW the head's type —
-        # casting a bigint request key to a narrowed int would wrap/NULL
-        # and silently miss the subject's rows in older bigint files, a
-        # GDPR erasure miss; r12 second review). Widening is only defined
-        # within a numeric family (_NUMERIC_WIDTH, shared with the append
-        # schema merge); cross-family conflicts can still exist across
-        # OVERWRITE boundaries (append rejects them since r13) and raise.
-        _WIDTH = _NUMERIC_WIDTH
+        # the WIDEST committed type of key_col across ALL versions (the
+        # :func:`_wider` fold) is the cast target: an overwrite may have
+        # dropped or narrowed the column at the head while old versions
+        # still hold subject rows, and a bigint key cast to int would
+        # wrap/NULL and silently miss them (r12 second review).
+        # Cross-family conflicts across an OVERWRITE boundary raise.
         key_type = None
         for pv in versions:
             sch = T.StructType.fromJson(json.loads(manifests[pv]["schema"]))
             if key_col not in sch.fieldNames():
                 continue
             t = sch[key_col].dataType
-            if key_type is None or key_type == t:
-                key_type = t
-                continue
-            a, b = _WIDTH.get(key_type.typeName()), _WIDTH.get(t.typeName())
-            if a is None or b is None or (a // 10) != (b // 10):
+            wider = t if key_type is None else _wider(key_type, t)
+            if wider is None:
                 raise ValueError(
                     f"erase_keys: column {key_col!r} has incompatible types "
                     f"across versions ({key_type.simpleString()} vs "
                     f"{t.simpleString()}) — erase per-version explicitly"
                 )
-            key_type = t if b > a else key_type
+            key_type = wider
         if key_type is None:
             raise ValueError(
                 f"erase_keys: column {key_col!r} appears in no committed "
@@ -917,23 +856,13 @@ class TxnTable:
                 for r in hit.select("__file").distinct().collect()
             }
 
-        try:
-            hit_paths = file_hits(
-                self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            )
-        except Exception:
-            # type-widened tables (int file + bigint file) fail the footer
-            # merge — scan file-by-file instead (one bounded job per file;
-            # correctness over the single-scan fast path, same rule as
-            # read()'s fallback). A file without key_col can never hit.
-            hit_paths = set()
-            for rel in all_files:
-                part = self.spark.read.parquet(
-                    "/".join([self.path.rstrip("/"), rel])
-                )
-                if key_col not in part.columns:
-                    continue
-                hit_paths |= file_hits(part)
+        # ONE scan pinned to key_col as key_type: a file without the
+        # column reads NULL there, so it can never hit
+        paths = ["/".join([self.path.rstrip("/"), f]) for f in all_files]
+        hit_paths = file_hits(
+            self.spark.read.schema(T.StructType([T.StructField(key_col, key_type)]))
+            .parquet(*paths)
+        )
         if not hit_paths:
             return 0
 

@@ -943,3 +943,34 @@ def test_lost_log_replace_leaves_no_tmp_on_scheme_less_root(
     assert [n for n in os.listdir(log_dir) if n.endswith(".tmp")] == []
     assert "erased_at" not in TxnTable(spark, root)._read_manifest(0)
     assert TxnTable(spark, root).latest_version() == 2
+
+
+def test_compact_refuses_on_unexpired_unreadable_watermark_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """compact's txn-watermark scan must classify an unreadable manifest
+    like every other log scan: above the expire watermark (an in-flight
+    erase_keys repoint) it refuses, instead of committing an OPTIMIZE
+    manifest that silently drops that manifest's app watermark — after
+    retention a replayed batch would then land twice."""
+    from etl_hiscox_spark.sources.txnlog import TxnTable
+
+    root = str(tmp_path / "compact_wm")
+    t = TxnTable(spark, root)
+    t.write(_events(spark, 0, 10), mode="append")
+    assert t.write_txn(_events(spark, 10, 20), app_id="app", txn_version=7)
+    t.write(_events(spark, 20, 30), mode="append")
+
+    real = TxnTable._read_manifest
+
+    def unreadable_v1(self, version):
+        if version == 1:
+            raise FileNotFoundError("manifest replace in flight")
+        return real(self, version)
+
+    monkeypatch.setattr(TxnTable, "_read_manifest", unreadable_v1)
+    with pytest.raises(RuntimeError, match="compact"):
+        t.compact(target_file_mb=1024)
+    monkeypatch.undo()
+    assert t.latest_version() == 2  # nothing committed
+    assert t.last_txn_version("app") == 7
