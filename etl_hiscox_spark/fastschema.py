@@ -8,19 +8,24 @@ layout (LSH bucket tables, staged index trees), the same schema is
 readable from one footer with pyarrow in ~1-2 ms on the driver.
 
 ``fast_parquet_schema`` returns a Spark ``StructType`` for the first
-parquet file under ``path``, or ``None`` whenever anything is uncertain —
-remote scheme, unreadable footer, or a column type outside the SIMPLE
-whitelist (nested / timestamp / decimal types carry engine-specific
-inference subtleties like NTZ-vs-LTZ, so those callers must keep Spark's
-own inference). Callers treat ``None`` as "fall back to inference", so
-this is a fast path, never a behaviour change: the returned schema is
-exactly what inference would produce for whitelisted types, and a
-corrupted/mismatched file still fails loudly at scan time.
+parquet file under ``path``, or ``None`` whenever anything is uncertain.
+A Spark-written file carries its schema as JSON in the footer key
+``org.apache.spark.sql.parquet.row.metadata``; Spark's own inference
+reads that key first, so it is returned as is, whatever its types
+(timestamps, decimals, nested). Without the key, the arrow schema is
+mapped only when every column type is in the SIMPLE whitelist (nested /
+timestamp / decimal types carry engine-specific inference subtleties like
+NTZ-vs-LTZ, so those files keep Spark's own inference). A remote scheme
+or an unreadable footer also gives ``None``. Callers treat ``None`` as
+"fall back to inference", so this is a fast path, never a behaviour
+change: the returned schema is exactly what inference would produce,
+and a corrupted/mismatched file still fails loudly at scan time.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 from pyspark.sql import types as T
@@ -40,6 +45,9 @@ _SIMPLE = {
     "binary": T.BinaryType(),
     "large_binary": T.BinaryType(),
 }
+
+# footer key under which Spark's parquet writer stores the row schema JSON
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def fast_parquet_schema(path: str) -> T.StructType | None:
@@ -61,6 +69,12 @@ def fast_parquet_schema(path: str) -> T.StructType | None:
         arrow = pq.read_schema(p)
     except Exception:
         return None
+    spark_json = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        try:
+            return T.StructType.fromJson(json.loads(spark_json))
+        except (ValueError, KeyError, TypeError):  # a type this pyspark cannot parse
+            return None
     fields = []
     for f in arrow:
         spark_t = _SIMPLE.get(str(f.type))

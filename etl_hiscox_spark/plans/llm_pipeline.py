@@ -12,7 +12,8 @@ Composes the §2.11 operators into the canonical corpus-prep flow:
              → [opt] LM-NLL gate (CCNet-style bigram perplexity filter)
              → chunk (overlapping token windows)
              → train/val/test label per chunk (leakage-safe, by SOURCE doc)
-             → token-budget shard packing (all splits, one grouped pass)
+             → token-budget shard packing (all splits, one grouped pass,
+               a Catalyst fold — no Python worker)
 
 Every stage is one of the individually-tested operators; this module owns
 only the composition and the stage-count report. Ordering rationale (the
@@ -40,6 +41,10 @@ second copy of the gate → dedup chain:
   runs per (split, hash group), and pack ids carry the split prefix
   (``train/17-0``), the same ids a per-split loop assigns. Chunk rows
   pass through the pack, so no join maps them back to their pack ids.
+  The packing is an ``aggregate`` fold over each group's collected rows,
+  all Catalyst expressions, so the whole flow starts no Python worker;
+  in a cold first pass that worker's start used to be the pipeline's
+  slowest job.
 
 Cache ownership: the returned ``chunks`` frame owns the exact-deduped
 persist and near-dedup's per-doc shingle-set persist. The caller
@@ -211,8 +216,9 @@ def prepare_corpus(
         hash_split(chunk_documents(deduped, text_col, id_col, chunk_size, overlap), id_col, weights),
     )
 
-    # 7. pack every split in one grouped pass; pack ids are split-prefixed
-    #    ("train/17-0") so they never collide across splits
+    # 7. pack every split in one grouped pass (a SQL fold, no Python
+    #    worker); pack ids are split-prefixed ("train/17-0") so they never
+    #    collide across splits
     out = pack_sequences(
         chunks.withColumn("chunk_key", F.concat_ws("#", id_col, F.col("chunk_idx"))),
         "chunk_key",

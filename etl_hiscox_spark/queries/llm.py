@@ -1802,8 +1802,11 @@ def t8_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vs DuckDB), every pack within budget or a singleton, and the pack
     # count between the bin-packing lower bound ceil(total/budget) and the
     # BFD-per-group upper bound (all groups' bins but one are > half full,
-    # so ≤ 2·lb + n_groups). A packing bug — lost docs, split docs,
-    # overfull or pathologically-underfull packs — now goes driver-red.
+    # so ≤ 2·lb + n_groups; a group above sampling.PACK_FOLD_CAP docs is
+    # folded as sub-groups, each of which may add one more underfull
+    # pack — no group reaches the cap up to sf0.1's 5,000 docs). A packing
+    # bug — lost docs, split docs, overfull or pathologically-underfull
+    # packs — now goes driver-red.
     # Per-pack detail stays pinned by the packing unit tests.
     from etl_hiscox_spark.operators.sampling import pack_sequences
 

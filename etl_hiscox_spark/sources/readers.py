@@ -255,6 +255,24 @@ def _is_missing_avro_datasource(e: Exception) -> bool:
     return any(m in msg for m in markers) and "avro" in msg.lower()
 
 
+def _avro_datasource_available(spark: SparkSession) -> bool:
+    """Whether the spark-avro module resolves, asked of the JVM's data
+    source lookup without planning a query: a ``format("avro")`` load
+    that fails analysis is reported to the query execution listeners, and
+    once any ``Observation`` has run in the session its listener rethrows
+    the failure, which Spark logs at ERROR with a full stack trace."""
+    jvm = spark.sparkContext._jvm
+    try:
+        jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+            "avro", spark._jsparkSession.sessionState().conf()
+        )
+    except Exception as e:
+        if _is_missing_avro_datasource(e):
+            return False
+        raise
+    return True
+
+
 def read_avro(spark: SparkSession, path: str) -> DataFrame:
     """Avro scan — the row-oriented interchange format (Kafka/Connect
     pipelines land it). Prefers the spark-avro module when its jar is on
@@ -264,11 +282,8 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     the schema comes from one file header (driver-side, no block decode),
     then each container decodes inside an Arrow ``mapInPandas`` over a
     ``binaryFile`` scan — per-file parallelism, rows never hit the driver."""
-    try:
+    if _avro_datasource_available(spark):
         return spark.read.format("avro").load(path)
-    except Exception as e:
-        if not _is_missing_avro_datasource(e):
-            raise
 
     from etl_hiscox_spark.sources.avro_lite import read_container, read_container_schema
 
@@ -349,12 +364,9 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     otherwise (deflate codec, one file per Arrow partition, written
     executor-side; the tiny (file, n_rows) receipt frame is the only
     thing collected)."""
-    try:
+    if _avro_datasource_available(df.sparkSession):
         df.write.mode(mode).format("avro").save(path)
         return
-    except Exception as e:
-        if not _is_missing_avro_datasource(e):
-            raise
 
     import uuid
 

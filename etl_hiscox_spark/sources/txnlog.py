@@ -779,6 +779,8 @@ class TxnTable:
 
         import pyspark.sql.functions as F
 
+        from etl_hiscox_spark.fastschema import fast_parquet_schema
+
         versions = self._versions()
         # tolerant reads throughout (r15): a version a concurrent
         # expire_versions drops mid-erase no longer needs erasure — its
@@ -872,8 +874,14 @@ class TxnTable:
             # as writers.erase_keys' left_anti join; left_anti keeps NULL
             # keys natively on the frame path). Each file is read with its
             # OWN schema (never the merged one) so a rewrite of an old
-            # narrow file cannot silently widen it.
-            file_df = self.spark.read.parquet("/".join([self.path.rstrip("/"), rel]))
+            # narrow file cannot silently widen it. That schema is read
+            # from the file's footer on the driver where possible, which
+            # saves Spark's one-task inference job per hit file.
+            file_path = "/".join([self.path.rstrip("/"), rel])
+            own = fast_parquet_schema(file_path)
+            file_df = (self.spark.read.schema(own) if own is not None else self.spark.read).parquet(
+                file_path
+            )
             if keys_is_frame:
                 kept = file_df.join(F.broadcast(kdf), key_col, "left_anti")
             else:

@@ -128,14 +128,17 @@ def _plan_nodes(df):
 
 
 def test_prepare_corpus_plan_is_linear(spark, sf_dir):
-    """Every split is packed in ONE grouped pandas pass, and the exact-
-    deduped corpus enters the final plan once, as a cached relation —
-    no self-join re-plans the gate -> dedup chain."""
+    """Every split is packed in ONE grouped pass (one collect_list
+    aggregate, no Python node), and the exact-deduped corpus enters the
+    final plan once, as a cached relation — no self-join re-plans the
+    gate -> dedup chain."""
     docs = load_table(spark, "documents", sf_dir).limit(200)
     res = prepare_corpus(docs, count_stages=False, chunk_size=32, overlap=4, pack_budget=512)
     nodes = _plan_nodes(res.chunks)
     names = [n.nodeName() for n in nodes]
-    assert names.count("FlatMapGroupsInPandas") == 1
+    packs = [n for n in nodes if n.nodeName() == "Aggregate" and "collect_list(__item" in str(n)]
+    assert len(packs) == 1
+    assert "FlatMapGroupsInPandas" not in names
     assert "Union" not in names
     exact_stems = [
         n

@@ -173,6 +173,30 @@ def test_avro_roundtrip_via_stdlib_fallback(spark, tmp_path):
         read_avro(spark, str(tmp_path / "nope"))
 
 
+def test_avro_fallback_makes_no_failed_avro_attempt(spark, tmp_path, monkeypatch):
+    """Without spark-avro, reads and writes go straight to the stdlib
+    codec: no ``format("avro")`` load or write is tried first. A failed
+    load reaches the query execution listeners, and after an
+    ``Observation`` has run, Spark logs that failure at ERROR."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    from etl_hiscox_spark.sources.readers import _avro_datasource_available, read_avro, write_avro
+
+    formats = []
+    for cls in (DataFrameReader, DataFrameWriter):
+
+        def recording_format(self, source, real=cls.format):
+            formats.append(source)
+            return real(self, source)
+
+        monkeypatch.setattr(cls, "format", recording_format)
+    df = spark.createDataFrame([(1, "a"), (2, None)], "id long, s string")
+    write_avro(df, str(tmp_path / "a"))
+    back = sorted(r["id"] for r in read_avro(spark, str(tmp_path / "a")).collect())
+    assert back == [1, 2]
+    assert ("avro" in formats) == _avro_datasource_available(spark)
+
+
 def test_avro_mixed_schema_directory_fails_loudly(spark, tmp_path):
     # ADVICE r6: the fallback probes column names from ONE file's header
     # but decodes each container with its own embedded schema — a
@@ -757,6 +781,64 @@ def test_txn_compact_carries_exactly_once_watermarks(spark, tmp_path):
         spark.range(15, 20).selectExpr("id"), app_id="app", txn_version=3
     )
     assert t.read().count() == 20
+
+
+def test_fast_parquet_schema_reads_the_spark_footer_schema(spark, tmp_path):
+    """A Spark-written file's footer schema JSON is returned as is, so
+    timestamp, decimal and nested columns resolve on the driver exactly
+    as Spark's inference resolves them; a file without that key and with
+    a timestamp column still leaves the decision to inference."""
+    import glob
+    from datetime import datetime
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_hiscox_spark.fastschema import fast_parquet_schema
+
+    df = spark.createDataFrame(
+        [(1, datetime(2024, 1, 2), Decimal("1.25"), [1.0, 2.0], {"a": 1})],
+        "id long, ts timestamp, amt decimal(10,2), emb array<double>, m map<string,int>",
+    )
+    df.write.parquet(str(tmp_path / "spark"))
+    part = sorted(glob.glob(str(tmp_path / "spark" / "*.parquet")))[0]
+    assert fast_parquet_schema(part) == spark.read.parquet(part).schema
+    assert fast_parquet_schema(str(tmp_path / "spark")) == spark.read.parquet(part).schema
+
+    bare = str(tmp_path / "bare.parquet")
+    pq.write_table(pa.table({"id": [1], "ts": pa.array([0], pa.timestamp("us"))}), bare)
+    assert fast_parquet_schema(bare) is None
+
+
+def test_txn_erase_reads_hit_files_without_schema_inference(spark, tmp_path):
+    """A one-hit ``erase_keys`` on a 10-append table (one file per append,
+    a timestamp column) runs 3 Spark jobs: the hit scan (two jobs) and the
+    rewrite of the hit file. The hit file is read with its own footer
+    schema, read on the driver, where Spark used to run a one-task
+    schema-inference job for it (4 jobs)."""
+    import uuid
+    from datetime import datetime, timedelta
+
+    from etl_hiscox_spark.sources.txnlog import TxnTable
+
+    t = TxnTable(spark, str(tmp_path / "tbl"))
+    t0 = datetime(2024, 1, 1)
+    for i in range(10):
+        rows = [(i * 5 + j, t0 + timedelta(minutes=i * 5 + j), f"v{j}") for j in range(5)]
+        t.write(spark.createDataFrame(rows, "id long, ts timestamp, v string").coalesce(1))
+    sc = spark.sparkContext
+    group = f"erase-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one-hit erase_keys")
+    try:
+        assert t.erase_keys("id", [7]) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    back = {r.id: r for r in t.read().collect()}
+    assert sorted(back) == [i for i in range(50) if i != 7]
+    assert back[8].ts == t0 + timedelta(minutes=8) and back[8].v == "v3"
 
 
 def test_txn_read_builds_one_scan_regardless_of_file_count(spark, tmp_path):

@@ -4,10 +4,14 @@ packing via per-group best-fit-decreasing)."""
 
 from __future__ import annotations
 
+import bisect
+import random
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
-from etl_hiscox_spark.operators.sampling import mixture_sample, pack_sequences
+from etl_hiscox_spark.operators.sampling import PACK_FOLD_CAP, mixture_sample, pack_sequences
 
 
 def _corpus(spark, name, n):
@@ -124,6 +128,129 @@ def test_pack_sequences_by_matches_per_split_packing(spark):
     assert got == want
     huge = dict(got)["huge"]
     assert [k for k, p in got if p == huge] == ["huge"]
+
+
+def bfd_pack(toks, budget):
+    """Best-fit-decreasing over ``toks`` (already in packing order): the
+    pack index of each item. Best fit is the open pack with the SMALLEST
+    remaining capacity that still holds the item, ties to the lowest pack
+    index; a pack whose remaining capacity reaches 0, or an oversized
+    item's singleton, is closed."""
+    open_bins: list[tuple[int, int]] = []  # sorted (remaining, bin_idx)
+    n_bins = 0
+    assign = []
+    for t in toks:
+        j = bisect.bisect_left(open_bins, (t, -1))
+        if j < len(open_bins):
+            rem, idx = open_bins.pop(j)
+            if rem - t > 0:
+                bisect.insort(open_bins, (rem - t, idx))
+        else:
+            idx = n_bins
+            n_bins += 1
+            if budget - t > 0:
+                bisect.insort(open_bins, (budget - t, idx))
+        assign.append(idx)
+    return assign
+
+
+def reference_pack_ids(rows, budget, cap=PACK_FOLD_CAP):
+    """Pure-Python pack_sequences: ``rows`` are (id, tokens, grp, h, by)
+    with ``grp`` the hash group, ``h`` the sub-group hash and ``by`` None
+    when unused. Returns the sorted (id, pack_id) pairs. A group of m >
+    ``cap`` items is cut into k = ceil(m / cap) sub-groups by rank of
+    (h, id, -tokens): sub-group s holds ranks [ceil(s·m/k), ceil((s+1)·m/k))."""
+    groups = defaultdict(list)
+    for id_, tok, grp, h, by in rows:
+        groups[(by, grp)].append((h, id_, -tok))
+    out = []
+    for (by, grp), items in groups.items():
+        prefix = "" if by is None else f"{by}/"
+        m = len(items)
+        k = -(-m // cap)
+        items.sort()
+        for s in range(k):
+            run = sorted((neg, id_) for _, id_, neg in items[-(-s * m // k) : -(-(s + 1) * m // k)])
+            label = f"{grp}" if k == 1 else f"{grp}.{s}"
+            for (neg, id_), idx in zip(run, bfd_pack([-n for n, _ in run], budget)):
+                out.append((id_, f"{prefix}{label}-{idx}"))
+    return sorted(out)
+
+
+def _reference_rows(df, id_col, token_col, n_groups, by=None):
+    grp = F.shiftrightunsigned(F.xxhash64(F.col(id_col)), 1) % n_groups
+    sel = [id_col, token_col, grp, F.hash(id_col), F.col(by) if by else F.lit(None)]
+    return [tuple(r) for r in df.select(*sel).collect()]
+
+
+def _random_frame(spark, seed, n):
+    """Seeded rows with many token ties, zero-token rows, rows above the
+    1024 budget and three split values."""
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        roll = rng.random()
+        if roll < 0.05:
+            tok = 0
+        elif roll < 0.08:
+            tok = rng.randint(1100, 3000)  # oversized
+        elif roll < 0.3:
+            tok = rng.choice([64, 128, 256])  # ties
+        else:
+            tok = rng.randint(1, 700)
+        rows.append((f"k{rng.randrange(10**9):09d}-{i}", rng.choice(["train", "val", "test"]), tok))
+    return spark.createDataFrame(rows, "key string, split string, n_tokens int")
+
+
+@pytest.mark.parametrize("seed", [11, 12, 13])
+def test_pack_sequences_matches_python_bfd_reference(spark, seed):
+    df = _random_frame(spark, seed, 700)
+    packed = pack_sequences(df, "key", "n_tokens", budget=1024, n_groups=4)
+    got = sorted((r.key, r.pack_id) for r in packed.collect())
+    assert got == reference_pack_ids(_reference_rows(df, "key", "n_tokens", 4), 1024)
+    by_split = pack_sequences(df, "key", "n_tokens", budget=1024, n_groups=4, by="split")
+    got = sorted((r.key, r.pack_id) for r in by_split.collect())
+    assert got == reference_pack_ids(_reference_rows(df, "key", "n_tokens", 4, by="split"), 1024)
+
+
+def test_pack_sequences_splits_a_group_above_the_cap(spark):
+    """One hash group of 2·cap + 100 items folds as three sub-groups of
+    1399, 1399 and 1398 items; a group at the cap stays whole and keeps
+    the plain "{grp}-{idx}" ids."""
+    m = 2 * PACK_FOLD_CAP + 100
+    df = spark.range(m).select(
+        F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
+        (F.shiftrightunsigned(F.xxhash64("id"), 1) % 300).cast("int").alias("n_tokens"),
+    )
+    packed = pack_sequences(df, "doc_id", "n_tokens", budget=1024, n_groups=1)
+    got = sorted((r.doc_id, r.pack_id) for r in packed.collect())
+    assert got == reference_pack_ids(_reference_rows(df, "doc_id", "n_tokens", 1), 1024)
+    assert {p.split("-")[0] for _, p in got} == {"0.0", "0.1", "0.2"}
+
+    whole = df.limit(PACK_FOLD_CAP)
+    packed = pack_sequences(whole, "doc_id", "n_tokens", budget=1024, n_groups=1)
+    got = sorted((r.doc_id, r.pack_id) for r in packed.collect())
+    assert got == reference_pack_ids(_reference_rows(whole, "doc_id", "n_tokens", 1), 1024)
+    assert {p.split("-")[0] for _, p in got} == {"0"}
+
+
+PYTHON_PLAN_NODES = ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+
+
+def test_packing_plans_start_no_python_worker(spark, sf_dir):
+    from etl_hiscox_spark.operators.caching import release_caches
+    from etl_hiscox_spark.plans.llm_pipeline import prepare_corpus
+    from etl_hiscox_spark.queries.llm import t8_pack_sequences
+    from etl_hiscox_spark.registry import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    res = prepare_corpus(docs, count_stages=False, pack_budget=512)
+    try:
+        for df in (res.chunks, t8_pack_sequences(spark, sf_dir)):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert not [n for n in PYTHON_PLAN_NODES if n in plan], plan
+    finally:
+        release_caches(res.chunks)
 
 
 def test_weighted_sample_rates_and_determinism(spark):
