@@ -124,7 +124,7 @@ HEADLINE = [
     "l3_ivf_quantized_probe",
     "l2_lsh_rebuild_probe",
     # round-12 additions: generation-pointer (object-store) index
-    # lifecycles, flat-rebuild crash recovery, multi-writer OCC, bulk
+    # lifecycles, rebuild crash recovery, multi-writer OCC, bulk
     # frame-based GDPR erasure
     "l2_lsh_gen_lifecycle_probe",
     "l3_ivf_gen_lifecycle_probe",

@@ -80,13 +80,6 @@ def owned_caches(df: DataFrame):
         release_caches(df)
 
 
-def cached_rdd_count(spark) -> int:
-    """Number of RDDs currently holding a storage level in this session —
-    the observable the lifecycle tests pin (a completed operator followed
-    by ``release_caches`` must leave the count where it started)."""
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def cached_rdd_ids(spark) -> set:
     """IDs of the RDDs currently holding a storage level — the
     order-robust observable for lifecycle tests: absolute counts drift

@@ -1128,91 +1128,6 @@ def write_minhash_index(
     segindex.append(spark, path, _stage, _validate_banding, txn)
 
 
-def migrate_flat_index_to_generational(spark, path: str) -> str:
-    """One-time in-place upgrade of a FLAT index root (either index) to the
-    generation-pointer layout. A flat tree is what older releases wrote:
-    one index tree straight at the root, with no pointer log. Its entries
-    move into a fresh ``gen-*`` directory (os.rename — driver-local only;
-    flat trees were only ever written locally) and a v0 pointer commits
-    it. Every subsequent probe resolves the pointer
-    and every maintenance op commits by pointer flip. Returns the
-    generation name.
-
-    RE-RUNNABLE across every crash window (second review + ADVICE r12):
-    a crash mid-rename or before the pointer commit leaves a root with
-    one ``gen-*`` dir and no ``_gen_log`` — re-running adopts that dir,
-    moves any remaining flat entries in, validates the COMPLETED
-    generation, and commits. A crash INSIDE the pointer commit (after
-    the ``_gen_log`` dir was created, before the v0 record linked) makes
-    ``is_generational`` True with an EMPTY log — that root is also an
-    adoptable crashed migration (its entry moves finished before the
-    commit step), not an "already generational" rejection; only a log
-    with a committed pointer is. The pointer commit is last, so the root
-    only serves probes once the generation is whole."""
-    from etl_hiscox_spark.sources import genlog
-    from etl_hiscox_spark.sources.writers import _local_fs_path, refresh_swapped_path
-
-    if not _meta_is_local(spark, path):
-        raise ValueError(
-            "migrate_flat_index_to_generational: driver-local index paths "
-            f"only — moving a flat tree into a generation uses os.rename, "
-            f"which cannot reach {path!r}"
-        )
-    local = _local_fs_path(path)
-    root = genlog.resolve_root(spark, path)
-    if (
-        genlog.is_generational(spark, root)
-        and genlog.latest_pointer_version(spark, root) is not None
-    ):
-        raise ValueError(f"{path!r} is already generational")
-    gens = sorted(e for e in os.listdir(local) if e.startswith("gen-"))
-    if len(gens) > 1:
-        raise ValueError(
-            f"{path!r} has {len(gens)} gen-* dirs but no pointer log — not "
-            "a crashed migration this can adopt; inspect by hand"
-        )
-    if gens:
-        gen = gens[0]  # crashed migration: adopt and complete it
-    else:
-        _validate_live_index(spark, path)  # only a committed flat index migrates
-        gen = genlog.new_generation_name()
-    gen_dir = os.path.join(local, gen)
-    os.makedirs(gen_dir, exist_ok=True)
-    for entry in os.listdir(local):
-        # an empty _gen_log from a crashed pointer commit stays at the
-        # root — it IS the log the adoption is about to commit into
-        if entry != gen and entry != "_gen_log":
-            os.rename(os.path.join(local, entry), os.path.join(gen_dir, entry))
-    # validate the COMPLETED generation (not the now-empty root) before
-    # the pointer makes it live
-    _validate_live_index(spark, path.rstrip("/") + "/" + gen)
-    segindex.adopt(spark, root, gen)
-    refresh_swapped_path(spark, path)
-    return gen
-
-
-def _validate_live_index(spark, path: str) -> str:
-    """Loud validity check of the index tree at the driver-local ``path``
-    (a flat root, or a generation directory), layout-detected:
-    ``_centroids`` → IVF (centroid commit record must load), ``meta`` →
-    minhash (banding meta must load). Returns the layout name."""
-    from etl_hiscox_spark.sources.writers import _local_fs_path
-
-    local = _local_fs_path(path)
-    if os.path.isdir(os.path.join(local, "_centroids")):
-        from etl_hiscox_spark.operators.similarity import load_ivf_centroids
-
-        load_ivf_centroids(spark, path, resolved=True)
-        return "ivf"
-    if os.path.isdir(os.path.join(local, "meta")):
-        _read_index_meta(spark, path, resolved=True)
-        return "minhash"
-    raise ValueError(
-        f"{path!r} is not a committed index: neither an IVF _centroids "
-        "record nor a minhash meta is present"
-    )
-
-
 def compact_minhash_index(spark, path: str, target_file_mb: int = 256) -> int:
     """Merge every live segment of a minhash index into ONE segment of
     ~target-sized bucket files (:func:`segindex.compact`).

@@ -7,11 +7,11 @@ maintained in. This module owns their lifecycle — head snapshot, build,
 append, compact, erase, rebuild — and is the only code that commits
 index pointers (appends commit through :func:`genlog.append_segment`).
 Code outside the index modules reads live rows through :func:`live_rows`.
-A root without a pointer log (nothing built, or a FLAT tree from before
-the pointer layout) is rejected by genlog's head resolution, which every
-op but ``build`` goes through; ``build`` refuses to strand a flat tree
-(:func:`_reject_flat_index_debris`). Flat trees are upgraded in place by
-``dedup.migrate_flat_index_to_generational``. The protocol, stated once:
+A root without a pointer log is rejected by genlog's head resolution,
+which every op but ``build`` goes through; ``build`` refuses a root with no
+pointer log that holds anything but ``gen-*`` directories
+(:func:`_reject_foreign_entries`): the index is rebuilt from its source
+rows, never adopted from a tree already on disk. The protocol, stated once:
 
 - A segment is a complete ``gen-*`` tree: its data plus the index's commit
   record (LSH banding ``meta``, IVF ``_centroids``), written LAST. A
@@ -108,15 +108,12 @@ def _commit(spark, h: Head, gen: str, operation: str, segments=None, geometry_id
     )
 
 
-_FLAT_INDEX_MARKERS = ("buckets", "meta", "_centroids")
-
-
-def _reject_flat_index_debris(root: str) -> None:
-    """A generational build over a root that already holds a FLAT index
-    (either layout's markers) would strand the flat tree as debris no
-    vacuum reclaims — a GDPR erase would then leave subject rows on disk in
-    the dead copy. Reject loudly; folding it in needs a rename, so the
-    explicit local-only path is ``dedup.migrate_flat_index_to_generational``."""
+def _reject_foreign_entries(root: str) -> None:
+    """A build over a root with no pointer log must find nothing there but
+    ``gen-*`` directories (what a first build that crashed before its
+    commit leaves; vacuum reclaims them). Anything else is not this
+    index's to strand or overwrite — under a GDPR erase a stranded copy
+    would keep subject rows on disk that no vacuum reclaims."""
     from pyarrow import fs as pafs
 
     from etl_hiscox_spark.sources.listing import _resolve_fs
@@ -128,21 +125,23 @@ def _reject_flat_index_debris(root: str) -> None:
         # reachability loudly itself
         return
     # IO errors (throttling, timeouts) propagate: skipping the guard on a
-    # transient listing failure would strand the debris it exists to catch
+    # transient listing failure would strand what it exists to catch
     infos = filesystem.get_file_info(
         pafs.FileSelector(p, recursive=False, allow_not_found=True)
     )
-    debris = sorted(
+    if any(i.base_name == genlog._GEN_LOG for i in infos):
+        return
+    foreign = sorted(
         i.base_name
         for i in infos
-        if i.base_name in _FLAT_INDEX_MARKERS or i.base_name.startswith("__cluster=")
+        if not (i.base_name.startswith("gen-") and i.type == pafs.FileType.Directory)
     )
-    if debris:
+    if foreign:
         raise ValueError(
-            f"generational build over {root!r} would strand a flat index "
-            f"already there ({', '.join(debris)}) as unreclaimable debris — "
-            "build at a fresh root, or migrate the flat index explicitly "
-            "with migrate_flat_index_to_generational(spark, root)."
+            f"build at {root!r} would strand entries already there "
+            f"({', '.join(foreign)}): the root has no {genlog._GEN_LOG}, so it "
+            "is not a generational index root — build at a fresh root, or "
+            "rebuild the index from its source rows"
         )
 
 
@@ -159,16 +158,10 @@ def build(spark, path: str, stage: Callable[[Head, str], T]) -> T:
     """Overwrite build: ``stage(head, target)`` writes a complete index into
     a fresh generation. Onto an existing head it carries the ledger."""
     root = genlog.resolve_root(spark, path)
-    _reject_flat_index_debris(root)
+    _reject_foreign_entries(root)
     base = genlog.latest_pointer_version(spark, root)
     prior = genlog.read_pointer(root, base) if base is not None else {}
     return _fresh_geometry(spark, Head(root, base, prior), "build", stage)
-
-
-def adopt(spark, root: str, gen: str) -> None:
-    """Commit an already-complete generation as a root's FIRST pointer —
-    the last step of migrating a flat index in place."""
-    _commit(spark, Head(root, None, {}), gen, "migrate", geometry_id=genlog.new_geometry_id())
 
 
 def rebuild(spark, path: str, stage: Callable[[Head, str], T]) -> T:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -124,12 +124,6 @@ def lag_compare(
     """W3: attach the previous row's value (trend comparisons)."""
     w = Window.partitionBy(*keys).orderBy(*_ordering(order_by, False))
     return df.withColumn(alias, F.lag(value).over(w))
-
-
-def global_window(order_by: Sequence[Column | str], descending: bool = False) -> WindowSpec:
-    """Un-partitioned window — single-task at scale; use only on small or
-    pre-aggregated data (documented limitation, not a hot path)."""
-    return Window.orderBy(*_ordering(order_by, descending))
 
 
 def top_fraction_per_group(

@@ -1,10 +1,10 @@
-"""Table registry: named tables -> paths + explicit schemas + layers.
+"""Table registry: named tables -> paths + explicit schemas.
 
-Replaces the reference's two table-naming mechanisms:
-- ``scripts/utils/config.py:83-85`` ``get_table_name(layer, table)`` —
-  layered ``{db}_{layer}.{table}`` naming;
-- ``dbt/models/sources.yml:3-77`` — YAML source declarations with per-column
-  tests (the tests live in :mod:`etl_hiscox_spark.quality.rules`).
+Replaces the reference's ``dbt/models/sources.yml:3-77`` — YAML source
+declarations with per-column tests (the tests live in
+:mod:`etl_hiscox_spark.quality.rules`). Layered ``{db}_{layer}.{table}``
+naming (``scripts/utils/config.py:83-85``) is
+:meth:`etl_hiscox_spark.config.EngineConfig.get_table_name`.
 
 Explicit ``StructType`` schemas instead of ``inferSchema`` (SURVEY.md §1.4):
 inference is kept as a fallback for ad-hoc reads, but registered tables pin
@@ -15,15 +15,12 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-LAYERS = ("bronze", "silver", "gold")
 
 # ---------------------------------------------------------------------------
 # Testdata tables (TPC-H-ish star schema + events/documents/embeddings).
@@ -218,62 +215,6 @@ SCHEMAS: dict[str, T.StructType] = {
     "claims": CLAIMS_SCHEMA,
     "policies": POLICIES_SCHEMA,
 }
-
-
-@dataclass
-class TableRef:
-    """A registered table: layer-qualified name + storage path + schema."""
-
-    name: str
-    layer: str  # bronze | silver | gold | raw
-    path: str
-    schema: T.StructType | None = None
-    partition_by: tuple[str, ...] = field(default_factory=tuple)
-
-    @property
-    def qualified_name(self) -> str:
-        # Mirrors reference get_table_name: f"{db}_{layer}.{table}"
-        return f"{self.layer}.{self.name}"
-
-
-class TableRegistry:
-    """In-process catalog: register tables, read/write by name.
-
-    The warehouse root holds one directory per layer; tables are parquet
-    directories (Delta in the reference — parquet fallback per SURVEY.md
-    §2.1 S3). Partition columns give partition pruning for free at scale.
-    """
-
-    def __init__(self, spark: SparkSession, warehouse_dir: str):
-        self.spark = spark
-        self.warehouse_dir = warehouse_dir
-        self.tables: dict[str, TableRef] = {}
-
-    def register(
-        self,
-        name: str,
-        layer: str,
-        schema: T.StructType | None = None,
-        partition_by: tuple[str, ...] = (),
-    ) -> TableRef:
-        path = os.path.join(self.warehouse_dir, layer, name)
-        ref = TableRef(name=name, layer=layer, path=path, schema=schema, partition_by=partition_by)
-        self.tables[ref.qualified_name] = ref
-        return ref
-
-    def ref(self, qualified_name: str) -> TableRef:
-        return self.tables[qualified_name]
-
-    def read(self, qualified_name: str) -> DataFrame:
-        ref = self.ref(qualified_name)
-        reader = self.spark.read
-        if ref.schema is not None:
-            reader = reader.schema(ref.schema)
-        return reader.parquet(ref.path)
-
-    def exists(self, qualified_name: str) -> bool:
-        ref = self.tables.get(qualified_name)
-        return ref is not None and os.path.exists(ref.path)
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,10 @@ commit on object stores, where directory rename does not exist.
   ``txn_watermarks`` exactly-once ledger for streaming ingest;
 - superseded generations stay on disk, readable, until
   :func:`vacuum_generations` retires the pointer history and deletes the
-  directories nothing references — the OPTIMIZE/VACUUM split.
+  directories nothing references — the OPTIMIZE/VACUUM split;
+- this is the only index layout. A root without ``_gen_log`` is refused by
+  head resolution (:func:`current_generation`); an index tree written any
+  other way is rebuilt from its source rows, never adopted.
 """
 
 from __future__ import annotations
@@ -75,10 +78,8 @@ resolve_root = check_root
 def is_generational(spark, root: str) -> bool:
     """True when ``<root>/_gen_log`` exists. Index entry points do not ask:
     every read and every maintenance op resolves the head
-    (:func:`current_generation`), which rejects a root without a log.
-    Among the operators only ``dedup.migrate_flat_index_to_generational``
-    asks, to tell a flat tree (or a crashed migration) from a committed
-    index. A path pyarrow cannot resolve or reach is answered ``False``."""
+    (:func:`current_generation`), which rejects a root without a log. A
+    path pyarrow cannot resolve or reach is answered ``False``."""
     from pyarrow import fs as pafs
 
     try:
@@ -138,10 +139,10 @@ def current_generation(spark, root: str) -> tuple[int, str]:
     """(pointer version, live generation dir name) — THE head resolution
     every index reader and maintenance op goes through, so it is the one
     place a root without a pointer log is rejected (nothing built there,
-    or a flat tree to migrate with
-    ``migrate_flat_index_to_generational``). Also loud when the log is
-    present but empty (an interrupted first build: the generation data
-    may exist but nothing ever became live). Resolution goes through the
+    or a tree no build of this layout wrote: rebuild it from its source
+    rows). Also loud when the log is present but empty (an interrupted
+    first build: the generation data may exist but nothing ever became
+    live). Resolution goes through the
     checkpoint hint (:func:`_head_version`) — O(commits-since-checkpoint)
     probes on the hot path, LIST only as fallback."""
     hook = _HEAD_INTERPOSE.get()
@@ -160,9 +161,8 @@ def _current_generation(spark, root: str) -> tuple[int, str]:
     if head is None and not is_generational(spark, root):
         raise ValueError(
             f"{root!r} is not a GENERATIONAL index root (no {_GEN_LOG}): "
-            "nothing was built there, or it holds a flat index tree — "
-            "upgrade a flat tree in place with "
-            "migrate_flat_index_to_generational(spark, root)"
+            "nothing was built there, or it holds a tree no generational "
+            "build wrote — rebuild the index from its source rows"
         )
     if head is None:
         raise ValueError(

@@ -47,11 +47,6 @@ def stream_from_parquet(
     return spark.readStream.schema(schema).parquet(path)
 
 
-def stream_from_rate(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Synthetic throughput source (load/soak testing without Kafka)."""
-    return spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-
-
 def write_stream_parquet(
     df: DataFrame, path: str, checkpoint: str, trigger_available_now: bool = True
 ) -> StreamingQuery:

@@ -45,12 +45,11 @@ def _docs(spark, n=40):
 
 
 def _flat_copy(spark, build, dest):
-    """A FLAT index tree at ``dest`` — the layout older releases wrote: one
-    index tree straight at the root, with no pointer log. A flat tree is
-    exactly one segment's contents, so ``build(root)`` writes a
-    generational index at a fresh sibling root and its single live
-    segment is copied to ``dest``. Returns the generational source root,
-    which answers probes exactly as the flat tree's contents do."""
+    """A NON-GENERATIONAL index tree at ``dest``, for the rejection tests:
+    one index tree straight at the root, with no pointer log. It is one
+    segment's contents, so ``build(root)`` writes a generational index at
+    a fresh sibling root and its single live segment is copied to
+    ``dest``. Returns the generational source root."""
     import shutil
 
     from etl_hiscox_spark.sources.genlog import live_index_path
@@ -235,34 +234,19 @@ def test_generational_maintenance_race_collides_end_to_end(spark, tmp_path):
 
 
 def test_generational_build_rejects_flat_debris(spark, tmp_path):
-    """r12 review: a build over a root already holding a FLAT
-    index would strand the flat tree as unreclaimable debris (a GDPR
-    retention leak) — reject loudly; the explicit local migration folds
-    it in as generation 0 instead."""
+    """r12 review: a build over a root already holding a non-generational
+    index tree would strand it as unreclaimable debris (a GDPR retention
+    leak) — reject loudly; the index is rebuilt at a fresh root."""
     import numpy as np
 
-    from etl_hiscox_spark.operators.dedup import (
-        migrate_flat_index_to_generational,
-        write_minhash_index,
-    )
-    from etl_hiscox_spark.operators.similarity import (
-        ivf_probe_topk,
-        random_hyperplanes,
-        write_ivf_index,
-    )
-    from etl_hiscox_spark.sources import genlog
+    from etl_hiscox_spark.operators.dedup import write_minhash_index
+    from etl_hiscox_spark.operators.similarity import random_hyperplanes, write_ivf_index
 
     docs = _docs(spark)
     flat = str(tmp_path / "mh_flat")
-    src = _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), flat)
-    with pytest.raises(ValueError, match="strand a flat index"):
+    _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), flat)
+    with pytest.raises(ValueError, match="strand entries already there"):
         write_minhash_index(docs, "text", "doc_id", flat)
-    # migration folds the flat tree into generation 0; probes keep working
-    pairs_before = _probe_pairs(spark, src, docs)
-    migrate_flat_index_to_generational(spark, flat)
-    assert genlog.is_generational(spark, flat)
-    assert _probe_pairs(spark, flat, docs) == pairs_before
-    assert [g["operation"] for g in genlog.list_generations(spark, flat)] == ["migrate"]
 
     rng = np.random.default_rng(2)
     rows = [(i, [float(x) for x in rng.standard_normal(4)]) for i in range(20)]
@@ -274,15 +258,10 @@ def test_generational_build_rejects_flat_debris(spark, tmp_path):
         lambda p: write_ivf_index(emb, p, "embedding", "vec_id", centroids=planes),
         ivf_flat,
     )
-    with pytest.raises(ValueError, match="strand a flat index"):
+    with pytest.raises(ValueError, match="strand entries already there"):
         write_ivf_index(
             emb, ivf_flat, "embedding", "vec_id", centroids=planes
         )
-    migrate_flat_index_to_generational(spark, ivf_flat)
-    got = ivf_probe_topk(
-        spark, ivf_flat, None, "embedding", "vec_id", rows[0][1], k=3, n_probe=3
-    )
-    assert got.count() == 3
 
 
 def test_ivf_generational_full_lifecycle_no_renames(
@@ -405,8 +384,9 @@ def test_gdpr_erase_subject_reaches_generational_indexes(spark, tmp_path):
 
 def test_generational_build_rejects_cross_layout_debris(spark, tmp_path):
     """r12 second review: the debris guard is layout-symmetric — an IVF
-    generational build over flat MINHASH debris (and vice versa) strands
-    GDPR-relevant data just the same."""
+    generational build over non-generational MINHASH debris (and vice
+    versa) strands GDPR-relevant data just the same, and so would a build
+    over any entry it did not write."""
     import numpy as np
 
     from etl_hiscox_spark.operators.dedup import write_minhash_index
@@ -422,7 +402,7 @@ def test_generational_build_rejects_cross_layout_debris(spark, tmp_path):
 
     mh_root = str(tmp_path / "mh")
     _flat_copy(spark, lambda p: write_minhash_index(docs, "text", "doc_id", p), mh_root)
-    with pytest.raises(ValueError, match="strand a flat index"):
+    with pytest.raises(ValueError, match="strand entries already there"):
         write_ivf_index(emb, mh_root, "embedding", "vec_id",
                         centroids=planes)
 
@@ -432,76 +412,48 @@ def test_generational_build_rejects_cross_layout_debris(spark, tmp_path):
         lambda p: write_ivf_index(emb, p, "embedding", "vec_id", centroids=planes),
         ivf_root,
     )
-    with pytest.raises(ValueError, match="strand a flat index"):
+    with pytest.raises(ValueError, match="strand entries already there"):
         write_minhash_index(docs, "text", "doc_id", ivf_root)
 
+    # a foreign file is refused by both builds and left untouched
+    foreign_root = tmp_path / "foreign"
+    foreign_root.mkdir()
+    (foreign_root / "notes.txt").write_bytes(b"not an index")
+    for build in (
+        lambda: write_minhash_index(docs, "text", "doc_id", str(foreign_root)),
+        lambda: write_ivf_index(emb, str(foreign_root), "embedding", "vec_id",
+                                centroids=planes),
+    ):
+        with pytest.raises(ValueError, match="strand entries already there"):
+            build()
+        assert sorted(os.listdir(foreign_root)) == ["notes.txt"]
+        assert (foreign_root / "notes.txt").read_bytes() == b"not an index"
 
-def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
-    """r12 second review: a crash mid-migration (entries partially moved,
-    or moved but pointer not committed) leaves a root that is neither
-    flat nor generational — re-running migrate must adopt the partial
-    generation and complete it."""
-    import shutil
 
-    from etl_hiscox_spark.operators.dedup import (
-        migrate_flat_index_to_generational,
-        write_minhash_index,
-    )
+def test_build_over_a_crashed_first_build_lands_and_vacuum_reclaims_it(spark, tmp_path):
+    """A first build that crashed before its commit leaves a staged
+    ``gen-*`` tree and no ``_gen_log``. That is the one thing a build may
+    find at a root without a pointer log: the re-run lands, probes answer,
+    and vacuum reclaims the orphan."""
+    from etl_hiscox_spark.operators.dedup import _stage_minhash_index, write_minhash_index
     from etl_hiscox_spark.sources import genlog
 
     docs = _docs(spark)
     root = str(tmp_path / "mh")
+    orphan = genlog.new_generation_name()
+    _stage_minhash_index(docs, "text", "doc_id", os.path.join(root, orphan), 24, 6, 3)
+    assert not genlog.is_generational(spark, root)
 
-    def build(p):
-        write_minhash_index(docs, "text", "doc_id", p)
-
-    pairs = _probe_pairs(spark, _flat_copy(spark, build, root), docs)
-
-    # crash window 1: gen dir created, only ONE entry moved
-    gen = "gen-aaaaaaaaaaaa"
-    os.makedirs(os.path.join(root, gen))
-    os.rename(os.path.join(root, "meta"), os.path.join(root, gen, "meta"))
-    assert migrate_flat_index_to_generational(spark, root) == gen
-    assert genlog.is_generational(spark, root)
+    write_minhash_index(docs, "text", "doc_id", root)
+    _v, live = genlog.current_generation(spark, root)
+    assert live != orphan
+    fresh = str(tmp_path / "fresh")
+    write_minhash_index(docs, "text", "doc_id", fresh)
+    pairs = _probe_pairs(spark, fresh, docs)
+    assert pairs and _probe_pairs(spark, root, docs) == pairs
+    assert genlog.vacuum_generations(spark, root, min_age_seconds=0) == 1
+    assert sorted(e for e in os.listdir(root) if e.startswith("gen-")) == [live]
     assert _probe_pairs(spark, root, docs) == pairs
-
-    # crash window 2: everything moved, pointer commit never ran
-    root2 = str(tmp_path / "mh2")
-    _flat_copy(spark, build, root2)
-    gen2 = "gen-bbbbbbbbbbbb"
-    os.makedirs(os.path.join(root2, gen2))
-    for entry in list(os.listdir(root2)):
-        if entry != gen2:
-            os.rename(os.path.join(root2, entry), os.path.join(root2, gen2, entry))
-    assert migrate_flat_index_to_generational(spark, root2) == gen2
-    assert _probe_pairs(spark, root2, docs) == pairs
-
-    # two adoptable gen dirs and no pointer: refuse, never guess
-    root3 = str(tmp_path / "mh3")
-    _flat_copy(spark, build, root3)
-    shutil.copytree(os.path.join(root3, "buckets"), os.path.join(root3, "gen-x1/buckets"))
-    shutil.copytree(os.path.join(root3, "buckets"), os.path.join(root3, "gen-x2/buckets"))
-    with pytest.raises(ValueError, match="gen-\\* dirs but no pointer"):
-        migrate_flat_index_to_generational(spark, root3)
-
-    # crash window 3 (ADVICE r12): pointer commit itself crashed AFTER
-    # creating _gen_log, BEFORE linking v0 — is_generational is True with
-    # an empty log; re-running migrate must adopt, not raise "already
-    # generational" (and reads must work after, not demand manual cleanup)
-    root4 = str(tmp_path / "mh4")
-    _flat_copy(spark, build, root4)
-    gen4 = "gen-dddddddddddd"
-    os.makedirs(os.path.join(root4, gen4))
-    for entry in list(os.listdir(root4)):
-        if entry != gen4:
-            os.rename(os.path.join(root4, entry), os.path.join(root4, gen4, entry))
-    os.makedirs(os.path.join(root4, "_gen_log"))  # the crashed commit's debris
-    assert genlog.is_generational(spark, root4)
-    with pytest.raises(ValueError, match="no committed pointer"):
-        genlog.current_generation(spark, root4)
-    assert migrate_flat_index_to_generational(spark, root4) == gen4
-    assert genlog.current_generation(spark, root4)[0] == 0
-    assert _probe_pairs(spark, root4, docs) == pairs
 
 
 def test_default_build_layout_is_generational(spark, tmp_path):
@@ -2082,8 +2034,9 @@ def _flat_entry_points():
 def test_every_index_entry_point_rejects_a_flat_root(spark, flat_trees, entry_point):
     """The generational layout is the only one: every probe, append,
     compact, erase and rebuild entry point (and the GDPR composition)
-    rejects a flat tree loudly, in genlog's head resolution, and names the
-    migration — it never reads or rewrites the flat tree in place."""
+    rejects a non-generational tree loudly, in genlog's head resolution,
+    and says to rebuild from source rows — it never reads or rewrites the
+    tree in place."""
     def files():
         return {
             k: sorted(os.path.relpath(os.path.join(r, f), flat_trees[k])
@@ -2092,6 +2045,8 @@ def test_every_index_entry_point_rejects_a_flat_root(spark, flat_trees, entry_po
         }
 
     before = files()
-    with pytest.raises(ValueError, match="migrate_flat_index_to_generational"):
+    with pytest.raises(
+        ValueError, match="not a GENERATIONAL index root .*rebuild the index from its source rows"
+    ):
         _flat_entry_points()[entry_point](spark, flat_trees)
     assert files() == before  # nothing staged, nothing moved
