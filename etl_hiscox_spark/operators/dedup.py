@@ -20,17 +20,12 @@ in whole-stage codegen.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from pyspark.errors import AnalysisException as _SparkAnalysisError
 
 from etl_hiscox_spark.functions.text import content_hash, normalize_text, shingles
 from etl_hiscox_spark.operators import segindex
 from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
-from etl_hiscox_spark.sources.listing import _meta_is_local
 
 # ---------------------------------------------------------------------------
 # L1: exact dedup
@@ -54,19 +49,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         )
         .filter(F.col("__keep") == 1)
         .drop("__h", "__keep")
-    )
-
-
-def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Duplicate-group report: one row per content hash with >1 doc."""
-    return (
-        df.select(content_hash(F.col(text_col)).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keeper_id"),
-        )
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -1256,71 +1238,42 @@ def rebuild_minhash_index(
 
 
 def _write_index_meta(spark, path: str, num_hashes: int, num_bands: int, shingle_k: int) -> None:
-    """1-row parquet meta. Local paths write via pyarrow on the driver —
-    running a 2-task Spark job to persist three ints measurably taxed the
-    probe path (~0.5 s/round trip at bench scale); the contract (parquet
-    at <path>/meta) is identical either way."""
-    meta_path = os.path.join(path, "meta")
-    if _meta_is_local(spark, path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from etl_hiscox_spark.sources.writers import _local_fs_path
-
-        local = _local_fs_path(meta_path)
-        os.makedirs(local, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "num_hashes": pa.array([num_hashes], pa.int32()),
-                    "num_bands": pa.array([num_bands], pa.int32()),
-                    "shingle_k": pa.array([shingle_k], pa.int32()),
-                }
-            ),
-            os.path.join(local, "meta.parquet"),
-        )
-        return
-    from etl_hiscox_spark.smalldf import local_rows_df
-
-    local_rows_df(
-        spark,
-        [(num_hashes, num_bands, shingle_k)],
-        "num_hashes int, num_bands int, shingle_k int",
-    ).write.mode("overwrite").parquet(meta_path)
+    """The banding meta at ``<path>/meta``: the LSH segment's commit record."""
+    segindex.write_record(_LSH, path, (num_hashes, num_bands, shingle_k))
 
 
 def _read_index_meta(spark, path: str, resolved: bool = False) -> tuple[int, int, int]:
+    """``(num_hashes, num_bands, shingle_k)`` of an index root, or of the
+    segment ``path`` names when ``resolved``. Loud when the meta is
+    missing: a probe without trustworthy banding parameters must never
+    fall back to defaults and return plausible-but-empty results."""
     if not resolved:  # callers that already resolved skip the re-stat (r12)
         from etl_hiscox_spark.sources.genlog import live_index_paths
 
         # the GEOMETRY segment (segments[0]) carries the authoritative
         # banding; append deltas were validated equal at commit time (r13)
         path = live_index_paths(spark, path)[0]
-    meta_path = os.path.join(path, "meta")
-    try:
-        if _meta_is_local(spark, path):
-            import pyarrow.parquet as pq
+    return segindex.read_record(_LSH, path)
 
-            from etl_hiscox_spark.sources.writers import _local_fs_path
 
-            row = pq.read_table(
-                os.path.join(_local_fs_path(meta_path), "meta.parquet")
-            ).to_pylist()[0]
-        else:
-            row = spark.read.parquet(meta_path).collect()[0].asDict()
-    except (FileNotFoundError, OSError, IndexError, _SparkAnalysisError) as exc:
-        # Distinguish "meta missing" (interrupted overwrite — buckets may
-        # be newer than any meta ever written) from transient IO noise by
-        # failing LOUD either way: a probe without trustworthy banding
-        # parameters must never fall back to defaults and return
-        # plausible-but-empty results.
-        raise ValueError(
-            f"minhash index at {path!r} has no readable meta "
-            "(an overwrite may have been interrupted between the bucket "
-            "and meta writes — meta is written last as the commit record). "
-            "Rebuild the index with write_minhash_index(mode='overwrite')."
-        ) from exc
-    return int(row["num_hashes"]), int(row["num_bands"]), int(row["shingle_k"])
+_META_COLS = ("num_hashes", "num_bands", "shingle_k")
+
+
+def _encode_meta(params: tuple[int, int, int]):
+    import pyarrow as pa
+
+    return pa.table({c: pa.array([v], pa.int32()) for c, v in zip(_META_COLS, params)})
+
+
+def _read_buckets(spark, paths: list[str]) -> DataFrame:
+    """One scan over the bucket tables of ``paths``. A pyarrow footer read
+    of the first replaces Spark's per-call schema inference (~0.2 s per
+    probe, r18 guide §6); None falls back to inference, and a mismatch
+    fails loudly at scan time."""
+    from etl_hiscox_spark.fastschema import fast_parquet_schema
+
+    fast = fast_parquet_schema(paths[0])
+    return (spark.read.schema(fast) if fast is not None else spark.read).parquet(*paths)
 
 
 # The LSH answers to the segment protocol (operators/segindex): the
@@ -1330,9 +1283,16 @@ _LSH = segindex.SegmentKind(
     data_dir="buckets",
     key_col="doc",
     write_data=lambda rows, path: rows.write.mode("error").parquet(path),
-    read_data=lambda spark, paths: spark.read.parquet(*paths),
-    read_record=lambda spark, seg: _read_index_meta(spark, seg, resolved=True),
-    write_record=lambda spark, seg, params: _write_index_meta(spark, seg, *params),
+    read_data=_read_buckets,
+    record_dir="meta",
+    encode=_encode_meta,
+    decode=lambda t: tuple(int(t[c][0].as_py()) for c in _META_COLS),
+    missing=(
+        "minhash index at {segment!r} has no readable meta "
+        "(an overwrite may have been interrupted between the bucket "
+        "and meta writes — meta is written last as the commit record). "
+        "Rebuild the index with write_minhash_index(mode='overwrite')."
+    ),
 )
 
 
@@ -1372,16 +1332,7 @@ def probe_minhash_index(
     num_hashes, num_bands, shingle_k = _read_index_meta(spark, paths[0], resolved=True)
     sig = minhash_signature_table(new_df, text_col, id_col, num_hashes, shingle_k)
     new_banded = _banded_buckets(sig, num_hashes, num_bands).alias("n")
-    # one pyarrow footer read replaces Spark's per-call schema inference
-    # for the engine-written bucket table (r18, guide §6 — ~0.2 s per
-    # probe); None falls back to inference, a mismatch fails loudly at
-    # scan time
-    from etl_hiscox_spark.fastschema import fast_parquet_schema
-
-    bucket_dirs = [_LSH.data(p) for p in paths]
-    fast = fast_parquet_schema(bucket_dirs[0])
-    reader = spark.read.schema(fast) if fast is not None else spark.read
-    idx = reader.parquet(*bucket_dirs).alias("i")
+    idx = _LSH.read_data(spark, [_LSH.data(p) for p in paths]).alias("i")
     cand = (
         new_banded.join(
             idx,

@@ -18,6 +18,14 @@ rows, never adopted from a tree already on disk. The protocol, stated once:
   half-staged tree has no record, so readers reject it loudly and
   :func:`genlog.vacuum_generations` reclaims it. Committed segments are
   immutable.
+- The commit record is one small parquet object,
+  ``<segment>/<record_dir>/<record_dir without "_">.parquet``, written and
+  read on the driver by :func:`write_record` / :func:`read_record` through
+  the pointer log's own seam (:func:`listing._resolve_fs` and
+  :func:`commitio.replace_put`: one single-shot PUT on a hooked S3-class
+  store). A read takes every file of the record directory but ``_``- and
+  ``.``-prefixed ones, as a parquet dataset does, so a record directory
+  Spark wrote (``part-*.parquet`` + ``_SUCCESS``) decodes the same.
 - ``segments[0]`` of the head pointer holds the GEOMETRY: its commit record
   pins the index parameters. Every other segment carries a validated copy,
   so any segment may move into the first slot.
@@ -48,7 +56,7 @@ from typing import Any, NamedTuple, TypeVar
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_hiscox_spark.sources import genlog
+from etl_hiscox_spark.sources import commitio, genlog, listing
 
 T = TypeVar("T")
 
@@ -60,11 +68,51 @@ class SegmentKind(NamedTuple):
     key_col: str | None  # erase key column; None = the caller's id column
     write_data: Callable[[DataFrame, str], None]  # stage rows at a data path
     read_data: Callable[[Any, list[str]], DataFrame]  # (spark, data paths) -> rows
-    read_record: Callable[[Any, str], Any]  # (spark, segment) -> record
-    write_record: Callable[[Any, str, Any], None]  # (spark, segment, record)
+    record_dir: str  # the commit record's directory below the segment root
+    encode: Callable[[Any], Any]  # record -> pyarrow.Table
+    decode: Callable[[Any], Any]  # pyarrow.Table (>= 1 row) -> record
+    missing: str  # the error for a segment without a record; {segment} is filled
 
     def data(self, segment: str) -> str:
         return genlog._join(segment, self.data_dir) if self.data_dir else segment
+
+
+def write_record(kind: SegmentKind, segment: str, record: Any) -> None:
+    """Write ``record`` as ``segment``'s commit record: one parquet object
+    replacing any earlier one (see the module docstring)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    filesystem, d = listing._resolve_fs(genlog._join(segment, kind.record_dir))
+    if filesystem.type_name == "local":  # object stores and HDFS make parents on write
+        filesystem.create_dir(d)
+    buf = pa.BufferOutputStream()
+    pq.write_table(kind.encode(record), buf)
+    name = kind.record_dir.lstrip("_") + ".parquet"
+    commitio.replace_put(filesystem, f"{d}/{name}", buf.getvalue().to_pybytes())
+
+
+def read_record(kind: SegmentKind, segment: str) -> Any:
+    """``segment``'s decoded commit record. A missing, unreadable or empty
+    record raises ``ValueError(kind.missing)``: a reader must never fall
+    back to default or stale index parameters."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    try:
+        filesystem, d = listing._resolve_fs(genlog._join(segment, kind.record_dir))
+        tables = []
+        for info in sorted(filesystem.get_file_info(pafs.FileSelector(d)), key=lambda i: i.path):
+            if info.type == pafs.FileType.File and not info.base_name.startswith(("_", ".")):
+                with filesystem.open_input_file(info.path) as f:
+                    tables.append(pq.read_table(f))
+        table = pa.concat_tables(tables)  # ArrowInvalid when there is no file
+    except (OSError, pa.ArrowException) as exc:
+        raise ValueError(kind.missing.format(segment=segment)) from exc
+    if table.num_rows == 0:
+        raise ValueError(kind.missing.format(segment=segment))
+    return kind.decode(table)
 
 
 class Head(NamedTuple):
@@ -116,10 +164,8 @@ def _reject_foreign_entries(root: str) -> None:
     would keep subject rows on disk that no vacuum reclaims."""
     from pyarrow import fs as pafs
 
-    from etl_hiscox_spark.sources.listing import _resolve_fs
-
     try:
-        filesystem, p = _resolve_fs(root)
+        filesystem, p = listing._resolve_fs(root)
     except (ValueError, KeyError):
         # a scheme pyarrow cannot RESOLVE: the staging write decides
         # reachability loudly itself
@@ -175,12 +221,12 @@ def compact(spark, path: str, kind: SegmentKind, merge: Callable[[Head, str], in
     returns the output file count, or None when there is nothing to merge
     (a fully-erased placeholder head): no commit, and compact returns 0."""
     h = head(spark, path)
-    record = kind.read_record(spark, h.paths[0])  # loud on an uncommitted index
+    record = read_record(kind, h.paths[0])  # loud on an uncommitted index
     gen = genlog.new_generation_name()
     n = merge(h, kind.data(h.path(gen)))
     if n is None:
         return 0
-    kind.write_record(spark, h.path(gen), record)
+    write_record(kind, h.path(gen), record)
     _commit(spark, h, gen, "compact")
     return n
 
@@ -262,7 +308,7 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
     from etl_hiscox_spark.smalldf import local_rows_df
 
     h = head(spark, path)
-    record = kind.read_record(spark, h.paths[0])
+    record = read_record(kind, h.paths[0])
     key = kind.key_col or id_col
     k = F.broadcast(keys.select(F.col(id_col).alias(key)).distinct())
     # ONE schema for every segment (same layout by protocol): a pyarrow
@@ -277,7 +323,7 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
 
     def stage(rows: DataFrame, gen: str) -> None:
         kind.write_data(rows, kind.data(h.path(gen)))
-        kind.write_record(spark, h.path(gen), record)
+        write_record(kind, h.path(gen), record)
 
     if len(segs) == 1:
         gen = genlog.new_generation_name()
@@ -298,12 +344,10 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
             total, n_kept = segs[0].count(), 0
         n_erased = total - n_kept
         if n_kept and n_erased:
-            kind.write_record(spark, h.path(gen), record)
+            write_record(kind, h.path(gen), record)
         else:
             try:  # tidy the useless stage now; vacuum reclaims it on failure
-                from etl_hiscox_spark.sources.listing import _resolve_fs
-
-                filesystem, p = _resolve_fs(h.path(gen))
+                filesystem, p = listing._resolve_fs(h.path(gen))
                 filesystem.delete_dir(p)
             except (FileNotFoundError, OSError):
                 pass
@@ -327,7 +371,7 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
         new_segments = [genlog.new_generation_name()]
         placeholder = h.path(new_segments[0])
         local_rows_df(spark, [], schema).write.mode("error").parquet(kind.data(placeholder))
-        kind.write_record(spark, placeholder, record)
+        write_record(kind, placeholder, record)
     first_new = next((s for s in new_segments if s not in h.segments), new_segments[0])
     _commit(spark, h, first_new, "erase", segments=new_segments)
     return n_erased

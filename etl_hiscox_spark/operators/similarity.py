@@ -10,14 +10,10 @@ Two tiers:
   Probing only the query's bucket (+ optional multi-probe neighbors) turns
   top-k into a partition-pruned scan. Hyperplanes are generated from a seed
   driver-side (numpy), shipped as literals — deterministic.
-
-A pandas_udf batch-scoring variant is provided for many-query workloads
-(query matrix broadcast once per executor, Arrow-batched numpy matmul).
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 import numpy as np
@@ -530,110 +526,58 @@ def _write_ivf_partitions(assigned: DataFrame, path: str) -> None:
 def _write_ivf_centroids(
     spark, path: str, centroids: np.ndarray, quantized: bool = False
 ) -> None:
-    # Local paths write via pyarrow on the driver — a Spark job to persist
-    # a k-row centroid table measured ~5s of the whole index lifecycle at
-    # bench scale (the same tiny-metadata lesson as the minhash index
-    # meta); the contract (parquet at <path>/_centroids) is identical.
-    # ``quantized`` rides the commit record (r11 review): the append path
-    # needs "does this layout store __codes?" in O(1), and a full-index
-    # schema inference per daily append is exactly the listing tax the
-    # fragmentation stats were moved off the driver to avoid. _centroids
-    # survives every maintenance op by construction (compact and erase
-    # carry the record into their new segment, rebuild rewrites it), so
-    # the flag can never drift from the layout.
-    from etl_hiscox_spark.sources.listing import _meta_is_local
-
-    cdir = os.path.join(path, "_centroids")
-    if _meta_is_local(spark, path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from etl_hiscox_spark.sources.writers import _local_fs_path
-
-        local = _local_fs_path(cdir)
-        os.makedirs(local, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "cluster": pa.array(range(len(centroids)), pa.int32()),
-                    "centroid": pa.array(
-                        [[float(x) for x in c] for c in centroids],
-                        pa.list_(pa.float64()),
-                    ),
-                    "quantized": pa.array(
-                        [bool(quantized)] * len(centroids), pa.bool_()
-                    ),
-                }
-            ),
-            os.path.join(local, "centroids.parquet"),
-        )
-        return
-    local_rows_df(
-        spark,
-        [
-            (int(i), [float(x) for x in c], bool(quantized))
-            for i, c in enumerate(centroids)
-        ],
-        "cluster int, centroid array<double>, quantized boolean",
-    ).write.mode("overwrite").parquet(cdir)
+    """The ``_centroids`` commit record of an IVF segment at ``path``.
+    ``quantized`` rides the record (r11 review): the append path needs
+    "does this layout store __codes?" in O(1), without a schema inference
+    of the whole index per append. The record survives every maintenance
+    op by construction (compact and erase carry it into their new
+    segment, rebuild rewrites it), so the flag can never drift from the
+    layout."""
+    segindex.write_record(_IVF, path, (centroids, quantized))
 
 
-def _read_ivf_centroid_rows(spark, path: str, resolved: bool = False) -> list[dict]:
-    """Raw rows of the ``_centroids`` commit record, loud when missing."""
-    from etl_hiscox_spark.sources.listing import _meta_is_local
+def _encode_centroids(record: tuple[np.ndarray, bool]):
+    import pyarrow as pa
 
+    C, quantized = record
+    return pa.table(
+        {
+            "cluster": pa.array(range(len(C)), pa.int32()),
+            "centroid": pa.array([[float(x) for x in c] for c in C], pa.list_(pa.float64())),
+            "quantized": pa.array([bool(quantized)] * len(C), pa.bool_()),
+        }
+    )
+
+
+def _decode_centroids(table) -> tuple[np.ndarray, bool]:
+    rows = sorted(table.to_pylist(), key=lambda r: r["cluster"])
+    C = np.vstack([np.asarray(r["centroid"], dtype=np.float64) for r in rows])
+    # pre-r11 records carry no flag: their layouts store no codes
+    return C, bool(rows[0].get("quantized", False))
+
+
+def _read_ivf_record(spark, path: str, resolved: bool) -> tuple[np.ndarray, bool]:
     if not resolved:  # callers that already resolved skip the re-stat (r12)
         from etl_hiscox_spark.sources.genlog import live_index_paths
 
         # the GEOMETRY segment (segments[0]) carries the authoritative
         # centroid record; append deltas carry a validated copy (r13)
         path = live_index_paths(spark, path)[0]
-    cdir = os.path.join(path, "_centroids")
-    try:
-        if _meta_is_local(spark, path):
-            import glob as _glob
-
-            import pyarrow.parquet as pq
-
-            from etl_hiscox_spark.sources.writers import _local_fs_path
-
-            local = _local_fs_path(cdir)
-            parts = sorted(_glob.glob(os.path.join(local, "*.parquet")))
-            if not parts:
-                raise FileNotFoundError(f"no centroid parquet under {local!r}")
-            rows = []
-            for part in parts:
-                rows.extend(pq.read_table(part).to_pylist())
-        else:
-            rows = [r.asDict() for r in spark.read.parquet(cdir).collect()]
-    except Exception as exc:
-        raise ValueError(
-            f"IVF index at {path!r} has no readable centroids (an index "
-            "write may have been interrupted — centroids are written last "
-            "as the commit record). Rebuild with write_ivf_index."
-        ) from exc
-    if not rows:
-        raise ValueError(f"IVF index at {path!r} has an empty centroid table")
-    return rows
+    return segindex.read_record(_IVF, path)
 
 
 def load_ivf_centroids(spark, path: str, resolved: bool = False) -> np.ndarray:
     """Centroid matrix persisted by :func:`write_ivf_index`. Missing or
     empty centroids mean an interrupted index write — fail loudly, never
-    probe with default/stale geometry. Local paths read via pyarrow on
-    the driver (every probe/append/erase/drift call loads the geometry —
-    a Spark job per k-row read taxed the lifecycle measurably)."""
-    rows = _read_ivf_centroid_rows(spark, path, resolved=resolved)
-    rows.sort(key=lambda r: r["cluster"])
-    return np.vstack([np.asarray(r["centroid"], dtype=np.float64) for r in rows])
+    probe with default/stale geometry."""
+    return _read_ivf_record(spark, path, resolved)[0]
 
 
 def ivf_index_is_quantized(spark, path: str, resolved: bool = False) -> bool:
     """Whether the index layout stores int8 codes — read from the
     ``_centroids`` commit record in O(1), never inferred from the data
-    files (pre-r11 indexes without the flag read as False)."""
-    rows = _read_ivf_centroid_rows(spark, path, resolved=resolved)
-    return bool(rows[0].get("quantized", False))
+    files."""
+    return _read_ivf_record(spark, path, resolved)[1]
 
 
 def _read_ivf_segments(spark, paths: list[str]) -> DataFrame:
@@ -755,7 +699,7 @@ def append_to_ivf_index(
             )
 
     def _stage_delta(h, target: str) -> None:
-        C, quantized = _IVF.read_record(spark, h.paths[0])
+        C, quantized = segindex.read_record(_IVF, h.paths[0])
         _stage_ivf_segment(
             _assign_to_centroids(df, C, quantized, embedding_col),
             target, C, quantized, "append_to_ivf_index",
@@ -772,14 +716,32 @@ _IVF = segindex.SegmentKind(
     key_col=None,
     write_data=_write_ivf_partitions,
     read_data=_read_ivf_segments,
-    read_record=lambda spark, seg: (
-        load_ivf_centroids(spark, seg, resolved=True),
-        ivf_index_is_quantized(spark, seg, resolved=True),
-    ),
-    write_record=lambda spark, seg, rec: _write_ivf_centroids(
-        spark, seg, rec[0], quantized=rec[1]
+    record_dir="_centroids",
+    encode=_encode_centroids,
+    decode=_decode_centroids,
+    missing=(
+        "IVF index at {segment!r} has no readable centroids (an index "
+        "write may have been interrupted — centroids are written last "
+        "as the commit record). Rebuild with write_ivf_index."
     ),
 )
+
+
+def _cluster_dirs(segs: list[str]) -> list[tuple[int, str]]:
+    """``(cluster, dir)`` for every ``__cluster=`` partition of ``segs``:
+    one non-recursive LIST per segment, through ``pyarrow.fs``."""
+    from pyarrow import fs as pafs
+
+    from etl_hiscox_spark.sources.genlog import _join
+    from etl_hiscox_spark.sources.listing import _resolve_fs
+
+    dirs = []
+    for seg in segs:
+        filesystem, seg_path = _resolve_fs(seg)
+        for info in filesystem.get_file_info(pafs.FileSelector(seg_path, recursive=False)):
+            if info.type == pafs.FileType.Directory and info.base_name.startswith("__cluster="):
+                dirs.append((int(info.base_name.split("=", 1)[1]), _join(seg, info.base_name)))
+    return dirs
 
 
 def _merge_ivf_segments(spark, segs: list[str], target: str, target_file_mb: int) -> int | None:
@@ -790,21 +752,9 @@ def _merge_ivf_segments(spark, segs: list[str], target: str, target_file_mb: int
     sum each cluster's bytes across every segment and come from
     distributed_dir_stats, so the driver's share stays bounded by
     n_clusters."""
-    from pyarrow import fs as pafs
+    from etl_hiscox_spark.sources.listing import _dir_file_stats, distributed_dir_stats
 
-    from etl_hiscox_spark.sources.genlog import _join
-    from etl_hiscox_spark.sources.listing import (
-        _dir_file_stats,
-        _resolve_fs,
-        distributed_dir_stats,
-    )
-
-    dirs = []
-    for seg in segs:
-        filesystem, seg_path = _resolve_fs(seg)
-        for info in filesystem.get_file_info(pafs.FileSelector(seg_path, recursive=False)):
-            if info.type == pafs.FileType.Directory and info.base_name.startswith("__cluster="):
-                dirs.append((int(info.base_name.split("=", 1)[1]), _join(seg, info.base_name)))
+    dirs = _cluster_dirs(segs)
     if not dirs:
         return None
     sizes: dict[int, int] = {}
@@ -948,18 +898,19 @@ def ivf_fragmentation_stats(spark, path: str) -> DataFrame:
     count and bytes of a written IVF index, so the compaction trigger is
     a queryable fact instead of an operator's guess (the same
     make-the-maintenance-signal-visible rule as
-    :func:`ivf_centroid_drift` for rebuilds). Listing goes through the
-    Hadoop FileSystem API, so it works identically on local paths and
-    HDFS/S3A. Driver-side cost: one recursive LIST, n_clusters rows.
+    :func:`ivf_centroid_drift` for rebuilds). Listing goes through
+    ``pyarrow.fs``, as every index op's does, so local, HDFS and S3 roots
+    list alike. Driver-side cost: one non-recursive LIST per live
+    segment, n_clusters rows.
 
     Output: (cluster, n_files, total_bytes, avg_file_bytes) ordered by
     cluster. Rule of thumb documented on the compactor: compact when
     n_files per partition ≫ ceil(total_bytes / target_file_mb).
 
-    Scale shape (VERDICT r10): the driver issues ONE non-recursive LIST
-    (n_clusters entries — the same bound as every other centroid-table
-    fact); the per-partition recursive walks, which grow with total file
-    count, run on EXECUTORS (``sources/listing.distributed_dir_stats``)
+    Scale shape (VERDICT r10): the driver issues one non-recursive LIST
+    per segment (n_clusters entries — the same bound as every other
+    centroid-table fact); the per-partition recursive walks, which grow
+    with total file count, run on EXECUTORS (``sources/listing.distributed_dir_stats``)
     — at years-of-appends scale the old all-files driver walk was itself
     a stall.
     """
@@ -968,15 +919,7 @@ def ivf_fragmentation_stats(spark, path: str) -> DataFrame:
 
     paths = live_index_paths(spark, path)
     load_ivf_centroids(spark, paths[0], resolved=True)  # loud on an uncommitted index
-    sc = spark.sparkContext
-    dirs: list[tuple[int, str]] = []
-    for p in paths:  # every live segment (OCC append deltas, r13)
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("__cluster="):
-                dirs.append((int(name.split("=", 1)[1]), st.getPath().toString()))
+    dirs = _cluster_dirs(paths)  # every live segment (OCC append deltas, r13)
     if not dirs:
         raise ValueError(f"no __cluster= partitions under {path!r} — not a written IVF index")
     stats = distributed_dir_stats(spark, dirs)
@@ -1314,49 +1257,6 @@ def blocked_cosine_pairs_pandas(
         F.col(id_col), F.col(block_col), emb_double.alias(embedding_col)
     )
     return prepared.groupBy(block_col).applyInPandas(emit_pairs, schema=out_schema)
-
-
-def batch_cosine_topk_pandas(
-    df: DataFrame,
-    embedding_col: str,
-    id_col: str,
-    query_matrix: np.ndarray,
-    k: int = 10,
-) -> DataFrame:
-    """Many-query scoring with an Arrow-batched pandas UDF (vectorized
-    numpy matmul per batch) — the 10-100× faster path vs row-at-a-time
-    Python when expressions can't amortize multiple queries.
-
-    Returns (query_idx, id, cosine_sim, rank) for each query row.
-    """
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    qm = np.asarray(query_matrix, dtype=np.float64)
-    qm_norm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    n_queries = qm.shape[0]
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(qm_norm)
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def sims(embs: pd.Series) -> pd.Series:
-        mat = _stack_embeddings(embs, dim=qm.shape[1])
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            # zero-norm AND malformed (NaN-row) cells -> all-0 sims
-            mat = np.where(norms > 0, mat / norms, 0.0)
-        scores = mat @ bc.value.T  # (batch, n_queries)
-        return pd.Series(list(scores))
-
-    scored = df.select(F.col(id_col), sims(F.col(embedding_col)).alias("__s"))
-    exploded = scored.select(
-        id_col,
-        F.posexplode(F.col("__s")).alias("query_idx", "cosine_sim"),
-    ).filter(F.col("query_idx") < n_queries)
-    w = Window.partitionBy("query_idx").orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-    return (
-        exploded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 def semantic_dedup(

@@ -15,7 +15,6 @@ from etl_hiscox_spark.operators.aggregates import (
     money_sum,
     rollup_summary,
 )
-from etl_hiscox_spark.operators.dedup import exact_dup_groups
 from etl_hiscox_spark.registry import load_all, register_temp_views
 
 
@@ -56,15 +55,6 @@ def test_word_count(spark):
     df = spark.createDataFrame([("  hello   world  ",), ("one",)], ["t"])
     got = [r["n"] for r in df.select(word_count("t").alias("n")).collect()]
     assert got == [2, 1]
-
-
-def test_exact_dup_groups_report(spark):
-    df = spark.createDataFrame(
-        [(1, "same text"), (2, "Same   TEXT"), (3, "unique")], "doc_id long, text string"
-    )
-    groups = exact_dup_groups(df, "text", "doc_id").collect()
-    assert len(groups) == 1
-    assert groups[0]["n_docs"] == 2 and groups[0]["keeper_id"] == 1
 
 
 def test_audio_and_frame_stubs(spark):
@@ -301,7 +291,10 @@ def test_index_layout_is_known_in_one_place():
     through genlog, which rejects a root without a pointer log — and no
     call anywhere in the package passes ``generational=``. No index module
     renames or moves a path: every index op commits by pointer, which is
-    what keeps the layout correct on object stores."""
+    what keeps the layout correct on object stores. Neither index module
+    forks on ``_meta_is_local`` or reaches into the JVM: every segment's
+    commit record and partition listing goes through ``pyarrow.fs``, the
+    seam the pointer log runs on."""
     import ast
     from pathlib import Path
 
@@ -345,3 +338,16 @@ def test_index_layout_is_known_in_one_place():
     assert asks == []
     assert switches == []
     assert renames == []
+
+    def names(node):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            return {a.name for a in node.names}
+        return {getattr(node, "id", None), getattr(node, "attr", None)}
+
+    forks = [
+        f"{rel}:{node.lineno}"
+        for rel in ("operators/dedup.py", "operators/similarity.py")
+        for node in ast.walk(ast.parse((root / rel).read_text()))
+        if names(node) & {"_meta_is_local", "_jvm"}
+    ]
+    assert forks == []

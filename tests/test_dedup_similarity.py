@@ -20,7 +20,6 @@ from etl_hiscox_spark.operators.segindex import live_rows
 from etl_hiscox_spark.operators.similarity import (
     _IVF,
     ann_topk_lsh,
-    batch_cosine_topk_pandas,
     cosine_topk,
 )
 
@@ -192,16 +191,6 @@ def test_ann_lsh_recalls_planted_neighbor(spark):
     assert 0 in ids and 1 in ids  # query and planted neighbor in same bucket region
 
 
-def test_batch_pandas_topk(spark):
-    df, vecs = _emb_df(spark)
-    qm = np.stack([vecs[0], vecs[3]])
-    out = batch_cosine_topk_pandas(df, "embedding", "vec_id", qm, k=2).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_idx"], []).append(r["vec_id"])
-    assert by_q[0][0] == 0 and by_q[1][0] == 3
-
-
 def test_minhash_24_6_recall_on_planted_dups(spark):
     """Recall pin for the declared l2 query's 24-hash / 6-band config.
 
@@ -286,10 +275,6 @@ def test_malformed_embeddings_do_not_crash(spark):
     pairs = blocked_cosine_pairs_pandas(blocked, "embedding", "vec_id", "blk", threshold=0.9)
     ids_in_pairs = {x for r in pairs.collect() for x in (r["id_a"], r["id_b"])}
     assert ids_in_pairs and all(i < 100 for i in ids_in_pairs)
-
-    qm = np.stack([vecs[0]])
-    bt = batch_cosine_topk_pandas(mixed, "embedding", "vec_id", qm, k=3).collect()
-    assert bt[0]["vec_id"] == 0 and all(r["vec_id"] < 100 for r in bt)
 
 
 def test_simhash_portable_and_fast_modes_agree_on_planted_dups(spark):
@@ -1115,6 +1100,86 @@ def test_write_ivf_index_explicit_centroids(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
         write_ivf_index(bad, str(tmp_path / "ivf_bad"), "embedding", "vec_id", centroids=C)
+
+
+def test_ivf_maintenance_reads_the_centroid_record_once(spark, tmp_path, monkeypatch):
+    """Append, compact and erase each decode the centroids AND the
+    quantized flag from ONE read of the ``_centroids`` record, through the
+    filesystem seam every protocol read goes through."""
+    import os
+
+    from etl_hiscox_spark.operators.similarity import (
+        append_to_ivf_index,
+        compact_ivf_index,
+        erase_from_ivf_index,
+        write_ivf_index,
+    )
+    from etl_hiscox_spark.sources import listing
+
+    rng = np.random.default_rng(23)
+    C = rng.standard_normal((3, 4))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(4)]) for i in range(30)],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "ivf")
+    write_ivf_index(df.filter("vec_id < 20"), path, "embedding", "vec_id", centroids=C, quantize=True)
+
+    opened = []
+    real_fs = listing._resolve_fs
+
+    class CountingFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def open_input_file(self, p):
+            opened.append(p)
+            return self._fs.open_input_file(p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    monkeypatch.setattr(
+        listing, "_resolve_fs",
+        lambda p: (lambda fs_p: (CountingFS(fs_p[0]), fs_p[1]))(real_fs(p)),
+    )
+
+    def record_opens(op):
+        opened.clear()
+        op()
+        return [p for p in opened if f"{os.sep}_centroids{os.sep}" in p]
+
+    assert len(record_opens(
+        lambda: append_to_ivf_index(df.filter("vec_id >= 20"), path, "embedding", "vec_id")
+    )) == 1
+    assert len(record_opens(lambda: compact_ivf_index(spark, path))) == 1
+    keys = spark.createDataFrame([(3,)], "vec_id long")
+    assert len(record_opens(lambda: erase_from_ivf_index(spark, path, keys, "vec_id"))) == 1
+    monkeypatch.setattr(listing, "_resolve_fs", real_fs)
+    assert live_rows(spark, path, _IVF).filter("vec_id = 3").count() == 0
+    assert live_rows(spark, path, _IVF).filter("__codes IS NULL").count() == 0
+
+
+def test_spark_written_record_directories_decode(spark, tmp_path):
+    """A commit record directory Spark wrote (``part-*.parquet`` plus
+    ``_SUCCESS`` and ``.crc`` files, several parts) decodes like the one
+    object the driver writes, for both index kinds."""
+    from etl_hiscox_spark.operators.dedup import _read_index_meta
+    from etl_hiscox_spark.operators.similarity import ivf_index_is_quantized, load_ivf_centroids
+
+    seg = str(tmp_path / "gen-000000000000")
+    C = np.arange(12, dtype=np.float64).reshape(4, 3) / 7.0
+    spark.createDataFrame(
+        [(24, 6, 3)], "num_hashes int, num_bands int, shingle_k int"
+    ).write.parquet(seg + "/meta")
+    spark.createDataFrame(
+        [(i, [float(x) for x in c], True) for i, c in enumerate(C)],
+        "cluster int, centroid array<double>, quantized boolean",
+    ).repartition(2).write.parquet(seg + "/_centroids")
+
+    assert _read_index_meta(spark, seg, resolved=True) == (24, 6, 3)
+    np.testing.assert_array_equal(load_ivf_centroids(spark, seg, resolved=True), C)
+    assert ivf_index_is_quantized(spark, seg, resolved=True)
 
 
 def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):

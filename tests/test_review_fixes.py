@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from etl_hiscox_spark.observability import write_with_metrics
 from etl_hiscox_spark.operators.dedup import connected_components, minhash_candidates
 from etl_hiscox_spark.operators.joins import asof_join, salted_join
-from etl_hiscox_spark.operators.similarity import batch_cosine_topk_pandas, cosine_topk
+from etl_hiscox_spark.operators.similarity import cosine_topk
 from etl_hiscox_spark.plans.pipeline import Model, Pipeline, sql_model
 from etl_hiscox_spark.quality.engine import QualityEngine
 from etl_hiscox_spark.quality.rules import RuleSet, Unique
@@ -52,18 +52,6 @@ def test_cosine_topk_ignores_zero_vectors(spark):
     ids = [r["vec_id"] for r in out]
     assert 2 not in ids  # NaN cosine must not win rank 1
     assert ids[0] == 0
-
-
-def test_batch_pandas_zero_norm_rows(spark):
-    import numpy as np
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    out = batch_cosine_topk_pandas(df, "embedding", "vec_id", np.array([[1.0, 0.0]]), k=2)
-    rows = {r["vec_id"]: r["cosine_sim"] for r in out.collect()}
-    assert rows[0] == pytest.approx(1.0)
-    assert rows[1] == 0.0  # zero-norm scored 0, not NaN
 
 
 def test_salted_join_rejects_outer(spark):

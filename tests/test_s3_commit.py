@@ -414,3 +414,40 @@ def test_txn_erase_repoint_on_s3_is_single_shot(s3env, s3hook):
         )["Contents"]
     }
     assert keys == {"repoint/_txn_log/v0.json"}
+
+
+def test_segment_commit_records_round_trip_on_s3(spark, s3env, s3hook):
+    """Both index kinds' commit records (LSH banding ``meta``, IVF
+    ``_centroids``) write and read on an ``s3://`` segment through the
+    same ``pyarrow.fs`` seam as the pointer log: each record is ONE object
+    landed by the single-shot replace hook — no directory marker, no
+    staged tmp — and a segment without a record is refused loudly."""
+    import numpy as np
+
+    from etl_hiscox_spark.operators.dedup import _read_index_meta, _write_index_meta
+    from etl_hiscox_spark.operators.similarity import (
+        _write_ivf_centroids,
+        ivf_index_is_quantized,
+        load_ivf_centroids,
+    )
+
+    seg = f"s3://{BUCKET}/records/gen-0123456789ab"
+    C = np.arange(12, dtype=np.float64).reshape(3, 4) / 7.0
+    _write_index_meta(spark, seg, 24, 6, 3)
+    _write_ivf_centroids(spark, seg, C, quantized=True)
+
+    assert _read_index_meta(spark, seg, resolved=True) == (24, 6, 3)
+    np.testing.assert_array_equal(load_ivf_centroids(spark, seg, resolved=True), C)
+    assert ivf_index_is_quantized(spark, seg, resolved=True)
+    keys = {
+        o["Key"]
+        for o in s3env["client"].list_objects_v2(Bucket=BUCKET, Prefix="records/")["Contents"]
+    }
+    assert keys == {
+        "records/gen-0123456789ab/meta/meta.parquet",
+        "records/gen-0123456789ab/_centroids/centroids.parquet",
+    }
+    with pytest.raises(ValueError, match="no readable meta"):
+        _read_index_meta(spark, f"s3://{BUCKET}/records/gen-missing", resolved=True)
+    with pytest.raises(ValueError, match="no readable centroids"):
+        load_ivf_centroids(spark, f"s3://{BUCKET}/records/gen-missing", resolved=True)

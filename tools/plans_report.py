@@ -44,7 +44,7 @@ SHOWCASE = [
     ("a19_key_skew_profile", "per-key counts map-side combined; 1-row totals broadcast; top-k TakeOrderedAndProject"),
     ("l3_ivf_drift_diag", "drift diagnostic: one ArrowEvalPython per side (asNondeterministic pins single scoring), map-side partial percentile agg, single 2-group exchange"),
     ("t35_keep_best_survivors", "survivor frame: cluster losers anti-joined against one corpus scan; windows over cluster-sized partitions only"),
-    ("l3_ivf_gen_lifecycle_probe", "generation-pointer probe: after build→append→compact→erase committed by pointer flips, the physical plan is the flat layout's — cluster IN-filter in PartitionFilters of the live generation's scan (resolution is metadata, never a plan cost)"),
+    ("l3_ivf_gen_lifecycle_probe", "generation-pointer probe: after build→append→compact→erase committed by pointer flips, the physical plan is one partition-pruned scan of the live segment — cluster IN-filter in its PartitionFilters (resolution is metadata, never a plan cost)"),
 ]
 
 
