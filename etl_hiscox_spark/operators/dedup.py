@@ -1128,13 +1128,14 @@ def compact_minhash_index(spark, path: str, target_file_mb: int = 256) -> int:
     """
     from etl_hiscox_spark.sources.writers import compact_parquet_to_dir
 
-    return segindex.compact(
-        spark, path, _LSH,
-        lambda h, target: compact_parquet_to_dir(
-            spark, [_LSH.data(p) for p in h.paths], target, target_file_mb,
+    def _merge(h, target: str) -> int:
+        srcs = [_LSH.data(p) for p in h.paths]
+        return compact_parquet_to_dir(
+            _LSH.read_data(spark, srcs), srcs, target, target_file_mb,
             sort_by=("band", "bucket"),
-        ),
-    )
+        )
+
+    return segindex.compact(spark, path, _LSH, _merge)
 
 
 def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
@@ -1162,30 +1163,24 @@ def minhash_fragmentation_stats(spark, path: str) -> DataFrame:
     every probe's (band, bucket) join pays an open/LIST tax per bucket
     file until then.
 
-    One row: (n_files, total_bytes, avg_file_bytes). The walk runs on an
-    executor (``sources/listing.distributed_dir_stats``); the driver
-    holds only the directory handles — same scale shape as the IVF twin.
-    Multi-segment heads (OCC append deltas, r13) aggregate across every
-    live segment's bucket table: segment count is itself fragmentation,
-    and this stat is the compaction trigger that merges it away.
+    One row: (n_files, total_bytes, avg_file_bytes), from one recursive
+    LIST per live segment's bucket table on the driver
+    (:func:`listing.data_files`). Multi-segment heads (OCC append deltas,
+    r13) aggregate across every live segment: segment count is itself
+    fragmentation, and this stat is the compaction trigger that merges
+    it away.
     """
+    from etl_hiscox_spark.smalldf import local_rows_df
     from etl_hiscox_spark.sources.genlog import live_index_paths
-    from etl_hiscox_spark.sources.listing import distributed_dir_stats
+    from etl_hiscox_spark.sources.listing import data_files
 
     paths = live_index_paths(spark, path)
     _read_index_meta(spark, paths[0], resolved=True)  # loud on an uncommitted index
-    stats = distributed_dir_stats(
-        spark, [(i, _LSH.data(p)) for i, p in enumerate(paths)]
-    )
-    return stats.agg(
-        F.sum("n_files").alias("n_files"),
-        F.sum("total_bytes").alias("total_bytes"),
-    ).select(
-        "n_files",
-        "total_bytes",
-        (F.col("total_bytes").cast("double") / F.col("n_files")).alias(
-            "avg_file_bytes"
-        ),
+    files = [f for p in paths for f in data_files(_LSH.data(p))]
+    n, total = len(files), sum(f.size for f in files)
+    return local_rows_df(
+        spark, [(n, total, total / n if n else None)],
+        "n_files long, total_bytes long, avg_file_bytes double",
     )
 
 
@@ -1266,14 +1261,13 @@ def _encode_meta(params: tuple[int, int, int]):
 
 
 def _read_buckets(spark, paths: list[str]) -> DataFrame:
-    """One scan over the bucket tables of ``paths``. A pyarrow footer read
-    of the first replaces Spark's per-call schema inference (~0.2 s per
-    probe, r18 guide §6); None falls back to inference, and a mismatch
-    fails loudly at scan time."""
-    from etl_hiscox_spark.fastschema import fast_parquet_schema
+    """One scan over the bucket tables of ``paths``, pinned to the footer
+    schema of the first: Spark's per-call inference would cost a job
+    (~0.2 s per probe, r18 guide §6), and a mismatched table fails loudly
+    at scan time."""
+    from etl_hiscox_spark.sources.listing import footer_schema
 
-    fast = fast_parquet_schema(paths[0])
-    return (spark.read.schema(fast) if fast is not None else spark.read).parquet(*paths)
+    return spark.read.schema(footer_schema(paths)).parquet(*paths)
 
 
 # The LSH answers to the segment protocol (operators/segindex): the

@@ -23,9 +23,10 @@ rows, never adopted from a tree already on disk. The protocol, stated once:
   read on the driver by :func:`write_record` / :func:`read_record` through
   the pointer log's own seam (:func:`listing._resolve_fs` and
   :func:`commitio.replace_put`: one single-shot PUT on a hooked S3-class
-  store). A read takes every file of the record directory but ``_``- and
-  ``.``-prefixed ones, as a parquet dataset does, so a record directory
-  Spark wrote (``part-*.parquet`` + ``_SUCCESS``) decodes the same.
+  store). A read takes every data file of the record directory that the
+  engine's lister returns (:func:`listing.data_files`, Spark's hidden-file
+  rule), so a record directory Spark wrote (``part-*.parquet`` +
+  ``_SUCCESS``) decodes the same.
 - ``segments[0]`` of the head pointer holds the GEOMETRY: its commit record
   pins the index parameters. Every other segment carries a validated copy,
   so any segment may move into the first slot.
@@ -98,15 +99,14 @@ def read_record(kind: SegmentKind, segment: str) -> Any:
     back to default or stale index parameters."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
 
     try:
-        filesystem, d = listing._resolve_fs(genlog._join(segment, kind.record_dir))
+        record_dir = genlog._join(segment, kind.record_dir)
+        filesystem, _ = listing._resolve_fs(record_dir)
         tables = []
-        for info in sorted(filesystem.get_file_info(pafs.FileSelector(d)), key=lambda i: i.path):
-            if info.type == pafs.FileType.File and not info.base_name.startswith(("_", ".")):
-                with filesystem.open_input_file(info.path) as f:
-                    tables.append(pq.read_table(f))
+        for info in listing.data_files(record_dir):
+            with filesystem.open_input_file(info.path) as f:
+                tables.append(pq.read_table(f))
         table = pa.concat_tables(tables)  # ArrowInvalid when there is no file
     except (OSError, pa.ArrowException) as exc:
         raise ValueError(kind.missing.format(segment=segment)) from exc
@@ -304,22 +304,16 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
     from pyspark.sql import Observation
 
     from etl_hiscox_spark.concurrency import run_overlapped
-    from etl_hiscox_spark.fastschema import fast_parquet_schema
     from etl_hiscox_spark.smalldf import local_rows_df
 
     h = head(spark, path)
     record = read_record(kind, h.paths[0])
     key = kind.key_col or id_col
     k = F.broadcast(keys.select(F.col(id_col).alias(key)).distinct())
-    # ONE schema for every segment (same layout by protocol): a pyarrow
-    # footer read where possible, else one Spark inference — per-call
-    # inference costs ~80-230 ms; a mismatch still fails loudly at scan
-    schema = fast_parquet_schema(kind.data(h.paths[0]))
-    segs = []
-    for p in h.paths:
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        segs.append(reader.parquet(kind.data(p)))
-        schema = schema or segs[0].schema
+    # each segment is rewritten on its own, so each is its own frame; all
+    # share the layout by protocol, so one footer schema pins every read
+    schema = listing.footer_schema(kind.data(h.paths[0]))
+    segs = [spark.read.schema(schema).parquet(kind.data(p)) for p in h.paths]
 
     def stage(rows: DataFrame, gen: str) -> None:
         kind.write_data(rows, kind.data(h.path(gen)))
@@ -370,7 +364,9 @@ def erase(spark, path: str, kind: SegmentKind, keys: DataFrame, id_col: str) -> 
     if not new_segments:
         new_segments = [genlog.new_generation_name()]
         placeholder = h.path(new_segments[0])
-        local_rows_df(spark, [], schema).write.mode("error").parquet(kind.data(placeholder))
+        local_rows_df(spark, [], segs[0].schema).write.mode("error").parquet(
+            kind.data(placeholder)
+        )
         write_record(kind, placeholder, record)
     first_new = next((s for s in new_segments if s not in h.segments), new_segments[0])
     _commit(spark, h, first_new, "erase", segments=new_segments)

@@ -585,12 +585,17 @@ def _read_ivf_segments(spark, paths: list[str]) -> DataFrame:
     single multi-root partitioned read ([CONFLICTING_DIRECTORY_STRUCTURES]
     — each ``gen-*`` segment is its own partition tree), so segments read
     separately and union — partition pruning on ``__cluster`` pushes into
-    EACH branch's scan, exactly as it does for the single-segment plan."""
-    out = spark.read.parquet(paths[0])
-    # later segments reuse the first segment's inferred schema — identical
-    # layout by protocol (appends validate against the geometry record),
-    # and per-call footer inference costs ~0.1-0.2 s (r18, guide §6); a
-    # mismatched segment fails loudly at scan time, never silently casts
+    EACH branch's scan, exactly as it does for the single-segment plan.
+
+    No read infers its schema (a Spark job per call, r18 guide §6): the
+    first segment is pinned to its footer schema, and partition discovery
+    appends ``__cluster`` as inference would; later segments pin that
+    frame's schema, ``__cluster`` included. Appends keep the columns equal
+    (:func:`append_to_ivf_index`), and a mismatched segment fails loudly
+    at scan time, never silently casts."""
+    from etl_hiscox_spark.sources.listing import footer_schema
+
+    out = spark.read.schema(footer_schema(paths[0])).parquet(paths[0])
     for p in paths[1:]:
         out = out.unionByName(spark.read.schema(out.schema).parquet(p))
     return out
@@ -699,11 +704,21 @@ def append_to_ivf_index(
             )
 
     def _stage_delta(h, target: str) -> None:
+        from etl_hiscox_spark.sources.listing import footer_schema
+
         C, quantized = segindex.read_record(_IVF, h.paths[0])
-        _stage_ivf_segment(
-            _assign_to_centroids(df, C, quantized, embedding_col),
-            target, C, quantized, "append_to_ivf_index",
-        )
+        assigned = _assign_to_centroids(df, C, quantized, embedding_col)
+        # every segment read pins one schema (_read_ivf_segments): a
+        # missing column would read back NULL, an extra one would vanish
+        have = set(footer_schema(h.paths).fieldNames()) - {"__cluster"}
+        got = set(assigned.columns) - {"__cluster"}
+        if got != have:
+            raise ValueError(
+                f"append_to_ivf_index: the batch's columns differ from the "
+                f"index's (missing {sorted(have - got)}, extra "
+                f"{sorted(got - have)}) — select the index's columns first"
+            )
+        _stage_ivf_segment(assigned, target, C, quantized, "append_to_ivf_index")
 
     segindex.append(spark, path, _stage_delta, _same_geometry, txn)
 
@@ -727,41 +742,35 @@ _IVF = segindex.SegmentKind(
 )
 
 
-def _cluster_dirs(segs: list[str]) -> list[tuple[int, str]]:
-    """``(cluster, dir)`` for every ``__cluster=`` partition of ``segs``:
-    one non-recursive LIST per segment, through ``pyarrow.fs``."""
-    from pyarrow import fs as pafs
+def _cluster_files(segs: list[str]) -> dict[int, list]:
+    """The data files of every ``__cluster=`` partition of ``segs``, by
+    cluster: one recursive LIST per segment (:func:`listing.data_files`).
+    Files outside a partition (a fully-erased placeholder) are not
+    counted."""
+    from etl_hiscox_spark.sources.listing import data_files
 
-    from etl_hiscox_spark.sources.genlog import _join
-    from etl_hiscox_spark.sources.listing import _resolve_fs
-
-    dirs = []
+    by_cluster: dict[int, list] = {}
     for seg in segs:
-        filesystem, seg_path = _resolve_fs(seg)
-        for info in filesystem.get_file_info(pafs.FileSelector(seg_path, recursive=False)):
-            if info.type == pafs.FileType.Directory and info.base_name.startswith("__cluster="):
-                dirs.append((int(info.base_name.split("=", 1)[1]), _join(seg, info.base_name)))
-    return dirs
+        for f in data_files(seg):
+            part = next((c for c in f.path.split("/") if c.startswith("__cluster=")), None)
+            if part is not None:
+                by_cluster.setdefault(int(part.split("=", 1)[1]), []).append(f)
+    return by_cluster
 
 
 def _merge_ivf_segments(spark, segs: list[str], target: str, target_file_mb: int) -> int | None:
     """Rewrite the union of ``segs`` into ``target`` as ~target-sized files
     per cluster; returns the file count, or None for a head with no
     ``__cluster=`` partitions (the fully-erased placeholder — scheduled
-    compaction landing on it must be a no-op, not an error). Sizing facts
-    sum each cluster's bytes across every segment and come from
-    distributed_dir_stats, so the driver's share stays bounded by
-    n_clusters."""
-    from etl_hiscox_spark.sources.listing import _dir_file_stats, distributed_dir_stats
+    compaction landing on it must be a no-op, not an error). Each
+    cluster's size sums its bytes across every segment."""
+    from etl_hiscox_spark.sources.listing import data_files
 
-    dirs = _cluster_dirs(segs)
-    if not dirs:
+    by_cluster = _cluster_files(segs)
+    if not by_cluster:
         return None
-    sizes: dict[int, int] = {}
-    for r in distributed_dir_stats(spark, dirs).collect():
-        sizes[int(r["key"])] = sizes.get(int(r["key"]), 0) + int(r["total_bytes"])
     step = target_file_mb * 1024 * 1024
-    n_files = {c: max(1, -(-b // step)) for c, b in sizes.items()}
+    n_files = {c: max(1, -(-sum(f.size for f in fs) // step)) for c, fs in by_cluster.items()}
     df = _read_ivf_segments(spark, segs)
     data_cols = [c for c in df.columns if c != "__cluster"]
     n_map = F.create_map(*[F.lit(x) for item in n_files.items() for x in item])
@@ -773,7 +782,7 @@ def _merge_ivf_segments(spark, segs: list[str], target: str, target_file_mb: int
         .option("partitionOverwriteMode", "static")
         .parquet(target)
     )
-    return _dir_file_stats(target)[0]
+    return len(data_files(target))
 
 
 def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
@@ -899,45 +908,27 @@ def ivf_fragmentation_stats(spark, path: str) -> DataFrame:
     a queryable fact instead of an operator's guess (the same
     make-the-maintenance-signal-visible rule as
     :func:`ivf_centroid_drift` for rebuilds). Listing goes through
-    ``pyarrow.fs``, as every index op's does, so local, HDFS and S3 roots
-    list alike. Driver-side cost: one non-recursive LIST per live
-    segment, n_clusters rows.
+    ``pyarrow.fs`` on the driver (:func:`listing.data_files`), as every
+    index op's does, so local, HDFS and S3 roots list alike: one recursive
+    LIST per live segment, n_clusters rows.
 
     Output: (cluster, n_files, total_bytes, avg_file_bytes) ordered by
     cluster. Rule of thumb documented on the compactor: compact when
     n_files per partition ≫ ceil(total_bytes / target_file_mb).
-
-    Scale shape (VERDICT r10): the driver issues one non-recursive LIST
-    per segment (n_clusters entries — the same bound as every other
-    centroid-table fact); the per-partition recursive walks, which grow
-    with total file count, run on EXECUTORS (``sources/listing.distributed_dir_stats``)
-    — at years-of-appends scale the old all-files driver walk was itself
-    a stall.
     """
     from etl_hiscox_spark.sources.genlog import live_index_paths
-    from etl_hiscox_spark.sources.listing import distributed_dir_stats
 
     paths = live_index_paths(spark, path)
     load_ivf_centroids(spark, paths[0], resolved=True)  # loud on an uncommitted index
-    dirs = _cluster_dirs(paths)  # every live segment (OCC append deltas, r13)
-    if not dirs:
+    by_cluster = _cluster_files(paths)  # every live segment (OCC append deltas, r13)
+    if not by_cluster:
         raise ValueError(f"no __cluster= partitions under {path!r} — not a written IVF index")
-    stats = distributed_dir_stats(spark, dirs)
-    return (
-        stats.groupBy(F.col("key").alias("cluster"))
-        .agg(
-            F.sum("n_files").alias("n_files"),
-            F.sum("total_bytes").alias("total_bytes"),
-        )
-        .select(
-            "cluster",
-            "n_files",
-            "total_bytes",
-            (F.col("total_bytes").cast("double") / F.col("n_files")).alias(
-                "avg_file_bytes"
-            ),
-        )
-        .orderBy("cluster")
+    rows = []
+    for c, fs in sorted(by_cluster.items()):
+        total = sum(f.size for f in fs)
+        rows.append((c, len(fs), total, total / len(fs)))
+    return local_rows_df(
+        spark, rows, "cluster int, n_files long, total_bytes long, avg_file_bytes double"
     )
 
 

@@ -149,7 +149,11 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = os.path.join(sf_dir, f"{name}.parquet")
     ddl = _pinned_schema(name, path)
-    reader = spark.read.schema(ddl) if ddl is not None else spark.read
+    # testdata is not engine-written: a nanosecond events file keeps
+    # Spark's inference (see _pinned_schema)
+    reader = spark.read
+    if ddl is not None:
+        reader = reader.schema(ddl)
     df = reader.parquet(path)
     # events.ts is TIMESTAMP(NANOS) in parquet; Spark reads it as long ns
     # (spark.sql.legacy.parquet.nanosAsLong). Truncate to µs — identical to

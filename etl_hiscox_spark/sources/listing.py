@@ -1,48 +1,44 @@
-"""Distributed filesystem listing for index/table observability.
+"""Driver-side facts about the parquet trees the engine writes.
 
-Fragmentation diagnostics need per-directory (file count, bytes) facts.
-A recursive driver-side ``FileSystem.listFiles`` walk is fine at
-n_clusters × daily files, but at 100 TB with years of appends the
-listing ITSELF becomes a driver stall (VERDICT r10) — the scale-safe
-form distributes the per-directory walks across executors and keeps the
-driver's share bounded by the number of directories (one non-recursive
-LIST), the same split Spark's own InMemoryFileIndex uses for parallel
-partition discovery.
+Index segments, their commit records and TxnTable data files are trees
+whose layout and schema engine code fixes. Every fact the engine needs
+about one of them is read on the DRIVER through one seam,
+:func:`_resolve_fs` (``pyarrow.fs``), so a local path, a ``file:`` URI
+and an object-store URI (``s3://``, or Hadoop's ``s3a://``/``s3n://``
+spelling of it) answer alike and no Spark job runs:
 
-Filesystem resolution (r11 review): a directory's OWNING filesystem
-decides where its walk may run. Remote schemes (s3://, hdfs://, ...)
-fan out to executors via ``pyarrow.fs`` (the ``from_uri`` registry —
-public PyArrow surface; hdfs requires libhdfs on the workers).
-Driver-LOCAL directories (``file:`` scheme, or scheme-less with
-``fs.defaultFS=file:``) are walked on the DRIVER in a bounded loop — a
-driver-local disk is not visible from remote executors, and it is small
-by definition, so the driver walk is both the only correct choice and a
-bounded cost. Scheme-less paths on a non-file defaultFS are qualified
-with the defaultFS before shipping, mirroring Hadoop's own resolution —
-the executor must never fall back to ITS local disk for them.
+- :func:`data_files` lists the data files of a tree under Spark's
+  hidden-file rule (:func:`is_hidden`): sizes and file counts for
+  compaction and the fragmentation stats;
+- :func:`footer_schema` reads the schema Spark's writer stored in a data
+  file's footer, so every read of an engine-written tree pins it instead
+  of paying Spark's per-call inference job;
+- :func:`partition_high_watermark` reads a Hive-layout table's maximum
+  partition value from its directory names.
+
+:func:`_meta_is_local` tells the two commit-log guards whether a
+scheme-less root is on the driver's own disk.
 """
 
 from __future__ import annotations
 
+import json
 import re
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def _meta_is_local(spark, path: str) -> bool:
     """True only when the path resolves to the DRIVER's local filesystem.
 
-    An explicit remote scheme (hdfs://, s3a://, ...) is never local; a
-    scheme-less path is local only if Spark's fs.defaultFS is file: —
-    on a cluster with defaultFS=hdfs://, '/warehouse/idx' goes to HDFS
-    via Spark while a naive driver-side shortcut would write to the
-    driver's local disk, splitting the store (an index meta, a commit
-    log) from the data Spark writes.
+    ``pyarrow.fs`` treats a scheme-less path as local while Spark resolves
+    it against ``fs.defaultFS``. The two commit-log guards ask this before
+    they trust a scheme-less root: ``versionlog.check_root`` refuses one
+    on a non-file defaultFS (a log on the driver's disk beside data on the
+    cluster FS is a split store), and ``commitio.commit_if_absent`` takes
+    its ``os.link`` create-if-absent path only for a local target.
 
-    Any ``file:`` prefix counts as local (ADVICE r11): Hadoop's
-    ``Path.toString()`` renders local URIs as single-slash ``file:/x``,
-    which has no ``://`` — without this the fragmentation walk would
-    mis-qualify the dir with a non-file defaultFS."""
+    An explicit remote scheme (hdfs://, s3a://, ...) is never local, and
+    any ``file:`` prefix is: Hadoop's ``Path.toString()`` renders local
+    URIs as single-slash ``file:/x``, which has no ``://``."""
     if path.startswith("file:"):
         return True
     if "://" in path:
@@ -54,8 +50,9 @@ def _meta_is_local(spark, path: str) -> bool:
 
 
 def _resolve_fs(dir_uri: str):
-    """``(filesystem, root_path)`` for a URI or plain path (see
-    :func:`_dir_file_stats` for the ``file:`` normalization rationale)."""
+    """``(filesystem, root_path)`` for a URI or plain path. Hadoop renders
+    local URIs as ``file:/x`` (one slash), which PyArrow's ``from_uri``
+    rejects, so every ``file:`` URI becomes a plain LocalFileSystem path."""
     from pyarrow import fs as pafs
 
     if dir_uri.startswith("file:") or "://" not in dir_uri:
@@ -131,83 +128,75 @@ def partition_high_watermark(path: str, partition_col: str, dtype):
             # hidden/marker files (.crc, _committer leftovers) are ignored
             # by Spark's reader, so they must not make a partition count
             # as data-bearing here either
-            and not c.base_name.startswith(("_", "."))
+            and not is_hidden(c.base_name)
             for c in children
         ):
             values.append(_parse_partition_value(raw, dtype))
     return True, (max(values) if values else None)
 
 
-def _dir_file_stats(dir_uri: str, suffix: str = ".parquet") -> tuple[int, int]:
-    """(n_files, total_bytes) of one directory tree via ``pyarrow.fs``.
+def is_hidden(name: str) -> bool:
+    """Spark's hidden-file rule for one path component: ``.``-prefixed
+    names and ``_``-prefixed names without ``=`` (``_SUCCESS``, ``.crc``
+    checksums, an IVF segment's ``_centroids`` record) are not data; a
+    ``__cluster=3`` partition directory is."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
-    Hadoop renders local URIs as ``file:/x`` (one slash); PyArrow's
-    ``from_uri`` rejects that form, so file-scheme URIs are normalized to
-    plain paths on the LocalFileSystem."""
+
+def data_files(tree: str) -> list:
+    """The data files of the parquet tree at ``tree`` (a directory, or one
+    file) as ``pyarrow.fs.FileInfo``, sorted by path; ``[]`` when nothing
+    is there. A directory costs one recursive LIST, and a file below it
+    counts only if no path component under ``tree`` is hidden
+    (:func:`is_hidden`), as in Spark's reader."""
     from pyarrow import fs as pafs
 
-    filesystem, root = _resolve_fs(dir_uri)
-    infos = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
-    files = [
-        i for i in infos if i.type == pafs.FileType.File and i.path.endswith(suffix)
-    ]
-    return len(files), sum(i.size for i in files)
-
-
-def distributed_dir_stats(
-    spark: SparkSession, dirs: list[tuple[int, str]]
-) -> DataFrame:
-    """(key, dir_uri) pairs → (key, n_files, total_bytes).
-
-    Remote directories are walked on EXECUTORS (one-dir-per-row
-    mapInPandas fan-out); driver-local directories are walked on the
-    driver (see the module docstring for why that split is forced). The
-    driver never materializes more than the directory list plus one
-    (n_files, bytes) pair per directory.
-    """
-    import pandas as pd
-
-    schema = "key int, n_files long, total_bytes long"
-    local_rows: list[tuple[int, int, int]] = []
-    remote: list[tuple[int, str]] = []
-    for k, d in dirs:
-        if _meta_is_local(spark, d):
-            local_rows.append((int(k),) + _dir_file_stats(d))
-        elif "://" not in d:
-            # scheme-less on a non-file defaultFS: qualify before shipping.
-            # Only absolute paths qualify safely — 'hdfs://nn' + 'rel/x'
-            # would silently produce the malformed 'hdfs://nnrel/x'
-            # (ADVICE r11); a relative path's meaning depends on a working
-            # directory this walk does not have, so reject it loudly.
-            if not d.startswith("/"):
-                raise ValueError(
-                    f"distributed_dir_stats: relative path {d!r} cannot be "
-                    "qualified against fs.defaultFS — pass an absolute path "
-                    "or a full URI"
-                )
-            default_fs = (
-                spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
-            )
-            remote.append((int(k), default_fs.rstrip("/") + d))
-        else:
-            remote.append((int(k), d))
-    from etl_hiscox_spark.smalldf import local_rows_df
-
-    local_df = (
-        local_rows_df(spark, local_rows, schema) if local_rows else None
+    filesystem, root = _resolve_fs(tree)
+    root = root.rstrip("/")
+    try:
+        infos = filesystem.get_file_info(
+            pafs.FileSelector(root, recursive=True, allow_not_found=True)
+        )
+    except NotADirectoryError:
+        infos = []
+    if not infos:  # a missing or empty tree, or one file named directly
+        info = filesystem.get_file_info(root)
+        return [info] if info.type == pafs.FileType.File else []
+    return sorted(
+        (
+            i
+            for i in infos
+            if i.type == pafs.FileType.File
+            and not any(is_hidden(n) for n in i.path[len(root) + 1:].split("/"))
+        ),
+        key=lambda i: i.path,
     )
-    if not remote:
-        return local_df if local_df is not None else local_rows_df(spark, [], schema)
 
-    def _walk(batches):
-        for pdf in batches:
-            rows = [
-                (int(k),) + _dir_file_stats(d)
-                for k, d in zip(pdf["key"], pdf["dir"])
-            ]
-            yield pd.DataFrame(rows, columns=["key", "n_files", "total_bytes"])
 
-    ddf = local_rows_df(spark, remote, "key int, dir string")
-    n = max(1, min(len(remote), spark.sparkContext.defaultParallelism))
-    remote_df = ddf.repartition(n).mapInPandas(_walk, schema)
-    return remote_df if local_df is None else local_df.unionByName(remote_df)
+# footer key under which Spark's parquet writer stores the row schema JSON
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(trees: str | list[str]):
+    """The Spark ``StructType`` stored in the footer of the first data file
+    of ``trees`` (taken in order). Spark's own inference reads the same
+    key first, so a read pinned to it sees the schema inference would,
+    minus the inference job. Raises ``ValueError`` when the trees hold no
+    data file or that file carries no Spark schema: the engine pins only
+    trees Spark wrote."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    for tree in [trees] if isinstance(trees, str) else trees:
+        files = data_files(tree)
+        if files:
+            filesystem, _ = _resolve_fs(tree)
+            with filesystem.open_input_file(files[0].path) as f:
+                meta = pq.read_schema(f).metadata or {}
+            if _SPARK_ROW_METADATA not in meta:
+                raise ValueError(
+                    f"{files[0].path!r} has no Spark schema in its footer "
+                    f"({_SPARK_ROW_METADATA.decode()})"
+                )
+            return T.StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+    raise ValueError(f"no data file under {trees!r}")

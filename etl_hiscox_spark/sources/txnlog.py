@@ -779,7 +779,7 @@ class TxnTable:
 
         import pyspark.sql.functions as F
 
-        from etl_hiscox_spark.fastschema import fast_parquet_schema
+        from etl_hiscox_spark.sources.listing import footer_schema
 
         versions = self._versions()
         # tolerant reads throughout (r15): a version a concurrent
@@ -875,13 +875,10 @@ class TxnTable:
             # keys natively on the frame path). Each file is read with its
             # OWN schema (never the merged one) so a rewrite of an old
             # narrow file cannot silently widen it. That schema is read
-            # from the file's footer on the driver where possible, which
-            # saves Spark's one-task inference job per hit file.
+            # from the file's footer on the driver, which saves Spark's
+            # one-task inference job per hit file.
             file_path = "/".join([self.path.rstrip("/"), rel])
-            own = fast_parquet_schema(file_path)
-            file_df = (self.spark.read.schema(own) if own is not None else self.spark.read).parquet(
-                file_path
-            )
+            file_df = self.spark.read.schema(footer_schema(file_path)).parquet(file_path)
             if keys_is_frame:
                 kept = file_df.join(F.broadcast(kdf), key_col, "left_anti")
             else:

@@ -291,50 +291,44 @@ def compact_small_files(
     tmp = path.rstrip("/") + "__compact"
     # mode=overwrite: a leftover tmp from a crashed earlier run is debris
     # under THIS commit protocol (the swap never ran, path is intact)
-    n = compact_parquet_to_dir(spark, path, tmp, target_file_mb, sort_by, mode="overwrite")
+    n = compact_parquet_to_dir(
+        spark.read.parquet(path), [path], tmp, target_file_mb, sort_by, mode="overwrite"
+    )
     swap_and_refresh(spark, tmp, path)
     return n
 
 
 def compact_parquet_to_dir(
-    spark: SparkSession,
-    src: str | list[str],
+    df: DataFrame,
+    srcs: list[str],
     dst: str,
     target_file_mb: int = 256,
     sort_by: tuple[str, ...] = (),
     mode: str = "error",
 ) -> int:
     """The rewrite half of :func:`compact_small_files`, decoupled from the
-    local-only tmp+swap commit: read ``src`` (one directory, or a list —
-    the OCC-append segment merge reads every live segment, r13), rewrite
-    into ``dst`` as ~``target_file_mb``-sized files (optionally
+    local-only tmp+swap commit: rewrite ``df``, the caller's read of the
+    trees ``srcs`` (the OCC-append segment merge reads every live segment,
+    r13), into ``dst`` as ~``target_file_mb``-sized files (optionally
     range-partitioned AND sorted on ``sort_by`` so each key clusters into
-    one file-contiguous run), return the output file count. Sizing and
-    counting go through ``pyarrow.fs`` (:func:`listing._dir_file_stats`),
-    so the rewrite works on any filesystem — the generation-pointer index
-    maintenance commits the SAME rewrite with a pointer flip instead of a
-    rename (r12)."""
-    from etl_hiscox_spark.sources.listing import _dir_file_stats
+    one file-contiguous run), return the output file count. The caller
+    reads, because the caller knows the trees' provenance: an index
+    merge pins its own layout's schema, a plain directory is inferred.
+    Sizing and counting go through ``pyarrow.fs``
+    (:func:`listing.data_files`), so the rewrite works on any filesystem —
+    the generation-pointer index maintenance commits the SAME rewrite with
+    a pointer flip instead of a rename (r12)."""
+    from etl_hiscox_spark.sources.listing import data_files
 
-    srcs = [src] if isinstance(src, str) else list(src)
-    total_bytes = sum(_dir_file_stats(s)[1] for s in srcs)
+    total_bytes = sum(f.size for s in srcs for f in data_files(s))
     n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
-    # engine-written simple layouts (bucket tables) resolve their schema
-    # from one local footer instead of a per-call Spark inference (r18,
-    # guide §6); None — remote, empty, or non-whitelisted types — falls
-    # back to inference unchanged
-    from etl_hiscox_spark.fastschema import fast_parquet_schema
-
-    fast = fast_parquet_schema(srcs[0])
-    reader = spark.read.schema(fast) if fast is not None else spark.read
-    df = reader.parquet(*srcs)
     if sort_by:
         cols = [F.col(c) for c in sort_by]
         out = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
     else:
         out = df.repartition(n_files)
     out.write.mode(mode).parquet(dst)
-    return _dir_file_stats(dst)[0]
+    return len(data_files(dst))
 
 
 def erase_keys(

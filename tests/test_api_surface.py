@@ -351,3 +351,66 @@ def test_index_layout_is_known_in_one_place():
         if names(node) & {"_meta_is_local", "_jvm"}
     ]
     assert forks == []
+
+
+def test_engine_reads_of_engine_written_trees_pin_their_schema():
+    """An index segment or a TxnTable data file is a tree the engine wrote
+    itself, so its read never asks Spark to infer the schema (a job per
+    call): in the index and txn modules every ``read ... .parquet(`` chain
+    carries ``.schema(``. One module reads footer facts: only
+    ``sources/listing.py`` names Spark's footer schema key, and every
+    engine import names a module that exists, so no import of a deleted
+    footer helper survives."""
+    import ast
+    import importlib.util
+    from pathlib import Path
+
+    import etl_hiscox_spark as pkg
+
+    root = Path(pkg.__file__).parent
+
+    def chain(node):
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                node = node.func
+        return names
+
+    unpinned = []
+    for rel in (
+        "operators/dedup.py", "operators/similarity.py",
+        "operators/segindex.py", "sources/txnlog.py",
+    ):
+        for node in ast.walk(ast.parse((root / rel).read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+            ):
+                names = chain(node.func.value)
+                if "read" in names and "schema" not in names:
+                    unpinned.append(f"{rel}:{node.lineno}")
+    assert unpinned == []
+
+    footer_key = "org.apache.spark.sql.parquet.row.metadata"
+    sources = {p.relative_to(root).as_posix(): p.read_text() for p in sorted(root.rglob("*.py"))}
+    assert [rel for rel, text in sources.items() if footer_key in text] == ["sources/listing.py"]
+
+    missing = []
+    for rel, text in sources.items():
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                mods = [node.module]
+            else:
+                continue
+            missing += [
+                f"{rel}:{node.lineno} {m}"
+                for m in mods
+                if m.startswith("etl_hiscox_spark") and importlib.util.find_spec(m) is None
+            ]
+    assert missing == []

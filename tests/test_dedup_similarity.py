@@ -2153,3 +2153,122 @@ def test_staged_build_observed_gate_leaves_centroidless_stage(spark, tmp_path):
     for entry in _os.listdir(path) if _os.path.isdir(path) else []:
         if entry.startswith("gen-"):
             assert not _os.path.exists(_os.path.join(path, entry, "_centroids"))
+
+
+def _jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_live_rows_schema_starts_no_spark_job(spark, tmp_path):
+    """Every read of an index segment pins the schema stored in its footer,
+    so resolving ``live_rows(...).schema`` starts no Spark job, for one or
+    two LSH segments, two IVF segments, and an IVF head made of the erase
+    placeholder plus an append. The pinned schema is the one Spark's
+    inference gives, ``__cluster: int`` included."""
+    from pyspark.sql import types as T
+
+    from etl_hiscox_spark.operators.dedup import write_minhash_index
+    from etl_hiscox_spark.operators.similarity import (
+        append_to_ivf_index,
+        erase_from_ivf_index,
+        write_ivf_index,
+    )
+    from etl_hiscox_spark.sources.genlog import live_index_paths
+
+    def pinned(root, kind):
+        schema, jobs = _jobs_started(spark, lambda: live_rows(spark, root, kind).schema)
+        assert jobs == 0, root
+        return schema
+
+    docs = _docs(spark)
+    lsh = str(tmp_path / "lsh")
+    write_minhash_index(docs.filter("doc_id < 3"), "text", "doc_id", lsh)
+    inferred = spark.read.parquet(_LSH.data(live_index_paths(spark, lsh)[0])).schema
+    assert pinned(lsh, _LSH) == inferred
+    write_minhash_index(docs.filter("doc_id >= 3"), "text", "doc_id", lsh, mode="append")
+    assert len(live_index_paths(spark, lsh)) == 2
+    assert pinned(lsh, _LSH) == inferred
+
+    df, _ = _emb_df(spark, n=40, dim=4)
+    batch = df.filter("vec_id < 10").selectExpr("vec_id + 100 AS vec_id", "embedding")
+    ivf = str(tmp_path / "ivf")
+    write_ivf_index(df, ivf, "embedding", "vec_id", n_clusters=3, max_iter=2)
+    append_to_ivf_index(batch, ivf, "embedding", "vec_id")
+    segs = live_index_paths(spark, ivf)
+    assert len(segs) == 2
+    inferred = spark.read.parquet(segs[0]).schema
+    assert inferred["__cluster"].dataType == T.IntegerType()
+    assert pinned(ivf, _IVF) == inferred
+
+    erase_from_ivf_index(spark, ivf, live_rows(spark, ivf, _IVF).select("vec_id"), "vec_id")
+    append_to_ivf_index(batch, ivf, "embedding", "vec_id")
+    segs = live_index_paths(spark, ivf)
+    assert len(segs) == 2  # [placeholder, append]
+    inferred = spark.read.parquet(segs[0]).schema
+    assert inferred["__cluster"].dataType == T.IntegerType()
+    assert pinned(ivf, _IVF) == inferred
+    assert live_rows(spark, ivf, _IVF).count() == 10
+
+
+def test_compact_ivf_sizing_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """compact_ivf_index sizes each cluster from the driver's listing: no
+    Spark job starts before the merge reads the segments."""
+    from etl_hiscox_spark.operators import similarity
+
+    df, _ = _emb_df(spark, n=40, dim=4)
+    ivf = str(tmp_path / "ivf")
+    similarity.write_ivf_index(df, ivf, "embedding", "vec_id", n_clusters=3, max_iter=2)
+    similarity.append_to_ivf_index(
+        df.filter("vec_id < 10").selectExpr("vec_id + 100 AS vec_id", "embedding"),
+        ivf, "embedding", "vec_id",
+    )
+    tracker = spark.sparkContext.statusTracker()
+    seen = []
+    real = similarity._read_ivf_segments
+
+    def read_segments(spark_, paths):
+        group = spark_.sparkContext.getLocalProperty("spark.jobGroup.id")
+        seen.append(len(tracker.getJobIdsForGroup(group)))
+        return real(spark_, paths)
+
+    monkeypatch.setattr(similarity, "_read_ivf_segments", read_segments)
+    n, jobs = _jobs_started(spark, lambda: similarity.compact_ivf_index(spark, ivf))
+    assert n >= 1 and jobs >= 1  # the rewrite itself runs
+    assert seen == [0]
+
+
+def test_ivf_append_refuses_a_batch_whose_columns_differ(spark, tmp_path):
+    """Every IVF segment is read pinned to one schema, so an append whose
+    columns differ from the index's is refused before staging: a missing
+    column would read back NULL, an extra one would vanish."""
+    from etl_hiscox_spark.operators.similarity import append_to_ivf_index, write_ivf_index
+
+    df, _ = _emb_df(spark, n=30, dim=4)
+    titled = df.withColumn("title", F.concat(F.lit("t"), F.col("vec_id").cast("string")))
+    path = str(tmp_path / "ivf")
+    write_ivf_index(titled, path, "embedding", "vec_id", n_clusters=2, max_iter=2)
+    batch = df.filter("vec_id < 5").selectExpr("vec_id + 100 AS vec_id", "embedding")
+    with pytest.raises(ValueError, match=r"missing \['title'\], extra \[\]"):
+        append_to_ivf_index(batch, path, "embedding", "vec_id")
+
+    plain = str(tmp_path / "plain")
+    write_ivf_index(df, plain, "embedding", "vec_id", n_clusters=2, max_iter=2)
+    with pytest.raises(ValueError, match=r"missing \[\], extra \['title'\]"):
+        append_to_ivf_index(
+            batch.withColumn("title", F.lit("x")), plain, "embedding", "vec_id"
+        )
+    assert live_rows(spark, path, _IVF).count() == 30  # nothing landed
+    assert live_rows(spark, plain, _IVF).count() == 30
+    append_to_ivf_index(batch.withColumn("title", F.lit("x")), path, "embedding", "vec_id")
+    assert live_rows(spark, path, _IVF).filter("title IS NULL").count() == 0

@@ -496,16 +496,3 @@ def test_meta_is_local_accepts_hadoop_single_slash_file_uri(spark):
     assert _meta_is_local(spark, "file:///tmp/idx")
     assert not _meta_is_local(spark, "s3a://bucket/idx")
     assert not _meta_is_local(spark, "hdfs://nn:8020/warehouse/idx")
-
-
-def test_distributed_dir_stats_rejects_relative_schemeless_paths(spark, monkeypatch):
-    """ADVICE r11: a relative scheme-less path on a non-file defaultFS
-    would qualify to a malformed URI ('hdfs://nnrel/x') — reject loudly."""
-    import pytest
-
-    from etl_hiscox_spark.sources import listing
-    from etl_hiscox_spark.sources.listing import distributed_dir_stats
-
-    monkeypatch.setattr(listing, "_meta_is_local", lambda spark, d: False)
-    with pytest.raises(ValueError, match="relative path"):
-        distributed_dir_stats(spark, [(0, "rel/dir")])

@@ -783,19 +783,20 @@ def test_txn_compact_carries_exactly_once_watermarks(spark, tmp_path):
     assert t.read().count() == 20
 
 
-def test_fast_parquet_schema_reads_the_spark_footer_schema(spark, tmp_path):
+def test_footer_schema_reads_the_spark_footer_schema(spark, tmp_path):
     """A Spark-written file's footer schema JSON is returned as is, so
     timestamp, decimal and nested columns resolve on the driver exactly
-    as Spark's inference resolves them; a file without that key and with
-    a timestamp column still leaves the decision to inference."""
+    as Spark's inference resolves them; a file without that key, or a
+    tree without a data file, is refused."""
     import glob
     from datetime import datetime
     from decimal import Decimal
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pytest
 
-    from etl_hiscox_spark.fastschema import fast_parquet_schema
+    from etl_hiscox_spark.sources.listing import footer_schema
 
     df = spark.createDataFrame(
         [(1, datetime(2024, 1, 2), Decimal("1.25"), [1.0, 2.0], {"a": 1})],
@@ -803,12 +804,46 @@ def test_fast_parquet_schema_reads_the_spark_footer_schema(spark, tmp_path):
     )
     df.write.parquet(str(tmp_path / "spark"))
     part = sorted(glob.glob(str(tmp_path / "spark" / "*.parquet")))[0]
-    assert fast_parquet_schema(part) == spark.read.parquet(part).schema
-    assert fast_parquet_schema(str(tmp_path / "spark")) == spark.read.parquet(part).schema
+    assert footer_schema(part) == spark.read.parquet(part).schema
+    assert footer_schema(str(tmp_path / "spark")) == spark.read.parquet(part).schema
+    assert footer_schema("file://" + str(tmp_path / "spark")) == spark.read.parquet(part).schema
 
     bare = str(tmp_path / "bare.parquet")
     pq.write_table(pa.table({"id": [1], "ts": pa.array([0], pa.timestamp("us"))}), bare)
-    assert fast_parquet_schema(bare) is None
+    with pytest.raises(ValueError, match="no Spark schema"):
+        footer_schema(bare)
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "empty" / "_SUCCESS").write_text("")
+    with pytest.raises(ValueError, match="no data file"):
+        footer_schema([str(tmp_path / "empty"), str(tmp_path / "missing")])
+
+
+def test_footer_schema_reads_an_object_store_tree_through_the_listing_seam(
+    spark, tmp_path, monkeypatch
+):
+    """An ``s3://`` tree resolves through ``listing._resolve_fs`` like any
+    other: the lister skips hidden names at every depth but keeps
+    ``=`` partition directories, and the footer is read from the first
+    data file it lists."""
+    from pyarrow import fs as pafs
+
+    from etl_hiscox_spark.sources import listing
+
+    spark.range(3).selectExpr("id", "id % 2 AS __cluster").coalesce(1).write.partitionBy(
+        "__cluster"
+    ).parquet(str(tmp_path / "bucket" / "seg"))
+    (tmp_path / "bucket" / "seg" / "_centroids").mkdir()
+    (tmp_path / "bucket" / "seg" / "_centroids" / "centroids.parquet").write_bytes(b"x")
+    store = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
+    real = listing._resolve_fs
+    monkeypatch.setattr(
+        listing, "_resolve_fs",
+        lambda uri: (store, uri.split("://", 1)[1]) if uri.startswith("s3://") else real(uri),
+    )
+    files = listing.data_files("s3://bucket/seg")
+    assert [f.path.split("/")[-2] for f in files] == ["__cluster=0", "__cluster=1"]
+    assert all(f.path.endswith(".parquet") for f in files)
+    assert listing.footer_schema("s3://bucket/seg").fieldNames() == ["id"]
 
 
 def test_txn_erase_reads_hit_files_without_schema_inference(spark, tmp_path):
