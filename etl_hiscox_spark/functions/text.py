@@ -11,7 +11,6 @@ they stay inside whole-stage codegen at 100 TB — no Python in the hot path.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves PEP-563 string hints in module globals
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -29,10 +28,6 @@ def normalize_text(c: Column | str) -> Column:
 def tokens(c: Column | str) -> Column:
     """Whitespace tokens of normalized text -> array<string>."""
     return F.split(normalize_text(c), " ")
-
-
-def word_count(c: Column | str) -> Column:
-    return F.size(tokens(c))
 
 
 BPE_SPLIT_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
@@ -89,30 +84,6 @@ def detect_language(c: Column | str, default: str = "und") -> Column:
 # ---------------------------------------------------------------------------
 # Quality scoring (heuristic features used by pretraining filters)
 # ---------------------------------------------------------------------------
-
-
-def quality_features(col_name: str) -> list[Column]:
-    """Length / punctuation-ratio / mean-word-length / stopword-ratio
-    features, each expression-only. Combine downstream into a score."""
-    c = F.col(col_name)
-    n_chars = F.length(c)
-    # word-length math must use the NORMALIZED length — raw length counts
-    # leading/repeated whitespace as word characters and inflates it.
-    n_chars_norm = F.length(normalize_text(c))
-    toks = tokens(c)
-    n_words = F.size(toks)
-    n_punct = n_chars - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    en_stop = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
-    n_stop = F.size(F.array_intersect(toks, en_stop))
-    return [
-        n_chars.alias("n_chars"),
-        n_words.alias("n_words"),
-        (n_punct.cast("double") / F.greatest(n_chars, F.lit(1))).alias("punct_ratio"),
-        (
-            (n_chars_norm - n_words + 1).cast("double") / F.greatest(n_words, F.lit(1))
-        ).alias("mean_word_len"),
-        (n_stop.cast("double") / F.greatest(n_words, F.lit(1))).alias("stopword_ratio"),
-    ]
 
 
 def quality_score(col_name: str) -> Column:
@@ -220,45 +191,6 @@ def shingles(c: Column | str, k: int = 3) -> Column:
             F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))),
         ).otherwise(F.array(F.concat_ws(" ", toks)))
     )
-
-
-def normalize_unicode_udf(form: str = "NFKC", strip_controls: bool = True):
-    """Arrow-vectorized Unicode normalizer: ``unicodedata.normalize(form)``
-    plus optional C0/C1 control-char and zero-width stripping.
-
-    The canonicalization step BEFORE :func:`normalize_text` in multilingual
-    corpora: full-width compatibility forms (ｈｅｌｌｏ), ligatures (ﬁ) and
-    zero-width joiners otherwise defeat exact/near dedup — two visually
-    identical documents hash apart. Deliberately NOT folded into
-    ``normalize_text`` (every declared oracle mirrors that expression
-    byte-for-byte in SQL; NFKC has no SQL twin) — apply it as an explicit
-    opt-in stage: ``df.withColumn("text", normalize_unicode_udf()("text"))``.
-
-    Spark has no Unicode-normalization expression, so this is the one
-    justified scalar pandas_udf in the text tier (Arrow batches, a C
-    library call per string — no per-row Python object churn beyond the
-    call itself).
-    """
-    import unicodedata
-
-    if form not in ("NFC", "NFKC", "NFD", "NFKD"):
-        raise ValueError(f"form must be NFC/NFKC/NFD/NFKD, got {form!r}")
-    zw = dict.fromkeys([0x200B, 0x200C, 0x200D, 0xFEFF])
-
-    @F.pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return None
-            t = unicodedata.normalize(form, t)
-            if strip_controls:
-                t = t.translate(zw)
-                t = "".join(ch for ch in t if unicodedata.category(ch) != "Cc" or ch in "\n\t")
-            return t
-
-        return s.map(one)
-
-    return _norm
 
 
 def url_host(c: Column | str) -> Column:

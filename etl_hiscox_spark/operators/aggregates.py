@@ -8,7 +8,7 @@ aggregation, one shuffle).
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,11 +33,6 @@ def money_avg(col: Column | str, alias: str) -> Column:
     """Deterministic average: exact decimal sum / count, double division."""
     c = F.col(col) if isinstance(col, str) else col
     return (F.sum(exact_money(c)).cast("double") / F.count(c)).alias(alias)
-
-
-def conditional_count(cond: Column, alias: str) -> Column:
-    """A7: count of rows satisfying a predicate (valid_premiums etc.)."""
-    return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(alias)
 
 
 def completeness_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
@@ -67,29 +62,4 @@ def duplicate_stats(df: DataFrame, keys: Sequence[str]) -> DataFrame:
         distinct.alias("distinct_count"),
         (total - distinct).alias("duplicate_count"),
         F.try_divide((total - distinct).cast("double"), total).alias("duplicate_ratio"),
-    )
-
-
-def grouped_summary(
-    df: DataFrame,
-    keys: Sequence[str],
-    metrics: Mapping[str, Column],
-) -> DataFrame:
-    """A6: per-group metric block (the gold ``claims_summary`` shape,
-    ``dbt/dbt_project.yml:97``). One shuffle on ``keys``; partial aggregation
-    map-side keeps shuffle volume at |groups|, not |rows|.
-    """
-    return df.groupBy(*[F.col(k) for k in keys]).agg(
-        *[c.alias(a) for a, c in metrics.items()]
-    )
-
-
-def rollup_summary(
-    df: DataFrame,
-    keys: Sequence[str],
-    metrics: Mapping[str, Column],
-) -> DataFrame:
-    """A10: multi-granularity aggregate (group, subtotal, grand total)."""
-    return df.rollup(*[F.col(k) for k in keys]).agg(
-        *[c.alias(a) for a, c in metrics.items()]
     )

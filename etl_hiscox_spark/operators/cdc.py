@@ -80,27 +80,3 @@ def snapshot_diff(
         )
         .filter(F.col("op").isNotNull())
     )
-
-
-def schema_diff(old: DataFrame, new: DataFrame) -> list[dict]:
-    """Column-level schema drift between two snapshots: a driver-side list
-    of {column, change, old_type, new_type} with change ∈ added | removed |
-    type_changed. Metadata-only (no data scan) — the pre-flight check an
-    ingestion run does before deciding whether an append needs
-    mergeSchema/widening (``sources/writers.append_with_schema_merge``,
-    ``sources/txnlog``'s widening rules).
-    """
-    old_types = {f.name: f.dataType.simpleString() for f in old.schema.fields}
-    new_types = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    out: list[dict] = []
-    for name in sorted(set(old_types) | set(new_types)):
-        o, n = old_types.get(name), new_types.get(name)
-        if o is None:
-            out.append({"column": name, "change": "added", "old_type": None, "new_type": n})
-        elif n is None:
-            out.append({"column": name, "change": "removed", "old_type": o, "new_type": None})
-        elif o != n:
-            out.append(
-                {"column": name, "change": "type_changed", "old_type": o, "new_type": n}
-            )
-    return out

@@ -197,17 +197,3 @@ def semantic_contamination_report(
     return scored.filter(F.col("max_sim") >= threshold).select(
         id_col, "nearest_eval_id", F.round("max_sim", 6).alias("max_sim")
     )
-
-
-def semantic_decontaminate(
-    train: DataFrame,
-    test: DataFrame,
-    embedding_col: str,
-    id_col: str,
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Training rows minus everything semantically too close to the eval set."""
-    bad = semantic_contamination_report(
-        train, test, embedding_col, id_col, threshold
-    ).select(id_col)
-    return train.join(bad, on=id_col, how="left_anti")

@@ -603,39 +603,6 @@ def near_dedup_clusters(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(text_col: Column | str) -> Column:
-    """64-bit SimHash of the token multiset (expression-only bit voting).
-
-    For each bit position b: sum over tokens of +1/-1 by token-hash bit b;
-    bit set iff the vote is positive. Implemented with
-    transform + aggregate over the token array, then a bit-OR fold.
-
-    NOTE: array lambdas run interpreted in Spark 4 — this form is for
-    single-column convenience (small frames, tests); bulk scans use
-    :func:`simhash_table`, whose explode + 64 partial-sum aggregates stay
-    in whole-stage codegen (same policy as ``similarity.dot``).
-    """
-    toks = F.split(normalize_text(text_col), " ")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    def _voter(mask: int):
-        return lambda acc, h: acc + F.when(
-            h.bitwiseAND(F.lit(mask).cast("long")) != 0, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for b in range(64):
-        # Signed-64 bit mask as a Python literal (bit 63 is the sign bit).
-        mask = (1 << b) if b < 63 else -(1 << 63)
-        votes = F.aggregate(hashes, F.lit(0), _voter(mask))
-        bit_cols.append(
-            F.when(votes > 0, F.lit(mask).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
-
-
 def simhash_blocks(sim_col: Column, n_blocks: int = 4) -> list[Column]:
     """Split a 64-bit simhash into 16-bit blocks for pigeonhole bucketing:
     any pair within Hamming distance n_blocks-1 shares >=1 identical block."""
@@ -658,9 +625,10 @@ def simhash_table(
 ) -> DataFrame:
     """(doc, sim) SimHash table via explode + 64 conditional-sum aggregates.
 
-    Same semantics as :func:`simhash64` (multiset bit voting over token
-    hashes) but fully codegen'd: one projection per token, one groupBy(doc)
-    with 64 partial sums — map-side combine keeps shuffle at |docs| rows.
+    64-bit SimHash of the token multiset: bit b is set iff the +1/-1 votes
+    of the token hashes' bit b sum positive. Fully codegen'd: one
+    projection per token, one groupBy(doc) with 64 partial sums — map-side
+    combine keeps shuffle at |docs| rows.
 
     ``portable=False`` (default): token hashes are xxhash64 — the fast
     JVM-native path. ``portable=True``: token bit b comes from bit

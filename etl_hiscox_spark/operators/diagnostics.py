@@ -4,9 +4,9 @@ At the 100 TB design point the difference between a balanced shuffle and a
 straggler is one heavy key (VERDICT r3-r6 arc: broadcast policy, AQE
 skew-join, salting). The profile here is the decision input: if the top
 key's share of rows is ~1/parallelism the hash shuffle balances; a key
-with share >> 1/parallelism is the salting / AQE-skew candidate, and a
+with share >> 1/parallelism is the AQE skew-join candidate, and a
 handful of keys owning most rows says "broadcast the other side" (when
-bounded) or "salt exactly these keys" (``operators.joins.salted_join``).
+bounded).
 
 (Reference repo has no equivalent — it never joins at scale; EXT tier.)
 

@@ -31,7 +31,7 @@ from etl_hiscox_spark.functions.text import tokens
 
 def hashed_bucket(token: Column, n_buckets: int) -> Column:
     """Engine-portable token bucket: first 8 sha256 hex chars -> int mod
-    n_buckets (the split_bucket pattern; DuckDB twin is
+    n_buckets (DuckDB twin is
     ``CAST(('0x' || substr(sha256(w), 1, 8)) AS BIGINT) % n``)."""
     return F.conv(F.substring(F.sha2(token, 256), 1, 8), 16, 10).cast("long") % n_buckets
 

@@ -74,41 +74,6 @@ def range_join(
     return left.join(right, on=cond, how=how)
 
 
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-    seed: int = 42,
-) -> DataFrame:
-    """Skew-mitigating equi-join: split each hot key of the skewed side
-    across ``n_salts`` shuffle partitions; replicate the other side once
-    per salt.
-
-    AQE's skew-join split (on by default in :mod:`session`) handles most
-    cases at runtime; this explicit form is for the pathological key whose
-    post-split partitions still exceed executor memory, or for engines/
-    stages where AQE can't apply (e.g. under a streaming join). The salt
-    value on the skewed side is arbitrary — any distribution is correct —
-    so a seeded uniform draw is fine.
-    """
-    # The replicated side would emit one null-padded copy PER SALT for its
-    # unmatched rows under right/full outer joins — only join types that
-    # never emit unmatched rows of the replicated side are allowed.
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti", "cross"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports {sorted(allowed)}; {how!r} would duplicate "
-            "unmatched rows of the replicated side n_salts times"
-        )
-    salted_left = skewed.withColumn("__salt", (F.rand(seed) * n_salts).cast("int"))
-    salted_right = other.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return salted_left.join(salted_right, on=[on, "__salt"], how=how).drop("__salt")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -358,78 +358,6 @@ def video_frame_dhash(
     return df.select(path_col, content_col).mapInPandas(extract, FRAME_DHASH_SCHEMA)
 
 
-def resize_images(df: DataFrame, target: tuple[int, int] = (8, 8)) -> DataFrame:
-    """Resize to fixed-size BMP thumbnails (binary out, same rows).
-
-    Decode (real for BMP, stub otherwise) → nearest-neighbor resample
-    (:func:`resize_nearest`, numpy index maps — a real resize, no PIL) →
-    re-encode as BMP so the thumbnail column is itself decodable.
-    """
-    th, tw = target
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    arr = decode_image(bytes(content) if content is not None else b"")
-                    thumb = encode_bmp(resize_nearest(arr, (th, tw)))
-                except ValueError:  # undecodable -> NULL thumbnail, row kept
-                    thumb = None
-                out.append(
-                    {"path": path, "thumbnail": thumb, "thumb_h": th, "thumb_w": tw}
-                )
-            yield pd.DataFrame(out, columns=["path", "thumbnail", "thumb_h", "thumb_w"])
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("thumbnail", T.BinaryType()),
-            T.StructField("thumb_h", T.IntegerType()),
-            T.StructField("thumb_w", T.IntegerType()),
-        ]
-    )
-    return df.select("path", "content").mapInPandas(do_resize, schema)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled frame index.
-
-    Decode is stubbed (length-derived frame count); the explode pattern —
-    video row → N frame rows — is the real Spark shape that matters for
-    partition sizing (a 2-hour video explodes to ~200 rows here, keep
-    ``spark.sql.files.maxPartitionBytes`` small for binary-heavy scans).
-    """
-    n_frames = (F.coalesce(F.col("length"), F.lit(0)) / 1000 + 1).cast("int")
-    return (
-        df.withColumn("__n", F.least(n_frames, F.lit(100)))
-        .select(
-            "path",
-            F.explode(F.sequence(F.lit(0), F.col("__n") * every_n, F.lit(every_n))).alias(
-                "frame_index"
-            ),
-        )
-    )
-
-
-def audio_features_stub(df: DataFrame) -> DataFrame:
-    """Audio feature plumbing (duration/rms from byte stats).
-
-    REAL IMPLEMENTATION: librosa/torchaudio decode. Deterministic byte-level
-    stats keep the UDF signature + schema real. For PCM WAV the REAL path
-    exists — see :func:`decode_wav` / :func:`audio_features`."""
-
-    @F.pandas_udf(T.DoubleType())
-    def fake_rms(content: pd.Series) -> pd.Series:
-        return content.map(
-            lambda b: float(np.frombuffer(bytes(b), dtype=np.uint8).astype(float).std())
-            if b is not None and len(b) > 0
-            else 0.0
-        )
-
-    return df.withColumn("rms_energy", fake_rms(F.col("content")))
-
-
 # ---------------------------------------------------------------------------
 # Audio: REAL codec tier for PCM WAV (RIFF is two packed little-endian
 # chunks + raw samples — stdlib-parseable, same situation as BMP). Lossy
@@ -652,56 +580,6 @@ def audio_band_fingerprint(
     return df.select(path_col, content_col).mapInPandas(extract, FINGERPRINT_SCHEMA)
 
 
-AUDIO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("window_index", T.IntegerType()),
-        T.StructField("start_ms", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-    ]
-)
-
-
-def audio_frame_windows(
-    df: DataFrame,
-    frame_ms: int = 25,
-    hop_ms: int = 10,
-    content_col: str = "content",
-    path_col: str = "path",
-) -> DataFrame:
-    """Per-window RMS frames (the standard 25 ms / 10 ms speech framing) —
-    the audio analog of document chunking: one audio row explodes to
-    ~duration/hop rows. REAL for PCM WAV; the per-batch loop is numpy
-    stride slicing, no Python per-sample work. Row-count-changing, so
-    mapInPandas (same shape rule as chunking/frame_sample_plan)."""
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    samples, rate = decode_wav(bytes(content) if content is not None else b"")
-                except ValueError:
-                    continue  # quarantine non-WAV rows from the frame table
-                mono = samples.astype(np.float64).mean(axis=1)
-                flen = max(1, rate * frame_ms // 1000)
-                hop = max(1, rate * hop_ms // 1000)
-                n_win = max(0, (len(mono) - flen) // hop + 1) if len(mono) >= flen else 0
-                for wi in range(n_win):
-                    seg = mono[wi * hop : wi * hop + flen]
-                    out.append(
-                        {
-                            "path": path,
-                            "window_index": wi,
-                            "start_ms": wi * hop * 1000.0 / rate,
-                            "rms": float(np.sqrt((seg * seg).mean())),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FRAME_SCHEMA.fields])
-
-    return df.select(path_col, content_col).mapInPandas(frames, AUDIO_FRAME_SCHEMA)
-
-
 def gif_frame_features(
     df: DataFrame, every_n: int = 2, content_col: str = "content", path_col: str = "path"
 ) -> DataFrame:
@@ -711,8 +589,8 @@ def gif_frame_features(
 
     Same Arrow mapInPandas shape as image/audio features: binary in,
     frame rows out, decode cost per-row-irreducible. Non-GIF bytes raise
-    (route them through :func:`frame_sample_plan`'s stub or a codec-gated
-    path — silently guessing frames is worse than failing)."""
+    (route them through a codec-gated path — silently guessing frames is
+    worse than failing)."""
     from etl_hiscox_spark.operators.gif import decode_gif
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -13,8 +13,8 @@ sketch-free path of Halko et al.'s randomized SVD baseline):
 - The d×d EIGENDECOMPOSITION is O(d³) driver-side numpy — microseconds for
   embedding-sized d, and the only part that doesn't distribute (it doesn't
   need to: d² doubles fit in L2 cache long before 100 TB of rows matter).
-- PROJECTION broadcasts the k×d component matrix back through the same
-  Arrow matmul path as the other vector ops (transform_vectors_pandas).
+- PROJECTION closes over the k×d component matrix and applies it with one
+  BLAS matmul per Arrow batch (``mapInPandas``).
 
 Sign convention: each component is flipped so its largest-|coefficient|
 entry is positive — eigenvectors are sign-ambiguous and LAPACK's choice is

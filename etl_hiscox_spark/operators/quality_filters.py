@@ -96,48 +96,6 @@ def gopher_flags(
     )
 
 
-def compression_ratio(
-    df: DataFrame, text_col: str = "text", out_col: str = "compression_ratio"
-) -> DataFrame:
-    """Append per-document zlib compression ratio (compressed/raw bytes) —
-    the classic corpus-quality signal (low ratio = repetitive/templated
-    boilerplate; near-1 = high-entropy noise; natural prose sits between).
-    Used alongside the Gopher gates for pretraining-corpus filtering.
-
-    zlib has no Catalyst expression, so this is an Arrow ``mapInPandas``
-    (batch-at-a-time, never row-at-a-time Python) — the compression itself
-    is per-row-irreducible work on any engine. Empty/NULL text yields a
-    NULL ratio (quarantine-style: absent signal, not a fake 0). No
-    declared query: zlib output is engine-version-dependent byte-for-byte,
-    so semantics are pinned by pytest, not a DuckDB twin.
-    """
-    import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    fields = df.schema.fields
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields] + [f"`{out_col}` double"]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def ratio(t):
-                if t is None:
-                    return None
-                raw = str(t).encode("utf-8")
-                if not raw:
-                    return None
-                return len(zlib.compress(raw, 6)) / len(raw)
-
-            pdf = pdf.copy()
-            pdf[out_col] = [ratio(t) for t in pdf[text_col]]
-            yield pdf
-
-    return df.mapInPandas(batches, schema=out_schema)
-
-
 def domain_blocklist_tags(
     df: DataFrame,
     url_col: str,

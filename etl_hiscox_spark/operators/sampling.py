@@ -5,31 +5,17 @@
   order dependent) the assignment is a pure function of the key: re-runs,
   re-partitions, and other engines agree row-for-row — the property that
   matters when the split must be reproducible across a 100 TB re-shard.
-- :func:`stratified_sample` — per-stratum fractions via ``sampleBy``
-  (seeded, one pass, no shuffle).
-- :func:`reservoir_per_key` — exact k rows per key (window top-k over a
-  stable hash ordering), the distributed substitute for per-group
-  ``df.sample(n=k)``.
+- weighted and mixture sampling (:func:`weighted_sample`,
+  :func:`mixture_sample`, :func:`upsample`, :func:`token_budget_sample`,
+  :func:`gumbel_topk`) and sequence packing (:func:`pack_sequences`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from etl_hiscox_spark.operators.windows import top_k_per_group
-
-
-def split_bucket(key: Column | str, n_buckets: int = 100) -> Column:
-    """Stable bucket in [0, n_buckets) from sha256 of the key — identical
-    in any engine with sha256 (the cross-engine-portable alternative to
-    xxhash64). First 8 hex chars -> int -> mod."""
-    key = F.col(key) if isinstance(key, str) else key
-    return F.conv(F.substring(F.sha2(key.cast("string"), 256), 1, 8), 16, 10).cast(
-        "long"
-    ) % n_buckets
 
 
 HEX_PREFIX_LEN = 5  # 16^5 = 1,048,576 buckets — plenty for split weights
@@ -85,30 +71,6 @@ def hash_split(
             F.raise_error(F.lit(f"hash_split: NULL {key} cannot be split deterministically")),
         ).otherwise(expr)
     return df.withColumn(split_col, expr)
-
-
-def stratified_sample(
-    df: DataFrame, stratum_col: str, fractions: Mapping[str, float], seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (seeded) — e.g. downsample dominant
-    languages while keeping rare ones whole. One pass, no shuffle."""
-    return df.sampleBy(stratum_col, dict(fractions), seed)
-
-
-def reservoir_per_key(
-    df: DataFrame, keys: Sequence[str], k: int, order_key: str
-) -> DataFrame:
-    """Exactly min(k, |group|) rows per key, chosen by a stable hash of
-    ``order_key`` — deterministic 'random-looking' per-group sample with
-    one shuffle (the window's)."""
-    return top_k_per_group(
-        df.withColumn("__r", F.xxhash64(F.col(order_key))),
-        keys=keys,
-        order_by=["__r", order_key],
-        k=k,
-        descending=False,
-        rank_col="__rank",
-    ).drop("__r", "__rank")
 
 
 def _uniform01(key: str, seed: int, salt: int) -> Column:

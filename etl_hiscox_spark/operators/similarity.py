@@ -386,29 +386,6 @@ def ivf_index(
     return assigned, centroids
 
 
-def ivf_topk(
-    df: DataFrame,
-    embedding_col: str,
-    id_col: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    train_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF approximate top-k: score only the n_probe clusters whose
-    centroids are nearest the query (cosine). Recall grows with n_probe;
-    n_probe = n_clusters degrades gracefully to exact search."""
-    assigned, centroids = ivf_index(df, embedding_col, id_col, n_clusters, seed, train_fraction)
-    q = np.asarray(query_vec, dtype=float)
-    qn = q / np.linalg.norm(q)
-    cn = centroids / np.clip(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12, None)
-    probe = np.argsort(-(cn @ qn))[:n_probe].tolist()
-    candidates = assigned.filter(F.col("__cluster").isin([int(p) for p in probe]))
-    return cosine_topk(candidates, embedding_col, id_col, query_vec, k)
-
-
 def _centroid_distance_grid(
     C: np.ndarray, embs: pd.Series
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -475,8 +452,8 @@ def write_ivf_index(
     malformed embeddings loudly, exactly like the append path (the
     k-means branch throws on them inside ML's transform).
 
-    This is the 100 TB deployment form of :func:`ivf_topk`: the one-time
-    k-means assignment is written ``partitionBy(__cluster)``, so every
+    The one-time k-means assignment (:func:`ivf_index`) is written
+    ``partitionBy(__cluster)``, so every
     subsequent probe is a PARTITION-PRUNED read of n_probe/n_clusters of
     the data — the layout does the indexing, no server, no side-structure.
 

@@ -70,40 +70,3 @@ def hll_rollup(
     if group_cols:
         return partials.groupBy(*group_cols).agg(hll_estimate(merged, alias))
     return partials.agg(hll_estimate(merged, alias))
-
-
-def approx_quantiles(
-    df: DataFrame,
-    value_col: str,
-    probs: Sequence[float],
-    group_cols: Sequence[str] = (),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Approximate quantiles via ``percentile_approx`` (Greenwald-Khanna).
-
-    Single-pass, mergeable, bounded memory — the distributed answer to the
-    reference's exact dbt percentiles. ``accuracy`` trades memory for error
-    (max rank error = 1/accuracy). Output column ``q_<prob>`` per prob.
-    """
-    aggs = [
-        F.percentile_approx(F.col(value_col), F.lit(float(p)), F.lit(accuracy)).alias(
-            f"q_{str(p).replace('.', '_')}"
-        )
-        for p in probs
-    ]
-    if group_cols:
-        return df.groupBy(*group_cols).agg(*aggs)
-    return df.agg(*aggs)
-
-
-def frequent_items(
-    df: DataFrame, cols: Sequence[str], support: float = 0.01
-) -> DataFrame:
-    """Heavy hitters per column (Karp et al. lossy counting, JVM-side).
-
-    One pass, no shuffle of raw values — candidates may include false
-    positives (never false negatives), the standard sketch trade. Use as
-    the skew-detection probe before a big join: its output is the salting
-    key list for :func:`etl_hiscox_spark.operators.joins.salted_join`.
-    """
-    return df.stat.freqItems(list(cols), support)

@@ -1,18 +1,12 @@
 """Vector-column operators for embedding pipelines (SURVEY.md §2.11 L3
 extension tier): L2 normalization, int8 quantization, random projection.
 
-Two implementation tiers, same semantics:
-
-- **Expression forms** (`l2_normalize`, `quantize_int8`, `project_expr`) —
-  array higher-order functions, fully declarative, DuckDB-oracle-checkable.
-  Spark 4 evaluates HOFs interpreted per element, so these are the right
-  choice for projections over modest dims (≤ a few hundred) or wherever
-  plan composability matters (predicates push through them).
-- **Arrow forms** (`transform_vectors_pandas`) — one numpy/BLAS call per
-  Arrow batch via ``mapInPandas``; the scale path when the per-row work is
-  a matmul (random projection to many output dims, batch re-normalization
-  of billions of vectors). No shuffle either way — all of these are
-  per-row transformations that stay in the scan stage.
+All three are expression forms — array higher-order functions, fully
+declarative, DuckDB-oracle-checkable. Spark 4 evaluates HOFs interpreted
+per element, so they suit projections over modest dims (≤ a few hundred)
+or wherever plan composability matters (predicates push through them).
+No shuffle: every one is a per-row transformation that stays in the scan
+stage.
 
 Quantization is symmetric per-vector: scale = max|x|/127, q = round(x /
 scale) ∈ [-127, 127] stored as ``array<tinyint>`` + one float scale —
@@ -23,11 +17,8 @@ returns the zero vector exactly).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from etl_hiscox_spark.operators.similarity import l2_norm
@@ -72,8 +63,7 @@ def random_projection_matrix(dim_in: int, dim_out: int, seed: int = 42) -> np.nd
 
 def project_expr(a: Column | str, matrix: np.ndarray) -> Column:
     """array<double> of ``matrix @ a`` via expressions — one zip_with fold
-    per output dim. Right for small dim_out / oracle parity; use
-    :func:`transform_vectors_pandas` when dim_out × rows is matmul-sized."""
+    per output dim. Right for small dim_out / oracle parity."""
     a = F.col(a) if isinstance(a, str) else a
     outs = []
     for row in matrix:
@@ -86,44 +76,3 @@ def project_expr(a: Column | str, matrix: np.ndarray) -> Column:
             )
         )
     return F.array(*outs)
-
-
-def transform_vectors_pandas(
-    df: DataFrame,
-    embedding_col: str,
-    matrix: np.ndarray | None = None,
-    normalize: bool = False,
-    out_col: str = "vector_out",
-) -> DataFrame:
-    """Arrow-batched vector transform: optional projection (``matrix @ v``)
-    then optional L2 normalization, one BLAS matmul per Arrow batch.
-
-    Appends ``out_col`` (array<double>); all other columns pass through.
-    This is the 100 TB path: per-batch numpy never crosses row-at-a-time,
-    and the projection matrix is closure-captured once per executor.
-    """
-    if matrix is None and not normalize:
-        raise ValueError("nothing to do: provide a matrix and/or normalize=True")
-    mat = None if matrix is None else np.ascontiguousarray(matrix, dtype=np.float64)
-    fields = df.schema.fields
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-        + [f"`{out_col}` array<double>"]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[embedding_col]])
-            if mat is not None:
-                m = m @ mat.T
-            if normalize:
-                norms = np.linalg.norm(m, axis=1, keepdims=True)
-                m = np.divide(m, norms, out=m.copy(), where=norms > 0)
-            pdf = pdf.copy()
-            pdf[out_col] = list(m)
-            yield pdf
-
-    return df.mapInPandas(batches, schema=out_schema)

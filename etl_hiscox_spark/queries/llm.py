@@ -53,7 +53,7 @@ def _probe_pairs(out: DataFrame) -> DataFrame:
 def _raw_token_count() -> Column:
     """Single-space token count of the raw ``text`` column — the corpus
     size proxy shared by the sampling/packing queries (documents are
-    single-spaced; the normalized variant is functions.text.word_count)."""
+    single-spaced, so no whitespace normalization is needed)."""
     return F.size(F.split(F.col("text"), " "))
 
 
@@ -1039,8 +1039,7 @@ def _rp_oracle() -> str:
 def v3_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Johnson–Lindenstrauss random projection 64→4, seeded matrix shipped
     # as literals to BOTH engines (the oracle SQL embeds the same numpy
-    # matrix). Expression tier for parity; transform_vectors_pandas is the
-    # BLAS path for real dim_out (tests pin they agree).
+    # matrix).
     from etl_hiscox_spark.operators.vectors import project_expr
 
     emb = load_table(spark, "embeddings", sf_dir)

@@ -164,16 +164,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TESTDATA_TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Expose every testdata table as a temp view for ``spark.sql`` entry."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
-
-
 # ---------------------------------------------------------------------------
 # Insurance-domain schemas (the reference's own data model, FIXTURES.md §1-2).
 # Money uses DecimalType(18,2) per SURVEY.md §7 (float-hash pitfalls).

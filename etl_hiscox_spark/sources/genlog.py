@@ -194,22 +194,6 @@ def live_index_paths(spark, root: str) -> list[str]:
     return [_join(root, s) for s in pointer_segments(rec)]
 
 
-def live_index_path(spark, root: str) -> str:
-    """Single-directory form of :func:`live_index_paths` — a head with
-    exactly one segment. A multi-segment head (delta appends pending
-    compaction) has no single live directory, so this raises rather than
-    silently dropping the deltas; multi-segment-capable callers use the
-    plural form."""
-    paths = live_index_paths(spark, root)
-    if len(paths) == 1:
-        return paths[0]
-    raise ValueError(
-        f"generational index at {root!r} has {len(paths)} live segments "
-        "(delta appends pending compaction) — this entry point reads one "
-        "directory; use live_index_paths, or compact the index first"
-    )
-
-
 def latest_pointer_version(spark, root: str) -> int | None:
     """Highest committed pointer version, or None for a root whose log is
     absent/empty — the ``base_version`` a build captures BEFORE staging.

@@ -421,10 +421,6 @@ def read_orc(
     return reader.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
 def read_fixed_width(
     spark: SparkSession,
     path: str,
@@ -480,30 +476,3 @@ def write_fixed_width(
         ).otherwise(F.rpad(F.coalesce(s, F.lit("")), width, " "))
         parts.append(s)
     df.select(F.concat(*parts).alias("value")).write.mode(mode).text(path)
-
-
-def read_text_corpus(
-    spark: SparkSession, path: str, whole_files: bool = False
-) -> DataFrame:
-    """Raw-text corpus ingestion → (doc_id, source_file, text, n_chars).
-
-    The front door of an LLM data pipeline: ``spark.read.text`` streams
-    line-delimited corpora split-parallel (each 128 MB file split is one
-    task); ``wholetext=True`` keeps one row per document file (no splits —
-    only for corpora of many small files). ``doc_id`` is derived from
-    content+provenance via xxhash64 so re-ingesting the same files is
-    idempotent — no nondeterministic monotonically_increasing_id.
-    """
-    from pyspark.sql import functions as F
-
-    # NB: DataFrameReader.text(...) resets `wholetext` from its own keyword,
-    # so a prior .option("wholetext", ...) would be silently overwritten.
-    df = spark.read.text(path, wholetext=whole_files).select(
-        F.input_file_name().alias("source_file"), F.col("value").alias("text")
-    )
-    return df.select(
-        F.xxhash64("source_file", "text").alias("doc_id"),
-        "source_file",
-        "text",
-        F.length("text").alias("n_chars"),
-    )

@@ -271,33 +271,6 @@ def overwrite_partitions_dynamic(
     )
 
 
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 256,
-    sort_by: tuple[str, ...] = (),
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_mb``-sized files.
-
-    Streaming sinks and fine-grained partitioned appends accumulate
-    thousands of KB-scale files; at 100 TB that's a scan-planning and
-    NameNode/S3-LIST tax on every reader. Sizing from the actual on-disk
-    bytes (not row counts) keeps the result stable across schema width.
-    Returns the output file count. Write-to-tmp + swap because the plan
-    lazily reads ``path`` — overwriting in place would delete its own
-    input mid-job. At scale this is table-format ``OPTIMIZE``; same
-    semantics here for plain parquet.
-    """
-    tmp = path.rstrip("/") + "__compact"
-    # mode=overwrite: a leftover tmp from a crashed earlier run is debris
-    # under THIS commit protocol (the swap never ran, path is intact)
-    n = compact_parquet_to_dir(
-        spark.read.parquet(path), [path], tmp, target_file_mb, sort_by, mode="overwrite"
-    )
-    swap_and_refresh(spark, tmp, path)
-    return n
-
-
 def compact_parquet_to_dir(
     df: DataFrame,
     srcs: list[str],
@@ -306,18 +279,16 @@ def compact_parquet_to_dir(
     sort_by: tuple[str, ...] = (),
     mode: str = "error",
 ) -> int:
-    """The rewrite half of :func:`compact_small_files`, decoupled from the
-    local-only tmp+swap commit: rewrite ``df``, the caller's read of the
-    trees ``srcs`` (the OCC-append segment merge reads every live segment,
-    r13), into ``dst`` as ~``target_file_mb``-sized files (optionally
-    range-partitioned AND sorted on ``sort_by`` so each key clusters into
-    one file-contiguous run), return the output file count. The caller
-    reads, because the caller knows the trees' provenance: an index
-    merge pins its own layout's schema, a plain directory is inferred.
-    Sizing and counting go through ``pyarrow.fs``
-    (:func:`listing.data_files`), so the rewrite works on any filesystem —
-    the generation-pointer index maintenance commits the SAME rewrite with
-    a pointer flip instead of a rename (r12)."""
+    """Small-file compaction, decoupled from any commit: rewrite ``df``,
+    the caller's read of the trees ``srcs`` (the OCC-append segment merge
+    reads every live segment, r13), into ``dst`` as ~``target_file_mb``-
+    sized files (optionally range-partitioned AND sorted on ``sort_by`` so
+    each key clusters into one file-contiguous run), return the output
+    file count. The caller reads, because the caller knows the trees'
+    provenance: an index merge pins its own layout's schema. Sizing and
+    counting go through ``pyarrow.fs`` (:func:`listing.data_files`), so
+    the rewrite works on any filesystem — the generation-pointer index
+    maintenance commits it with a pointer flip, never a rename (r12)."""
     from etl_hiscox_spark.sources.listing import data_files
 
     total_bytes = sum(f.size for s in srcs for f in data_files(s))
@@ -386,61 +357,6 @@ def erase_keys(
     finally:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-
-
-def zorder_layout(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    n_files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` clustered by the Z-order (Morton) interleaving of two
-    columns — multi-dimensional file pruning (Delta ``OPTIMIZE ZORDER BY``,
-    the public bit-interleave technique).
-
-    A single-column sort gives disjoint per-file ranges on THAT column
-    only; a point/range filter on any other column still opens every
-    file. Interleaving the bit representations makes per-file min/max
-    ranges compact on BOTH columns, so parquet footer stats prune files
-    for filters on either (or both) — at 100 TB the difference between
-    reading 1/n_files of the table and all of it, on the second-most
-    common predicate column.
-
-    Mechanics: each column min/max-scales to ``bits`` bits (bounds from
-    one tiny driver-side aggregate), the bit positions interleave into a
-    z-value with a chain of codegen'd shift/or expressions (no UDF), and
-    the frame range-repartitions + sorts on z before writing.
-    """
-    c0, c1 = (F.col(c).cast("double") for c in cols)
-    lo0, hi0, lo1, hi1 = df.agg(
-        F.min(c0), F.max(c0), F.min(c1), F.max(c1)
-    ).first()
-    if lo0 is None or lo1 is None:
-        raise ValueError(
-            f"zorder_layout: no non-null values in {cols} (empty input?) — "
-            "nothing to cluster; write the frame directly instead"
-        )
-    span0 = (hi0 - lo0) or 1.0
-    span1 = (hi1 - lo1) or 1.0
-    top = (1 << bits) - 1
-    q0 = ((c0 - F.lit(lo0)) / F.lit(span0) * top).cast("long")
-    q1 = ((c1 - F.lit(lo1)) / F.lit(span1) * top).cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(q0, i).bitwiseAND(F.lit(1)), 2 * i)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftright(q1, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def write_training_shards(

@@ -2,20 +2,15 @@
 (SURVEY.md §2.10 extension — the escape hatch when built-in windows/dedup
 can't express the state machine).
 
-Two operators:
-
-- :func:`running_user_stats` — per-key cumulative count/sum/max maintained
-  across micro-batches (the "profile that never forgets" pattern built-in
-  aggregations only cover with complete-mode memory costs).
-- :func:`threshold_alert_stream` — emits a row only when a key's cumulative
-  value first crosses a threshold (cross-batch edge detection — genuinely
-  inexpressible with windowed aggs, which re-emit per window).
+One operator, :func:`threshold_alert_stream`: it emits a row only when a
+key's cumulative value first crosses a threshold (cross-batch edge
+detection — genuinely inexpressible with windowed aggs, which re-emit per
+window).
 
 State is a single tuple per key (Arrow-serialized), so state-store size is
-O(distinct keys), partitioned by ``spark.sql.shuffle.partitions``. Both
-operators also run in batch mode via ``applyInPandas`` fallbacks with
-identical per-key math — the batch twin is the correctness oracle, same
-policy as the windowed ops.
+O(distinct keys), partitioned by ``spark.sql.shuffle.partitions``. Batch
+input runs a window twin with identical per-key math — the batch twin is
+the correctness oracle, same policy as the windowed ops.
 """
 
 from __future__ import annotations
@@ -27,65 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-USER_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-        T.StructField("max_value", T.DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-        T.StructField("mx", T.DoubleType()),
-    ]
-)
-
-
-def _update_user_stats(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    # total/mx are None until the first non-null value — matching the batch
-    # twin where F.sum/F.max over all-null input return NULL (not 0/-inf).
-    n, total, mx = state.get if state.exists else (0, None, None)
-    for pdf in pdfs:
-        n += int(len(pdf))  # rows counted like F.count(lit(1)) — nulls included
-        vals = pdf["value"].dropna().astype(float)
-        if len(vals):
-            total = (total or 0.0) + float(vals.sum())
-            vmax = float(vals.max())
-            mx = vmax if mx is None else max(mx, vmax)
-    state.update((n, total, mx))
-    yield pd.DataFrame(
-        [{"user_id": user_id, "n_events": n, "total_value": total, "max_value": mx}]
-    )
-
-
-def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user cumulative stats, updated each micro-batch.
-
-    Streaming: ``applyInPandasWithState`` (update mode output). Batch twin:
-    plain groupBy — identical math, asserted equal in tests.
-    """
-    if events.isStreaming:
-        return events.groupBy("user_id").applyInPandasWithState(
-            _update_user_stats,
-            outputStructType=USER_STATS_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("double")).alias("total_value"),
-        F.max(F.col("value").cast("double")).alias("max_value"),
-    )
-
 
 ALERT_SCHEMA = T.StructType(
     [
@@ -191,62 +127,4 @@ def threshold_alert_stream(events: DataFrame, threshold: float) -> DataFrame:
         "user_id",
         F.col("s.cumulative_value").alias("cumulative_value"),
         F.col("s.crossed_at_n").alias("crossed_at_n"),
-    )
-
-
-# -- transformWithStateInPandas (Spark 4 stateful v2) -------------------------
-# Same running-user-stats semantics on the modern API: typed value state,
-# RocksDB-backed, evolvable schema — where new stateful operators should
-# land; applyInPandasWithState above remains for the v1 surface.
-# NOTE: the TWS state-server protocol requires `google.protobuf`, which is
-# not in this container — the streaming path is gated (tests skip without
-# protobuf, same policy as the Excel reader); the batch fallback always runs.
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class RunningUserStatsProcessor(StatefulProcessor):
-    """StatefulProcessor twin of :func:`running_user_stats` (same math).
-
-    A plain module-level subclass: the TWS runner pickles the processor to
-    a dedicated Python worker, so it must be importable by reference.
-    """
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("stats", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n, total, mx = self._state.get() if self._state.exists() else (0, None, None)
-        for pdf in rows:
-            n += int(len(pdf))
-            vals = pdf["value"].dropna().astype(float)
-            if len(vals):
-                total = (total or 0.0) + float(vals.sum())
-                vmax = float(vals.max())
-                mx = vmax if mx is None else max(mx, vmax)
-        self._state.update((n, total, mx))
-        (user_id,) = key
-        yield pd.DataFrame(
-            [{"user_id": user_id, "n_events": n, "total_value": total, "max_value": mx}]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` form of running_user_stats.
-
-    Requires the RocksDB state-store provider (set by the caller's session
-    conf for streaming runs); batch input falls back to the same groupBy
-    twin as the v1 operator.
-    """
-    if not events.isStreaming:
-        return running_user_stats(events)
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningUserStatsProcessor(),
-        outputStructType=USER_STATS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

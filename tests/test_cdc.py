@@ -63,19 +63,3 @@ def test_snapshot_diff_is_single_cocluster_join(spark):
     plan = snapshot_diff(old, new, ["id"])._jdf.queryExecution().executedPlan().toString()
     assert "FullOuter" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-
-def test_schema_diff_reports_drift(spark):
-    from etl_hiscox_spark.operators.cdc import schema_diff
-
-    old = spark.createDataFrame([(1, "a", 1.0)], "id long, name string, v double")
-    new = spark.createDataFrame([(1, "a", 1, True)], "id long, name string, v int, flag boolean")
-    got = {d["column"]: d for d in schema_diff(old, new)}
-    assert got["flag"]["change"] == "added" and got["flag"]["new_type"] == "boolean"
-    assert got["v"]["change"] == "type_changed" and got["v"] == {
-        "column": "v", "change": "type_changed", "old_type": "double", "new_type": "int"
-    }
-    assert "id" not in got and "name" not in got
-    assert schema_diff(old, old) == []
-    rm = schema_diff(new, old)
-    assert {d["column"]: d["change"] for d in rm}["flag"] == "removed"

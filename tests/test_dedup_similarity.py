@@ -13,8 +13,8 @@ from etl_hiscox_spark.operators.dedup import (
     jaccard_pairs,
     minhash_candidates,
     near_dedup_minhash,
-    simhash64,
     simhash_candidates,
+    simhash_table,
 )
 from etl_hiscox_spark.operators.segindex import live_rows
 from etl_hiscox_spark.operators.similarity import (
@@ -122,10 +122,7 @@ def test_near_dedup_reliable_checkpoint_dir(spark, tmp_path):
 
 def test_simhash_hamming_locality(spark):
     docs = _docs(spark)
-    sims = {
-        r["doc_id"]: r["s"]
-        for r in docs.select("doc_id", simhash64(F.col("text")).alias("s")).collect()
-    }
+    sims = {r["doc"]: r["sim"] for r in simhash_table(docs, "text", "doc_id").collect()}
     assert sims[0] == sims[1] == sims[4]  # normalization-identical
     ham_near = bin((sims[0] ^ sims[2]) & (2**64 - 1)).count("1")
     ham_far = bin((sims[0] ^ sims[3]) & (2**64 - 1)).count("1")
@@ -1421,7 +1418,7 @@ def test_novelty_hash_stream_equals_string_shingles(spark):
         assert len(strings) == docs.count()
 
 
-def test_ivf_recall_pinned_on_clustered_embeddings(spark):
+def test_ivf_recall_pinned_on_clustered_embeddings(spark, tmp_path):
     """VERDICT r9 item 7: the isotropic-Gaussian recall pins are IVF's
     WORST case; the 100 TB claim (llm.py: clustered real corpora get the
     same recall at lower probe fractions) was unpinned. Planted
@@ -1432,7 +1429,11 @@ def test_ivf_recall_pinned_on_clustered_embeddings(spark):
     fraction. Deterministic: seeded draws, seeded k-means."""
     import numpy as np
 
-    from etl_hiscox_spark.operators.similarity import cosine_topk, ivf_topk
+    from etl_hiscox_spark.operators.similarity import (
+        cosine_topk,
+        ivf_probe_topk,
+        write_ivf_index,
+    )
 
     rng = np.random.default_rng(13)
     dim, per = 32, 50
@@ -1447,10 +1448,12 @@ def test_ivf_recall_pinned_on_clustered_embeddings(spark):
     qv = [float(x) for x in centers[3] + 0.25 * rng.standard_normal(dim)]
 
     exact = {r["vec_id"] for r in cosine_topk(df, "embedding", "vec_id", qv, k=10).collect()}
+    path = str(tmp_path / "ivf")
+    write_ivf_index(df, path, "embedding", "vec_id", n_clusters=8, seed=42)
     approx = {
         r["vec_id"]
-        for r in ivf_topk(
-            df, "embedding", "vec_id", qv, k=10, n_clusters=8, n_probe=3, seed=42
+        for r in ivf_probe_topk(
+            spark, path, None, "embedding", "vec_id", qv, k=10, n_probe=3
         ).collect()
     }
     recall = len(approx & exact) / len(exact)

@@ -1,4 +1,4 @@
-"""SQL models, observability, catalog stats, IVF ANN, salted joins."""
+"""SQL models, observability, catalog stats, IVF ANN."""
 
 from __future__ import annotations
 
@@ -8,8 +8,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from etl_hiscox_spark.observability import write_with_metrics
-from etl_hiscox_spark.operators.joins import salted_join
-from etl_hiscox_spark.operators.similarity import cosine_topk, ivf_topk
+from etl_hiscox_spark.operators.similarity import cosine_topk, ivf_probe_topk, write_ivf_index
 from etl_hiscox_spark.plans.pipeline import Model, Pipeline, sql_model
 from etl_hiscox_spark.registry import analyze_table, save_as_catalog_table, table_stats
 
@@ -85,7 +84,7 @@ def test_bucketed_tables_join_without_shuffle(spark):
     spark.sql("DROP TABLE bt_b")
 
 
-def test_ivf_topk_matches_exact_on_probed_all(spark):
+def test_ivf_probe_topk_matches_exact_on_probed_all(spark, tmp_path):
     rng = np.random.default_rng(3)
     vecs = rng.standard_normal((120, 8)).astype(np.float32)
     df = spark.createDataFrame(
@@ -94,28 +93,27 @@ def test_ivf_topk_matches_exact_on_probed_all(spark):
     )
     q = [float(x) for x in vecs[5]]
     exact = [r["vec_id"] for r in cosine_topk(df, "embedding", "vec_id", q, k=5).collect()]
+    path = str(tmp_path / "ivf")
+    write_ivf_index(df, path, "embedding", "vec_id", n_clusters=6)
+
+    def probe(root, n_probe):
+        return [
+            r["vec_id"]
+            for r in ivf_probe_topk(
+                spark, root, None, "embedding", "vec_id", q, k=5, n_probe=n_probe
+            ).collect()
+        ]
+
     # probing every cluster must reproduce exact search
-    full = [
-        r["vec_id"]
-        for r in ivf_topk(df, "embedding", "vec_id", q, k=5, n_clusters=6, n_probe=6).collect()
-    ]
-    assert full == exact
+    assert probe(path, 6) == exact
     # probing a subset still finds the query vector itself
-    approx = [
-        r["vec_id"]
-        for r in ivf_topk(df, "embedding", "vec_id", q, k=5, n_clusters=6, n_probe=2).collect()
-    ]
-    assert 5 in approx
+    assert 5 in probe(path, 2)
     # sample-trained centroids (the 100 TB path): every row is still
     # assigned, and probing every cluster still reproduces exact search —
     # centroid placement affects recall at partial probe, never coverage.
-    sampled = [
-        r["vec_id"]
-        for r in ivf_topk(
-            df, "embedding", "vec_id", q, k=5, n_clusters=6, n_probe=6, train_fraction=0.5
-        ).collect()
-    ]
-    assert sampled == exact
+    sampled = str(tmp_path / "ivf_sampled")
+    write_ivf_index(df, sampled, "embedding", "vec_id", n_clusters=6, train_fraction=0.5)
+    assert probe(sampled, 6) == exact
 
 
 def test_approx_count_distinct_tolerance(spark, sf_dir):
@@ -131,26 +129,10 @@ def test_approx_count_distinct_tolerance(spark, sf_dir):
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.05
 
 
-def test_salted_join_equals_plain_join(spark):
-    # heavily skewed left side: 90% of rows share one key
-    left = spark.range(1000).withColumn(
-        "k", F.when(F.col("id") < 900, F.lit(1)).otherwise(F.col("id"))
-    )
-    right = spark.createDataFrame([(1, "hot"), (950, "cold")], "k long, label string")
-    plain = left.join(right, "k").groupBy("label").count().collect()
-    salted = salted_join(left, right, on="k", n_salts=4).groupBy("label").count().collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-
-
 def test_ivf_written_index_partition_pruned_probe(spark, tmp_path):
     """The written IVF index probes via PARTITION PRUNING: full-probe
     results equal exact search, and the probe plan carries a __cluster
     partition filter (unprobed cluster directories never open)."""
-    from etl_hiscox_spark.operators.similarity import (
-        ivf_probe_topk,
-        write_ivf_index,
-    )
-
     rng = np.random.default_rng(11)
     vecs = rng.standard_normal((150, 8)).astype(np.float32)
     df = spark.createDataFrame(

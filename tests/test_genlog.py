@@ -52,11 +52,12 @@ def _flat_copy(spark, build, dest):
     ``dest``. Returns the generational source root."""
     import shutil
 
-    from etl_hiscox_spark.sources.genlog import live_index_path
+    from etl_hiscox_spark.sources.genlog import live_index_paths
 
     src = os.path.join(os.path.dirname(dest), "gen-source-" + os.path.basename(dest))
     build(src)
-    shutil.copytree(live_index_path(spark, src), dest)
+    [segment] = live_index_paths(spark, src)
+    shutil.copytree(segment, dest)
     return src
 
 
@@ -84,7 +85,7 @@ def test_minhash_generational_full_lifecycle_no_renames(
     )
     from etl_hiscox_spark.sources.genlog import (
         list_generations,
-        live_index_path,
+        live_index_paths,
         vacuum_generations,
     )
 
@@ -92,31 +93,27 @@ def test_minhash_generational_full_lifecycle_no_renames(
     docs = _docs(spark)
     old = docs.filter(F.col("doc_id") < 20)
     write_minhash_index(old, "text", "doc_id", root)
-    assert live_index_path(spark, root) != root.rstrip("/")
+    [built] = live_index_paths(spark, root)
+    assert built != root.rstrip("/")
     base_pairs = _probe_pairs(spark, root, docs)
     assert base_pairs  # doc 3 found through the pointer resolution
 
     # append commits an OCC DELTA segment (r13): the head becomes
-    # two-segment, the probe reads the union, the singular resolver
-    # refuses (no single live directory exists), fragmentation stats
+    # two-segment, the probe reads the union, fragmentation stats
     # aggregate across segments
     write_minhash_index(
         docs.filter(F.col("doc_id") >= 20), "text", "doc_id", root, mode="append"
     )
-    from etl_hiscox_spark.sources.genlog import live_index_paths
-
     seg_paths = live_index_paths(spark, root)
     assert len(seg_paths) == 2
-    with pytest.raises(ValueError, match="live segments"):
-        live_index_path(spark, root)
     n_files_before = minhash_fragmentation_stats(spark, root).first()["n_files"]
 
     # compact: merges the segments into ONE new generation, fewer files,
     # identical probe answers
     n_after = compact_minhash_index(spark, root)
     assert live_index_paths(spark, root) not in ([], seg_paths)
-    assert len(live_index_paths(spark, root)) == 1
-    assert live_index_path(spark, root) not in seg_paths  # pointer flipped
+    [merged] = live_index_paths(spark, root)
+    assert merged not in seg_paths  # pointer flipped
     assert n_after < n_files_before
     assert _probe_pairs(spark, root, docs) == base_pairs
 
@@ -283,7 +280,7 @@ def test_ivf_generational_full_lifecycle_no_renames(
         rebuild_ivf_index,
         write_ivf_index,
     )
-    from etl_hiscox_spark.sources.genlog import list_generations, live_index_path
+    from etl_hiscox_spark.sources.genlog import list_generations, live_index_paths
 
     rng = np.random.default_rng(5)
     rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(80)]
@@ -305,20 +302,17 @@ def test_ivf_generational_full_lifecycle_no_renames(
         return [r["vec_id"] for r in cosine_topk(frame, "embedding", "vec_id", q, k=5).collect()]
 
     # the append committed an OCC DELTA segment (r13): two-segment head,
-    # probes read the union, the singular resolver refuses
-    from etl_hiscox_spark.sources.genlog import live_index_paths
-
+    # probes read the union
     seg_paths = live_index_paths(spark, root)
     assert len(seg_paths) == 2
-    with pytest.raises(ValueError, match="live segments"):
-        live_index_path(spark, root)
     assert full_probe_ids() == brute_ids(emb)
     # quantized probe reads the live segments' codes
     qtop = ivf_probe_topk_quantized(spark, root, "embedding", "vec_id", q, k=5, n_probe=4)
     assert qtop.count() == 5
 
     compact_ivf_index(spark, root)
-    assert live_index_path(spark, root) not in seg_paths  # merged to ONE
+    [merged] = live_index_paths(spark, root)
+    assert merged not in seg_paths  # merged to ONE
     assert full_probe_ids() == brute_ids(emb)
     frag = ivf_fragmentation_stats(spark, root)
     assert frag.agg(F.max("n_files")).first()[0] == 1  # defragmented
@@ -491,7 +485,7 @@ def test_generational_probe_keeps_partition_pruning(spark, tmp_path):
     the probe's cluster IN-filter still lands in PartitionFilters of the
     live generation's scan (the pruning plan gate, generational form)."""
     from etl_hiscox_spark.operators.similarity import write_ivf_index
-    from etl_hiscox_spark.sources.genlog import live_index_path
+    from etl_hiscox_spark.sources.genlog import live_index_paths
 
     rng = np.random.default_rng(21)
     emb = spark.createDataFrame(
@@ -500,7 +494,7 @@ def test_generational_probe_keeps_partition_pruning(spark, tmp_path):
     )
     root = "file://" + str(tmp_path / "ivf")
     write_ivf_index(emb, root, "embedding", "vec_id", n_clusters=4, max_iter=2)
-    live = live_index_path(spark, root)
+    [live] = live_index_paths(spark, root)
     assert live != root  # resolution actually happened
     pruned = spark.read.parquet(live).filter(F.col("__cluster").isin([0, 1]))
     plan = pruned._jdf.queryExecution().executedPlan().toString()

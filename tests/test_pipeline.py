@@ -132,7 +132,7 @@ def test_object_listing_and_binary_read(spark, tmp_path):
 
 
 def test_multimodal_stub_plumbing(spark, tmp_path):
-    from etl_hiscox_spark.operators.multimodal import image_features, resize_images
+    from etl_hiscox_spark.operators.multimodal import image_features
 
     (tmp_path / "img1.bin").write_bytes(b"fake-image-bytes-1")
     (tmp_path / "img2.bin").write_bytes(b"fake-image-bytes-22")
@@ -145,11 +145,6 @@ def test_multimodal_stub_plumbing(spark, tmp_path):
     assert {f["path"]: f["mean_intensity"] for f in feats} == {
         f["path"]: f["mean_intensity"] for f in feats2
     }
-    thumbs = resize_images(df, target=(8, 8)).collect()
-    # thumbnails are themselves decodable BMPs now
-    from etl_hiscox_spark.operators.multimodal import decode_bmp
-
-    assert all(decode_bmp(bytes(t["thumbnail"])).shape == (8, 8, 3) for t in thumbs)
 
 
 def test_materialize_sorted_layout(spark, tmp_path):
@@ -233,7 +228,6 @@ def test_wav_codec_roundtrip_and_features(spark, tmp_path):
 
     from etl_hiscox_spark.operators.multimodal import (
         audio_features,
-        audio_frame_windows,
         decode_wav,
         encode_wav,
     )
@@ -291,18 +285,6 @@ def test_wav_codec_roundtrip_and_features(spark, tmp_path):
     got = {r["path"]: r["rms"] for r in audio_features(bad_df).collect()}
     assert got["s.wav"] is None and got["z.wav"] is None and got["r.wav"] is None
     assert got["ok.wav"] is not None
-
-    # 25ms/10ms framing over 1601 samples @16k: frame 400, hop 160
-    wins = audio_frame_windows(df, frame_ms=25, hop_ms=10).collect()
-    by_path = {}
-    for r in wins:
-        by_path.setdefault(r["path"], []).append(r)
-    assert len(by_path["a.wav"]) == (1601 - 400) // 160 + 1
-    assert "bad.mp3" not in by_path
-    w0 = sorted(by_path["a.wav"], key=lambda r: r["window_index"])[0]
-    seg = mono.astype(np.float64).mean(axis=1)[:400]
-    assert abs(w0["rms"] - float(np.sqrt((seg * seg).mean()))) < 1e-9
-
 
 
 def test_pipeline_optional_span_dedup_stage_removes_repeated_blocks(spark):

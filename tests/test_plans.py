@@ -273,8 +273,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
     # AQE's OptimizeSkewedJoin must split an oversized shuffle partition
     # at runtime. One hot key (~90% of the left side) + thresholds lowered
     # to local-data sizes; the executed SMJ must carry the skew=true
-    # marker. (salted_join stays for the pathological cases AQE can't
-    # reach — streaming joins, single-key-exceeds-memory.)
+    # marker.
     from pyspark.sql import functions as F
 
     confs = {

@@ -55,34 +55,6 @@ def test_gopher_flags_keep_is_conjunction(spark):
     )
 
 
-def test_compression_ratio_orders_text_classes(spark):
-    """Repetitive boilerplate compresses far below prose; random noise
-    barely compresses; empty/NULL stay NULL."""
-    import random
-    import string
-
-    rng = random.Random(3)
-    noise = "".join(rng.choice(string.ascii_lowercase + " ") for _ in range(2000))
-    rows = [
-        (1, "spam " * 400),                                   # boilerplate
-        (2, " ".join(f"word{rng.randrange(500)}" for _ in range(400))),  # prose-ish
-        (3, noise),                                           # high entropy
-        (4, ""),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    from etl_hiscox_spark.operators.quality_filters import compression_ratio
-
-    got = {r["doc_id"]: r["compression_ratio"] for r in compression_ratio(df).collect()}
-    assert got[4] is None and got[5] is None
-    assert got[1] < 0.05                 # boilerplate collapses
-    assert got[1] < got[2] < got[3]      # ordering of the three classes
-    assert got[3] > 0.5                  # noise barely compresses
-    # deterministic + schema passthrough
-    again = {r["doc_id"]: r["compression_ratio"] for r in compression_ratio(df).collect()}
-    assert got == again
-
-
 def test_url_host_extraction_edges(spark):
     from etl_hiscox_spark.functions.text import url_host
 

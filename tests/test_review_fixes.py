@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from etl_hiscox_spark.observability import write_with_metrics
 from etl_hiscox_spark.operators.dedup import connected_components, minhash_candidates
-from etl_hiscox_spark.operators.joins import asof_join, salted_join
+from etl_hiscox_spark.operators.joins import asof_join
 from etl_hiscox_spark.operators.similarity import cosine_topk
 from etl_hiscox_spark.plans.pipeline import Model, Pipeline, sql_model
 from etl_hiscox_spark.quality.engine import QualityEngine
@@ -52,13 +52,6 @@ def test_cosine_topk_ignores_zero_vectors(spark):
     ids = [r["vec_id"] for r in out]
     assert 2 not in ids  # NaN cosine must not win rank 1
     assert ids[0] == 0
-
-
-def test_salted_join_rejects_outer(spark):
-    left = spark.range(10).withColumn("k", F.col("id"))
-    right = spark.range(10).withColumn("k", F.col("id"))
-    with pytest.raises(ValueError, match="duplicate unmatched rows"):
-        salted_join(left, right, on="k", how="full")
 
 
 def test_write_with_metrics_empty_frame(spark, tmp_path):
@@ -118,14 +111,6 @@ def test_unique_rule_ignores_nulls(spark):
     report = QualityEngine().profile(df, RuleSet("t", (Unique("x"),)))
     # 2 distinct non-null / 2 non-null = 1.0 (dbt unique semantics)
     assert report.uniqueness["x"] == 1.0
-
-
-def test_mean_word_len_whitespace_insensitive(spark):
-    from etl_hiscox_spark.functions.text import quality_features
-
-    a = spark.createDataFrame([("a b",)], ["text"]).select(*quality_features("text")).first()
-    b = spark.createDataFrame([("  a   b  ",)], ["text"]).select(*quality_features("text")).first()
-    assert a["mean_word_len"] == b["mean_word_len"] == 1.0
 
 
 def test_hash_split_null_keys_error_and_opt_in(spark):
@@ -219,14 +204,6 @@ def test_chunking_rejects_negative_overlap(spark):
         chunk_documents(df, "text", "doc_id", chunk_size=4, overlap=-2)
     with pytest.raises(ValueError, match="chunk_size"):
         chunk_documents(df, "text", "doc_id", chunk_size=0, overlap=0)
-
-
-def test_udtf_rejects_negative_overlap(spark):
-    from etl_hiscox_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    with pytest.raises(Exception, match="overlap"):
-        spark.sql("SELECT * FROM split_chunks('a b c d', 4, -1)").collect()
 
 
 def test_mixture_sample_allows_zero_weight_empty_source(spark):

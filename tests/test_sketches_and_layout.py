@@ -1,6 +1,5 @@
 """Tests for mergeable sketches (operators/sketches.py) and the
-scale-layout sinks (dynamic partition overwrite, compaction, ORC, raw-text
-corpus ingestion)."""
+scale-layout sinks (dynamic partition overwrite, compaction, ORC)."""
 
 from __future__ import annotations
 
@@ -8,16 +7,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_hiscox_spark.operators.sketches import (
-    approx_quantiles,
-    frequent_items,
-    hll_partials,
-    hll_rollup,
-)
+from etl_hiscox_spark.operators.sketches import hll_partials, hll_rollup
 from etl_hiscox_spark.registry import load_table
-from etl_hiscox_spark.sources.readers import read_orc, read_text_corpus, write_orc
+from etl_hiscox_spark.sources.readers import read_orc
 from etl_hiscox_spark.sources.writers import (
-    compact_small_files,
+    compact_parquet_to_dir,
     overwrite_partitions_dynamic,
 )
 
@@ -71,23 +65,6 @@ def test_hll_merge_equals_direct_sketch(spark, sf_dir):
     assert merged == direct
 
 
-def test_approx_quantiles_bounded_rank_error(spark, sf_dir):
-    li = load_table(spark, "lineitem", sf_dir).select("l_extendedprice")
-    got = approx_quantiles(li, "l_extendedprice", [0.5], accuracy=10000).collect()[0]
-    n = li.count()
-    rank = (
-        li.filter(F.col("l_extendedprice") <= F.lit(got.q_0_5)).count() / n
-    )
-    assert abs(rank - 0.5) <= 1 / 10000 + 5 / n  # GK bound + discreteness slack
-
-
-def test_frequent_items_finds_heavy_hitter(spark):
-    rows = [("hot",)] * 500 + [(f"cold{i}",) for i in range(100)]
-    df = spark.createDataFrame(rows, ["k"])
-    items = frequent_items(df, ["k"], support=0.4).collect()[0][0]
-    assert "hot" in items
-
-
 # ------------------------------------------------------------ layout sinks
 
 
@@ -108,28 +85,30 @@ def test_dynamic_partition_overwrite_leaves_other_partitions(spark, tmp_path):
 
 
 def test_compact_small_files_preserves_data(spark, tmp_path):
-    path = str(tmp_path / "frag")
+    path, out = str(tmp_path / "frag"), str(tmp_path / "compact")
     df = spark.range(10000).withColumn("v", F.col("id") * 2)
     df.repartition(32).write.parquet(path)
     assert len(_parquet_files(path)) >= 32
-    n_out = compact_small_files(spark, path, target_file_mb=256)
+    n_out = compact_parquet_to_dir(spark.read.parquet(path), [path], out, target_file_mb=256)
     assert n_out < 32
-    assert len(_parquet_files(path)) == n_out
-    back = spark.read.parquet(path)
+    assert len(_parquet_files(out)) == n_out
+    back = spark.read.parquet(out)
     assert back.count() == 10000
     assert back.agg(F.sum("v")).collect()[0][0] == 9999 * 10000  # sum 2i, i<10000
 
 
 def test_compact_sorted_layout_clusters_key(spark, tmp_path):
-    path = str(tmp_path / "sorted")
+    path, out = str(tmp_path / "frag"), str(tmp_path / "sorted")
     spark.range(5000).select(
         (F.xxhash64("id") % 1000).alias("k"), F.col("id").alias("v")
     ).repartition(16).write.parquet(path)
-    compact_small_files(spark, path, target_file_mb=1, sort_by=("k",))
+    compact_parquet_to_dir(
+        spark.read.parquet(path), [path], out, target_file_mb=1, sort_by=("k",)
+    )
     # Range-partitioned + sorted: each file owns a disjoint k-range, so
     # parquet min/max stats prune point lookups to one file.
     stats = []
-    for f in _parquet_files(path):
+    for f in _parquet_files(out):
         one = spark.read.parquet(f).agg(F.min("k"), F.max("k")).collect()[0]
         if one[0] is not None:
             stats.append((one[0], one[1]))
@@ -141,22 +120,6 @@ def test_compact_sorted_layout_clusters_key(spark, tmp_path):
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     nation = load_table(spark, "nation", sf_dir)
     path = str(tmp_path / "nation_orc")
-    write_orc(nation, path)
+    nation.write.mode("overwrite").orc(path)
     back = read_orc(spark, path)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in nation.collect()}
-
-
-def test_read_text_corpus_lines_and_wholefile(spark, tmp_path):
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "a.txt").write_text("hello world\nsecond line\n")
-    (d / "b.txt").write_text("single doc body\n")
-    lines = read_text_corpus(spark, str(d))
-    assert lines.count() == 3
-    assert set(lines.columns) == {"doc_id", "source_file", "text", "n_chars"}
-    whole = read_text_corpus(spark, str(d), whole_files=True)
-    texts = {r.text.strip().replace("\n", "|") for r in whole.collect()}
-    assert texts == {"hello world|second line", "single doc body"}
-    # Idempotent ids: re-reading yields the same doc_ids.
-    again = {r.doc_id for r in read_text_corpus(spark, str(d)).collect()}
-    assert again == {r.doc_id for r in lines.collect()}

@@ -560,55 +560,6 @@ def test_read_json_quarantine_splits_and_preserves_raw(spark, tmp_path):
     assert good.agg(F.sum("id")).first()[0] == 4
 
 
-def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
-    """Z-order clustering: point-range filters on EITHER column touch a
-    strict subset of files, where a linear sort on x leaves y-filters
-    reading every file."""
-    import pyspark.sql.functions as SF
-
-    from etl_hiscox_spark.sources.writers import zorder_layout
-
-    n = 40000
-    df = (
-        spark.range(n)
-        .withColumn("x", (SF.col("id") * 7919) % 1000)
-        .withColumn("y", (SF.col("id") * 104729) % 1000)
-    )
-    p = str(tmp_path / "z")
-    zorder_layout(df, p, ("x", "y"), n_files=16)
-    back = spark.read.parquet(p)
-    assert back.count() == n
-
-    def files_touching(col, lo, hi):
-        stats = (
-            back.groupBy(SF.input_file_name().alias("f"))
-            .agg(SF.min(col).alias("lo"), SF.max(col).alias("hi"))
-            .collect()
-        )
-        total = len(stats)
-        touched = sum(1 for r in stats if r["hi"] >= lo and r["lo"] <= hi)
-        return touched, total
-
-    tx, total = files_touching("x", 0, 99)   # 10% range on x
-    ty, _ = files_touching("y", 0, 99)       # 10% range on y
-    assert total >= 8
-    # both dimensions prune: the footer-stats overlap set is well under
-    # the full file count (a 1-D sort on x would give ty == total)
-    assert tx <= total // 2, (tx, total)
-    assert ty <= total // 2, (ty, total)
-
-
-def test_zorder_layout_rejects_empty_input(spark, tmp_path):
-    import pytest as _pytest
-    from pyspark.sql import functions as SF
-
-    from etl_hiscox_spark.sources.writers import zorder_layout
-
-    empty = spark.range(10).filter(SF.col("id") < 0).withColumn("x", SF.col("id"))
-    with _pytest.raises(ValueError, match="no non-null values"):
-        zorder_layout(empty, str(tmp_path / "z"), ("id", "x"))
-
-
 def test_avro_fallback_only_on_missing_datasource():
     # a genuine native failure whose message merely CONTAINS 'avro' (e.g.
     # an output path) must propagate, not silently reroute to the fallback

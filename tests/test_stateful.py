@@ -1,51 +1,10 @@
-"""applyInPandasWithState operators: state persists across micro-batches,
-and the streaming result matches the batch twin."""
+"""applyInPandasWithState operator: the alert state persists across
+micro-batches, and the batch twin finds the same first crossings."""
 
 from __future__ import annotations
 
-import pytest
-
-from pyspark.sql import functions as F
-
 from etl_hiscox_spark.registry import load_table
-from etl_hiscox_spark.streaming.ops import EVENTS_SCHEMA, stream_from_parquet
-from etl_hiscox_spark.streaming.stateful import (
-    running_user_stats,
-    threshold_alert_stream,
-)
-
-
-def _run_update_stream(df, name):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def test_running_user_stats_stream_matches_batch(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "ev")
-    load_table(spark, "events", sf_dir).write.parquet(src)
-
-    stream = stream_from_parquet(spark, src)
-    _run_update_stream(running_user_stats(stream), "t_stats")
-    # update mode may emit a row per key per batch; keep the LAST update
-    # per key (the memory sink appends) — with availableNow single-source
-    # the final row per user is the converged state.
-    got_df = spark.table("t_stats")
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6), r["max_value"])
-        for r in got_df.collect()
-    }
-    batch = running_user_stats(spark.read.parquet(src))
-    want = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6), r["max_value"])
-        for r in batch.collect()
-    }
-    assert got == want and len(want) > 0
+from etl_hiscox_spark.streaming.stateful import threshold_alert_stream
 
 
 def test_threshold_alert_fires_once_across_batches(spark, tmp_path):
@@ -89,67 +48,3 @@ def test_threshold_alert_batch_twin(spark, sf_dir):
     sample = list(per_user.values())[:5]
     for r in sample:
         assert r["cumulative_value"] >= 500.0
-
-
-def test_tws_running_stats_equals_batch(spark, sf_dir, tmp_path):
-    # Spark 4 transformWithStateInPandas twin: same cumulative stats as the
-    # applyInPandasWithState v1 operator, on the RocksDB state store.
-    # TWS's state-server protocol needs protobuf, absent in this container —
-    # the operator is gated exactly like the Excel reader (import-try).
-    # r15 un-skip attempt (VERDICT r14 item 7), for the record: a vendored
-    # pure-python protobuf 6.32.0 on PYTHONPATH gets the TWS streaming
-    # runner PAST the import, but pyspark 4.1.2's generated
-    # StateMessage_pb2 then refuses it — "gencode 6.33.0, runtime
-    # 6.32.0: runtime cannot be older than the linked gencode" — and no
-    # >= 6.33 runtime is installable here. The skip self-upgrades: the
-    # moment the environment ships a compatible protobuf, this runs.
-    pytest.importorskip("google.protobuf")
-    from etl_hiscox_spark.streaming.stateful import running_user_stats, running_user_stats_tws
-
-    path = str(tmp_path / "events_us")
-    load_table(spark, "events", sf_dir).write.mode("overwrite").parquet(path)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-        q = (
-            running_user_stats_tws(stream)
-            .writeStream.format("memory")
-            .queryName("tws_stats")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    # update-mode memory sink: last row per user is the final state
-    got_df = spark.table("tws_stats")
-    w_last = (
-        got_df.groupBy("user_id")
-        .agg(F.max_by(F.struct("n_events", "total_value", "max_value"), "n_events").alias("s"))
-        .select("user_id", "s.*")
-    )
-    got = {r.user_id: (r.n_events, round(r.total_value, 6), r.max_value) for r in w_last.collect()}
-    batch = running_user_stats(spark.read.parquet(path))
-    want = {
-        r.user_id: (r.n_events, round(r.total_value, 6), r.max_value) for r in batch.collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_tws_batch_fallback_matches_v1(spark, sf_dir):
-    # Without streaming input the TWS wrapper must produce the identical
-    # batch twin as the v1 operator (no protobuf needed on this path).
-    from etl_hiscox_spark.streaming.stateful import running_user_stats, running_user_stats_tws
-
-    ev = load_table(spark, "events", sf_dir)
-    a = sorted(map(tuple, running_user_stats(ev).collect()))
-    b = sorted(map(tuple, running_user_stats_tws(ev).collect()))
-    assert a == b and len(a) > 0

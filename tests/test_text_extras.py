@@ -173,44 +173,3 @@ def test_rolling_fingerprint_hypothesis_parity_with_python_fold(spark):
             assert got[i] == py_fp(t), repr(t)
 
     check()
-
-
-def test_normalize_unicode_udf(spark):
-    from etl_hiscox_spark.functions.text import normalize_text, normalize_unicode_udf
-
-    rows = [
-        (1, "ｈｅｌｌｏ world"),   # full-width 'hello'
-        (2, "uniﬁed"),                            # 'fi' ligature
-        (3, "zero​width‍ joined"),           # ZWSP / ZWJ
-        (4, "ctrl\x07chars\x1b kept\nnewline\ttab"),   # bells stripped, \n\t kept
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    norm = normalize_unicode_udf("NFKC")
-    got = {r["id"]: r["t"] for r in df.select("id", norm("text").alias("t")).collect()}
-    assert got[1] == "hello world"
-    assert got[2] == "unified"
-    assert got[3] == "zerowidth joined"
-    assert got[4] == "ctrlchars kept\nnewline\ttab"
-    assert got[5] is None
-
-    # the dedup motivation: visually-identical docs hash together only
-    # after canonicalization
-    from pyspark.sql import functions as SF
-
-    pair = spark.createDataFrame(
-        [(1, "ｈｉ there"), (2, "hi there")], "id long, text string"
-    )
-    keys_raw = pair.select(SF.sha2(normalize_text("text"), 256).alias("k")).distinct().count()
-    keys_norm = (
-        pair.withColumn("text", norm("text"))
-        .select(SF.sha2(normalize_text("text"), 256).alias("k"))
-        .distinct()
-        .count()
-    )
-    assert keys_raw == 2 and keys_norm == 1
-
-    import pytest
-
-    with pytest.raises(ValueError, match="NFC/NFKC"):
-        normalize_unicode_udf("NFX")

@@ -1,5 +1,5 @@
 """Tests for vector operators: normalization, int8 quantization, random
-projection (expression tier vs numpy reference vs Arrow tier)."""
+projection (expression tier vs numpy reference)."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from etl_hiscox_spark.operators.vectors import (
     project_expr,
     quantize_int8,
     random_projection_matrix,
-    transform_vectors_pandas,
 )
 
 
@@ -72,29 +71,13 @@ def test_random_projection_matrix_deterministic():
     assert np.array_equal(a, b) and not np.array_equal(a, c)
 
 
-def test_transform_vectors_pandas_matches_expr(vecs):
+def test_project_expr_matches_numpy_on_every_row(vecs):
     mat = random_projection_matrix(16, 4, seed=3)
-    arrow = {
-        r.vec_id: r.vector_out
-        for r in transform_vectors_pandas(vecs, "embedding", matrix=mat).collect()
-    }
+    want = {r.vec_id: mat @ np.asarray(r.embedding) for r in vecs.collect()}
     expr = {
         r.vec_id: r.p
         for r in vecs.select("vec_id", project_expr("embedding", mat).alias("p")).collect()
     }
+    assert expr.keys() == want.keys()
     for k in expr:
-        assert np.allclose(arrow[k], expr[k], atol=1e-9)
-
-
-def test_transform_vectors_pandas_normalize_and_passthrough(vecs):
-    out = transform_vectors_pandas(vecs, "embedding", normalize=True)
-    assert out.columns == ["vec_id", "embedding", "vector_out"]
-    rows = out.collect()
-    for r in rows:
-        n = float(np.linalg.norm(r.vector_out))
-        assert (r.vec_id == 40 and n == 0.0) or abs(n - 1.0) < 1e-12
-
-
-def test_transform_vectors_pandas_requires_work(vecs):
-    with pytest.raises(ValueError, match="nothing to do"):
-        transform_vectors_pandas(vecs, "embedding")
+        assert np.allclose(expr[k], want[k], atol=1e-9)
